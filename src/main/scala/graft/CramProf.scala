@@ -342,7 +342,7 @@ object CramProf {
         val hc = CramContainers.readContainerHeader(inp, CramContainers.FileDefinitionLength.toLong, inp.size, mj)
         val hEnd = hc.offset + hc.totalLength
         tHdr += (System.nanoTime() - t) / 1e9; t = System.nanoTime()
-        val fo = graft.sources.cram.FastaRefsAccess.open(fasta, conf, hdr.refName)
+        val fo = graft.sources.cram.FastaRefs.open(fasta, conf, hdr.refName)
         fo._1.close()
         tFasta += (System.nanoTime() - t) / 1e9; t = System.nanoTime()
         val b = if (start <= CramContainers.FileDefinitionLength) hEnd

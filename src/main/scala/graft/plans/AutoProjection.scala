@@ -10,10 +10,11 @@ import org.apache.spark.sql.types.{MapType, StringType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.bam.BamTable
-import graft.sources.cram.CramTable
-import graft.sources.sam.SamTable
-import graft.sources.vcf.VcfTable
+import graft.sources.GraftTable
+import graft.sources.bam.BamFormat
+import graft.sources.cram.CramFormat
+import graft.sources.sam.SamFormat
+import graft.sources.vcf.VcfFormat
 
 /** Option-free map-key projection for the graft sources.
   *
@@ -60,7 +61,10 @@ object AutoProjection extends Rule[LogicalPlan] {
   }
 
   private def projectableTable(t: AnyRef): Boolean = t match {
-    case _: VcfTable | _: BamTable | _: SamTable | _: CramTable => true
+    case g: GraftTable => g.format match {
+      case VcfFormat | BamFormat | SamFormat | CramFormat => true
+      case _ => false
+    }
     case _ => false
   }
 
@@ -75,7 +79,7 @@ object AutoProjection extends Rule[LogicalPlan] {
         val idx = rels.length
         rels += new RelState(r)
         r.table match {
-          case _: VcfTable =>
+          case g: GraftTable if g.format eq VcfFormat =>
             r.output.foreach { a =>
               a.name match {
                 case "genotypes" => taint(a.exprId) = Taint(idx, GenoArray)

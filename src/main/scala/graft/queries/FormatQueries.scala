@@ -78,23 +78,35 @@ object FormatQueries {
     * instead of idling the cluster. Each job's output file is byte-identical
     * to the sequential run — only scheduling overlap changes. Exceptions
     * propagate after all jobs settle (a second failure is suppressed onto
-    * the first).
+    * the first). When the caller is interrupted (or its wait cancelled)
+    * the siblings are cancelled — their threads interrupted and their Spark
+    * jobs cancelled by tag — and awaited before the exception propagates,
+    * so no sibling keeps writing after the query has failed.
     */
-  private def inParallel(jobs: (() => Unit)*): Unit = {
+  private[queries] def inParallel(jobs: (() => Unit)*): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.length)
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val tag = s"graft-inParallel-${java.util.UUID.randomUUID()}"
     try {
-      val futures = jobs.map(j => pool.submit(new Runnable { override def run(): Unit = j() }))
-      // await ALL jobs (no sibling keeps writing after the query "failed"),
-      // rethrow the first failure's CAUSE (not the ExecutionException
-      // wrapper) with later failures attached as suppressed
+      val futures = jobs.map(j => pool.submit(new Runnable {
+        override def run(): Unit = { sc.foreach(_.addJobTag(tag)); j() }
+      }))
+      // await ALL jobs, rethrow the first failure's CAUSE (not the
+      // ExecutionException wrapper) with later failures attached as suppressed
       var first: Throwable = null
-      futures.foreach { f =>
+      try futures.foreach { f =>
         try f.get()
         catch {
           case e: java.util.concurrent.ExecutionException =>
             val cause = if (e.getCause != null) e.getCause else e
             if (first == null) first = cause else first.addSuppressed(cause)
         }
+      } catch {
+        case e @ (_: InterruptedException | _: java.util.concurrent.CancellationException) =>
+          sc.foreach(_.cancelJobsWithTag(tag))
+          pool.shutdownNow()
+          while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)) ()
+          throw e
       }
       if (first != null) throw first
     } finally pool.shutdown()

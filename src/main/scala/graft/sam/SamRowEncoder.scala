@@ -10,7 +10,8 @@ import graft.sources.bam.RowToRecord
   * bypassing the AlignmentRecord/String/Map materialization. Byte-compatible
   * with `(SamCodec.toLine(RowToRecord.convert(row, idx)) + "\n").getBytes` —
   * proven by SamRowEncoderSpec; shapes outside the fast path (non-ASCII
-  * attribute keys/values) fall back to that spec path.
+  * mandatory fields or attribute keys/values — the spec path's String
+  * round-trip rewrites malformed UTF-8) fall back to that spec path.
   */
 final class SamRowEncoder(schema: StructType) {
   private val idx = RowToRecord.indices(schema)
@@ -39,7 +40,7 @@ final class SamRowEncoder(schema: StructType) {
   }
   private def putInt(v: Int): Unit = putAsciiString(Integer.toString(v))
 
-  private def ascii(s: UTF8String): Boolean = {
+  private def ascii(s: UTF8String): Boolean = s == null || {
     val n = s.numBytes()
     var i = 0
     while (i < n) { if (s.getByte(i) < 0) return false; i += 1 }
@@ -58,6 +59,8 @@ final class SamRowEncoder(schema: StructType) {
     val mateContig = str(x.mateContig)
     val seq = str(x.seq)
     val qual = str(x.qual)
+    if (!ascii(name) || !ascii(contig) || !ascii(cigar) || !ascii(mateContig) ||
+        !ascii(seq) || !ascii(qual)) return fallback(row)
     if (name == null) putByte('*') else putUtf8(name)
     putByte('\t'); putInt(int(x.flags)); putByte('\t')
     if (contig == null) putByte('*') else putUtf8(contig)
@@ -66,7 +69,7 @@ final class SamRowEncoder(schema: StructType) {
     if (cigar == null) putByte('*') else putUtf8(cigar)
     putByte('\t')
     // mate rname: '=' when equal to contig (String == of the spec path is
-    // byte equality for the valid UTF-8 Catalyst strings carry)
+    // byte equality for the ASCII strings the gate above admits)
     if (mateContig == null) putByte('*')
     else if (contig != null && mateContig.equals(contig)) putByte('=')
     else putUtf8(mateContig)

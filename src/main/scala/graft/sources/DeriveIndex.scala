@@ -252,7 +252,7 @@ object DeriveIndex {
     (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
 
   /** max(0, end − start) for one raw BAM record, the sink co-write's span
-    * convention (BamDataWriter): end = start + refLen − 1 when mapped with
+    * convention (BamPartWriter): end = start + refLen − 1 when mapped with
     * a reference-consuming cigar, else 0 → span = refLen − 1 or 0. Walks
     * the binary cigar ops directly (M/D/N/=/X consume reference).
     */

@@ -48,7 +48,7 @@ object HadoopIO {
     * read as inputs (graft's own .sbi/.gci co-writes land in the same
     * directory as sharded outputs; standard genomics indexes likewise).
     */
-  private val SideFileExts = Seq(".sbi", ".gci", ".bai", ".crai", ".tbi", ".idx")
+  val SideFileExts = Seq(".sbi", ".gci", ".bai", ".crai", ".tbi", ".idx")
   def isSideFile(name: String): Boolean = SideFileExts.exists(name.endsWith)
 
   /** Input files of a path that may be a single file or a flat directory:
@@ -146,7 +146,8 @@ object HadoopIO {
     }
   }
 
-  /** Order-preserving merge of a temp dir's parts into one file.
+  /** Concatenates `parts`, in the given order, into `target` — exactly the
+    * listed files, never whatever else a directory holds.
     *
     * Fast path: `FileSystem.concat` — a metadata-only block concatenation
     * (HDFS-class filesystems), so the merge costs O(parts) RPCs instead of
@@ -154,14 +155,10 @@ object HadoopIO {
     * (local FS, most object stores) throw UnsupportedOperationException
     * before mutating anything, and we fall back to the serial copy the
     * reference uses (HadoopFileSystemWrapper.concat:86-121, Merger.java:17-29).
+    * No parts → an empty target.
     */
-  def mergeParts(tempDir: Path, target: Path, conf: Configuration): Unit = {
-    val fs = tempDir.getFileSystem(conf)
-    val parts = fs.listStatus(tempDir).toSeq
-      .filter(s => !s.isDirectory)
-      .map(_.getPath)
-      .filter(p => !p.getName.startsWith(".") && !p.getName.startsWith("_"))
-      .sortBy(_.getName)
+  def mergeParts(parts: Seq[Path], target: Path, conf: Configuration): Unit = {
+    val fs = target.getFileSystem(conf)
     val concatenated = parts.nonEmpty && {
       try {
         if (parts.length > 1) fs.concat(parts.head, parts.tail.toArray)
@@ -186,7 +183,6 @@ object HadoopIO {
         }
       } finally out.close()
     }
-    fs.delete(tempDir, true)
   }
 }
 

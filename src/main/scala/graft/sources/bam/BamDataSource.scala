@@ -1,26 +1,17 @@
 package graft.sources.bam
 
-import java.util
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.bam._
 import graft.bgzf.Bgzf
-import graft.index.{GciIndex, SbiIndex}
-import graft.sources.{GenomicInterval, HadoopIO, PushedRegion, SerializableConf, SplitSizing, Stringency, StringencyLog}
+import graft.index.{BaiIndex, GciIndex, SbiIndex}
+import graft.sources.{GenomicInterval, GraftProvider, HadoopIO, PartEncoder, PushedRegion, RecordFormat,
+  SerializableConf, SinkFormat, SplitSizing, Stringency, StringencyLog}
 
 /** `spark.read.format("bam")` / `df.write.format("bam")` — the Spark-native
   * re-expression of the reference's HtsjdkReadsRddStorage BAM path
@@ -40,13 +31,89 @@ import graft.sources.{GenomicInterval, HadoopIO, PushedRegion, SerializableConf,
   *     commit; otherwise a directory of complete per-partition BAMs
   *     (write-option inference as in HtsjdkReadsRddStorage.java:217-257)
   */
-class BamDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "bam"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TagCols.schemaWith(Opts.normalize(options.asScala.toMap))
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new BamTable(properties.asScala.toMap)
+class BamDataSource extends GraftProvider(BamFormat)
+
+object BamFormat extends RecordFormat {
+  override def name: String = "bam"
+  override def schema(options: Map[String, String]): StructType = TagCols.schemaWith(options)
+  /** Interval-translatable filters (contig =, start/end bounds) drive index
+    * pruning and reader-side filtering, mirroring the coarse-index +
+    * residual-iterator split of the reference
+    * (AbstractBinarySamSource.java:86-113).
+    */
+  override def acceptsFilter(options: Map[String, String]): Filter => Boolean = PushedRegion.accepts
+  override def exactCount(options: Map[String, String]): Option[(String, Long)] =
+    indexCount(options).map("indexCount" -> _)
+  override def scan(options: Map[String, String], required: StructType, pushed: Array[Filter],
+                    limit: Int): Scan = new BamScan(options, required, pushed, limit)
+
+  override def sink(path: String, level: Int, options: Map[String, String],
+                    schema: StructType): SinkFormat[_] = {
+    val refs = SamHeader.parseRefsOption(options.getOrElse("refs",
+      throw new IllegalArgumentException("bam sink requires option refs=name:length,…")))
+    val header = options.get("headertext") match {
+      case Some(t) => SamHeader(t, refs)
+      case None => SamHeader(refs)
+    }
+    val singleFile = path.endsWith(".bam")
+    val sbiGranularity =
+      if (options.get("writesbi").exists(_.toBoolean))
+        options.get("sbigranularity").map(_.toLong).getOrElse(SbiIndex.DefaultGranularity)
+      else -1L
+    BamSink(header, singleFile, schema, sbiGranularity,
+      options.get("writebai").exists(_.toBoolean) && singleFile, level)
+  }
+
+  /** Exact record count of every input file from its indexes, or None if
+    * ANY file lacks one — O(files) tiny index reads, zero data I/O: `.sbi`
+    * carries an exact totalRecords; a samtools `.bai` carries per-ref
+    * pseudo-bin counts + the unplaced tail (exact only when every ref has a
+    * pseudo-bin AND the optional n_no_coor field is physically present).
+    *
+    * Staleness guard: an index answering a query the data never sees must
+    * PROVE it describes this exact file, or the scan falls back to reading.
+    * The `.sbi` carries the BAM's byte length for precisely this check
+    * (compared against the live file status); a `.bai` carries no length,
+    * so we require its mtime to be >= the BAM's (a BAM rewritten in place
+    * after indexing is newer than its index → rejected).
+    */
+  private def indexCount(options: Map[String, String]): Option[Long] =
+    try {
+      val conf = SparkSession.active.sessionState.newHadoopConf()
+      val pathStr = options.getOrElse("path", return None)
+      val files = HadoopIO.listInputFiles(pathStr, conf)
+      if (files.isEmpty) return None
+      var total = 0L
+      files.foreach { f =>
+        val fs = f.getFileSystem(conf)
+        val bamStatus = fs.getFileStatus(f)
+        val sbiP = new Path(f.toString + ".sbi")
+        val baiP = new Path(f.toString + ".bai")
+        val c: Option[Long] =
+          if (fs.exists(sbiP)) {
+            val in = HadoopIO.open(sbiP, conf)
+            try scala.util.Try(SbiIndex.read(in)).toOption
+              .filter(_.fileLength == bamStatus.getLen) // stale-index guard
+              .map(_.totalRecords).filter(_ >= 0)
+            finally in.close()
+          } else if (fs.exists(baiP) &&
+                     fs.getFileStatus(baiP).getModificationTime >= bamStatus.getModificationTime) {
+            val in = HadoopIO.open(baiP, conf)
+            try scala.util.Try(BaiIndex.read(in)).toOption.flatMap(_.exactRecordCount)
+            finally in.close()
+          } else None
+        c match {
+          case Some(n) => total += n
+          case None => return None
+        }
+      }
+      Some(total)
+    } catch {
+      // planning probe: missing/corrupt sidecars mean "no pushdown", but
+      // fatal VM errors must propagate
+      case _: java.io.IOException => None
+      case scala.util.control.NonFatal(_) => None
+    }
 }
 
 /** Typed-tag projection (`.option("tagColumns", "NM:int,RG:string")`):
@@ -102,185 +169,13 @@ private[sources] object TagCols {
     }
 }
 
-class BamTable(properties: Map[String, String]) extends Table with SupportsRead with SupportsWrite {
-  override def name(): String = s"bam:${properties.getOrElse("path", "?")}"
-  override def schema(): StructType = TagCols.schemaWith(Opts.normalize(properties))
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE, TableCapability.TRUNCATE).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new BamScanBuilder(options.asScala.toMap)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new BamWriteBuilder(info.options.asScala.toMap, info.schema())
-}
-
 // ---------------------------------------------------------------------------
 // Read path
 // ---------------------------------------------------------------------------
 
-/** Option lookups must be case-insensitive: CaseInsensitiveStringMap hands
-  * the connector lowercased keys, while users write `splitSize` etc.
-  */
-private[sources] object Opts {
-  def normalize(m: Map[String, String]): Map[String, String] =
-    m.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-}
-
-class BamScanBuilder(options0: Map[String, String])
-    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with SupportsPushDownLimit with SupportsPushDownAggregates {
-  private val options = Opts.normalize(options0)
-
-  private var required: StructType = TagCols.schemaWith(options)
-  private var pushed: Array[Filter] = Array.empty
-  private var limit: Int = -1
-
-  /** `.limit(n)` directly over the scan: plan ONE whole-file partition per
-    * file (no index/sidecar reads, no derive job) and stop each reader after
-    * n emitted records. Partial pushdown (Spark keeps its own global limit),
-    * so over-emission across files is fine and under-emission impossible —
-    * each file yields min(n, its records). Turns the most common first query
-    * on a 100 TB lake from an every-partition plan into a few blocks.
-    */
-  override def pushLimit(l: Int): Boolean = { limit = l; true }
-  override def isPartiallyPushed(): Boolean = true
-
-  /** Unfiltered COUNT(*) answered O(index), zero data scan: `.sbi` carries
-    * an exact totalRecords; a samtools `.bai` carries per-ref pseudo-bin
-    * counts + the unplaced tail (exact only when every ref has a pseudo-bin
-    * AND the optional n_no_coor field is physically present). COMPLETE
-    * pushdown — one partition emits the one summed row — and only when the
-    * traversal is the unrestricted strict-stringency one (intervals /
-    * unplacedUnmapped / lenient salvage all change what a scan would count)
-    * and EVERY file has an exact-count index; otherwise Spark's normal
-    * count plan runs. Residual Catalyst filters already block the attempt
-    * (Spark only pushes aggregates with no Filter in between).
-    */
-  private var pushedCount: Option[Long] = None
-  private lazy val indexCount: Option[Long] = BamScanBuilder.indexCount(options)
-  private def countable(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    agg.groupByExpressions.isEmpty && agg.aggregateExpressions.length == 1 &&
-      agg.aggregateExpressions.head
-        .isInstanceOf[org.apache.spark.sql.connector.expressions.aggregate.CountStar] &&
-      pushed.isEmpty && limit < 0 &&
-      !options.contains("intervals") && !options.contains("unplacedunmapped") &&
-      (Stringency.fromOptions(options) eq Stringency.Strict)
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    countable(agg) && indexCount.isDefined
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    // complete-or-nothing: a partial COUNT pushdown would only re-shape
-    // Spark's own plan without saving the scan
-    val ok = countable(agg) && indexCount.isDefined
-    if (ok) pushedCount = indexCount
-    ok
-  }
-
-  /** Record interval-translatable filters (contig =, start/end bounds) for
-    * reader-side filtering + explain visibility; everything stays residual
-    * (Spark re-applies), mirroring the coarse-index + residual-iterator
-    * split of the reference (AbstractBinarySamSource.java:86-113).
-    */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(PushedRegion.accepts)
-    filters // all residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-
-  override def build(): Scan = pushedCount match {
-    case Some(total) => new BamCountScan(options.getOrElse("path", "?"), total)
-    case None => new BamScan(options, required, pushed, limit)
-  }
-}
-
-object BamScanBuilder {
-  import graft.index.{BaiIndex, SbiIndex}
-
-  /** Exact record count of every input file from its indexes, or None if
-    * ANY file lacks one — O(files) tiny index reads, zero data I/O.
-    *
-    * Staleness guard: an index answering a query the data never sees must
-    * PROVE it describes this exact file, or the scan falls back to reading.
-    * The `.sbi` carries the BAM's byte length for precisely this check
-    * (compared against the live file status); a `.bai` carries no length,
-    * so we require its mtime to be >= the BAM's (a BAM rewritten in place
-    * after indexing is newer than its index → rejected).
-    */
-  private[bam] def indexCount(options: Map[String, String]): Option[Long] =
-    try {
-      val conf = SparkSession.active.sessionState.newHadoopConf()
-      val pathStr = options.getOrElse("path", return None)
-      val files = HadoopIO.listInputFiles(pathStr, conf)
-      if (files.isEmpty) return None
-      var total = 0L
-      files.foreach { f =>
-        val fs = f.getFileSystem(conf)
-        val bamStatus = fs.getFileStatus(f)
-        val sbiP = new Path(f.toString + ".sbi")
-        val baiP = new Path(f.toString + ".bai")
-        val c: Option[Long] =
-          if (fs.exists(sbiP)) {
-            val in = HadoopIO.open(sbiP, conf)
-            try scala.util.Try(SbiIndex.read(in)).toOption
-              .filter(_.fileLength == bamStatus.getLen) // stale-index guard
-              .map(_.totalRecords).filter(_ >= 0)
-            finally in.close()
-          } else if (fs.exists(baiP) &&
-                     fs.getFileStatus(baiP).getModificationTime >= bamStatus.getModificationTime) {
-            val in = HadoopIO.open(baiP, conf)
-            try scala.util.Try(BaiIndex.read(in)).toOption.flatMap(_.exactRecordCount)
-            finally in.close()
-          } else None
-        c match {
-          case Some(n) => total += n
-          case None => return None
-        }
-      }
-      Some(total)
-    } catch {
-      // planning probe: missing/corrupt sidecars mean "no pushdown", but
-      // fatal VM errors must propagate
-      case _: java.io.IOException => None
-      case scala.util.control.NonFatal(_) => None
-    }
-}
-
-/** COUNT(*) answered from the indexes at planning time: one partition, one
-  * row, zero data scan — `df.count()` on a 100 TB indexed lake is O(files)
-  * index-header reads.
-  */
-class BamCountScan(path: String, total: Long) extends Scan with Batch {
-  override def readSchema(): StructType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("count",
-      org.apache.spark.sql.types.LongType, nullable = false)))
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-bam $path PushedAggregates=[COUNT(*)] indexCount=$total"
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(BamCountPartition(total))
-  override def createReaderFactory(): PartitionReaderFactory = new BamCountReaderFactory
-}
-
-case class BamCountPartition(total: Long) extends InputPartition
-
-class BamCountReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val total = partition.asInstanceOf[BamCountPartition].total
-    new PartitionReader[InternalRow] {
-      private var done = false
-      override def next(): Boolean = if (done) false else { done = true; true }
-      override def get(): InternalRow = new GenericInternalRow(Array[Any](total))
-      override def close(): Unit = ()
-    }
-  }
-}
-
-class BamScan(options0: Map[String, String], required: StructType, pushed: Array[Filter],
+class BamScan(options: Map[String, String], required: StructType, pushed: Array[Filter],
     limitHint: Int = -1)
     extends Scan with Batch {
-  private val options = Opts.normalize(options0)
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -388,7 +283,7 @@ class BamScan(options0: Map[String, String], required: StructType, pushed: Array
           val baiRanges: Option[(Seq[(Long, Long)], Long)] =
             if (gci.isEmpty && intervals.isDefined && baiFresh(new Path(file.toString + ".bai"))) {
               val bin = HadoopIO.open(new Path(file.toString + ".bai"), conf)
-              val bai = try scala.util.Try(graft.index.BaiIndex.read(bin)).toOption
+              val bai = try scala.util.Try(BaiIndex.read(bin)).toOption
                 finally bin.close()
               bai.map { b =>
                 val spans = intervals.get.flatMap { iv =>
@@ -454,7 +349,7 @@ class BamScan(options0: Map[String, String], required: StructType, pushed: Array
           val baiRanges: Option[Seq[(Long, Long)]] =
             if (intervals.isDefined && baiFresh(baiPath)) {
               val bin = HadoopIO.open(baiPath, conf)
-              val bai = try scala.util.Try(graft.index.BaiIndex.read(bin)).toOption
+              val bai = try scala.util.Try(BaiIndex.read(bin)).toOption
                 finally bin.close()
               bai.map { b =>
                 val ivSpans = intervals.get.flatMap { iv =>
@@ -764,188 +659,99 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
 // Write path
 // ---------------------------------------------------------------------------
 
-class BamWriteBuilder(options: Map[String, String], schema: StructType)
-    extends WriteBuilder with SupportsTruncate {
-  override def truncate(): WriteBuilder = this // writes always replace (reference README.md:53)
-  override def build(): Write = new BamWrite(options, schema)
-}
-
-class BamWrite(options0: Map[String, String], schema: StructType) extends Write {
-  private val options = Opts.normalize(options0)
-  override def toBatch: BatchWrite = {
-    val path = options.getOrElse("path", throw new IllegalArgumentException("bam sink requires a path"))
-    val refs = SamHeader.parseRefsOption(options.getOrElse("refs",
-      throw new IllegalArgumentException("bam sink requires option refs=name:length,…")))
-    val header = options.get("headertext") match {
-      case Some(t) => SamHeader(t, refs)
-      case None => SamHeader(refs)
-    }
-    val singleFile = path.endsWith(".bam")
-    val sbiGranularity =
-      if (options.get("writesbi").exists(_.toBoolean))
-        options.get("sbigranularity").map(_.toLong).getOrElse(SbiIndex.DefaultGranularity)
-      else -1L
-    val writeBai = options.get("writebai").exists(_.toBoolean) && singleFile
-    // deflate level 0..9 (htsjdk/samtools writer parity); -1 = zlib default
-    val level = options.get("compressionlevel").map(_.toInt)
-      .getOrElse(java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    require(level == -1 || (level >= 0 && level <= 9), s"compressionLevel out of range: $level")
-    new BamBatchWrite(path, header, singleFile, schema, sbiGranularity, writeBai, level,
-      new SerializableConf(SparkSession.active.sessionState.newHadoopConf()))
-  }
-}
-
-case class BamPartMessage(path: String, records: Long, compressedBytes: Long,
+/** What one BAM part reports to the commit: SBI voffs + genomic
+  * coordinates of the sampled records, part order/sortedness, and its BAI
+  * contribution (null unless writeBai).
+  */
+case class BamPartMessage(records: Long,
     sampledVoffs: Array[Long], sampledRefs: Array[Int], sampledPos: Array[Int],
     sampledSpans: Array[Int], // max (end−start) per sample window
     partSorted: Boolean, firstRef: Int, firstPos: Int, lastRef: Int, lastPos: Int,
-    bai: graft.index.BaiPartData) // null unless writeBai
-  extends WriterCommitMessage
+    bai: graft.index.BaiPartData)
 
-/** Single-file mode: tasks write headerless BGZF parts into `path.parts/`;
-  * commit writes `header` + `terminator` and merges in name order (names
-  * chosen so header < part-* < terminator lexicographically — the invariant
-  * the reference's Merger relies on, BamSink.java:41-68, Merger.java:17-29).
-  * Sharded mode: tasks write complete per-partition BAMs (AnySamSinkMultiple
-  * .java:39-73 semantics — native Spark one-file-per-partition shape).
+/** Single-file mode: headerless BGZF parts between the BGZF header and the
+  * EOF block (BamSink.java:41-68); `.sbi`/`.gci`/`.bai` fold from the part
+  * reports. Sharded mode: complete per-partition BAMs, each with its own
+  * `.sbi` (AnySamSinkMultiple.java:39-73).
   */
-class BamBatchWrite(path: String, header: SamHeader, singleFile: Boolean,
-                    schema: StructType, sbiGranularity: Long, writeBai: Boolean,
-                    level: Int, conf: SerializableConf) extends BatchWrite {
+case class BamSink(header: SamHeader, singleFile: Boolean, schema: StructType,
+                   sbiGranularity: Long, writeBai: Boolean, level: Int)
+    extends SinkFormat[BamPartMessage] {
+  override def partSuffix: String = ".bam"
+  override def openPart(out: java.io.OutputStream, sidecar: String => java.io.OutputStream)
+      : PartEncoder[BamPartMessage] = new BamPartWriter(this, out, sidecar)
 
-  private val tempDir = path + ".parts"
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) {
-      fs.delete(new Path(path), false)
-      fs.delete(new Path(tempDir), true)
-      fs.mkdirs(new Path(tempDir))
-    } else {
-      fs.delete(new Path(path), true)
-      fs.mkdirs(new Path(path))
-    }
-    new BamDataWriterFactory(if (singleFile) tempDir else path, header, singleFile, schema,
-      sbiGranularity, writeBai, level, conf)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = if (singleFile) {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    // header part (BGZF, no terminator)
-    val ho = fs.create(new Path(tempDir, "header"), true)
-    val hb = new graft.bgzf.BgzfOutputStream(ho, writeEof = false, level = level)
+  override def headerBytes(parts: Seq[BamPartMessage]): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val hb = new graft.bgzf.BgzfOutputStream(bytes, writeEof = false, level = level)
     BamCodec.writeHeader(hb, header)
     hb.close()
-    val headerBytes = fs.getFileStatus(new Path(tempDir, "header")).getLen
-    // terminator part: the spec 28-byte EOF block
-    val to = fs.create(new Path(tempDir, "terminator"), true)
-    to.write(Bgzf.EofBlock)
-    to.close()
-    val allParts = messages.collect { case m: BamPartMessage => m }.sortBy(_.path)
-    // bytes preceding each part after concat (header + earlier parts)
-    val shifts = { var b = headerBytes; allParts.map { m => val s = b; b += m.compressedBytes; s } }
-    // SBI co-write: parts' sampled offsets shift by the bytes that precede
-    // them after concat (header + earlier parts); voff += base << 16
-    if (sbiGranularity > 0) {
-      val parts = allParts
-      var base = headerBytes
+    bytes.toByteArray
+  }
+  override def terminatorBytes: Array[Byte] = Bgzf.EofBlock
+
+  override def indexes(target: Path, parts: Seq[(BamPartMessage, Long)], dataEnd: Long)
+      : Seq[(String, java.io.OutputStream => Unit)] = {
+    // the file is coordinate-sorted iff every part is internally sorted and
+    // part boundaries are non-decreasing (writers checked every record)
+    var sorted = parts.forall(_._1.partSorted)
+    var prevRef = Int.MinValue; var prevPos = Int.MinValue
+    var lastRef = -1; var lastPos = -1
+    parts.foreach { case (m, _) =>
+      if (m.records > 0) {
+        val fr = GciIndex.orderRef(m.firstRef)
+        if (fr < prevRef || (fr == prevRef && m.firstPos < prevPos)) sorted = false
+        prevRef = GciIndex.orderRef(m.lastRef); prevPos = m.lastPos
+        lastRef = m.lastRef; lastPos = m.lastPos
+      }
+    }
+    val sbi: Seq[(String, java.io.OutputStream => Unit)] = if (sbiGranularity <= 0) Nil else {
+      // parts' sampled offsets shift by the bytes that precede them after
+      // the merge: voff += base << 16
       val all = Array.newBuilder[Long]
       val gRefs = Array.newBuilder[Int]
       val gPos = Array.newBuilder[Int]
       val gSpans = Array.newBuilder[Int]
-      var total = 0L
-      // file is coordinate-sorted iff every part is internally sorted and
-      // part boundaries are non-decreasing (writers checked every record)
-      var sorted = true
-      var prevRef = Int.MinValue; var prevPos = Int.MinValue
-      var lastRef = -1; var lastPos = -1
-      parts.foreach { m =>
-        var i = 0
-        while (i < m.sampledVoffs.length) {
-          all += m.sampledVoffs(i) + (base << 16)
-          gRefs += m.sampledRefs(i); gPos += m.sampledPos(i)
-          gSpans += m.sampledSpans(i)
-          i += 1
-        }
-        if (!m.partSorted) sorted = false
-        if (m.records > 0) {
-          val fr = GciIndex.orderRef(m.firstRef)
-          if (fr < prevRef || (fr == prevRef && m.firstPos < prevPos)) sorted = false
-          prevRef = GciIndex.orderRef(m.lastRef); prevPos = m.lastPos
-          lastRef = m.lastRef; lastPos = m.lastPos
-        }
-        base += m.compressedBytes
-        total += m.records
+      parts.foreach { case (m, base) =>
+        all ++= m.sampledVoffs.iterator.map(_ + (base << 16))
+        gRefs ++= m.sampledRefs; gPos ++= m.sampledPos; gSpans ++= m.sampledSpans
       }
-      all += (base << 16) // sentinel: end of records (terminator start)
+      all += (dataEnd << 16) // sentinel: end of records (terminator start)
       gRefs += lastRef; gPos += lastPos; gSpans += 0 // sentinel window is empty
       val offsets = all.result() // single result() call: builders are one-shot
-      val fileLength = base + Bgzf.EofBlock.length
-      val so = fs.create(new Path(path + ".sbi"), true)
-      SbiIndex.write(so, SbiIndex(fileLength, total, sbiGranularity, offsets))
-      so.close()
-      val go = fs.create(new Path(path + ".gci"), true)
-      GciIndex.write(go, GciIndex(sorted, sbiGranularity, offsets,
-        gRefs.result(), gPos.result(), gSpans.result()))
-      go.close()
+      val total = parts.map(_._1.records).sum
+      Seq(
+        ".sbi" -> (o => SbiIndex.write(o,
+          SbiIndex(dataEnd + Bgzf.EofBlock.length, total, sbiGranularity, offsets))),
+        ".gci" -> (o => GciIndex.write(o, GciIndex(sorted, sbiGranularity, offsets,
+          gRefs.result(), gPos.result(), gSpans.result()))))
     }
-    HadoopIO.mergeParts(new Path(tempDir), new Path(path), conf.conf)
-    // BAI co-write AFTER the merge so the index's mtime is >= the BAM's —
-    // readers treat an index older than its data file as stale (in-place
-    // rewrite guard) and would otherwise reject every fresh co-write.
-    // Only meaningful for coordinate-sorted output — each writer tracked
-    // record order, the boundary check below completes the proof.
-    if (writeBai) {
-      var sorted = allParts.forall(_.partSorted)
-      var prevRef = Int.MinValue; var prevPos = Int.MinValue
-      allParts.foreach { m =>
-        if (m.records > 0) {
-          val fr = GciIndex.orderRef(m.firstRef)
-          if (fr < prevRef || (fr == prevRef && m.firstPos < prevPos)) sorted = false
-          prevRef = GciIndex.orderRef(m.lastRef); prevPos = m.lastPos
-        }
-      }
-      if (sorted) {
-        val idx = graft.index.BaiPartData.merge(
-          allParts.map(_.bai).toSeq, shifts.toSeq, header.refs.length)
-        val bo = fs.create(new Path(path + ".bai"), true)
-        graft.index.BaiIndex.write(bo, idx)
-        bo.close()
-      } else
+    // a .bai is only meaningful for coordinate-sorted output
+    val bai: Seq[(String, java.io.OutputStream => Unit)] =
+      if (!writeBai) Nil
+      else if (sorted) Seq(".bai" -> (o => BaiIndex.write(o,
+        graft.index.BaiPartData.merge(parts.map(_._1.bai), parts.map(_._2), header.refs.length))))
+      else {
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"writeBai: output $path is not coordinate-sorted; skipping .bai")
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) fs.delete(new Path(tempDir), true)
+          s"writeBai: output $target is not coordinate-sorted; skipping .bai")
+        Nil
+      }
+    sbi ++ bai
   }
 }
 
-class BamDataWriterFactory(dir: String, header: SamHeader, singleFile: Boolean,
-                           schema: StructType, sbiGranularity: Long, writeBai: Boolean,
-                           level: Int, conf: SerializableConf) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new BamDataWriter(dir, header, singleFile, schema, sbiGranularity, writeBai, level, conf, partitionId)
-}
-
-class BamDataWriter(dir: String, header: SamHeader, singleFile: Boolean,
-                    schema: StructType, sbiGranularity: Long, writeBai: Boolean,
-                    level: Int, conf: SerializableConf, partitionId: Int)
-    extends DataWriter[InternalRow] {
-
-  private val name = if (singleFile) f"part-$partitionId%09d" else f"part-$partitionId%09d.bam"
-  private val partPath = new Path(dir, name)
-  private val fs = partPath.getFileSystem(conf.conf)
-  private val raw = fs.create(partPath, true)
-  private val out = new graft.bgzf.BgzfOutputStream(raw, writeEof = !singleFile, level = level)
+/** One BAM part: direct InternalRow → wire encoding (BamRowEncoder, no
+  * per-record AlignmentRecord/String/Map on the hot path; it falls back to
+  * the RowToRecord spec path for shapes it can't prove byte-identical),
+  * sampling SBI/GCI windows, tracking sortedness and building BAI bins.
+  */
+private final class BamPartWriter(s: BamSink, raw: java.io.OutputStream,
+                                  sidecar: String => java.io.OutputStream)
+    extends PartEncoder[BamPartMessage] {
+  private val out = new graft.bgzf.BgzfOutputStream(raw, writeEof = !s.singleFile, level = s.level)
   private var count = 0L
-  // direct InternalRow → wire encoder (BamRowEncoder): no per-record
-  // AlignmentRecord/String/Map materialization on the hot path; falls back
-  // to the RowToRecord spec path for shapes it can't prove byte-identical
-  private val enc = new graft.bam.BamRowEncoder(schema, header)
-  // SBI voffs + genomic coordinates of sampled records + sortedness check
+  private val enc = new graft.bam.BamRowEncoder(s.schema, s.header)
+  private val sbiGranularity = s.sbiGranularity
   private val sVoffs = Array.newBuilder[Long]
   private val sRefs = Array.newBuilder[Int]
   private val sPos = Array.newBuilder[Int]
@@ -955,9 +761,9 @@ class BamDataWriter(dir: String, header: SamHeader, singleFile: Boolean,
   private var firstRef = -2; private var firstPos = -2
   private var prevRef = Int.MinValue; private var prevPos = Int.MinValue
 
-  if (!singleFile) BamCodec.writeHeader(out, header)
+  if (!s.singleFile) BamCodec.writeHeader(out, s.header)
 
-  private val bai = if (writeBai) new graft.index.BaiBuilder else null
+  private val bai = if (s.writeBai) new graft.index.BaiBuilder else null
 
   override def write(row: InternalRow): Unit = {
     val len = enc.encode(row)
@@ -983,26 +789,24 @@ class BamDataWriter(dir: String, header: SamHeader, singleFile: Boolean,
       mapped = (enc.lastFlags & AlignmentRecord.FlagUnmapped) == 0)
     count += 1
   }
-  override def commit(): WriterCommitMessage = {
+  override def finish(): BamPartMessage = {
     out.close()
-    val compressed = Bgzf.blockStart(out.virtualOffset) // total bytes after close
-    if (sbiGranularity > 0 && !singleFile) {
+    if (sbiGranularity > 0 && !s.singleFile) {
       // sharded mode: each complete file gets its own .sbi directly;
-      // compressedWritten excludes the trailing EOF block
-      val so = fs.create(new Path(partPath.toString + ".sbi"), true)
-      SbiIndex.write(so, SbiIndex(compressed + Bgzf.EofBlock.length, count,
+      // compressed bytes exclude the trailing EOF block
+      val compressed = Bgzf.blockStart(out.virtualOffset)
+      val so = sidecar(".sbi")
+      try SbiIndex.write(so, SbiIndex(compressed + Bgzf.EofBlock.length, count,
         sbiGranularity, sVoffs.result() :+ (compressed << 16)))
-      so.close()
+      finally so.close()
     }
     if (count > 0) sSpans += curSpan // close the final (possibly partial) window
-    BamPartMessage(partPath.toString, count, compressed,
-      sVoffs.result(), sRefs.result(), sPos.result(), sSpans.result(),
+    BamPartMessage(count, sVoffs.result(), sRefs.result(), sPos.result(), sSpans.result(),
       partSorted, firstRef, firstPos,
       if (prevRef == Int.MinValue) -2 else prevRef, prevPos,
       if (bai != null) bai.result() else null)
   }
-  override def abort(): Unit = { out.close(); fs.delete(partPath, false) }
-  override def close(): Unit = ()
+  override def abort(): Unit = out.close()
 }
 
 /** InternalRow (in dataframe column order) → AlignmentRecord. */

@@ -1,24 +1,18 @@
 package graft.sources.cram
 
-import java.util
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.bam.{AlignmentRecord, RecordToRow, SamHeader}
 import graft.cram.{CraiEntry, CraiIndex, CramContainer, CramContainers,
   CramRecordCodec, CramRecordWriter, CramRefSource, Fasta, FastaRefSource, NoRefSource}
-import graft.sources.{GenomicInterval, HadoopIO, PushedRegion, SerializableConf, Stringency, StringencyLog}
+import graft.sources.{GenomicInterval, GraftProvider, HadoopIO, PartEncoder, PushedRegion, RecordFormat,
+  SerializableConf, SinkFormat, Stringency, StringencyLog}
 
 /** `format("cram")` — CRAM scan/sink (reference CramSource.java:57-151,
   * CramSink.java:35-85).
@@ -39,148 +33,43 @@ import graft.sources.{GenomicInterval, HadoopIO, PushedRegion, SerializableConf,
   * index when present (CramSource.java:96-120's NavigableSet shape) with a
   * residual coordinate filter for exactness (record-level in records mode).
   */
-class CramDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "cram"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    if (options.getBoolean("records", false))
-      graft.sources.bam.TagCols.schemaWith(
-        graft.sources.bam.Opts.normalize(options.asScala.toMap))
-    else CramTable.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new CramTable(properties.asScala.toMap)
-}
+class CramDataSource extends GraftProvider(CramFormat)
 
-object CramDataSource {
-  /** `records` flag from an options/properties map of unknown key casing. */
-  def recordsMode(options: Map[String, String]): Boolean =
-    options.exists { case (k, v) => k.equalsIgnoreCase("records") && v.toBoolean }
-}
-
-/** Opens the `fasta` option's indexed FASTA (`.fai` sidecar required) as a
-  * [[graft.cram.CramRefSource]] — shared by the records reader (decode) and
-  * records writer (reference-based encode). Caller closes the returned
-  * input; region reads are preads, so an executor never holds a genome.
-  */
-private[cram] object FastaRefs {
-  def open(fastaPath: String, conf: org.apache.hadoop.conf.Configuration,
-           names: Int => String): (graft.bgzf.SeekableInput, CramRefSource) = {
-    val fin = HadoopIO.open(new Path(fastaPath), conf)
-    val fai = {
-      val fin2 = HadoopIO.open(new Path(fastaPath + ".fai"), conf)
-      try {
-        val b = new Array[Byte](fin2.size.toInt)
-        require(fin2.preadFully(0, b, 0, b.length) == b.length, "truncated .fai")
-        Fasta.parseFai(new String(b, "UTF-8"))
-      } finally fin2.close()
-    }
-    (fin, new FastaRefSource(fin, fai, names))
-  }
-}
-
-object CramTable {
-  val schema: StructType = StructType(Seq(
-    StructField("offset", LongType, nullable = false),
-    StructField("data_length", IntegerType, nullable = false),
-    StructField("ref_seq_id", IntegerType, nullable = false),
-    StructField("start_pos", IntegerType, nullable = false),
-    StructField("span", IntegerType, nullable = false),
-    StructField("n_records", IntegerType, nullable = false),
-    StructField("n_blocks", IntegerType, nullable = false)))
-}
-
-class CramTable(properties: Map[String, String]) extends Table with SupportsRead with SupportsWrite {
-  private val records = CramDataSource.recordsMode(properties)
-  override def name(): String = s"cram:${properties.getOrElse("path", "?")}"
-  override def schema(): StructType =
-    if (records)
-      graft.sources.bam.TagCols.schemaWith(graft.sources.bam.Opts.normalize(properties))
-    else CramTable.schema
-  // ACCEPT_ANY_SCHEMA: the sink takes container SPECS (ref_seq_id, start_pos,
-  // span, n_records, data_length) — offset/n_blocks are geometry the writer
-  // computes, so the input never carries the full read schema; the writer
-  // resolves its required columns by name and fails fast on what's missing
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.ACCEPT_ANY_SCHEMA).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new CramScanBuilder(options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v })
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val opts = info.options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    new CramWriteBuilder(opts, info.schema())
-  }
-}
-
-class CramScanBuilder(options: Map[String, String])
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit
-    with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
-  private val records = CramDataSource.recordsMode(options)
-  private var required: StructType =
-    if (records) graft.sources.bam.TagCols.schemaWith(options) else CramTable.schema
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var limit: Int = -1
-
-  /** Unfiltered COUNT(*) answered from container headers: every container
-    * header carries its record count (ITF-8 `nRecords`), so the count is an
-    * O(containers) header walk — seeks from header to header via each
-    * container's length, ZERO block reads, zero record decode (the BAM
-    * source's `.sbi`-answered count, re-expressed for CRAM's self-indexing
-    * container framing). Complete-or-nothing, and only when the traversal
-    * is the unrestricted strict one — intervals / unplacedUnmapped /
-    * lenient salvage all change what a scan would count.
-    */
-  private var pushedCount: Option[Long] = None
-  private lazy val walkCount: Option[Long] = CramScanBuilder.containerCount(options)
-  private def countable(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    records && agg.groupByExpressions.isEmpty && agg.aggregateExpressions.length == 1 &&
-      agg.aggregateExpressions.head
-        .isInstanceOf[org.apache.spark.sql.connector.expressions.aggregate.CountStar] &&
-      pushed.isEmpty && limit < 0 &&
-      !options.contains("intervals") && !options.contains("unplacedunmapped") &&
-      (graft.sources.Stringency.fromOptions(options) eq graft.sources.Stringency.Strict)
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    countable(agg) && walkCount.isDefined
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    val ok = countable(agg) && walkCount.isDefined
-    if (ok) pushedCount = walkCount
-    ok
-  }
-  /** Partial limit pushdown: one whole-file partition per file (no `.crai`
-    * read, no derive job) and readers stop after n emitted rows; Spark
-    * keeps its own global limit on top.
-    */
-  override def pushLimit(l: Int): Boolean = { limit = l; true }
-  override def isPartiallyPushed(): Boolean = true
-  /** Interval-translatable filters recorded for container pruning; all stay
-    * residual so Catalyst re-applies the exact predicate above the scan.
-    * Container mode accepts header-field filters (ref_seq_id/start_pos);
+object CramFormat extends RecordFormat {
+  override def name: String = "cram"
+  def records(options: Map[String, String]): Boolean = options.get("records").exists(_.toBoolean)
+  override def schema(options: Map[String, String]): StructType =
+    if (records(options)) graft.sources.bam.TagCols.schemaWith(options) else CramTable.schema
+  /** Container mode accepts header-field filters (ref_seq_id/start_pos);
     * records mode accepts the genomic contig/start/end shape every record
     * source shares ([[graft.sources.PushedRegion]]), so a plain
     * `.filter($"contig" === c && $"start" <= x)` prunes containers via the
     * `.crai` exactly like an `intervals` option would.
     */
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter]): Array[org.apache.spark.sql.sources.Filter] = {
-    pushed = filters.filter(if (records) PushedRegion.accepts else CramPushedRegion.accepts)
-    filters // all residual
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = pushedCount match {
-    case Some(total) => new CramCountScan(options.getOrElse("path", "?"), total)
-    case None => new CramScan(options, required, pushed, limit)
-  }
-}
+  override def acceptsFilter(options: Map[String, String]): Filter => Boolean =
+    if (records(options)) PushedRegion.accepts else CramPushedRegion.accepts
+  // ACCEPT_ANY_SCHEMA: the sink takes container SPECS (ref_seq_id, start_pos,
+  // span, n_records, data_length) — offset/n_blocks are geometry the writer
+  // computes, so the input never carries the full read schema; the writer
+  // resolves its required columns by name and fails fast on what's missing
+  override def acceptAnySchema: Boolean = true
+  /** Records-mode COUNT(*) from container headers: every container header
+    * carries its record count (ITF-8 `nRecords`), so the count is an
+    * O(containers) header walk — seeks from header to header via each
+    * container's length, ZERO block reads, zero record decode (the BAM
+    * source's `.sbi`-answered count, re-expressed for CRAM's self-indexing
+    * container framing).
+    */
+  override def exactCount(options: Map[String, String]): Option[(String, Long)] =
+    if (records(options)) containerCount(options).map("containerCount" -> _) else None
+  override def scan(options: Map[String, String], required: StructType, pushed: Array[Filter],
+                    limit: Int): Scan = new CramScan(options, required, pushed, limit)
 
-object CramScanBuilder {
   /** Sum of `nRecords` over every container header of every input file
     * (the SAM-header container and EOF container both carry nRecords = 0).
-    * O(containers) small reads at planning time; any failure → None → the
-    * normal scan plan runs.
+    * Any failure → None → the normal scan plan runs.
     */
-  private[cram] def containerCount(options: Map[String, String]): Option[Long] =
+  private def containerCount(options: Map[String, String]): Option[Long] =
     try {
       val conf = SparkSession.active.sessionState.newHadoopConf()
       val pathStr = options.getOrElse("path", return None)
@@ -197,36 +86,112 @@ object CramScanBuilder {
       case _: java.io.IOException => None
       case scala.util.control.NonFatal(_) => None
     }
-}
 
-/** COUNT(*) answered from container headers at planning time: one
-  * partition, one row, zero block decode.
-  */
-class CramCountScan(path: String, total: Long) extends Scan with Batch {
-  override def readSchema(): StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("count",
-      org.apache.spark.sql.types.LongType, nullable = false)))
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-cram $path PushedAggregates=[COUNT(*)] containerCount=$total"
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(CramCountPartition(total))
-  override def createReaderFactory(): PartitionReaderFactory = new CramCountReaderFactory
-}
-
-case class CramCountPartition(total: Long) extends InputPartition
-
-class CramCountReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val total = partition.asInstanceOf[CramCountPartition].total
-    new PartitionReader[InternalRow] {
-      private var done = false
-      override def next(): Boolean = if (done) false else { done = true; true }
-      override def get(): InternalRow =
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](total))
-      override def close(): Unit = ()
+  override def sink(path: String, level: Int, options: Map[String, String],
+                    schema: StructType): SinkFormat[_] = {
+    // records mode: rows are AlignmentRecords, encoded by the v3 record
+    // writer; the header dictionary comes from `refs` like the BAM sink
+    val recordsHeader: Option[SamHeader] =
+      if (records(options)) {
+        val refs = SamHeader.parseRefsOption(options.getOrElse("refs",
+          throw new IllegalArgumentException(
+            "cram records sink requires refs (name:length,…)")))
+        Some(options.get("headertext") match {
+          case Some(t) => SamHeader(t, refs)
+          case None => SamHeader(refs)
+        })
+      } else None
+    // CRAM version: 3.0 (default) or 3.1 (record blocks upgrade to rANS
+    // Nx16, file definition minor = 1). codec=arith (3.1 only) swaps the
+    // record-block entropy stage for the adaptive arithmetic coder
+    // (CRAM method 6).
+    val v31 = options.get("version") match {
+      case None | Some("3.0") => false
+      case Some("3.1") => true
+      case Some(v) => throw new IllegalArgumentException(
+        s"cram sink version must be 3.0 or 3.1, got $v")
     }
+    val wire = options.get("codec") match {
+      case None | Some("rans") => if (v31) 1 else 0
+      case Some("arith") =>
+        if (!v31) throw new IllegalArgumentException(
+          "cram sink codec=arith requires version=3.1")
+        2
+      case Some(c) => throw new IllegalArgumentException(
+        s"cram sink codec must be rans or arith, got $c")
+    }
+    // names=tok3 (3.1 only): RN blocks through the CRAM method-8 name
+    // tokenizer; default keeps gzip'd RN, which every reader decodes
+    val tok3 = options.get("names") match {
+      case None | Some("default") => false
+      case Some("tok3") =>
+        if (!v31) throw new IllegalArgumentException(
+          "cram sink names=tok3 requires version=3.1")
+        true
+      case Some(m) => throw new IllegalArgumentException(
+        s"cram sink names must be default or tok3, got $m")
+    }
+    // quals=fqz (3.1 only): QS blocks through the CRAM method-7 quality
+    // codec; default keeps the wire's rANS form
+    val fqz = options.get("quals") match {
+      case None | Some("default") => false
+      case Some("fqz") =>
+        if (!v31) throw new IllegalArgumentException(
+          "cram sink quals=fqz requires version=3.1")
+        true
+      case Some(m) => throw new IllegalArgumentException(
+        s"cram sink quals must be default or fqz, got $m")
+    }
+    // write-option inference (the BAM/VCF convention): a `.cram` path is a
+    // single file; anything else is a sharded directory of COMPLETE
+    // per-partition .cram files (AnySamSinkMultiple.java:39-73).
+    // Records mode co-writes the `.crai` by DEFAULT (option still wins both
+    // ways): the index is one text line per slice, and its presence turns
+    // every downstream scan's planning into O(index) with zero executor-side
+    // boundary discovery. Container-spec mode keeps the opt-in default (its
+    // zero-payload containers produce no slice entries, and an empty `.crai`
+    // would plan an empty scan).
+    CramSink(path.endsWith(".cram"),
+      options.get("writecrai").map(_.toBoolean).getOrElse(records(options)), schema,
+      recordsHeader, options.get("recordspercontainer").map(_.toInt).getOrElse(10000),
+      // reference-based encode: a fasta option on a records write switches
+      // match positions to implicit/X-substitution form (CramRecordWriter)
+      if (recordsHeader.isDefined) options.get("fasta") else None,
+      wire, tok3, fqz, level, new SerializableConf(SparkSession.active.sessionState.newHadoopConf()))
   }
+}
+
+/** Opens the `fasta` option's indexed FASTA (`.fai` sidecar required) as a
+  * [[graft.cram.CramRefSource]] — shared by the records reader (decode) and
+  * records writer (reference-based encode). Caller closes the returned
+  * input; region reads are preads, so an executor never holds a genome.
+  */
+object FastaRefs {
+  def open(fastaPath: String, conf: org.apache.hadoop.conf.Configuration,
+           names: Int => String): (graft.bgzf.SeekableInput, CramRefSource) = {
+    val fin = HadoopIO.open(new Path(fastaPath), conf)
+    val fai = {
+      val fin2 = HadoopIO.open(new Path(fastaPath + ".fai"), conf)
+      try {
+        val b = new Array[Byte](fin2.size.toInt)
+        require(fin2.preadFully(0, b, 0, b.length) == b.length, "truncated .fai")
+        Fasta.parseFai(new String(b, "UTF-8"))
+      } finally fin2.close()
+    }
+    (fin, new FastaRefSource(fin, fai, names))
+  }
+}
+
+/** The container-level row model's schema. */
+object CramTable {
+  val schema: StructType = StructType(Seq(
+    StructField("offset", LongType, nullable = false),
+    StructField("data_length", IntegerType, nullable = false),
+    StructField("ref_seq_id", IntegerType, nullable = false),
+    StructField("start_pos", IntegerType, nullable = false),
+    StructField("span", IntegerType, nullable = false),
+    StructField("n_records", IntegerType, nullable = false),
+    StructField("n_blocks", IntegerType, nullable = false)))
 }
 
 /** Conservative filter→predicate translation for the container schema (the
@@ -316,10 +281,10 @@ private[cram] final case class RecordsContainerPred(ivs: Seq[RefInterval], keepU
 }
 
 class CramScan(options: Map[String, String], required: StructType,
-               pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
+               pushed: Array[Filter] = Array.empty,
                limitHint: Int = -1)
     extends Scan with Batch {
-  private val records = CramDataSource.recordsMode(options)
+  private val records = CramFormat.records(options)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
@@ -825,215 +790,79 @@ class CramRecordsPartitionReader(
 
 // ---- write path -----------------------------------------------------------
 
-class CramWriteBuilder(options: Map[String, String], schema: StructType)
-    extends WriteBuilder with SupportsTruncate {
-  override def truncate(): WriteBuilder = this
-  override def build(): Write = new CramWrite(options, schema)
-}
-
-class CramWrite(options: Map[String, String], schema: StructType) extends Write {
-  override def toBatch: BatchWrite = {
-    val path = options.getOrElse("path", throw new IllegalArgumentException("cram sink requires a path"))
-    // write-option inference (the BAM/VCF convention): a `.cram` path is a
-    // single file via parts + name-order concat; anything else is a sharded
-    // directory of COMPLETE per-partition .cram files (AnySamSinkMultiple
-    // semantics, reference AnySamSinkMultiple.java:39-73)
-    val singleFile = path.endsWith(".cram")
-    // records mode co-writes the `.crai` by DEFAULT (option still wins both
-    // ways): the index is one text line per slice, and its presence turns
-    // every downstream scan's planning into O(index) with zero executor-side
-    // boundary discovery — the shape that matters at 100 TB. Container-spec
-    // mode keeps the opt-in default (its zero-payload containers produce no
-    // slice entries, and an empty `.crai` would plan an empty scan).
-    val writeCrai = options.get("writecrai").map(_.toBoolean)
-      .getOrElse(CramDataSource.recordsMode(options))
-    // records mode: rows are AlignmentRecords, encoded by the v3 record
-    // writer; the header dictionary comes from `refs` like the BAM sink
-    val recordsHeader: Option[SamHeader] =
-      if (CramDataSource.recordsMode(options)) {
-        val refs = SamHeader.parseRefsOption(options.getOrElse("refs",
-          throw new IllegalArgumentException(
-            "cram records sink requires refs (name:length,…)")))
-        Some(options.get("headertext") match {
-          case Some(t) => SamHeader(t, refs)
-          case None => SamHeader(refs)
-        })
-      } else None
-    val perContainer = options.get("recordspercontainer").map(_.toInt).getOrElse(10000)
-    // reference-based encode: a fasta option on a records write switches
-    // match positions to implicit/X-substitution form (CramRecordWriter)
-    val fasta = if (recordsHeader.isDefined) options.get("fasta") else None
-    // CRAM version: 3.0 (default) or 3.1 (record blocks upgrade to rANS
-    // Nx16, file definition minor = 1). codec=arith (3.1 only) swaps the
-    // record-block entropy stage for the adaptive arithmetic coder
-    // (CRAM method 6).
-    val v31 = options.get("version") match {
-      case None | Some("3.0") => false
-      case Some("3.1") => true
-      case Some(v) => throw new IllegalArgumentException(
-        s"cram sink version must be 3.0 or 3.1, got $v")
-    }
-    val wire = options.get("codec") match {
-      case None | Some("rans") => if (v31) 1 else 0
-      case Some("arith") =>
-        if (!v31) throw new IllegalArgumentException(
-          "cram sink codec=arith requires version=3.1")
-        2
-      case Some(c) => throw new IllegalArgumentException(
-        s"cram sink codec must be rans or arith, got $c")
-    }
-    // names=tok3 (3.1 only): RN blocks through the CRAM method-8 name
-    // tokenizer; default keeps gzip'd RN, which every reader decodes
-    val tok3 = options.get("names") match {
-      case None | Some("default") => false
-      case Some("tok3") =>
-        if (!v31) throw new IllegalArgumentException(
-          "cram sink names=tok3 requires version=3.1")
-        true
-      case Some(m) => throw new IllegalArgumentException(
-        s"cram sink names must be default or tok3, got $m")
-    }
-    // quals=fqz (3.1 only): QS blocks through the CRAM method-7 quality
-    // codec; default keeps the wire's rANS form
-    val fqz = options.get("quals") match {
-      case None | Some("default") => false
-      case Some("fqz") =>
-        if (!v31) throw new IllegalArgumentException(
-          "cram sink quals=fqz requires version=3.1")
-        true
-      case Some(m) => throw new IllegalArgumentException(
-        s"cram sink quals must be default or fqz, got $m")
-    }
-    // gzip level for the series blocks (BGZF-sink parity); -1 = default
-    val level = options.get("compressionlevel").map(_.toInt)
-      .getOrElse(java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    require(level == -1 || (level >= 0 && level <= 9), s"compressionLevel out of range: $level")
-    new CramBatchWrite(path, singleFile, writeCrai, schema,
-      new SerializableConf(SparkSession.active.sessionState.newHadoopConf()),
-      recordsHeader, perContainer, fasta, wire, tok3, fqz, level)
-  }
-}
-
-case class CramPartMessage(path: String, bytes: Long, entries: Seq[CraiEntry])
-  extends WriterCommitMessage
-
-/** Single-file mode: file-definition part + headerless container parts +
-  * EOF-container part, name-order concat (the BamSink geometry,
+/** Single-file mode: file definition (+ SAM-header container in records
+  * mode), headerless container parts, EOF container (the BamSink geometry,
   * reference CramSink.java:44-78); `.crai` entries collected per part and
-  * rebased by the bytes that precede each part after the merge.
-  * Sharded mode: each partition writes a COMPLETE standalone .cram (file
-  * definition + containers + EOF terminator), with a per-shard `.crai`
-  * written executor-side when requested — no driver-side merge at all.
+  * rebased by the bytes that precede each part after the merge. Sharded
+  * mode: each partition writes a COMPLETE standalone .cram, with a
+  * per-shard `.crai` when requested. A part reports its `.crai` entries.
   */
-class CramBatchWrite(path: String, singleFile: Boolean, writeCrai: Boolean,
-                     schema: StructType, conf: SerializableConf,
-                     recordsHeader: Option[SamHeader] = None,
-                     perContainer: Int = 10000,
-                     fastaPath: Option[String] = None,
-                     wire: Int = 0, tok3Names: Boolean = false,
-                     fqzQuals: Boolean = false,
-                     gzipLevel: Int = java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    extends BatchWrite {
-  private val tempDir = path + ".parts"
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) {
-      fs.delete(new Path(path), false)
-      fs.delete(new Path(tempDir), true)
-      fs.mkdirs(new Path(tempDir))
-    } else {
-      fs.delete(new Path(path), true)
-      fs.mkdirs(new Path(path))
-    }
-    val dir = if (singleFile) tempDir else path
-    val sch = schema
-    val c = conf
-    val complete = !singleFile
-    val shardCrai = writeCrai && !singleFile
-    val hdr = recordsHeader
-    val perC = perContainer
-    val fasta = fastaPath
-    val wireC = wire
-    val tok3C = tok3Names
-    val fqzC = fqzQuals
-    val lvlC = gzipLevel
-    (partitionId: Int, _: Long) => hdr match {
-      case Some(h) => new CramRecordsDataWriter(dir, h, sch, c, partitionId, complete, shardCrai, perC, fasta, wireC, tok3C, fqzC, lvlC)
-      case None => new CramDataWriter(dir, sch, c, partitionId, complete, shardCrai)
-    }
+case class CramSink(singleFile: Boolean, writeCrai: Boolean, schema: StructType,
+                    recordsHeader: Option[SamHeader], perContainer: Int,
+                    fastaPath: Option[String], wire: Int, tok3Names: Boolean,
+                    fqzQuals: Boolean, gzipLevel: Int, conf: SerializableConf)
+    extends SinkFormat[Seq[CraiEntry]] {
+  override def partSuffix: String = ".cram"
+  override def headerBytes(parts: Seq[Seq[CraiEntry]]): Array[Byte] = {
+    val fd = CramContainers.encodeFileDefinition(minor = if (wire > 0) 1 else 0)
+    recordsHeader.fold(fd)(fd ++ CramRecordWriter.encodeHeaderContainer(_))
   }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = if (singleFile) {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    // records mode prepends the SAM-header container to the file definition
-    // (container mode carries no header container — specs only)
-    val minor = if (wire > 0) 1 else 0
-    val headBytes = recordsHeader match {
-      case Some(h) =>
-        CramContainers.encodeFileDefinition(minor = minor) ++ CramRecordWriter.encodeHeaderContainer(h)
-      case None => CramContainers.encodeFileDefinition(minor = minor)
-    }
-    val ho = fs.create(new Path(tempDir, "header"), true)
-    ho.write(headBytes)
-    ho.close()
-    val to = fs.create(new Path(tempDir, "terminator"), true)
-    to.write(CramContainers.encodeEofContainer())
-    to.close()
-    val parts = messages.collect { case m: CramPartMessage => m }.sortBy(_.path)
-    HadoopIO.mergeParts(new Path(tempDir), new Path(path), conf.conf)
-    // .crai co-write AFTER the merge so the index's mtime is >= the CRAM's
-    // (readers reject an index older than its data file as stale)
-    if (writeCrai) {
-      var base = headBytes.length.toLong
-      val rebased = Seq.newBuilder[CraiEntry]
-      parts.foreach { m =>
-        m.entries.foreach(e => rebased += e.copy(containerOffset = e.containerOffset + base))
-        base += m.bytes
-      }
-      val co = fs.create(new Path(path + ".crai"), true)
-      CraiIndex.write(co, CraiIndex(rebased.result()))
-      co.close()
-    }
-  } // sharded: every shard (and its .crai) is already complete on disk
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    fs.delete(new Path(if (singleFile) tempDir else path), true)
+  override def terminatorBytes: Array[Byte] = CramContainers.encodeEofContainer()
+  override def indexes(target: Path, parts: Seq[(Seq[CraiEntry], Long)], dataEnd: Long)
+      : Seq[(String, java.io.OutputStream => Unit)] =
+    if (!writeCrai) Nil
+    else Seq(".crai" -> (o => CraiIndex.write(o, CraiIndex(parts.flatMap { case (es, base) =>
+      es.map(e => e.copy(containerOffset = e.containerOffset + base))
+    }))))
+  override def openPart(raw: java.io.OutputStream, sidecar: String => java.io.OutputStream)
+      : PartEncoder[Seq[CraiEntry]] = recordsHeader match {
+    case Some(h) => new CramRecordsPartWriter(this, h, raw, sidecar)
+    case None => new CramSpecPartWriter(this, raw, sidecar)
   }
+}
+
+/** Shared part framing: buffered container bytes with their offsets, the
+  * EOF container and per-shard `.crai` in sharded mode.
+  */
+private abstract class CramPartWriter(s: CramSink, raw: java.io.OutputStream,
+                                      sidecar: String => java.io.OutputStream)
+    extends PartEncoder[Seq[CraiEntry]] {
+  protected val out = new java.io.BufferedOutputStream(raw, 1 << 16)
+  protected var written = 0L
+  protected val entries = Seq.newBuilder[CraiEntry]
+  protected def put(bytes: Array[Byte]): Unit = { out.write(bytes); written += bytes.length }
+  protected def flush(): Unit = ()
+  override def finish(): Seq[CraiEntry] = {
+    flush()
+    if (!s.singleFile) out.write(CramContainers.encodeEofContainer())
+    out.close()
+    val es = entries.result()
+    if (s.writeCrai && !s.singleFile) {
+      val co = sidecar(".crai")
+      try CraiIndex.write(co, CraiIndex(es)) finally co.close()
+    }
+    es
+  }
+  override def abort(): Unit = out.close()
 }
 
 /** Container-spec writer (the default row model): rows are ref_seq_id,
   * start_pos, span, n_records, data_length with opaque zero payloads —
-  * geometry without records; [[CramRecordsDataWriter]] is the record path.
-  * `complete` = sharded mode: this writer emits a standalone .cram
-  * (file definition up front, EOF container at commit, absolute `.crai`
-  * offsets written next to the shard when `shardCrai`).
+  * geometry without records; [[CramRecordsPartWriter]] is the record path.
   */
-class CramDataWriter(dir: String, schema: StructType, conf: SerializableConf, partitionId: Int,
-                     complete: Boolean = false, shardCrai: Boolean = false)
-    extends DataWriter[InternalRow] {
-  private val partPath = new Path(dir, f"part-$partitionId%09d" + (if (complete) ".cram" else ""))
-  private val fs = partPath.getFileSystem(conf.conf)
-  private val out = new java.io.BufferedOutputStream(fs.create(partPath, true), 1 << 16)
-  private var written = 0L
-  locally {
-    if (complete) {
-      val fd = CramContainers.encodeFileDefinition()
-      out.write(fd)
-      written += fd.length
-    }
-  }
-  private val entries = Seq.newBuilder[CraiEntry]
+private final class CramSpecPartWriter(s: CramSink, raw: java.io.OutputStream,
+                                       sidecar: String => java.io.OutputStream)
+    extends CramPartWriter(s, raw, sidecar) {
+  if (!s.singleFile) put(CramContainers.encodeFileDefinition())
 
   private def idx(n: String): Int = {
-    val i = schema.fieldNames.indexOf(n)
+    val i = s.schema.fieldNames.indexOf(n)
     require(i >= 0, s"cram sink requires column $n")
     // ACCEPT_ANY_SCHEMA skips Spark's write-side validation, so enforce the
     // type here: reading an int from a non-int UnsafeRow field would
     // silently truncate (e.g. bigint 2^32 -> 0) into the container header
-    require(schema.fields(i).dataType == org.apache.spark.sql.types.IntegerType,
-      s"cram sink column $n must be INT, got ${schema.fields(i).dataType.simpleString}")
+    require(s.schema.fields(i).dataType == IntegerType,
+      s"cram sink column $n must be INT, got ${s.schema.fields(i).dataType.simpleString}")
     i
   }
   private val iRef = idx("ref_seq_id")
@@ -1048,23 +877,9 @@ class CramDataWriter(dir: String, schema: StructType, conf: SerializableConf, pa
     val refSeqId = row.getInt(iRef)
     val startPos = row.getInt(iStart)
     val span = row.getInt(iSpan)
-    val bytes = CramContainers.encodeContainer(dataLength, refSeqId, startPos, span, row.getInt(iRecs))
-    out.write(bytes)
     entries += CraiEntry(refSeqId, startPos, span, written, 0, dataLength)
-    written += bytes.length
+    put(CramContainers.encodeContainer(dataLength, refSeqId, startPos, span, row.getInt(iRecs)))
   }
-  override def commit(): WriterCommitMessage = {
-    if (complete) out.write(CramContainers.encodeEofContainer())
-    out.close()
-    if (shardCrai) {
-      val co = fs.create(new Path(partPath.toString + ".crai"), true)
-      CraiIndex.write(co, CraiIndex(entries.result()))
-      co.close()
-    }
-    CramPartMessage(partPath.toString, written, entries.result())
-  }
-  override def abort(): Unit = { out.close(); fs.delete(partPath, false) }
-  override def close(): Unit = ()
 }
 
 /** Records-mode writer: rows are [[graft.bam.AlignmentRecord]]s, buffered
@@ -1073,80 +888,45 @@ class CramDataWriter(dir: String, schema: StructType, conf: SerializableConf, pa
   * slice record counters restart per part — headerless parts can't know
   * their predecessors' counts before the concat — which no CRAM reader
   * needs for correctness (counters exist for `.crai`-less seeking hints).
-  * `complete` = sharded mode: a standalone .cram per partition (file
-  * definition + header container up front, EOF terminator at commit).
   */
-class CramRecordsDataWriter(dir: String, header: SamHeader, schema: StructType,
-                            conf: SerializableConf, partitionId: Int,
-                            complete: Boolean, shardCrai: Boolean, perContainer: Int,
-                            fastaPath: Option[String] = None,
-                            wire: Int = 0, tok3Names: Boolean = false,
-                            fqzQuals: Boolean = false,
-                            gzipLevel: Int = java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    extends DataWriter[InternalRow] {
-  require(perContainer > 0, s"recordsPerContainer must be positive, got $perContainer")
+private final class CramRecordsPartWriter(s: CramSink, header: SamHeader, raw: java.io.OutputStream,
+                                          sidecar: String => java.io.OutputStream)
+    extends CramPartWriter(s, raw, sidecar) {
+  require(s.perContainer > 0, s"recordsPerContainer must be positive, got ${s.perContainer}")
   // ACCEPT_ANY_SCHEMA skips Spark's write-side validation; fail fast on a
   // record column bound to the wrong type (a silent getInt over a bigint
   // field would truncate into the container payload)
   AlignmentRecord.schema.fields.foreach { f =>
-    val i = schema.fieldNames.indexOf(f.name)
+    val i = s.schema.fieldNames.indexOf(f.name)
     // catalogString comparison ignores nullability flags (valueContainsNull)
     // while still catching silent-truncation types (bigint vs int)
-    require(i < 0 || schema.fields(i).dataType.catalogString == f.dataType.catalogString,
+    require(i < 0 || s.schema.fields(i).dataType.catalogString == f.dataType.catalogString,
       s"cram records sink column ${f.name} must be ${f.dataType.simpleString}, " +
-        s"got ${schema.fields(i).dataType.simpleString}")
+        s"got ${s.schema.fields(i).dataType.simpleString}")
   }
-  private val partPath = new Path(dir, f"part-$partitionId%09d" + (if (complete) ".cram" else ""))
-  private val fs = partPath.getFileSystem(conf.conf)
-  private val out = new java.io.BufferedOutputStream(fs.create(partPath, true), 1 << 16)
-  private var written = 0L
-  locally {
-    if (complete) {
-      val fd = CramContainers.encodeFileDefinition(minor = if (wire > 0) 1 else 0)
-      val hc = CramRecordWriter.encodeHeaderContainer(header)
-      out.write(fd); out.write(hc)
-      written += fd.length + hc.length
-    }
+  if (!s.singleFile) {
+    put(CramContainers.encodeFileDefinition(minor = if (s.wire > 0) 1 else 0))
+    put(CramRecordWriter.encodeHeaderContainer(header))
   }
-  private val idx = graft.sources.bam.RowToRecord.indices(schema)
+  private val idx = graft.sources.bam.RowToRecord.indices(s.schema)
   private val buf = scala.collection.mutable.ArrayBuffer.empty[AlignmentRecord]
   private var recordCounter = 0L
-  private val entries = Seq.newBuilder[CraiEntry]
   // reference-based encode when the write carries a fasta option
-  private val fastaOpened = fastaPath.map(p => FastaRefs.open(p, conf.conf, header.refName))
+  private val fastaOpened = s.fastaPath.map(p => FastaRefs.open(p, s.conf.conf, header.refName))
   private val refSource: CramRefSource = fastaOpened.map(_._2).getOrElse(NoRefSource)
 
-  private def flushContainer(): Unit = if (buf.nonEmpty) {
-    val enc = CramRecordWriter.encodeContainer(buf.toIndexedSeq, header, recordCounter, refSource, wire, tok3Names, fqzQuals, gzipLevel)
-    out.write(enc.bytes)
+  override protected def flush(): Unit = if (buf.nonEmpty) {
+    val enc = CramRecordWriter.encodeContainer(buf.toIndexedSeq, header, recordCounter, refSource,
+      s.wire, s.tok3Names, s.fqzQuals, s.gzipLevel)
     entries += enc.craiEntry.copy(containerOffset = written)
+    put(enc.bytes)
     recordCounter += buf.length
-    written += enc.bytes.length
     buf.clear()
   }
 
   override def write(row: InternalRow): Unit = {
     buf += graft.sources.bam.RowToRecord.convert(row, idx)
-    if (buf.length >= perContainer) flushContainer()
+    if (buf.length >= s.perContainer) flush()
   }
-  override def commit(): WriterCommitMessage = {
-    flushContainer()
-    if (complete) out.write(CramContainers.encodeEofContainer())
-    out.close()
-    if (shardCrai) {
-      val co = fs.create(new Path(partPath.toString + ".crai"), true)
-      CraiIndex.write(co, CraiIndex(entries.result()))
-      co.close()
-    }
-    CramPartMessage(partPath.toString, written, entries.result())
-  }
-  override def abort(): Unit = { out.close(); fs.delete(partPath, false) }
   override def close(): Unit = fastaOpened.foreach(_._1.close())
-}
-
-/** Test/profiling access to [[FastaRefs]] (package-private). */
-object FastaRefsAccess {
-  def open(fastaPath: String, conf: org.apache.hadoop.conf.Configuration,
-           names: Int => String): (graft.bgzf.SeekableInput, graft.cram.CramRefSource) =
-    FastaRefs.open(fastaPath, conf, names)
 }

@@ -1,23 +1,17 @@
 package graft.sources.fastq
 
-import java.util
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.fastq.{FastqCodec, FastqRecord}
-import graft.sources.{HadoopIO, SerializableConf, SplitSizing, SplitTextReader, Stringency, StringencyLog}
+import graft.sources.{GraftProvider, HadoopIO, PartEncoder, RecordFormat, SerializableConf, SinkFormat,
+  SplitSizing, SplitTextReader, Stringency, StringencyLog}
 
 /** `format("fastq")` — splittable raw-read scan/sink over plain, BGZF, or
   * single-split gzip text. Beyond the reference's surface (disq starts at
@@ -32,40 +26,23 @@ import graft.sources.{HadoopIO, SerializableConf, SplitSizing, SplitTextReader, 
   * 4-line structure check (FastqCodec.detectPhase) and skips the spilled
   * lines — no record lost or duplicated at any split size.
   */
-class FastqDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "fastq"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = FastqRecord.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new FastqTable(properties.asScala.toMap)
-}
+class FastqDataSource extends GraftProvider(FastqFormat)
 
-class FastqTable(properties: Map[String, String]) extends Table with SupportsRead with SupportsWrite {
-  override def name(): String = s"fastq:${properties.getOrElse("path", "?")}"
-  override def schema(): StructType = FastqRecord.schema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE, TableCapability.TRUNCATE).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val opts = options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    new FastqScanBuilder(opts)
+object FastqFormat extends RecordFormat {
+  override def name: String = "fastq"
+  override def schema(options: Map[String, String]): StructType = FastqRecord.schema
+  override def scan(options: Map[String, String], required: StructType, pushed: Array[Filter],
+                    limit: Int): Scan = new FastqScan(options, required, limit)
+  override def sink(path: String, level: Int, options: Map[String, String],
+                    schema: StructType): SinkFormat[_] = {
+    val single = path.endsWith(".fastq") || path.endsWith(".fq") ||
+      path.endsWith(".fastq.gz") || path.endsWith(".fastq.bgz") ||
+      path.endsWith(".fq.gz") || path.endsWith(".fq.bgz")
+    val shardSuffix = options.getOrElse("shardsuffix", ".fastq")
+    require(Seq(".fastq", ".fq", ".fastq.gz", ".fastq.bgz").contains(shardSuffix),
+      s"unsupported shardSuffix $shardSuffix")
+    FastqSink(single, path.endsWith(".gz") || path.endsWith(".bgz"), shardSuffix, level, schema)
   }
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val opts = info.options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    new FastqWriteBuilder(opts, info.schema())
-  }
-}
-
-class FastqScanBuilder(options: Map[String, String])
-    extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownLimit {
-  private var required: StructType = FastqRecord.schema
-  private var limit: Int = -1
-  /** Partial limit pushdown: one whole-file partition per file, reader
-    * stops after n emitted records; Spark keeps its global limit on top.
-    */
-  override def pushLimit(l: Int): Boolean = { limit = l; true }
-  override def isPartiallyPushed(): Boolean = true
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = new FastqScan(options, required, limit)
 }
 
 class FastqScan(options: Map[String, String], required: StructType, limitHint: Int)
@@ -227,94 +204,31 @@ object FastqRowBuilder {
 
 // ---- write path -----------------------------------------------------------
 
-class FastqWriteBuilder(options: Map[String, String], schema: StructType)
-    extends WriteBuilder with SupportsTruncate {
-  override def truncate(): WriteBuilder = this
-  override def build(): Write = new FastqWrite(options, schema)
-}
-
-class FastqWrite(options: Map[String, String], schema: StructType) extends Write {
-  override def toBatch: BatchWrite = {
-    val path = options.getOrElse("path",
-      throw new IllegalArgumentException("fastq sink requires a path"))
-    val single = path.endsWith(".fastq") || path.endsWith(".fq") ||
-      path.endsWith(".fastq.gz") || path.endsWith(".fastq.bgz") ||
-      path.endsWith(".fq.gz") || path.endsWith(".fq.bgz")
-    val bgzf = path.endsWith(".gz") || path.endsWith(".bgz")
-    val shardSuffix = options.getOrElse("shardsuffix", ".fastq")
-    require(Seq(".fastq", ".fq", ".fastq.gz", ".fastq.bgz").contains(shardSuffix),
-      s"unsupported shardSuffix $shardSuffix")
-    val level = options.get("compressionlevel").map(_.toInt)
-      .getOrElse(java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    require(level == -1 || (level >= 0 && level <= 9), s"compressionLevel out of range: $level")
-    new FastqBatchWrite(path, single, bgzf, shardSuffix, level, schema,
-      new SerializableConf(SparkSession.active.sessionState.newHadoopConf()))
-  }
-}
-
-/** Single-file: headerless parts (FASTQ has no header at all) merged in
-  * name order, plus a BGZF terminator part for compressed output.
-  * Sharded: one complete file per partition.
+/** Single-file: headerless parts (FASTQ has no header at all), plus a BGZF
+  * terminator for compressed output. Sharded: one complete file per
+  * partition.
   */
-class FastqBatchWrite(path: String, singleFile: Boolean, bgzf: Boolean, shardSuffix: String,
-                      level: Int, schema: StructType, conf: SerializableConf) extends BatchWrite {
-  private val tempDir = path + ".parts"
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) {
-      fs.delete(new Path(path), false)
-      fs.delete(new Path(tempDir), true)
-      fs.mkdirs(new Path(tempDir))
-    } else {
-      fs.delete(new Path(path), true)
-      fs.mkdirs(new Path(path))
+case class FastqSink(singleFile: Boolean, bgzf: Boolean, partSuffix: String, level: Int,
+                     schema: StructType) extends SinkFormat[Unit] {
+  override def terminatorBytes: Array[Byte] =
+    if (bgzf) graft.bgzf.Bgzf.EofBlock else Array.emptyByteArray
+  override def openPart(raw: java.io.OutputStream, sidecar: String => java.io.OutputStream)
+      : PartEncoder[Unit] = new PartEncoder[Unit] {
+    private val out: java.io.OutputStream =
+      if (singleFile && bgzf) new graft.bgzf.BgzfOutputStream(raw, writeEof = false, level = level)
+      else if (!singleFile && (partSuffix.endsWith(".gz") || partSuffix.endsWith(".bgz")))
+        new graft.bgzf.BgzfOutputStream(raw, writeEof = true, level = level)
+      else new java.io.BufferedOutputStream(raw, 1 << 16)
+    // direct InternalRow → four-line record bytes; falls back to the
+    // RowToFastq + FastqCodec.toLines spec path on null mandatory fields
+    private val enc = new graft.fastq.FastqRowEncoder(RowToFastq.indices(schema))
+    override def write(row: InternalRow): Unit = {
+      val len = enc.encode(row)
+      out.write(enc.buf, 0, len)
     }
-    val dir = if (singleFile) tempDir else path
-    val sf = singleFile; val bz = bgzf; val ss = shardSuffix; val lv = level
-    val c = conf; val sch = schema
-    (partitionId: Int, _: Long) => new FastqDataWriter(dir, sf, bz, ss, lv, sch, c, partitionId)
+    override def finish(): Unit = out.close()
+    override def abort(): Unit = out.close()
   }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = if (singleFile) {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (bgzf) {
-      val to = fs.create(new Path(tempDir, "terminator"), true)
-      to.write(graft.bgzf.Bgzf.EofBlock)
-      to.close()
-    }
-    HadoopIO.mergeParts(new Path(tempDir), new Path(path), conf.conf)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) fs.delete(new Path(tempDir), true)
-  }
-}
-
-class FastqDataWriter(dir: String, singleFile: Boolean, bgzf: Boolean, shardSuffix: String,
-                      level: Int, schema: StructType, conf: SerializableConf, partitionId: Int)
-    extends DataWriter[InternalRow] {
-  private val name = if (singleFile) f"part-$partitionId%09d" else f"part-$partitionId%09d$shardSuffix"
-  private val partPath = new Path(dir, name)
-  private val fs = partPath.getFileSystem(conf.conf)
-  private val raw = fs.create(partPath, true)
-  private val shardBgzf = !singleFile && (shardSuffix.endsWith(".gz") || shardSuffix.endsWith(".bgz"))
-  private val out: java.io.OutputStream =
-    if (singleFile && bgzf) new graft.bgzf.BgzfOutputStream(raw, writeEof = false, level = level)
-    else if (shardBgzf) new graft.bgzf.BgzfOutputStream(raw, writeEof = true, level = level)
-    else new java.io.BufferedOutputStream(raw, 1 << 16)
-  // direct InternalRow → four-line record bytes; falls back to the
-  // RowToFastq + FastqCodec.toLines spec path on null mandatory fields
-  private val enc = new graft.fastq.FastqRowEncoder(RowToFastq.indices(schema))
-
-  override def write(row: InternalRow): Unit = {
-    val len = enc.encode(row)
-    out.write(enc.buf, 0, len)
-  }
-  override def commit(): WriterCommitMessage = { out.close(); new WriterCommitMessage {} }
-  override def abort(): Unit = { out.close(); fs.delete(partPath, false) }
-  override def close(): Unit = ()
 }
 
 /** InternalRow → FastqRecord against the sink's input schema. */

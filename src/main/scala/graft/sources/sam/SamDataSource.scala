@@ -1,23 +1,17 @@
 package graft.sources.sam
 
-import java.util
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.bam.{AlignmentRecord, BamFieldMask, RecordToRow, SamHeader}
 import graft.sam.SamCodec
-import graft.sources.{GenomicInterval, HadoopIO, SerializableConf, SplitTextReader}
-import graft.sources.bam.{Opts, RowToRecord, TagCols}
+import graft.sources.{GenomicInterval, GraftProvider, HadoopIO, PartEncoder, PushedRegion, RecordFormat,
+  SerializableConf, SinkFormat, SplitTextReader}
+import graft.sources.bam.TagCols
 
 /** `format("sam")` — plain-text SAM scan/sink (reference SamSource.java:35-87,
   * SamSink.java:27-46). Text splits with exact line ownership; data lines
@@ -29,56 +23,31 @@ import graft.sources.bam.{Opts, RowToRecord, TagCols}
   * of the raw optional-column tail, unrequested tag values are never
   * materialized (SamCodec.scanSelectedTags).
   */
-class SamDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "sam"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TagCols.schemaWith(Opts.normalize(options.asScala.toMap))
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new SamTable(properties.asScala.toMap)
-}
+class SamDataSource extends GraftProvider(SamFormat)
 
-class SamTable(properties: Map[String, String]) extends Table with SupportsRead with SupportsWrite {
-  override def name(): String = s"sam:${properties.getOrElse("path", "?")}"
-  override def schema(): StructType = TagCols.schemaWith(Opts.normalize(properties))
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE, TableCapability.TRUNCATE).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val opts = options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    new SamScanBuilder(opts)
-  }
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val opts = info.options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    new SamWriteBuilder(opts, info.schema())
-  }
-}
-
-class SamScanBuilder(options: Map[String, String])
-    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with SupportsPushDownLimit {
-  private var required: StructType = TagCols.schemaWith(options)
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var limit: Int = -1
-  /** Partial limit pushdown: one whole-file partition per file, reader stops
-    * after n emitted records; Spark keeps its own global limit on top.
-    */
-  override def pushLimit(l: Int): Boolean = { limit = l; true }
-  override def isPartiallyPushed(): Boolean = true
+object SamFormat extends RecordFormat {
+  override def name: String = "sam"
+  override def schema(options: Map[String, String]): StructType = TagCols.schemaWith(options)
   /** Interval-translatable filters → reader-side record filter (SAM text has
     * no index, matching the reference's record-level-only path,
-    * SamSource.java:68-77); everything stays residual.
+    * SamSource.java:68-77).
     */
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter]): Array[org.apache.spark.sql.sources.Filter] = {
-    pushed = filters.filter(graft.sources.PushedRegion.accepts)
-    filters // all residual
+  override def acceptsFilter(options: Map[String, String]): Filter => Boolean = PushedRegion.accepts
+  override def scan(options: Map[String, String], required: StructType, pushed: Array[Filter],
+                    limit: Int): Scan = new SamScan(options, required, pushed, limit)
+  override def sink(path: String, level: Int, options: Map[String, String],
+                    schema: StructType): SinkFormat[_] = {
+    val refs = options.get("refs").map(SamHeader.parseRefsOption).getOrElse(IndexedSeq.empty)
+    val header = options.get("headertext") match {
+      case Some(t) => SamHeader(t, SamHeader.refsFromText(t))
+      case None => SamHeader(refs)
+    }
+    SamSink(header, path.endsWith(".sam"), schema)
   }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = new SamScan(options, required, pushed, limit)
 }
 
 class SamScan(options: Map[String, String], required: StructType,
-              pushed: Array[org.apache.spark.sql.sources.Filter],
+              pushed: Array[Filter],
               limitHint: Int = -1) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -94,7 +63,7 @@ class SamScan(options: Map[String, String], required: StructType,
     val pathStr = options.getOrElse("path", throw new IllegalArgumentException("sam source requires a path"))
     val intervals0 = options.get("intervals")
       .map(s => GenomicInterval.optimize(GenomicInterval.parseList(s)))
-      .orElse(graft.sources.PushedRegion.toIntervals(pushed)) // filter-derived pushdown
+      .orElse(PushedRegion.toIntervals(pushed)) // filter-derived pushdown
     val unplacedUnmappedOpt = options.get("unplacedunmapped").map(_.toBoolean)
     val unplacedUnmapped = unplacedUnmappedOpt.getOrElse(false)
     // traversal-parameter parity (reference AbstractBinarySamSource.java:50-54):
@@ -235,84 +204,25 @@ class SamPartitionReader(p: SamInputPartition, conf: SerializableConf, required:
 
 // ---- write path -----------------------------------------------------------
 
-class SamWriteBuilder(options: Map[String, String], schema: StructType)
-    extends WriteBuilder with SupportsTruncate {
-  override def truncate(): WriteBuilder = this
-  override def build(): Write = new SamWrite(options, schema)
-}
-
-class SamWrite(options: Map[String, String], schema: StructType) extends Write {
-  override def toBatch: BatchWrite = {
-    val path = options.getOrElse("path", throw new IllegalArgumentException("sam sink requires a path"))
-    val refs = options.get("refs").map(SamHeader.parseRefsOption).getOrElse(IndexedSeq.empty)
-    val header = options.get("headertext") match {
-      case Some(t) => SamHeader(t, SamHeader.refsFromText(t))
-      case None => SamHeader(refs)
-    }
-    new SamBatchWrite(path, header, path.endsWith(".sam"), schema,
-      new SerializableConf(SparkSession.active.sessionState.newHadoopConf()))
-  }
-}
-
-/** Single-file: headerless text parts + `header` part + name-order concat
-  * (no terminator — SamSink.java:37-45). Sharded: complete .sam per part.
+/** Single-file: headerless text parts after the header text, no terminator
+  * (SamSink.java:37-45). Sharded: complete .sam per part.
   */
-class SamBatchWrite(path: String, header: SamHeader, singleFile: Boolean,
-                    schema: StructType, conf: SerializableConf) extends BatchWrite {
-  private val tempDir = path + ".parts"
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) {
-      fs.delete(new Path(path), false)
-      fs.delete(new Path(tempDir), true)
-      fs.mkdirs(new Path(tempDir))
-    } else {
-      fs.delete(new Path(path), true)
-      fs.mkdirs(new Path(path))
+case class SamSink(header: SamHeader, singleFile: Boolean, schema: StructType)
+    extends SinkFormat[Unit] {
+  override def partSuffix: String = ".sam"
+  override def headerBytes(parts: Seq[Unit]): Array[Byte] = header.text.getBytes("UTF-8")
+  override def openPart(raw: java.io.OutputStream, sidecar: String => java.io.OutputStream)
+      : PartEncoder[Unit] = new PartEncoder[Unit] {
+    private val out = new java.io.BufferedOutputStream(raw, 1 << 16)
+    // direct InternalRow → line-bytes encoder; falls back to the
+    // RowToRecord + SamCodec.toLine spec path for non-fast-path shapes
+    private val enc = new graft.sam.SamRowEncoder(schema)
+    if (!singleFile) out.write(header.text.getBytes("UTF-8"))
+    override def write(row: InternalRow): Unit = {
+      val len = enc.encode(row)
+      out.write(enc.buf, 0, len)
     }
-    val dir = if (singleFile) tempDir else path
-    val hdr = header
-    val sf = singleFile
-    val c = conf
-    val sch = schema
-    (partitionId: Int, _: Long) => new SamDataWriter(dir, hdr, sf, sch, c, partitionId)
+    override def finish(): Unit = out.close()
+    override def abort(): Unit = out.close()
   }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = if (singleFile) {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    val ho = fs.create(new Path(tempDir, "header"), true)
-    ho.write(header.text.getBytes("UTF-8"))
-    ho.close()
-    HadoopIO.mergeParts(new Path(tempDir), new Path(path), conf.conf)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) fs.delete(new Path(tempDir), true)
-  }
-}
-
-class SamDataWriter(dir: String, header: SamHeader, singleFile: Boolean,
-                    schema: StructType, conf: SerializableConf, partitionId: Int)
-    extends DataWriter[InternalRow] {
-  private val name = if (singleFile) f"part-$partitionId%09d" else f"part-$partitionId%09d.sam"
-  private val partPath = new Path(dir, name)
-  private val fs = partPath.getFileSystem(conf.conf)
-  private val out = new java.io.BufferedOutputStream(fs.create(partPath, true), 1 << 16)
-  // direct InternalRow → line-bytes encoder; falls back to the
-  // RowToRecord + SamCodec.toLine spec path for non-fast-path shapes
-  private val enc = new graft.sam.SamRowEncoder(schema)
-  if (!singleFile) out.write(header.text.getBytes("UTF-8"))
-
-  override def write(row: InternalRow): Unit = {
-    val len = enc.encode(row)
-    out.write(enc.buf, 0, len)
-  }
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    new WriterCommitMessage {}
-  }
-  override def abort(): Unit = { out.close(); fs.delete(partPath, false) }
-  override def close(): Unit = ()
 }

@@ -1,23 +1,17 @@
 package graft.sources.vcf
 
-import java.util
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{ArrayType, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.{GenomicInterval, HadoopIO, SerializableConf, SplitTextReader}
+import graft.sources.{CountingOutputStream, GenomicInterval, GraftProvider, HadoopIO, PartEncoder,
+  PushedRegion, RecordFormat, SerializableConf, SinkFormat, SplitTextReader}
 import graft.vcf.{Genotype, Variant, VcfCodec, VcfHeader}
 
 /** `format("vcf")` — VCF scan/sink over plain, BGZF (.vcf.bgz / BGZF .vcf.gz,
@@ -41,54 +35,36 @@ import graft.vcf.{Genotype, Variant, VcfCodec, VcfHeader}
   * path `.vcf` → single plain file, `.vcf.bgz`/`.vcf.gz` → single BGZF file
   * (with empty-block terminator), else sharded directory of complete .vcf.
   */
-class VcfDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "vcf"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = Variant.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new VcfTable(properties.asScala.toMap)
-}
+class VcfDataSource extends GraftProvider(VcfFormat)
 
-class VcfTable(properties: Map[String, String]) extends Table with SupportsRead with SupportsWrite {
-  override def name(): String = s"vcf:${properties.getOrElse("path", "?")}"
-  override def schema(): StructType = Variant.schema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE, TableCapability.TRUNCATE).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val opts = options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    new VcfScanBuilder(opts)
-  }
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val opts = info.options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    new VcfWriteBuilder(opts, info.schema())
-  }
-}
-
-class VcfScanBuilder(options: Map[String, String])
-    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with SupportsPushDownLimit {
-  private var required: StructType = Variant.schema
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var limit: Int = -1
-  /** Partial limit pushdown: one whole-file partition per file, reader stops
-    * after n emitted records; Spark keeps its own global limit on top.
+object VcfFormat extends RecordFormat {
+  override def name: String = "vcf"
+  override def schema(options: Map[String, String]): StructType = Variant.schema
+  /** Interval-translatable filters drive split pruning (via .tbi / .idx)
+    * and reader-side filtering.
     */
-  override def pushLimit(l: Int): Boolean = { limit = l; true }
-  override def isPartiallyPushed(): Boolean = true
-  /** Interval-translatable filters recorded for split pruning (via .tbi /
-    * .idx) + reader-side filtering; everything stays residual.
-    */
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter]): Array[org.apache.spark.sql.sources.Filter] = {
-    pushed = filters.filter(graft.sources.PushedRegion.accepts)
-    filters // all residual
+  override def acceptsFilter(options: Map[String, String]): Filter => Boolean = PushedRegion.accepts
+  override def scan(options: Map[String, String], required: StructType, pushed: Array[Filter],
+                    limit: Int): Scan = new VcfScan(options, required, pushed, limit)
+  override def sink(path: String, level: Int, options: Map[String, String],
+                    schema: StructType): SinkFormat[_] = {
+    val single = path.endsWith(".vcf") || path.endsWith(".vcf.bgz") || path.endsWith(".vcf.gz")
+    val bgzf = path.endsWith(".bgz") || path.endsWith(".gz")
+    // sharded mode: per-shard extension decides the shard codec (reference
+    // VcfOutputFormat.java:24-71 — plain, gzip-named-BGZF, or BGZF shards)
+    val shardSuffix = options.getOrElse("shardsuffix", ".vcf")
+    require(Seq(".vcf", ".vcf.gz", ".vcf.bgz").contains(shardSuffix),
+      s"unsupported shardSuffix $shardSuffix")
+    VcfSink(options.get("vcfheader"), single, bgzf,
+      options.get("writetbi").exists(_.toBoolean) && single && bgzf,
+      // tribble `.idx` co-write: the plain-text counterpart of writeTbi
+      options.get("writeidx").exists(_.toBoolean) && single && !bgzf,
+      shardSuffix, level, schema)
   }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = new VcfScan(options, required, pushed, limit)
 }
 
 class VcfScan(options: Map[String, String], required: StructType,
-              pushed: Array[org.apache.spark.sql.sources.Filter],
+              pushed: Array[Filter],
               limitHint: Int = -1) extends Scan with Batch {
   // FORMAT/INFO-field projection: validated at planning so a bad option
   // fails before any task launches
@@ -111,7 +87,7 @@ class VcfScan(options: Map[String, String], required: StructType,
     val pathStr = options.getOrElse("path", throw new IllegalArgumentException("vcf source requires a path"))
     val intervals = options.get("intervals")
       .map(s => GenomicInterval.optimize(GenomicInterval.parseList(s)))
-      .orElse(graft.sources.PushedRegion.toIntervals(pushed)) // filter-derived pushdown
+      .orElse(PushedRegion.toIntervals(pushed)) // filter-derived pushdown
     val stringency = graft.sources.Stringency.fromOptions(options)
     // per-file header/index I/O fanned out on the shared bounded pool
     // (O(files) serial driver RPCs otherwise), lexicographic order preserved
@@ -393,169 +369,92 @@ object VariantRowBuilder {
 
 // ---- write path -----------------------------------------------------------
 
-class VcfWriteBuilder(options: Map[String, String], schema: StructType)
-    extends WriteBuilder with SupportsTruncate {
-  override def truncate(): WriteBuilder = this
-  override def build(): Write = new VcfWrite(options, schema)
-}
-
-class VcfWrite(options: Map[String, String], schema: StructType) extends Write {
-  override def toBatch: BatchWrite = {
-    val path = options.getOrElse("path", throw new IllegalArgumentException("vcf sink requires a path"))
-    val single = path.endsWith(".vcf") || path.endsWith(".vcf.bgz") || path.endsWith(".vcf.gz")
-    val bgzf = path.endsWith(".bgz") || path.endsWith(".gz")
-    val writeTbi = options.get("writetbi").exists(_.toBoolean) && single && bgzf
-    // tribble `.idx` co-write: the plain-text counterpart of writeTbi
-    val writeIdx = options.get("writeidx").exists(_.toBoolean) && single && !bgzf
-    // sharded mode: per-shard extension decides the shard codec (reference
-    // VcfOutputFormat.java:24-71 — plain, gzip-named-BGZF, or BGZF shards)
-    val shardSuffix = options.getOrElse("shardsuffix", ".vcf")
-    require(Seq(".vcf", ".vcf.gz", ".vcf.bgz").contains(shardSuffix),
-      s"unsupported shardSuffix $shardSuffix")
-    // deflate level 0..9 for BGZF output (htsjdk writer parity); -1 = zlib default
-    val level = options.get("compressionlevel").map(_.toInt)
-      .getOrElse(java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    require(level == -1 || (level >= 0 && level <= 9), s"compressionLevel out of range: $level")
-    new VcfBatchWrite(path, options.get("vcfheader"), single, bgzf, writeTbi, writeIdx, shardSuffix,
-      level, schema, new SerializableConf(SparkSession.active.sessionState.newHadoopConf()))
-  }
-}
-
-/** Single-file: headerless parts + `header` part (+ BGZF terminator part for
-  * compressed output) merged in name order (VcfSink.java:27-68). Sharded:
-  * complete plain .vcf per partition (VcfSinkMultiple.java:20-44).
+/** What one VCF part reports: the sample names its rows carry (for a
+  * synthesized header) and its `.tbi` / `.idx` contributions.
   */
-class VcfBatchWrite(path: String, headerOpt: Option[String], singleFile: Boolean,
-                    bgzf: Boolean, writeTbi: Boolean, writeIdx: Boolean, shardSuffix: String,
-                    level: Int, schema: StructType, conf: SerializableConf) extends BatchWrite {
-  private val tempDir = path + ".parts"
+case class VcfPartMessage(samples: Seq[String], tbi: graft.index.TbiPartData,
+                          idx: graft.index.TribblePartData)
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) {
-      fs.delete(new Path(path), false)
-      fs.delete(new Path(tempDir), true)
-      fs.mkdirs(new Path(tempDir))
-    } else {
-      fs.delete(new Path(path), true)
-      fs.mkdirs(new Path(path))
-    }
-    val dir = if (singleFile) tempDir else path
-    val ho = headerOpt; val sf = singleFile; val bz = bgzf; val c = conf; val sch = schema
-    val tb = writeTbi; val ti = writeIdx; val ss = shardSuffix; val lv = level
-    (partitionId: Int, _: Long) => new VcfDataWriter(dir, ho, sf, bz, tb, ti, ss, lv, sch, c, partitionId)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = if (singleFile) {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    // header from option, or synthesized with samples reported by writers
-    val samples = messages.collectFirst { case m: VcfPartMessage if m.samples.nonEmpty => m.samples }
-      .getOrElse(Seq.empty)
-    val headerText = headerOpt.getOrElse(VcfHeader(Seq("##fileformat=VCFv4.2"), samples).headerText)
-    val ho = fs.create(new Path(tempDir, "header"), true)
-    if (bgzf) {
-      val b = new graft.bgzf.BgzfOutputStream(ho, writeEof = false, level = level)
-      b.write(headerText.getBytes("UTF-8")); b.close()
-    } else { ho.write(headerText.getBytes("UTF-8")); ho.close() }
-    if (bgzf) {
-      val to = fs.create(new Path(tempDir, "terminator"), true)
-      to.write(graft.bgzf.Bgzf.EofBlock)
-      to.close()
-    }
-    // capture part geometry BEFORE the merge consumes the parts dir
-    val headerBytes = fs.getFileStatus(new Path(tempDir, "header")).getLen
-    val parts = messages.collect { case m: VcfPartMessage => m }.sortBy(_.path)
-    val shifts = { var b = headerBytes; parts.map { m => val s = b; b += m.partBytes; s } }
-    HadoopIO.mergeParts(new Path(tempDir), new Path(path), conf.conf)
-    // index co-writes AFTER the merge so their mtime is >= the data file's —
-    // readers treat an index older than its data file as stale (in-place
-    // rewrite guard) and would otherwise reject every fresh co-write
-    if (writeTbi) {
-      // rebase each part's index contribution by the compressed bytes that
-      // precede it after concat; a non-sorted result skips the index
-      graft.index.TbiPartData.mergeSorted(parts.map(_.tbi).toSeq, shifts.toSeq) match {
-        case Some(idx) =>
-          val io = fs.create(new Path(path + ".tbi"), true)
-          graft.index.TbiIndex.write(io, idx)
-          io.close()
-        case None =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"writeTbi: output $path is not coordinate-sorted; skipping .tbi")
-      }
-    }
-    if (writeIdx) {
-      // rebase each part's byte offsets by the plain bytes preceding it
-      val totalBytes = headerBytes + parts.map(_.partBytes).sum
-      graft.index.TribblePartData.mergeSorted(parts.map(_.idx).toSeq, shifts.toSeq) match {
-        case Some(idx) =>
-          val io = fs.create(new Path(path + ".idx"), true)
-          graft.index.TribbleIdx.write(io, idx, new Path(path).getName, totalBytes)
-          io.close()
-        case None =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"writeIdx: output $path is not coordinate-sorted; skipping .idx")
-      }
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) fs.delete(new Path(tempDir), true)
-  }
-}
-
-/** `partBytes` is the part's on-disk length: compressed bytes for BGZF
-  * parts, plain bytes otherwise — commit uses it to rebase per-part index
-  * offsets to post-concat positions.
+/** Single-file: headerless parts after the header (BGZF-compressed, plus
+  * the BGZF terminator, for compressed output — VcfSink.java:27-68).
+  * Sharded: a complete file per partition (VcfSinkMultiple.java:20-44).
+  * The header is the `vcfHeader` option, else a minimal one with the
+  * sample names of the first row that has genotypes.
   */
-case class VcfPartMessage(path: String, samples: Seq[String], partBytes: Long,
-    tbi: graft.index.TbiPartData,
-    idx: graft.index.TribblePartData) extends WriterCommitMessage
-
-/** Byte counter above the write buffer so offsets are exact at write time. */
-private[vcf] final class CountingOutputStream(under: java.io.OutputStream)
-    extends java.io.OutputStream {
-  var count = 0L
-  override def write(b: Int): Unit = { under.write(b); count += 1 }
-  override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-    under.write(b, off, len); count += len
+case class VcfSink(headerOpt: Option[String], singleFile: Boolean, bgzf: Boolean,
+                   writeTbi: Boolean, writeIdx: Boolean, partSuffix: String, level: Int,
+                   schema: StructType) extends SinkFormat[VcfPartMessage] {
+  override def headerBytes(parts: Seq[VcfPartMessage]): Array[Byte] = {
+    val samples = parts.collectFirst { case m if m.samples.nonEmpty => m.samples }.getOrElse(Seq.empty)
+    val text = headerOpt.getOrElse(VcfHeader(Seq("##fileformat=VCFv4.2"), samples).headerText)
+      .getBytes("UTF-8")
+    if (!bgzf) text
+    else {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val b = new graft.bgzf.BgzfOutputStream(bytes, writeEof = false, level = level)
+      b.write(text); b.close()
+      bytes.toByteArray
+    }
   }
-  override def flush(): Unit = under.flush()
-  override def close(): Unit = under.close()
+  override def terminatorBytes: Array[Byte] =
+    if (bgzf) graft.bgzf.Bgzf.EofBlock else Array.emptyByteArray
+
+  /** Each part's index contribution rebases by the bytes that precede it
+    * after the merge; a non-sorted result skips the index.
+    */
+  override def indexes(target: Path, parts: Seq[(VcfPartMessage, Long)], dataEnd: Long)
+      : Seq[(String, java.io.OutputStream => Unit)] = {
+    def skip(opt: String, ext: String) = {
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"$opt: output $target is not coordinate-sorted; skipping $ext")
+      Nil
+    }
+    val shifts = parts.map(_._2)
+    val tbi = if (!writeTbi) Nil
+      else graft.index.TbiPartData.mergeSorted(parts.map(_._1.tbi), shifts) match {
+        case Some(idx) => Seq(".tbi" -> ((o: java.io.OutputStream) => graft.index.TbiIndex.write(o, idx)))
+        case None => skip("writeTbi", ".tbi")
+      }
+    val tribble = if (!writeIdx) Nil
+      else graft.index.TribblePartData.mergeSorted(parts.map(_._1.idx), shifts) match {
+        case Some(idx) => Seq(".idx" -> ((o: java.io.OutputStream) =>
+          graft.index.TribbleIdx.write(o, idx, target.getName, dataEnd)))
+        case None => skip("writeIdx", ".idx")
+      }
+    tbi ++ tribble
+  }
+
+  override def openPart(raw: java.io.OutputStream, sidecar: String => java.io.OutputStream)
+      : PartEncoder[VcfPartMessage] = new VcfPartWriter(this, raw)
 }
 
-class VcfDataWriter(dir: String, headerOpt: Option[String], singleFile: Boolean, bgzf: Boolean,
-                    writeTbi: Boolean, writeIdx: Boolean, shardSuffix: String, level: Int,
-                    schema: StructType, conf: SerializableConf, partitionId: Int)
-    extends DataWriter[InternalRow] {
-  private val name = if (singleFile) f"part-$partitionId%09d" else f"part-$partitionId%09d$shardSuffix"
-  private val partPath = new Path(dir, name)
-  private val fs = partPath.getFileSystem(conf.conf)
-  private val raw = fs.create(partPath, true)
-  private val shardBgzf = !singleFile && (shardSuffix.endsWith(".gz") || shardSuffix.endsWith(".bgz"))
+private final class VcfPartWriter(s: VcfSink, raw: java.io.OutputStream)
+    extends PartEncoder[VcfPartMessage] {
   private val bgzfOut: graft.bgzf.BgzfOutputStream =
-    if (singleFile && bgzf) new graft.bgzf.BgzfOutputStream(raw, writeEof = false, level = level)
-    else if (shardBgzf) new graft.bgzf.BgzfOutputStream(raw, writeEof = true, level = level) // complete standalone file
+    if (s.singleFile && s.bgzf) new graft.bgzf.BgzfOutputStream(raw, writeEof = false, level = s.level)
+    else if (!s.singleFile && (s.partSuffix.endsWith(".gz") || s.partSuffix.endsWith(".bgz")))
+      new graft.bgzf.BgzfOutputStream(raw, writeEof = true, level = s.level) // complete standalone file
     else null
+  // plain text: byte positions above the write buffer for `.idx` offsets
   private val counting: CountingOutputStream =
     if (bgzfOut == null) new CountingOutputStream(new java.io.BufferedOutputStream(raw, 1 << 16))
     else null
-  private val out: java.io.OutputStream =
-    if (bgzfOut != null) bgzfOut else counting
+  private val out: java.io.OutputStream = if (bgzfOut != null) bgzfOut else counting
   // direct InternalRow → line-bytes encoder (VcfRowEncoder): no per-row
   // Variant/Genotype/String/Map materialization on the hot path; falls back
   // to the RowToVariant spec path for shapes it can't prove byte-identical
-  private val enc = new graft.vcf.VcfRowEncoder(schema)
+  private val enc = new graft.vcf.VcfRowEncoder(s.schema)
   private var samples: Seq[String] = Seq.empty
   private var wroteShardHeader = false
-  private val tbi = if (writeTbi && bgzfOut != null) new graft.index.TbiBuilder else null
-  private val tidx = if (writeIdx && singleFile && bgzfOut == null) new graft.index.TribbleIdxBuilder() else null
+  private val tbi = if (s.writeTbi && bgzfOut != null) new graft.index.TbiBuilder else null
+  private val tidx =
+    if (s.writeIdx && s.singleFile && bgzfOut == null) new graft.index.TribbleIdxBuilder() else null
 
   override def write(row: InternalRow): Unit = {
     val len = enc.encode(row)
     if (samples.isEmpty && enc.lastHasGenotypes) samples = enc.samplesOf(row)
-    if (!singleFile && !wroteShardHeader) {
-      val text = headerOpt.getOrElse(VcfHeader(Seq("##fileformat=VCFv4.2"), samples).headerText)
+    if (!s.singleFile && !wroteShardHeader) {
+      val text = s.headerOpt.getOrElse(VcfHeader(Seq("##fileformat=VCFv4.2"), samples).headerText)
       out.write(text.getBytes("UTF-8"))
       wroteShardHeader = true
     }
@@ -569,19 +468,14 @@ class VcfDataWriter(dir: String, headerOpt: Option[String], singleFile: Boolean,
       tidx.add(enc.lastContig, enc.lastStart, math.max(enc.lastStart, enc.lastEnd),
         pBeg, counting.count)
   }
-  override def commit(): WriterCommitMessage = {
-    if (!singleFile && !wroteShardHeader) {
-      val text = headerOpt.getOrElse(VcfHeader.Minimal.headerText)
-      out.write(text.getBytes("UTF-8"))
-    }
+  override def finish(): VcfPartMessage = {
+    if (!s.singleFile && !wroteShardHeader)
+      out.write(s.headerOpt.getOrElse(VcfHeader.Minimal.headerText).getBytes("UTF-8"))
     out.close()
-    VcfPartMessage(partPath.toString, samples,
-      if (bgzfOut != null) graft.bgzf.Bgzf.blockStart(bgzfOut.virtualOffset) else counting.count,
-      if (tbi != null) tbi.result() else null,
+    VcfPartMessage(samples, if (tbi != null) tbi.result() else null,
       if (tidx != null) tidx.result() else null)
   }
-  override def abort(): Unit = { out.close(); fs.delete(partPath, false) }
-  override def close(): Unit = ()
+  override def abort(): Unit = out.close()
 }
 
 /** InternalRow → Variant (write side). */

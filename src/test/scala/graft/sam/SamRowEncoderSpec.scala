@@ -68,4 +68,15 @@ class SamRowEncoderSpec extends AnyFunSuite {
     assertIdentical(row("r", 0, "chr1", 5, 0, 60, "3M", null, 0, 0, "ACG", "III",
       Seq("XN" -> "Z:vàl")), "non-ASCII value")
   }
+
+  test("malformed UTF-8 in mandatory fields falls back identically") {
+    val bad = UTF8String.fromBytes(Array[Byte]('r', 0xff.toByte, 0xc3.toByte))
+    // readName, contig (+ equal mate contig), cigar, seq, qual
+    for ((fields, clue) <- Seq(Seq(0) -> "name", Seq(2, 7) -> "contig", Seq(6) -> "cigar",
+                               Seq(10) -> "seq", Seq(11) -> "qual")) {
+      val r = row("r", 0, "chr1", 5, 0, 60, "3M", null, 0, 0, "ACG", "III", Nil)
+      fields.foreach(r.update(_, bad))
+      assertIdentical(r, s"malformed $clue")
+    }
+  }
 }

@@ -22,7 +22,8 @@ class MergePartsBench extends AnyFunSuite {
     }
     for (round <- 0 until 3) {
       val t0 = System.nanoTime()
-      HadoopIO.mergeParts(new Path(tempDir.getAbsolutePath), new Path(base.getAbsolutePath, "out.bam"), conf)
+      val parts = (0 until 32).map(i => new Path(tempDir.getAbsolutePath, f"part-$i%09d"))
+      HadoopIO.mergeParts(parts, new Path(base.getAbsolutePath, "out.bam"), conf)
       println(f"[merge-bench] round $round: ${(System.nanoTime() - t0) / 1e6}%.1f ms")
       // recreate parts for next round
       tempDir.mkdirs()

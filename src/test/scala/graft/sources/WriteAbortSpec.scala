@@ -23,11 +23,16 @@ class WriteAbortSpec extends AnyFunSuite with SparkFixture {
 
   private val refsOpt = "chr20:1000000,chr21:2000135"
 
-  /** Poison one record so exactly one task throws mid-write. */
+  /** Poison one record so exactly one task throws mid-write. The rows come
+    * from an RDD, not a local collection: over a LocalRelation the optimizer
+    * would evaluate `raise_error` at planning time and the write would never
+    * start. Several partitions, so sibling tasks may still be writing parts
+    * when the job aborts.
+    */
   private def poisoned(n: Int) = {
     val s = spark
     import s.implicits._
-    spark.createDataset(TestReads.mixed(n)).toDF()
+    spark.createDataset(spark.sparkContext.parallelize(TestReads.mixed(n), 4)).toDF()
       .withColumn("start",
         when($"readName" === f"test-read-${n / 2}%03d",
           raise_error(lit("injected task failure")).cast("int"))
@@ -58,6 +63,26 @@ class WriteAbortSpec extends AnyFunSuite with SparkFixture {
       if (Files.exists(out)) Files.list(out).toArray.map(_.toString).filter(_.endsWith(".bam"))
       else Array.empty[String]
     assert(survivors.isEmpty, s"job abort left shards: ${survivors.mkString(", ")}")
+    assert(!Files.exists(dir.resolve("shards.parts")), "abort left the staging directory")
+  }
+
+  test("sharded write and overwrite to a path with a trailing slash") {
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir()
+    val out = dir.resolve("shards")
+    val reads = spark.createDataset(TestReads.mixed(300)).toDF()
+    def writeAndCheck(n: Int): Unit = {
+      reads.limit(n).repartition(3).write.format("bam").mode("overwrite")
+        .option("refs", refsOpt).save(out.toString + "/")
+      val names = Files.list(out).toArray.map(_.asInstanceOf[Path].getFileName.toString)
+      assert(names.count(_.endsWith(".bam")) == 3, names.mkString(", "))
+      assert(spark.read.format("bam").load(out.toString).count() == n)
+      assert(Files.list(dir).toArray.map(_.toString).toSeq == Seq(out.toString),
+        "the commit left the staging directory")
+    }
+    writeAndCheck(300)
+    writeAndCheck(120) // overwrite replaces the previous shards
   }
 
   test("a failed overwrite does not destroy readable prior output") {
@@ -65,20 +90,46 @@ class WriteAbortSpec extends AnyFunSuite with SparkFixture {
     import s.implicits._
     val dir = tmpDir()
     val out = dir.resolve("keep.bam")
+    val opts = Map("refs" -> refsOpt, "writeSbi" -> "true", "writeBai" -> "true")
     val good = spark.createDataset(TestReads.mixed(200)).toDF()
-    good.write.format("bam").mode("overwrite").option("refs", refsOpt).save(out.toString)
-    val before = spark.read.format("bam").load(out.toString).count()
+    good.write.format("bam").mode("overwrite").options(opts).save(out.toString)
+    val files = Seq("keep.bam", "keep.bam.bai", "keep.bam.sbi", "keep.bam.gci").map(dir.resolve(_))
+    val before = files.map(f => f -> Files.readAllBytes(f))
+    val rowsBefore = spark.read.format("bam").load(out.toString).count()
     intercept[Exception] {
-      poisoned(600).write.format("bam").mode("overwrite")
-        .option("refs", refsOpt).save(out.toString)
+      poisoned(600).write.format("bam").mode("overwrite").options(opts).save(out.toString)
     }
-    // overwrite deletes the target before writing (documented semantics),
-    // so the strong claim is only "no corrupt replacement appeared":
-    // either the old file is intact or the target is absent — a partial
-    // new file must never be readable in its place
-    if (Files.exists(out)) {
-      val after = spark.read.format("bam").load(out.toString).count()
-      assert(after == before, s"overwrite left a partial replacement: $after vs $before")
+    // the old target is replaced only at job commit, so a failed job leaves
+    // the previous output and every sidecar byte-identical
+    before.foreach { case (f, bytes) =>
+      assert(Files.exists(f), s"failed overwrite removed $f")
+      assert(java.util.Arrays.equals(Files.readAllBytes(f), bytes), s"failed overwrite changed $f")
     }
+    assert(spark.read.format("bam").load(out.toString).count() == rowsBefore)
+    assert(!Files.exists(dir.resolve("keep.bam.parts")), "abort left the staging directory")
+  }
+
+  test("commit merges only committed parts, never a stray file in the staging directory") {
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir()
+    val clean = dir.resolve("clean.bam")
+    val out = dir.resolve("out.bam")
+    val reads = spark.createDataset(TestReads.mixed(300)).coalesce(1).toDF()
+    reads.write.format("bam").mode("overwrite").option("refs", refsOpt).save(clean.toString)
+    val staging = out.toString + ".parts"
+    // a task drops a stray file (named like a part) into the staging
+    // directory while the job runs
+    val strayReads = spark.createDataset(TestReads.mixed(300)).coalesce(1).mapPartitions { it =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(staging, "part-000000099"),
+        "not a BGZF block".getBytes("UTF-8"))
+      it
+    }.toDF()
+    strayReads.write.format("bam").mode("overwrite").option("refs", refsOpt).save(out.toString)
+    assert(java.util.Arrays.equals(Files.readAllBytes(out), Files.readAllBytes(clean)),
+      "the merged BAM differs from a clean write")
+    val rows = spark.read.format("bam").load(out.toString).collect().map(_.toString).sorted
+    val expected = spark.read.format("bam").load(clean.toString).collect().map(_.toString).sorted
+    assert(rows.sameElements(expected))
   }
 }
