@@ -57,12 +57,36 @@ final case class BaiIndex(refs: IndexedSeq[BaiRef], noCoor: Long,
   def spans(refId: Int, start0: Int, end0: Int): Seq[(Long, Long)] =
     if (refId < 0 || refId >= refs.length) Nil
     else BaiIndex.spansOf(refs(refId), start0, end0)
+
+  /** Virtual offset just past the last placed record (0 when there is none):
+    * the largest samtools pseudo-bin `off_end` when every ref with bins
+    * carries a pseudo-bin, else the largest chunk end over all bins.
+    * Unplaced-unmapped records follow it.
+    */
+  def mappedEnd: Long =
+    if (refs.forall(r => r.mapped >= 0 || r.binIds.isEmpty))
+      refs.iterator.filter(_.mapped >= 0).map(_.offEnd).foldLeft(0L)(math.max)
+    else {
+      var end = 0L
+      refs.foreach(_.binChunks.foreach { cs =>
+        var i = 1
+        while (i < cs.length) { if (cs(i) > end) end = cs(i); i += 2 }
+      })
+      end
+    }
+
+  /** The linear-index entries of every ref, sorted and distinct. Each is
+    * the virtual offset of a record start (0 marks windows before a ref's
+    * first record).
+    */
+  def linearOffsets: Array[Long] = refs.flatMap(_.linear).distinct.sorted.toArray
 }
 
 object BaiIndex {
   val Magic: Array[Byte] = Array('B', 'A', 'I', 1).map(_.toByte)
   val PseudoBin = 37450 // samtools metadata pseudo-bin (= bin(8,9) sentinel)
   val MaxBins = 37450   // bins 0..37449 for positions < 2^29
+  val MaxPos: Int = 1 << 29 // positions the binning scheme can address
 
   /** Bin of the smallest interval containing [beg, end) (SAM spec §5.3). */
   def reg2bin(beg: Int, end: Int): Int = {
@@ -92,11 +116,15 @@ object BaiIndex {
       }
     }
     val flat = acc.result()
-    val pairs = Array.tabulate(flat.length / 2)(i => (flat(2 * i), flat(2 * i + 1)))
-      .sortBy(_._1)
-    // merge chunks whose compressed blocks overlap or touch
+    mergeSpans(Seq.tabulate(flat.length / 2)(i => (flat(2 * i), flat(2 * i + 1))))
+  }
+
+  /** Sorts virtual-offset spans and merges those whose compressed blocks
+    * overlap or touch.
+    */
+  def mergeSpans(spans: Seq[(Long, Long)]): Seq[(Long, Long)] = {
     val merged = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    pairs.foreach { case (b, e) =>
+    spans.sortBy(_._1).foreach { case (b, e) =>
       if (merged.nonEmpty && Bgzf.blockStart(b) <= Bgzf.blockStart(merged.last._2))
         merged(merged.length - 1) = (merged.last._1, math.max(merged.last._2, e))
       else merged += ((b, e))
@@ -314,7 +342,9 @@ object BaiPartData {
       val ids = bins(r).keys.toArray.sorted
       val nIntv = if (linear(r).isEmpty) 0 else linear(r).keys.max + 1
       // spec: empty windows carry the previous window's offset (readers use
-      // it as a floor); windows before the first record get the first voff
+      // it as a floor); windows before the ref's first record keep 0 — a
+      // floor may only be too low, never too high, so readers stay exact
+      // (samtools fills them with the ref's first offset instead)
       val lin = new Array[Long](nIntv)
       var prev = 0L
       var w = 0
@@ -323,8 +353,6 @@ object BaiPartData {
         lin(w) = prev
         w += 1
       }
-      // backfill leading zeros with the first real offset floor (harmless:
-      // a floor may only be too low, never too high)
       val st = stats(r)
       if (st(0) >= 0)
         BaiRef(ids, ids.map(b => bins(r)(b).toArray), lin,

@@ -107,20 +107,7 @@ final class SbiSampler(granularity: Long) extends Serializable {
   */
 final case class GciIndex(sorted: Boolean, granularity: Long,
                           voffs: Array[Long], refs: Array[Int], pos: Array[Int],
-                          spans: Array[Int]) {
-  /** Index of the entry whose voff equals `v` (entries mirror SBI offsets). */
-  def entryAt(v: Long): Int = java.util.Arrays.binarySearch(voffs, v)
-
-  /** Max alignment span over windows [j0, j1) — bounds the end coordinate of
-    * every record in the chunk delimited by entries j0 and j1.
-    */
-  def maxSpan(j0: Int, j1: Int): Int = {
-    var m = 0
-    var j = j0
-    while (j < j1) { if (spans(j) > m) m = spans(j); j += 1 }
-    m
-  }
-}
+                          spans: Array[Int])
 
 object GciIndex {
   val Magic: Array[Byte] = Array('G', 'C', 'I', 2).map(_.toByte)

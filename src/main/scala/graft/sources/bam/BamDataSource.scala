@@ -3,6 +3,7 @@ package graft.sources.bam
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -10,8 +11,8 @@ import org.apache.spark.sql.types.StructType
 import graft.bam._
 import graft.bgzf.Bgzf
 import graft.index.{BaiIndex, GciIndex, SbiIndex}
-import graft.sources.{GenomicInterval, GraftProvider, HadoopIO, PartEncoder, PushedRegion, RecordFormat,
-  SerializableConf, SinkFormat, SplitSizing, Stringency, StringencyLog}
+import graft.sources.{GenomicInterval, GraftProvider, HadoopIO, PartEncoder, PlanMetrics, PushedRegion,
+  RecordFormat, SerializableConf, SinkFormat, SplitSizing, Stringency, StringencyLog}
 
 /** `spark.read.format("bam")` / `df.write.format("bam")` — the Spark-native
   * re-expression of the reference's HtsjdkReadsRddStorage BAM path
@@ -186,6 +187,11 @@ class BamScan(options: Map[String, String], required: StructType, pushed: Array[
     s"graft-bam ${options.getOrElse("path", "")}$iv pushed=[${pushed.mkString(",")}]$lim$ak"
   }
 
+  // planning-time metrics of the last planInputPartitions call
+  @volatile private var driverMetrics: Array[CustomTaskMetric] = Array.empty
+  override def supportedCustomMetrics(): Array[CustomMetric] = PlanMetrics.supported
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = driverMetrics
+
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
     val pathStr = options.getOrElse("path",
@@ -220,7 +226,7 @@ class BamScan(options: Map[String, String], required: StructType, pushed: Array[
       SplitSizing.derive(filesWithLen.iterator.map(_._2).sum,
         SparkSession.active.sparkContext.defaultParallelism))
 
-    def planFile(file: Path): Seq[InputPartition] = {
+    def planFile(file: Path): (Seq[BamInputPartition], Long) = {
       val in = HadoopIO.open(file, conf)
       try {
         val (header, headerEnd) = BamIO.readHeader(in)
@@ -228,191 +234,123 @@ class BamScan(options: Map[String, String], required: StructType, pushed: Array[
         val nSplits = math.max(1L, (size + splitSize - 1) / splitSize)
         val fs = file.getFileSystem(conf)
         val hostsOf = HadoopIO.blockHostsFor(fs, file, size)
-        val dataMtime = fs.getFileStatus(file).getModificationTime
-        // a .bai has no recorded file length, so its freshness proof is the
-        // mtime: an index older than its data file (in-place rewrite) is
-        // stale and must not steer seeks or pruning. Residual risk: with
-        // second-granularity filesystem timestamps, a rewrite landing in
-        // the same tick as the old index still passes — accepted, because
-        // the .bai format records nothing (no length, no checksum) that
-        // could prove freshness the way the .sbi fileLength guard does.
-        def baiFresh(p: Path): Boolean =
-          fs.exists(p) && fs.getFileStatus(p).getModificationTime >= dataMtime
-        val sbiPath = new Path(file.toString + ".sbi")
+        // a parsed sidecar, or None when it is absent or unreadable (a
+        // corrupt sidecar only costs pruning, never results)
+        def sidecar[T](ext: String)(read: graft.bgzf.SeekableInput => T): Option[T] = {
+          val p = new Path(file.toString + ext)
+          if (!fs.exists(p)) None
+          else {
+            val sin = HadoopIO.open(p, conf)
+            try scala.util.Try(read(sin)).toOption finally sin.close()
+          }
+        }
+        // a .bai records no file length, so its freshness proof is the
+        // mtime: an index older than its data file (in-place rewrite) must
+        // not steer seeks. A rewrite within the same filesystem timestamp
+        // tick still passes — the format carries nothing that could prove more.
+        def freshBai: Option[BaiIndex] = {
+          val p = new Path(file.toString + ".bai")
+          if (fs.exists(p) && fs.getFileStatus(p).getModificationTime >=
+                fs.getFileStatus(file).getModificationTime) sidecar(".bai")(BaiIndex.read)
+          else None
+        }
         val limitFastPath = limitHint >= 0 && intervals.isEmpty
         // Stale-index guard: an .sbi whose recorded fileLength differs from
         // the live file (BAM rewritten in place without re-indexing) is
         // ignored entirely — its record offsets would misalign every split
-        // and silently corrupt the scan. Corrupt sidecars fall back the
-        // same way (the heuristic path stays exact, just slower).
-        val sbiOpt: Option[SbiIndex] =
-          if (!limitFastPath && fs.exists(sbiPath)) {
-            val sbiIn = HadoopIO.open(sbiPath, conf)
-            (try scala.util.Try(SbiIndex.read(sbiIn)).toOption finally sbiIn.close())
-              .filter(_.fileLength == size)
-          } else None
-        val parts: Seq[BamInputPartition] = if (limitFastPath) {
-          // limit fast path (no interval traversal): ONE whole-file
-          // partition, zero sidecar/index I/O, no derive job — the reader
-          // stops after `limitHint` emitted records, so `.limit(5)` on a
-          // lake costs one partition and a few BGZF blocks per file
-          Seq(BamInputPartition(file.toString, 0L, size, header, headerEnd,
-            None, unplacedUnmapped, -1L, -1L, pairAware, stringency))
-        } else if (sbiOpt.isDefined) {
-          // SBI path: split edges snap to indexed record offsets via binary
-          // search — no heuristic boundary scan in the readers (intended
-          // reference semantics, BamSource.java:74-92)
-          val sbi = sbiOpt.get
-          val bounds = (0L to nSplits).map { i =>
-            if (i == nSplits) sbi.offsets.last else sbi.boundaryAtOrAfter(i * splitSize)
-          }
-          // coordinate sidecar: for sorted files, drop whole partitions whose
-          // coordinate range cannot overlap any requested interval (split
-          // pruning, the tabix/bai role — residual filters keep exactness).
-          // Unknown/old sidecar versions disable pruning, never mis-prune.
-          val gciPath = new Path(file.toString + ".gci")
-          val gci: Option[GciIndex] =
-            if (intervals.isDefined && fs.exists(gciPath)) {
-              val gin = HadoopIO.open(gciPath, conf)
-              try scala.util.Try(GciIndex.read(gin)).toOption.filter(_.sorted)
-              finally gin.close()
-            } else None
-          // no sidecar but a standard .bai: prune SBI chunks through the
-          // external index instead (compressed-range intersection with the
-          // merged interval spans; unmapped tail lives past the last span)
-          val baiRanges: Option[(Seq[(Long, Long)], Long)] =
-            if (gci.isEmpty && intervals.isDefined && baiFresh(new Path(file.toString + ".bai"))) {
-              val bin = HadoopIO.open(new Path(file.toString + ".bai"), conf)
-              val bai = try scala.util.Try(BaiIndex.read(bin)).toOption
-                finally bin.close()
-              bai.map { b =>
-                val spans = intervals.get.flatMap { iv =>
-                  header.refIndex.get(iv.contig).toSeq.flatMap(r => b.spans(r, iv.start - 1, iv.end - 1))
-                }
-                var maxEnd = headerEnd
-                b.refs.foreach(_.binChunks.foreach { cs0 =>
-                  var i = 1
-                  while (i < cs0.length) { if (cs0(i) > maxEnd) maxEnd = cs0(i); i += 2 }
-                })
-                (spans.map { case (bv, ev) => (Bgzf.blockStart(bv), Bgzf.blockStart(ev)) },
-                  Bgzf.blockStart(maxEnd))
+        // and silently corrupt the scan.
+        lazy val sbiOpt: Option[SbiIndex] =
+          if (limitFastPath) None else sidecar(".sbi")(SbiIndex.read).filter(_.fileLength == size)
+        // Interval route: the index's virtual-offset spans that may hold an
+        // overlapping record, plus the record-start offsets long spans may
+        // be cut at (read only if a span needs cutting). A fresh .bai answers
+        // exactly (candidate bins' chunks, linear-index floor — reference
+        // AbstractBinarySamSource.java:86-113, BAMFileReader2.java:1002-1098);
+        // without one, a sorted .gci narrows to its matching sampled windows.
+        // keep()'s residual filter drops the non-overlapping records inside
+        // a span, so results stay exact.
+        val indexed: Option[(Seq[(Long, Long)], () => Array[Long])] = intervals.flatMap { ivs =>
+          freshBai.map { bai =>
+            val spans = ivs.flatMap { iv =>
+              header.refIndex.get(iv.contig).toSeq.flatMap { r =>
+                val (s0, e0) = (math.max(0, iv.start - 1), math.min(iv.end, BaiIndex.MaxPos) - 1)
+                if (s0 > e0) Nil else bai.spans(r, s0, e0)
               }
-            } else None
-          def mayOverlap(cs: Long, ce: Long): Boolean = gci match {
-            case None =>
-              baiRanges match {
-                case None => true
-                case Some((ranges, mappedEnd)) =>
-                  val c0 = Bgzf.blockStart(cs); val c1 = Bgzf.blockStart(ce)
-                  ranges.exists { case (r0, r1) => c0 <= r1 && c1 >= r0 } ||
-                    (unplacedUnmapped && c1 >= mappedEnd)
-              }
-            case Some(g) =>
-              val j0 = g.entryAt(cs); val j1 = g.entryAt(ce)
-              if (j0 < 0 || j1 < 0) true // defensive: unknown boundary
-              else {
-                val loR = GciIndex.orderRef(g.refs(j0)); val loP = g.pos(j0)
-                val hiR = GciIndex.orderRef(g.refs(j1)); val hiP = g.pos(j1)
-                // recorded max alignment span of THIS chunk's records bounds
-                // how far before an interval a still-overlapping record can
-                // start — exact, not a guessed slack (a spliced/long read
-                // spanning further than a fixed slack would be mis-pruned)
-                val slack = g.maxSpan(j0, j1) + extraSlack
-                val hasUnmappedTail = hiR == Int.MaxValue
-                (unplacedUnmapped && hasUnmappedTail) ||
-                  intervals.get.exists { iv =>
-                    header.refIndex.get(iv.contig).exists { r =>
-                      val ivLoP = iv.start - 1 - slack; val ivHiP = iv.end - 1
-                      // lexicographic overlap of [(loR,loP),(hiR,hiP)] with [(r,ivLoP),(r,ivHiP)]
-                      val below = hiR < r || (hiR == r && hiP < ivLoP)
-                      val above = loR > r || (loR == r && loP > ivHiP)
-                      !below && !above
-                    }
-                  }
-              }
-          }
-          (0L until nSplits).flatMap { i =>
-            val (cs, ce) = (bounds(i.toInt), bounds(i.toInt + 1))
-            if (cs >= ce || !mayOverlap(cs, ce)) None
-            else Some(BamInputPartition(file.toString, i * splitSize, math.min(size, (i + 1) * splitSize),
-              header, headerEnd, intervals, unplacedUnmapped, cs, ce, pairAware, stringency))
-          }
-        } else {
-          // External-index path: with intervals and a standard `.bai` next
-          // to the file (the overwhelmingly common indexed-BAM case), jump
-          // straight to the matching file regions — candidate bins' chunks,
-          // linear-index floor, merged spans (reference
-          // AbstractBinarySamSource.java:86-113, BAMFileReader2.java:1002-1098).
-          // Records inside spans that don't overlap keep()'s residual filter
-          // are dropped record-level, so pruning never changes results.
-          val baiPath = new Path(file.toString + ".bai")
-          val baiRanges: Option[Seq[(Long, Long)]] =
-            if (intervals.isDefined && baiFresh(baiPath)) {
-              val bin = HadoopIO.open(baiPath, conf)
-              val bai = try scala.util.Try(BaiIndex.read(bin)).toOption
-                finally bin.close()
-              bai.map { b =>
-                val ivSpans = intervals.get.flatMap { iv =>
-                  header.refIndex.get(iv.contig).toSeq.flatMap { r =>
-                    b.spans(r, iv.start - 1, iv.end - 1)
-                  }
-                }
-                val tail: Seq[(Long, Long)] =
-                  if (unplacedUnmapped) {
-                    // unplaced-unmapped records sit after the last mapped
-                    // record; the BAI has no bins for them
-                    var maxEnd = headerEnd
-                    b.refs.foreach(_.binChunks.foreach { cs =>
-                      var i = 1
-                      while (i < cs.length) { if (cs(i) > maxEnd) maxEnd = cs(i); i += 2 }
-                    })
-                    Seq((maxEnd, Long.MaxValue))
-                  } else Nil
-                // voff spans → block-start byte ranges (a record of interest
-                // STARTS in a block within [beg block, end block]), merged
-                (ivSpans ++ tail).map { case (bv, ev) =>
-                  (Bgzf.blockStart(bv),
-                    math.min(size, (if (ev == Long.MaxValue) size else Bgzf.blockStart(ev)) + 1))
-                }.filter(r => r._1 < r._2).sortBy(_._1)
-                  .foldLeft(List.empty[(Long, Long)]) {
-                    case ((ps, pe) :: rest, (s0, e0)) if s0 <= pe => (ps, math.max(pe, e0)) :: rest
-                    case (acc, r) => r :: acc
-                  }.reverse
-              }
-            } else None
-          baiRanges match {
-            case Some(ranges) =>
-              ranges.flatMap { case (rs, re) =>
-                val n = ((re - rs) + splitSize - 1) / splitSize
-                (0L until n).map { i =>
-                  BamInputPartition(file.toString, rs + i * splitSize, math.min(re, rs + (i + 1) * splitSize),
-                    header, headerEnd, intervals, unplacedUnmapped, -1L, -1L, pairAware, stringency)
-                }
-              }
-            case None =>
-              // first-contact derivation: run the guesser ONCE as a tiny
-              // distributed job, write the .sbi back, re-plan O(index)
-              if (options.get("deriveindex").exists(_.toBoolean) &&
-                  graft.sources.DeriveIndex.deriveBamSbi(
-                    file.toString, header, headerEnd, size, splitSize, new SerializableConf(conf)))
-                return planFile(file) // .sbi now exists → SBI route
-              // heuristic path: byte splits tile the file; each split owns
-              // records whose start voff lies in a block starting within it
-              (0L until nSplits).map { i =>
-                BamInputPartition(file.toString, i * splitSize, math.min(size, (i + 1) * splitSize),
-                  header, headerEnd, intervals, unplacedUnmapped, -1L, -1L, pairAware, stringency)
-              }
-          }
+            }
+            // unplaced-unmapped records sit after the last placed record,
+            // up to the file end; the BAI has no bins for them
+            val tail = if (unplacedUnmapped) Seq((math.max(headerEnd, bai.mappedEnd), size << 16)) else Nil
+            (spans ++ tail, () => sbiOpt.fold(bai.linearOffsets)(_.offsets))
+          }.orElse(sbiOpt.flatMap { sbi =>
+            // unknown/old .gci versions and unsorted files disable pruning,
+            // never mis-prune
+            sidecar(".gci")(GciIndex.read).filter(_.sorted).map { gci =>
+              (BamIntervalPlan.gciWindows(gci, ivs, header.refIndex, unplacedUnmapped, extraSlack),
+                () => sbi.offsets)
+            }
+          })
+        }
+        def part(start: Long, end: Long, cs: Long, ce: Long) =
+          BamInputPartition(file.toString, start, end, header, headerEnd, intervals, unplacedUnmapped,
+            cs, ce, pairAware, stringency = stringency)
+        val parts: Seq[BamInputPartition] = indexed match {
+          case Some((spans, cuts)) =>
+            // keepPairsTogether hands name-runs over between the pieces of
+            // one merged span only: the record before a span belongs to no
+            // partition, and records past its end overlap no interval
+            BamIntervalPlan.ranges(spans, cuts, splitSize).map { case ((b, e), span) =>
+              val (start, end) = BamIntervalPlan.byteRange(b, e, size)
+              part(start, end, b, e).copy(pairSpan = Some(span))
+            }
+          case None if limitFastPath =>
+            // limit fast path (no interval traversal): ONE whole-file
+            // partition, zero sidecar/index I/O, no derive job — the reader
+            // stops after `limitHint` emitted records, so `.limit(5)` on a
+            // lake costs one partition and a few BGZF blocks per file
+            Seq(part(0L, size, -1L, -1L))
+          case None if sbiOpt.isDefined =>
+            // SBI path: split edges snap to indexed record offsets via binary
+            // search — no heuristic boundary scan in the readers (intended
+            // reference semantics, BamSource.java:74-92)
+            val sbi = sbiOpt.get
+            val bounds = (0L to nSplits).map { i =>
+              if (i == nSplits) sbi.offsets.last else sbi.boundaryAtOrAfter(i * splitSize)
+            }
+            (0L until nSplits).flatMap { i =>
+              val (cs, ce) = (bounds(i.toInt), bounds(i.toInt + 1))
+              if (cs >= ce) None
+              else Some(part(i * splitSize, math.min(size, (i + 1) * splitSize), cs, ce))
+            }
+          case None =>
+            // first-contact derivation: run the guesser ONCE as a tiny
+            // distributed job, write the .sbi back, re-plan O(index)
+            if (options.get("deriveindex").exists(_.toBoolean) &&
+                graft.sources.DeriveIndex.deriveBamSbi(
+                  file.toString, header, headerEnd, size, splitSize, new SerializableConf(conf)))
+              return planFile(file) // .sbi now exists → SBI route
+            // heuristic path: byte splits tile the file; each split owns
+            // records whose start voff lies in a block starting within it
+            (0L until nSplits).map { i =>
+              part(i * splitSize, math.min(size, (i + 1) * splitSize), -1L, -1L)
+            }
         }
         // locality hints: block hosts of each split's byte range (one
         // block-list fetch per file, shared by every split)
-        parts.map(p => p.copy(hosts = hostsOf(p.splitStart, p.splitEnd), limit = limitHint))
+        (parts.map(p => p.copy(hosts = hostsOf(p.splitStart, p.splitEnd), limit = limitHint)),
+          indexed.fold(0L)(_._1.iterator.map { case (b, e) =>
+            val (start, end) = BamIntervalPlan.byteRange(b, e, size)
+            end - start
+          }.sum))
       } finally in.close()
     }
 
-    // Per-file planning does real I/O (header + SBI + GCI reads) — fan out
+    // Per-file planning does real I/O (header and sidecar reads) — fan out
     // on the shared bounded pool, lexicographic file order preserved.
-    val planned: Array[InputPartition] = HadoopIO.planFiles(files)(planFile).toArray
+    val perFile = HadoopIO.planFiles(files)(f => Seq(planFile(f)))
+    val planned: Array[InputPartition] = perFile.flatMap(_._1).toArray
+    driverMetrics = PlanMetrics.report(planned.length,
+      perFile.iterator.flatMap(_._1).map(p => p.splitEnd - p.splitStart).sum,
+      perFile.iterator.map(_._2).sum)
     // header-compat across directory inputs (reference leaves this
     // undefined and silently uses the first header): a shard whose sequence
     // dictionary differs would mislabel every refId it carries — fail at
@@ -438,12 +376,74 @@ class BamScan(options: Map[String, String], required: StructType, pushed: Array[
   }
 }
 
+/** Interval planning over an index's answer: virtual-offset spans that may
+  * hold an overlapping record become record-exact partitions, read by the
+  * readers' exact-chunk mode (no boundary guessing).
+  */
+private[bam] object BamIntervalPlan {
+  /** The byte range `[start, end)` of a file of `size` bytes that holds the
+    * voff range `[b, e)`: from `b`'s block to the first byte of `e`'s block
+    * (that block counts as one byte, though the reader may inflate it).
+    */
+  def byteRange(b: Long, e: Long, size: Long): (Long, Long) =
+    (Bgzf.blockStart(b), math.min(size, Bgzf.blockStart(e) + 1))
+
+  /** Merges `spans` with the block-touch rule (so no record is owned twice)
+    * and cuts every merged span longer than `splitSize` compressed bytes:
+    * each piece ends at the first of the sorted record-start offsets
+    * `cuts()` (called only when a span needs cutting) at least `splitSize`
+    * bytes past its own start. Each piece comes with its merged span.
+    */
+  def ranges(spans: Seq[(Long, Long)], cuts: () => Array[Long], splitSize: Long)
+      : Seq[((Long, Long), (Long, Long))] = {
+    lazy val cs = cuts()
+    BaiIndex.mergeSpans(spans.filter { case (b, e) => b < e }).flatMap { case span @ (b, e) =>
+      val starts =
+        if (Bgzf.blockStart(e) - Bgzf.blockStart(b) <= splitSize) Seq(b)
+        else Iterator.iterate(b)(s => cutAtOrAfter(cs, (Bgzf.blockStart(s) + splitSize) << 16))
+          .takeWhile(_ < e).toSeq
+      starts.zip(starts.tail :+ e).map(_ -> span)
+    }
+  }
+
+  private def cutAtOrAfter(cuts: Array[Long], voff: Long): Long = {
+    val k = java.util.Arrays.binarySearch(cuts, voff)
+    val i = if (k >= 0) k else -k - 1
+    if (i < cuts.length) cuts(i) else Long.MaxValue
+  }
+
+  /** The sampled `.gci` windows `[voffs(j), voffs(j+1))` whose coordinate
+    * range may overlap an interval. A window's records start between its two
+    * sampled positions; the recorded max alignment span of its records
+    * bounds how far before an interval an overlapping record can start —
+    * exact, not a guessed slack (a spliced/long read spanning further than a
+    * fixed slack would be mis-pruned).
+    */
+  def gciWindows(g: GciIndex, ivs: Seq[GenomicInterval], refIndex: Map[String, Int],
+                 unplacedUnmapped: Boolean, extraSlack: Int): Seq[(Long, Long)] =
+    (0 until g.voffs.length - 1).filter { j =>
+      val loR = GciIndex.orderRef(g.refs(j)); val loP = g.pos(j)
+      val hiR = GciIndex.orderRef(g.refs(j + 1)); val hiP = g.pos(j + 1)
+      val slack = g.spans(j) + extraSlack
+      (unplacedUnmapped && hiR == Int.MaxValue) ||
+        ivs.exists { iv =>
+          refIndex.get(iv.contig).exists { r =>
+            // lexicographic overlap of [(loR,loP),(hiR,hiP)] with [(r,ivLoP),(r,ivHiP)]
+            val below = hiR < r || (hiR == r && hiP < iv.start - 1 - slack)
+            val above = loR > r || (loR == r && loP > iv.end - 1)
+            !below && !above
+          }
+        }
+    }.map(j => (g.voffs(j), g.voffs(j + 1)))
+}
+
 case class BamInputPartition(
     file: String, splitStart: Long, splitEnd: Long,
     header: SamHeader, headerEndVoff: Long,
     intervals: Option[Seq[GenomicInterval]], unplacedUnmapped: Boolean,
-    chunkStartVoff: Long, chunkEndVoff: Long, // -1 when no .sbi (heuristic)
+    chunkStartVoff: Long, chunkEndVoff: Long, // record-exact voff range; -1 when heuristic
     pairAware: Boolean = false, // name-runs never split across partitions
+    pairSpan: Option[(Long, Long)] = None, // pairAware: voff span runs are handed over within (None = file)
     stringency: Stringency = Stringency.Strict, // malformed-record policy
     limit: Int = -1, // pushed-limit emit cap per reader (-1 = unlimited)
     hosts: Array[String] = Array.empty) // block hosts of the split's range
@@ -484,12 +484,12 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
   private var lastReadName: String = _ // run tracking for pairAware
   private var prevName: String = _     // name of the record before our first
 
-  private val sbiMode = p.chunkStartVoff >= 0
+  private val exactChunk = p.chunkStartVoff >= 0
 
-  // boundary: exact from the SBI chunk, else heuristic search (the guesser
-  // shares the pread-based input with the stream)
+  // boundary: exact from the planned chunk (SBI split or index span), else
+  // heuristic search (the guesser shares the pread-based input with the stream)
   locally {
-    if (sbiMode) stream.seekVirtual(p.chunkStartVoff)
+    if (exactChunk) stream.seekVirtual(p.chunkStartVoff)
     else {
       val guesser = new BamRecordGuesser(input, p.header.refs, p.headerEndVoff)
       val first = guesser.firstRecordAtOrAfter(p.splitStart, p.splitEnd)
@@ -505,10 +505,11 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
     * We skip a leading run continuing from the previous partition (its name
     * = name of the record immediately before our first record) and read past
     * our boundary to finish a run we started. Queryname-grouped files thus
-    * never split a pair across partitions.
+    * never split a pair across partitions. In an interval plan both stay
+    * inside the partition's merged index span (`pairSpan`).
     */
   private def findPrevName(firstVoff: Long): String = {
-    if (p.splitStart == 0) return null
+    if (p.splitStart == 0 || p.pairSpan.exists(_._1 >= firstVoff)) return null
     val guesser = new BamRecordGuesser(input, p.header.refs, p.headerEndVoff)
     val firstBlock = Bgzf.blockStart(firstVoff)
     var backBlocks = 1L
@@ -571,13 +572,14 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
     if (exhausted) return false
     while (true) {
       // territory: the next record start owned by this partition —
-      // exact chunk end (SBI) or block owned by this split (heuristic)
+      // exact chunk end or block owned by this split (heuristic)
       val inTerritory = !stream.atEof &&
-        (if (sbiMode) stream.virtualOffset < p.chunkEndVoff
+        (if (exactChunk) stream.virtualOffset < p.chunkEndVoff
          else stream.blockStartOffset < p.splitEnd)
       if (!inTerritory) {
         // pairAware: finish a name-run we started before stopping
-        if (!p.pairAware || lastReadName == null || stream.atEof) { exhausted = true; return false }
+        if (!p.pairAware || lastReadName == null || stream.atEof ||
+            p.pairSpan.exists(stream.virtualOffset >= _._2)) { exhausted = true; return false }
         val rec = readOne()
         if (rec == null || rec.readName != lastReadName) { exhausted = true; return false }
         if (keep(rec)) { currentRow = toRow(rec); return true }

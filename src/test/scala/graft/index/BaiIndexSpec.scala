@@ -72,6 +72,27 @@ class BaiIndexSpec extends AnyFunSuite with SparkFixture {
     assert(back.refs(0).binIds.forall(_ != BaiIndex.PseudoBin))
   }
 
+  test("mappedEnd: pseudo-bin off_end when every ref with bins has one, else the largest chunk end") {
+    val b = new BaiBuilder
+    b.add(0, 100, 150, 10L << 16, (10L << 16) + 40)
+    b.add(0, 90000, 90050, 2000L << 16, (2000L << 16) + 77) // far bin, last chunk end
+    b.add(1, 10, 60, 3000L << 16, (3000L << 16) + 12)
+    b.add(-1, 0, 0, 4000L << 16, (4000L << 16) + 5) // unplaced: past the mapped end
+    val idx = BaiPartData.merge(Seq(b.result()), Seq(0L), nRef = 3) // ref 2 is empty
+    assert(idx.refs.take(2).forall(_.mapped >= 0) && idx.refs(2).mapped == -1)
+    assert(idx.mappedEnd == (3000L << 16) + 12)
+    // a ref with bins but no pseudo-bin (e.g. an index written without
+    // samtools metadata): the chunks decide
+    val bare = idx.copy(refs = idx.refs.updated(0, idx.refs(0).copy(mapped = -1L, offEnd = 0L)))
+    assert(bare.mappedEnd == (3000L << 16) + 12)
+    val onlyFirst = bare.copy(refs = bare.refs.take(1))
+    assert(onlyFirst.mappedEnd == (2000L << 16) + 77)
+    // pseudo-bin metadata wins when present everywhere
+    val meta = idx.copy(refs = idx.refs.take(1).map(_.copy(offEnd = (2500L << 16) + 1)))
+    assert(meta.mappedEnd == (2500L << 16) + 1)
+    assert(BaiIndex(IndexedSeq.empty, 0L).mappedEnd == 0L)
+  }
+
   test("bai co-write prunes interval-scan partitions on an indexed BAM, results exact") {
     import spark.implicits._
     val recs = (0 until 4000).map { i =>

@@ -59,6 +59,19 @@ class LocalitySpec extends AnyFunSuite with SparkFixture {
       Map("path" -> out.toString, "splitsize" -> "4096"),
       graft.bam.AlignmentRecord.schema, Array.empty)
     assertHosts(scanSbi.planInputPartitions(), "bam-sbi")
+    // BAI route: an interval scan over a .bai-indexed write plans
+    // record-exact index spans
+    spark.createDataset(TestReads.mixed(500)).toDF()
+      .write.format("bam").mode("overwrite").option("refs", refsOpt)
+      .option("writeBai", "true").save(out.toString)
+    assert(Files.exists(dir.resolve("t.bam.bai")))
+    val baiParts = new graft.sources.bam.BamScan(
+      Map("path" -> out.toString, "splitsize" -> "4096", "intervals" -> "chr21:100000-300000"),
+      graft.bam.AlignmentRecord.schema, Array.empty).planInputPartitions()
+    assertHosts(baiParts, "bam-bai")
+    baiParts.foreach { case p: graft.sources.bam.BamInputPartition =>
+      assert(p.chunkStartVoff >= 0 && p.chunkEndVoff > p.chunkStartVoff, s"bam-bai: not voff-exact: $p")
+    }
   }
 
   test("SAM partitions carry block hosts") {
