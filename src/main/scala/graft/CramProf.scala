@@ -302,7 +302,7 @@ object CramProf {
     in.close()
 
     // direct partition-reader timing per 256 KB range (what a Spark task does)
-    import graft.sources.cram.CramRecordsPartitionReader
+    import graft.sources.cram.{CramRangePartition, CramRecordsPartitionReader}
     import graft.sources.SerializableConf
     import graft.bam.AlignmentRecord
     val sconf = new SerializableConf(conf)
@@ -316,8 +316,9 @@ object CramProf {
     while (start < fileLen) {
       val end = math.min(start + split, fileLen)
       val t0 = System.nanoTime()
-      val rd = new CramRecordsPartitionReader(path, Right((start, end)), None, None,
-        false, Some(fasta), sconf, AlignmentRecord.schema, graft.sources.Stringency.Strict)
+      val rd = new CramRecordsPartitionReader(CramRangePartition(path, start, end, None),
+        graft.sources.ReadsTraversal(None, unplacedUnmapped = false), Some(fasta), sconf,
+        AlignmentRecord.schema, graft.sources.Stringency.Strict)
       tSetup += (System.nanoTime() - t0) / 1e9
       while (rd.next()) rows += 1
       rd.close()

@@ -3,16 +3,22 @@ package graft.sources
 import java.util
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.bgzf.SeekableInput
 
 /** What one record format (BAM, SAM, VCF, FASTQ, CRAM) contributes to the
   * shared DSv2 skeleton: its schema, which pushed filters it can use, its
@@ -128,6 +134,131 @@ class GraftScanBuilder(format: RecordFormat, options: Map[String, String])
     case None => format.scan(options, required, pushed, limit)
   }
 }
+
+/** The scan every format shares: Hadoop conf, input listing, split sizing,
+  * the per-file planning fan-out, locality hints, plan metrics, the
+  * directory header check and the pushed-limit cap. A format supplies its
+  * per-file planner, its reader factory and its description tokens (the
+  * reference plans splits once for every format, PathSplitSource.java:35-73).
+  */
+abstract class GraftScan(format: String, options: Map[String, String], required: StructType,
+                         limit: Int) extends Scan with Batch {
+  /** Plans one input file; `f.in` is closed by the shell. */
+  protected def planFile(f: PlanInput): FilePlan
+  /** The format's readers; the shell adds the limit cap. */
+  protected def readerFactory(conf: SerializableConf): PartitionReaderFactory
+  /** Description tokens after `graft-<format> <path>`. */
+  protected def describe: String = ""
+  /** What [[FilePlan.headerKey]] is, for the directory check's error. */
+  protected def headerKind: String = "headers"
+
+  override def readSchema(): StructType = required
+  override def toBatch: Batch = this
+  override def description(): String =
+    s"graft-$format ${options.getOrElse("path", "")}$describe" + (if (limit >= 0) s" limit=$limit" else "")
+
+  // planning-time metrics of the last planInputPartitions call
+  @volatile private var driverMetrics: Array[CustomTaskMetric] = Array.empty
+  override def supportedCustomMetrics(): Array[CustomMetric] = PlanMetrics.supported
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = driverMetrics
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val conf = SparkSession.active.sessionState.newHadoopConf()
+    val pathStr = options.getOrElse("path",
+      throw new IllegalArgumentException(s"$format source requires a path"))
+    val filesWithLen = HadoopIO.listInputFilesWithLen(pathStr, conf)
+    val splitSize = options.get("splitsize").map(_.toLong).getOrElse(
+      SplitSizing.derive(filesWithLen.iterator.map(_._2).sum,
+        SparkSession.active.sparkContext.defaultParallelism))
+    // per-file header/index I/O fanned out on the shared bounded pool,
+    // lexicographic file order preserved
+    val plans = HadoopIO.planFiles(filesWithLen.map(_._1)) { file =>
+      val in = HadoopIO.open(file, conf)
+      try {
+        val f = new PlanInput(file, in, conf, splitSize)
+        val plan = planFile(f)
+        // locality hints: block hosts of each split's byte range (one
+        // block-list fetch per file, shared by every split)
+        val hostsOf = HadoopIO.blockHostsFor(f.fs, file, f.size)
+        Seq((file.toString, plan, plan.splits.map(s => s.partition(hostsOf(s.start, s.end)))))
+      } finally in.close()
+    }
+    // header-compat across directory inputs (the reference silently uses
+    // the first header): a file whose key differs would be decoded against
+    // the wrong dictionary — fail at planning with the offending file named
+    val keyed = plans.collect { case (file, p, parts) if parts.nonEmpty && p.headerKey.isDefined =>
+      (file, p.headerKey.get) }
+    keyed.headOption.foreach { case (first, key) =>
+      keyed.find(_._2 != key).foreach { case (f, _) =>
+        throw new IllegalArgumentException(
+          s"incompatible $headerKind in directory input: $f does not match $first")
+      }
+    }
+    val splits = plans.flatMap(_._2.splits)
+    driverMetrics = PlanMetrics.report(splits.length, splits.iterator.map(s => s.end - s.start).sum,
+      plans.iterator.map(_._2.indexSpanBytes).sum)
+    plans.flatMap(_._3).toArray
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val readers = readerFactory(new SerializableConf(SparkSession.active.sessionState.newHadoopConf()))
+    val cap = limit
+    // partial limit pushdown: every reader stops after `limit` rows and
+    // Spark keeps its own limit on top
+    if (cap < 0) readers
+    else (p: InputPartition) => new LimitingReader(readers.createReader(p), cap)
+  }
+}
+
+/** One input file as a format's planner sees it: open, with the scan's
+  * Hadoop conf and split size.
+  */
+final class PlanInput(val path: Path, val in: SeekableInput, val conf: Configuration,
+                      val splitSize: Long) {
+  val size: Long = in.size
+  lazy val fs: FileSystem = path.getFileSystem(conf)
+
+  /** `<file><ext>` if it exists and is not older than the file. Tabix,
+    * tribble, `.bai` and `.crai` indexes record no file length, so mtime
+    * is their freshness proof: an index older than its data file (in-place
+    * rewrite without re-indexing) must not steer seeks.
+    */
+  def freshSidecar(ext: String): Option[Path] = {
+    val p = new Path(path.toString + ext)
+    if (fs.exists(p) && fs.getFileStatus(p).getModificationTime >=
+          fs.getFileStatus(path).getModificationTime) Some(p)
+    else None
+  }
+
+  /** `<file><ext>` parsed, or None when it is absent (or stale, with
+    * `fresh`) or unreadable: a corrupt sidecar only costs pruning.
+    */
+  def sidecar[T](ext: String, fresh: Boolean = false)(read: SeekableInput => T): Option[T] =
+    (if (fresh) freshSidecar(ext) else Some(new Path(path.toString + ext)).filter(fs.exists)).flatMap { p =>
+      val sin = HadoopIO.open(p, conf)
+      try scala.util.Try(read(sin)).toOption finally sin.close()
+    }
+
+  /** `[start, end)` cut into consecutive `splitSize` splits, the last one
+    * shorter; an empty range is one empty split.
+    */
+  def tiles(start: Long, end: Long): Seq[(Long, Long)] = {
+    val n = math.max(1L, (end - start + splitSize - 1) / splitSize)
+    (0L until n).map(i => (start + i * splitSize, math.min(end, start + (i + 1) * splitSize)))
+  }
+}
+
+/** One planned split: the byte range its reader covers (for locality
+  * hints and plan metrics) and its partition, built from the range's hosts.
+  */
+final case class PlannedSplit(start: Long, end: Long, partition: Array[String] => InputPartition)
+
+/** One file's plan: its splits, the bytes of the index spans that
+  * narrowed it (0 when no index did), and the header key every file of a
+  * directory input must share (None: not checked).
+  */
+final case class FilePlan(splits: Seq[PlannedSplit], indexSpanBytes: Long = 0L,
+                          headerKey: Option[Any] = None)
 
 /** COUNT(*) answered at planning time: one partition, one row, zero data
   * scan — `df.count()` on an indexed lake costs O(files) small reads.

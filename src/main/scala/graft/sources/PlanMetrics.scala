@@ -3,17 +3,20 @@ package graft.sources
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 
 /** Driver-side scan metrics computed while planning (no per-record cost),
-  * surfaced through the DSv2 custom-metric API: `explain`, the SQL UI and
-  * `executedPlan.metrics` show what a scan planned to read.
+  * reported by every [[GraftScan]] through the DSv2 custom-metric API:
+  * `explain`, the SQL UI and `executedPlan.metrics` show what a scan
+  * planned to read.
   *   - `plannedPartitions`: input partitions planned
-  *   - `plannedBytes`: compressed bytes those partitions cover
-  *   - `indexSpanBytes`: compressed bytes of the index spans that narrowed
-  *     the plan, summed per span before spans are merged (0 when no index
-  *     narrowed it)
-  * A virtual-offset range counts from its first block through the first
-  * byte of the block holding its end offset, so for index-planned
-  * partitions both byte counts are lower bounds, short by less than one
-  * BGZF block per range.
+  *   - `plannedBytes`: file bytes those partitions cover (each partition's
+  *     planned byte range, the one its locality hints come from)
+  *   - `indexSpanBytes`: bytes of the index spans that narrowed the plan,
+  *     summed per span before spans are merged — `.bai`/`.gci` for BAM,
+  *     `.tbi`/`.idx` for VCF, the selected `.crai` containers for CRAM; 0
+  *     when no index narrowed it
+  * A BGZF virtual-offset range counts from its first block through the
+  * first byte of the block holding its end offset, so for index-planned
+  * BAM and VCF partitions both byte counts are lower bounds, short by less
+  * than one BGZF block per range.
   */
 object PlanMetrics {
   val Partitions = "plannedPartitions"

@@ -44,10 +44,11 @@ trait PartEncoder[M] {
   def close(): Unit = ()
 }
 
-/** One committed part: its partition, staged file, on-disk length and the
-  * format's report.
+/** One committed part: its partition, staged file, on-disk length, the
+  * format's report and the extensions of the sidecars written next to it.
   */
-final case class PartMessage[M](partition: Int, path: String, bytes: Long, report: M)
+final case class PartMessage[M](partition: Int, path: String, bytes: Long, report: M,
+                                sidecars: Seq[String] = Nil)
   extends WriterCommitMessage
 
 class StagedWriteBuilder(format: RecordFormat, options: Map[String, String], schema: StructType)
@@ -80,9 +81,10 @@ class StagedWriteBuilder(format: RecordFormat, options: Map[String, String], sch
   * written last, so their mtime is >= the data file's — readers treat an
   * index older than its data file as stale.
   *
-  * Sharded commit renames the staging directory — complete per-partition
-  * files and their per-shard indexes — over the old target directory
-  * (AnySamSinkMultiple.java:39-73 shape).
+  * Sharded commit renames exactly the committed parts and their per-shard
+  * indexes to their final names, deletes everything else staged (a losing
+  * attempt's leftovers, a stray file), then renames the staging directory
+  * over the old target directory (AnySamSinkMultiple.java:39-73 shape).
   */
 final class StagedBatchWrite[M](sink: SinkFormat[M], path: String, conf: SerializableConf)
     extends BatchWrite {
@@ -127,6 +129,17 @@ final class StagedBatchWrite[M](sink: SinkFormat[M], path: String, conf: Seriali
       }
       fs.delete(staging, true)
     } else {
+      val published = messages.toSeq.flatMap { m0 =>
+        val m = m0.asInstanceOf[PartMessage[M]]
+        val name = f"part-${m.partition}%09d${sink.partSuffix}"
+        ("" +: m.sidecars).map { ext =>
+          val to = new Path(staging, name + ext)
+          if (!fs.rename(new Path(m.path + ext), to))
+            throw new java.io.IOException(s"rename ${m.path}$ext -> $to failed")
+          to.getName
+        }
+      }.toSet
+      fs.listStatus(staging).foreach(st => if (!published(st.getPath.getName)) fs.delete(st.getPath, true))
       fs.delete(target, true)
       if (!fs.rename(staging, target)) throw new java.io.IOException(s"rename $staging -> $target failed")
     }
@@ -142,26 +155,32 @@ final class StagedBatchWrite[M](sink: SinkFormat[M], path: String, conf: Seriali
   }
 }
 
-/** One task attempt's part. Single-file parts carry the attempt id in their
-  * name (two attempts of a partition never share a file); sharded parts
-  * take their final name. Parts and per-shard sidecars are created
-  * non-recursively: a task still running after its job aborted fails
-  * instead of recreating the deleted staging directory.
+/** One task attempt's part, named with the attempt id so two attempts of a
+  * partition never share a file (sharded commit gives it its final name).
+  * Parts and per-shard sidecars are created non-recursively: a task still
+  * running after its job aborted fails instead of recreating the deleted
+  * staging directory.
   */
 final class StagedDataWriter[M](sink: SinkFormat[M], dir: String, partitionId: Int, taskId: Long,
                                 conf: SerializableConf) extends DataWriter[InternalRow] {
-  private val partPath = new Path(dir,
-    if (sink.singleFile) f"part-$partitionId%09d-$taskId" else f"part-$partitionId%09d${sink.partSuffix}")
+  private val partPath = new Path(dir, f"part-$partitionId%09d-$taskId")
   private val fs = partPath.getFileSystem(conf.conf)
   private val out = new CountingOutputStream(fs.createFile(partPath).overwrite(true).build())
-  private val enc = sink.openPart(out, ext => fs.createFile(partPath.suffix(ext)).overwrite(true).build())
+  private val sidecars = scala.collection.mutable.ArrayBuffer.empty[String]
+  private val enc = sink.openPart(out, { ext =>
+    sidecars += ext
+    fs.createFile(partPath.suffix(ext)).overwrite(true).build()
+  })
 
   override def write(row: InternalRow): Unit = enc.write(row)
   override def commit(): WriterCommitMessage = {
     val report = enc.finish()
-    PartMessage(partitionId, partPath.toString, out.count, report)
+    PartMessage(partitionId, partPath.toString, out.count, report, sidecars.toSeq)
   }
-  override def abort(): Unit = { enc.abort(); fs.delete(partPath, false) }
+  override def abort(): Unit = {
+    enc.abort()
+    (partPath +: sidecars.toSeq.map(partPath.suffix)).foreach(fs.delete(_, false))
+  }
   override def close(): Unit = enc.close()
 }
 

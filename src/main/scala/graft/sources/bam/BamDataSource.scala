@@ -3,7 +3,6 @@ package graft.sources.bam
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -11,8 +10,9 @@ import org.apache.spark.sql.types.StructType
 import graft.bam._
 import graft.bgzf.Bgzf
 import graft.index.{BaiIndex, GciIndex, SbiIndex}
-import graft.sources.{GenomicInterval, GraftProvider, HadoopIO, PartEncoder, PlanMetrics, PushedRegion,
-  RecordFormat, SerializableConf, SinkFormat, SplitSizing, Stringency, StringencyLog}
+import graft.sources.{FilePlan, GenomicInterval, GraftProvider, GraftScan, HadoopIO, PartEncoder, PlanInput,
+  PlannedSplit, PushedRegion, ReadsTraversal, RecordFormat, SerializableConf, SinkFormat, Stringency,
+  StringencyLog}
 
 /** `spark.read.format("bam")` / `df.write.format("bam")` — the Spark-native
   * re-expression of the reference's HtsjdkReadsRddStorage BAM path
@@ -176,204 +176,113 @@ private[sources] object TagCols {
 
 class BamScan(options: Map[String, String], required: StructType, pushed: Array[Filter],
     limitHint: Int = -1)
-    extends Scan with Batch {
+    extends GraftScan("bam", options, required, limitHint) {
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String = {
-    val iv = options.get("intervals").map(i => s" intervals=$i").getOrElse("")
-    val lim = if (limitHint >= 0) s" limit=$limitHint" else ""
-    val ak = TagCols.attrKeys(options).map(k => s" attrKeys=[${k.mkString(",")}]").getOrElse("")
-    s"graft-bam ${options.getOrElse("path", "")}$iv pushed=[${pushed.mkString(",")}]$lim$ak"
-  }
+  override protected def describe: String =
+    options.get("intervals").map(i => s" intervals=$i").getOrElse("") +
+      s" pushed=[${pushed.mkString(",")}]" +
+      TagCols.attrKeys(options).map(k => s" attrKeys=[${k.mkString(",")}]").getOrElse("")
+  // a shard whose sequence dictionary differs would mislabel every refId
+  override protected def headerKind: String = "sequence dictionaries"
 
-  // planning-time metrics of the last planInputPartitions call
-  @volatile private var driverMetrics: Array[CustomTaskMetric] = Array.empty
-  override def supportedCustomMetrics(): Array[CustomMetric] = PlanMetrics.supported
-  override def reportDriverMetrics(): Array[CustomTaskMetric] = driverMetrics
+  private val traversal = ReadsTraversal(options, pushed)
+  private val pairAware = options.get("keeppairstogether").exists(_.toBoolean)
+  // validation stringency on the binary path (reference
+  // HtsjdkReadsRddStorage.java:97-100): strict fails with file/voff
+  // context, lenient warns+counts (salvaging tag-only failures), and
+  // permissive skips silently — framing stays aligned in every tier
+  private val stringency = Stringency.fromOptions(options)
+  private val extraSlack = options.get("intervalslack").map(_.toInt).getOrElse(0)
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val pathStr = options.getOrElse("path",
-      throw new IllegalArgumentException("bam source requires a path"))
-    val intervals0 = options.get("intervals")
-      .map(s => GenomicInterval.optimize(GenomicInterval.parseList(s)))
-      .orElse(PushedRegion.toIntervals(pushed)) // filter-derived pushdown
-    val unplacedUnmappedOpt = options.get("unplacedunmapped").map(_.toBoolean)
-    val unplacedUnmapped = unplacedUnmappedOpt.getOrElse(false)
-    // traversal-parameter parity (reference AbstractBinarySamSource.java:50-54
-    // + :95-118): an explicit unplacedUnmapped WITHOUT intervals means
-    // "mapped only" (false → rejected upstream too) or "unplaced-unmapped
-    // ONLY" (true → empty interval list, so only the unmapped tail matches;
-    // index paths then prune all mapped partitions). No option at all keeps
-    // the read-everything traversal.
-    val intervals =
-      if (intervals0.isEmpty && unplacedUnmappedOpt.isDefined) {
-        if (!unplacedUnmapped)
-          throw new IllegalArgumentException("traversing mapped reads only is not supported")
-        Some(Nil)
-      } else intervals0
-    val pairAware = options.get("keeppairstogether").exists(_.toBoolean)
-    // validation stringency on the binary path (reference
-    // HtsjdkReadsRddStorage.java:97-100): strict fails with file/voff
-    // context, lenient warns+counts (salvaging tag-only failures), and
-    // permissive skips silently — framing stays aligned in every tier
-    val stringency = Stringency.fromOptions(options)
-    val extraSlack = options.get("intervalslack").map(_.toInt).getOrElse(0)
-    val filesWithLen = HadoopIO.listInputFilesWithLen(pathStr, conf)
-    val files = filesWithLen.map(_._1)
-    val splitSize = options.get("splitsize").map(_.toLong).getOrElse(
-      SplitSizing.derive(filesWithLen.iterator.map(_._2).sum,
-        SparkSession.active.sparkContext.defaultParallelism))
-
-    def planFile(file: Path): (Seq[BamInputPartition], Long) = {
-      val in = HadoopIO.open(file, conf)
-      try {
-        val (header, headerEnd) = BamIO.readHeader(in)
-        val size = in.size
-        val nSplits = math.max(1L, (size + splitSize - 1) / splitSize)
-        val fs = file.getFileSystem(conf)
-        val hostsOf = HadoopIO.blockHostsFor(fs, file, size)
-        // a parsed sidecar, or None when it is absent or unreadable (a
-        // corrupt sidecar only costs pruning, never results)
-        def sidecar[T](ext: String)(read: graft.bgzf.SeekableInput => T): Option[T] = {
-          val p = new Path(file.toString + ext)
-          if (!fs.exists(p)) None
-          else {
-            val sin = HadoopIO.open(p, conf)
-            try scala.util.Try(read(sin)).toOption finally sin.close()
+  override protected def planFile(f: PlanInput): FilePlan = {
+    val (header, headerEnd) = BamIO.readHeader(f.in)
+    val size = f.size
+    val limitFastPath = limitHint >= 0 && traversal.intervals.isEmpty
+    // Stale-index guard: an .sbi whose recorded fileLength differs from
+    // the live file (BAM rewritten in place without re-indexing) is
+    // ignored entirely — its record offsets would misalign every split
+    // and silently corrupt the scan.
+    lazy val sbiOpt: Option[SbiIndex] =
+      if (limitFastPath) None else f.sidecar(".sbi")(SbiIndex.read).filter(_.fileLength == size)
+    // Interval route: the index's virtual-offset spans that may hold an
+    // overlapping record, plus the record-start offsets long spans may
+    // be cut at (read only if a span needs cutting). A fresh .bai answers
+    // exactly (candidate bins' chunks, linear-index floor — reference
+    // AbstractBinarySamSource.java:86-113, BAMFileReader2.java:1002-1098);
+    // without one, a sorted .gci narrows to its matching sampled windows.
+    // The traversal's residual filter drops the non-overlapping records
+    // inside a span, so results stay exact.
+    val indexed: Option[(Seq[(Long, Long)], () => Array[Long])] = traversal.intervals.flatMap { ivs =>
+      f.sidecar(".bai", fresh = true)(BaiIndex.read).map { bai =>
+        val spans = ivs.flatMap { iv =>
+          header.refIndex.get(iv.contig).toSeq.flatMap { r =>
+            val (s0, e0) = (math.max(0, iv.start - 1), math.min(iv.end, BaiIndex.MaxPos) - 1)
+            if (s0 > e0) Nil else bai.spans(r, s0, e0)
           }
         }
-        // a .bai records no file length, so its freshness proof is the
-        // mtime: an index older than its data file (in-place rewrite) must
-        // not steer seeks. A rewrite within the same filesystem timestamp
-        // tick still passes — the format carries nothing that could prove more.
-        def freshBai: Option[BaiIndex] = {
-          val p = new Path(file.toString + ".bai")
-          if (fs.exists(p) && fs.getFileStatus(p).getModificationTime >=
-                fs.getFileStatus(file).getModificationTime) sidecar(".bai")(BaiIndex.read)
-          else None
+        // unplaced-unmapped records sit after the last placed record,
+        // up to the file end; the BAI has no bins for them
+        val tail =
+          if (traversal.unplacedUnmapped) Seq((math.max(headerEnd, bai.mappedEnd), size << 16)) else Nil
+        (spans ++ tail, () => sbiOpt.fold(bai.linearOffsets)(_.offsets))
+      }.orElse(sbiOpt.flatMap { sbi =>
+        // unknown/old .gci versions and unsorted files disable pruning,
+        // never mis-prune
+        f.sidecar(".gci")(GciIndex.read).filter(_.sorted).map { gci =>
+          (BamIntervalPlan.gciWindows(gci, ivs, header.refIndex, traversal.unplacedUnmapped, extraSlack),
+            () => sbi.offsets)
         }
-        val limitFastPath = limitHint >= 0 && intervals.isEmpty
-        // Stale-index guard: an .sbi whose recorded fileLength differs from
-        // the live file (BAM rewritten in place without re-indexing) is
-        // ignored entirely — its record offsets would misalign every split
-        // and silently corrupt the scan.
-        lazy val sbiOpt: Option[SbiIndex] =
-          if (limitFastPath) None else sidecar(".sbi")(SbiIndex.read).filter(_.fileLength == size)
-        // Interval route: the index's virtual-offset spans that may hold an
-        // overlapping record, plus the record-start offsets long spans may
-        // be cut at (read only if a span needs cutting). A fresh .bai answers
-        // exactly (candidate bins' chunks, linear-index floor — reference
-        // AbstractBinarySamSource.java:86-113, BAMFileReader2.java:1002-1098);
-        // without one, a sorted .gci narrows to its matching sampled windows.
-        // keep()'s residual filter drops the non-overlapping records inside
-        // a span, so results stay exact.
-        val indexed: Option[(Seq[(Long, Long)], () => Array[Long])] = intervals.flatMap { ivs =>
-          freshBai.map { bai =>
-            val spans = ivs.flatMap { iv =>
-              header.refIndex.get(iv.contig).toSeq.flatMap { r =>
-                val (s0, e0) = (math.max(0, iv.start - 1), math.min(iv.end, BaiIndex.MaxPos) - 1)
-                if (s0 > e0) Nil else bai.spans(r, s0, e0)
-              }
-            }
-            // unplaced-unmapped records sit after the last placed record,
-            // up to the file end; the BAI has no bins for them
-            val tail = if (unplacedUnmapped) Seq((math.max(headerEnd, bai.mappedEnd), size << 16)) else Nil
-            (spans ++ tail, () => sbiOpt.fold(bai.linearOffsets)(_.offsets))
-          }.orElse(sbiOpt.flatMap { sbi =>
-            // unknown/old .gci versions and unsorted files disable pruning,
-            // never mis-prune
-            sidecar(".gci")(GciIndex.read).filter(_.sorted).map { gci =>
-              (BamIntervalPlan.gciWindows(gci, ivs, header.refIndex, unplacedUnmapped, extraSlack),
-                () => sbi.offsets)
-            }
-          })
+      })
+    }
+    def split(start: Long, end: Long, cs: Long, ce: Long, pairSpan: Option[(Long, Long)] = None) =
+      PlannedSplit(start, end, BamInputPartition(f.path.toString, start, end, header, headerEnd, traversal,
+        cs, ce, pairAware, pairSpan, stringency, _))
+    val splits: Seq[PlannedSplit] = indexed match {
+      case Some((spans, cuts)) =>
+        // keepPairsTogether hands name-runs over between the pieces of
+        // one merged span only: the record before a span belongs to no
+        // partition, and records past its end overlap no interval
+        BamIntervalPlan.ranges(spans, cuts, f.splitSize).map { case ((b, e), span) =>
+          val (start, end) = BamIntervalPlan.byteRange(b, e, size)
+          split(start, end, b, e, Some(span))
         }
-        def part(start: Long, end: Long, cs: Long, ce: Long) =
-          BamInputPartition(file.toString, start, end, header, headerEnd, intervals, unplacedUnmapped,
-            cs, ce, pairAware, stringency = stringency)
-        val parts: Seq[BamInputPartition] = indexed match {
-          case Some((spans, cuts)) =>
-            // keepPairsTogether hands name-runs over between the pieces of
-            // one merged span only: the record before a span belongs to no
-            // partition, and records past its end overlap no interval
-            BamIntervalPlan.ranges(spans, cuts, splitSize).map { case ((b, e), span) =>
-              val (start, end) = BamIntervalPlan.byteRange(b, e, size)
-              part(start, end, b, e).copy(pairSpan = Some(span))
-            }
-          case None if limitFastPath =>
-            // limit fast path (no interval traversal): ONE whole-file
-            // partition, zero sidecar/index I/O, no derive job — the reader
-            // stops after `limitHint` emitted records, so `.limit(5)` on a
-            // lake costs one partition and a few BGZF blocks per file
-            Seq(part(0L, size, -1L, -1L))
-          case None if sbiOpt.isDefined =>
-            // SBI path: split edges snap to indexed record offsets via binary
-            // search — no heuristic boundary scan in the readers (intended
-            // reference semantics, BamSource.java:74-92)
-            val sbi = sbiOpt.get
-            val bounds = (0L to nSplits).map { i =>
-              if (i == nSplits) sbi.offsets.last else sbi.boundaryAtOrAfter(i * splitSize)
-            }
-            (0L until nSplits).flatMap { i =>
-              val (cs, ce) = (bounds(i.toInt), bounds(i.toInt + 1))
-              if (cs >= ce) None
-              else Some(part(i * splitSize, math.min(size, (i + 1) * splitSize), cs, ce))
-            }
-          case None =>
-            // first-contact derivation: run the guesser ONCE as a tiny
-            // distributed job, write the .sbi back, re-plan O(index)
-            if (options.get("deriveindex").exists(_.toBoolean) &&
-                graft.sources.DeriveIndex.deriveBamSbi(
-                  file.toString, header, headerEnd, size, splitSize, new SerializableConf(conf)))
-              return planFile(file) // .sbi now exists → SBI route
-            // heuristic path: byte splits tile the file; each split owns
-            // records whose start voff lies in a block starting within it
-            (0L until nSplits).map { i =>
-              part(i * splitSize, math.min(size, (i + 1) * splitSize), -1L, -1L)
-            }
+      case None if limitFastPath =>
+        // limit fast path (no interval traversal): ONE whole-file
+        // partition, zero sidecar/index I/O, no derive job — capped by the
+        // shell, so `.limit(5)` on a lake costs one partition and a few
+        // BGZF blocks per file
+        Seq(split(0L, size, -1L, -1L))
+      case None if sbiOpt.isDefined =>
+        // SBI path: split edges snap to indexed record offsets via binary
+        // search — no heuristic boundary scan in the readers (intended
+        // reference semantics, BamSource.java:74-92)
+        val sbi = sbiOpt.get
+        val tiles = f.tiles(0L, size)
+        val bounds = tiles.map(t => sbi.boundaryAtOrAfter(t._1)) :+ sbi.offsets.last
+        tiles.indices.collect { case i if bounds(i) < bounds(i + 1) =>
+          split(tiles(i)._1, tiles(i)._2, bounds(i), bounds(i + 1))
         }
-        // locality hints: block hosts of each split's byte range (one
-        // block-list fetch per file, shared by every split)
-        (parts.map(p => p.copy(hosts = hostsOf(p.splitStart, p.splitEnd), limit = limitHint)),
-          indexed.fold(0L)(_._1.iterator.map { case (b, e) =>
-            val (start, end) = BamIntervalPlan.byteRange(b, e, size)
-            end - start
-          }.sum))
-      } finally in.close()
+      case None =>
+        // first-contact derivation: run the guesser ONCE as a tiny
+        // distributed job, write the .sbi back, re-plan O(index)
+        if (options.get("deriveindex").exists(_.toBoolean) &&
+            graft.sources.DeriveIndex.deriveBamSbi(
+              f.path.toString, header, headerEnd, size, f.splitSize, new SerializableConf(f.conf)))
+          return planFile(f) // .sbi now exists → SBI route
+        // heuristic path: byte splits tile the file; each split owns
+        // records whose start voff lies in a block starting within it
+        f.tiles(0L, size).map { case (s0, e0) => split(s0, e0, -1L, -1L) }
     }
-
-    // Per-file planning does real I/O (header and sidecar reads) — fan out
-    // on the shared bounded pool, lexicographic file order preserved.
-    val perFile = HadoopIO.planFiles(files)(f => Seq(planFile(f)))
-    val planned: Array[InputPartition] = perFile.flatMap(_._1).toArray
-    driverMetrics = PlanMetrics.report(planned.length,
-      perFile.iterator.flatMap(_._1).map(p => p.splitEnd - p.splitStart).sum,
-      perFile.iterator.map(_._2).sum)
-    // header-compat across directory inputs (reference leaves this
-    // undefined and silently uses the first header): a shard whose sequence
-    // dictionary differs would mislabel every refId it carries — fail at
-    // planning with the offending file named
-    val refsByFile = scala.collection.mutable.LinkedHashMap[String, IndexedSeq[BamRef]]()
-    planned.foreach { p0 =>
-      val p = p0.asInstanceOf[BamInputPartition]
-      refsByFile.getOrElseUpdate(p.file, p.header.refs)
-    }
-    refsByFile.headOption.foreach { case (firstFile, firstRefs) =>
-      refsByFile.foreach { case (f, r) =>
-        if (r != firstRefs)
-          throw new IllegalArgumentException(
-            s"incompatible sequence dictionaries in directory input: $f does not match $firstFile")
-      }
-    }
-    planned
+    FilePlan(splits,
+      indexed.fold(0L)(_._1.iterator.map { case (b, e) =>
+        val (start, end) = BamIntervalPlan.byteRange(b, e, size)
+        end - start
+      }.sum),
+      Some(header.refs))
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConf(SparkSession.active.sessionState.newHadoopConf())
+  override protected def readerFactory(conf: SerializableConf): PartitionReaderFactory =
     new BamPartitionReaderFactory(conf, required, TagCols.attrKeys(options))
-  }
 }
 
 /** Interval planning over an index's answer: virtual-offset spans that may
@@ -439,13 +348,11 @@ private[bam] object BamIntervalPlan {
 
 case class BamInputPartition(
     file: String, splitStart: Long, splitEnd: Long,
-    header: SamHeader, headerEndVoff: Long,
-    intervals: Option[Seq[GenomicInterval]], unplacedUnmapped: Boolean,
+    header: SamHeader, headerEndVoff: Long, traversal: ReadsTraversal,
     chunkStartVoff: Long, chunkEndVoff: Long, // record-exact voff range; -1 when heuristic
     pairAware: Boolean = false, // name-runs never split across partitions
     pairSpan: Option[(Long, Long)] = None, // pairAware: voff span runs are handed over within (None = file)
     stringency: Stringency = Stringency.Strict, // malformed-record policy
-    limit: Int = -1, // pushed-limit emit cap per reader (-1 = unlimited)
     hosts: Array[String] = Array.empty) // block hosts of the split's range
   extends InputPartition {
   override def preferredLocations(): Array[String] = hosts
@@ -467,7 +374,7 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
     extends PartitionReader[InternalRow] {
 
   private val input = HadoopIO.open(new Path(p.file), conf.conf)
-  private val needFilter = p.intervals.isDefined
+  private val needFilter = p.traversal.intervals.isDefined
   private val mask = {
     val cols = required.fieldNames.toSet
     val m0 = BamFieldMask.fromColumns(cols)
@@ -551,24 +458,7 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
   private val fieldGetters: Array[AlignmentRecord => Any] =
     RecordToRow.getters(required, mask.tagCols, tagHolder, mask.attrKeys.map(_.toSet))
 
-  private def keep(r: AlignmentRecord): Boolean = p.intervals match {
-    case None => true
-    case Some(ivs) =>
-      val unplaced = (r.flags & AlignmentRecord.FlagUnmapped) != 0 && r.start == 0
-      (p.unplacedUnmapped && unplaced) ||
-        (r.contig != null && ivs.exists(_.overlaps(r.contig, r.start, math.max(r.end, r.start))))
-  }
-
-  private var emitted = 0
-
   override def next(): Boolean = {
-    if (p.limit >= 0 && emitted >= p.limit) { exhausted = true; return false }
-    val has = advance()
-    if (has) emitted += 1
-    has
-  }
-
-  private def advance(): Boolean = {
     if (exhausted) return false
     while (true) {
       // territory: the next record start owned by this partition —
@@ -582,17 +472,17 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
             p.pairSpan.exists(stream.virtualOffset >= _._2)) { exhausted = true; return false }
         val rec = readOne()
         if (rec == null || rec.readName != lastReadName) { exhausted = true; return false }
-        if (keep(rec)) { currentRow = toRow(rec); return true }
+        if (p.traversal.keep(rec)) { currentRow = toRow(rec); return true }
       } else {
         val rec = readOne()
         if (rec == null) { exhausted = true; return false }
         if (p.pairAware && prevName != null) {
           // leading run continuing from the previous partition: skip
           if (rec.readName == prevName) { /* owned by predecessor */ }
-          else { prevName = null; lastReadName = rec.readName; if (keep(rec)) { currentRow = toRow(rec); return true } }
+          else { prevName = null; lastReadName = rec.readName; if (p.traversal.keep(rec)) { currentRow = toRow(rec); return true } }
         } else {
           lastReadName = rec.readName
-          if (keep(rec)) { currentRow = toRow(rec); return true }
+          if (p.traversal.keep(rec)) { currentRow = toRow(rec); return true }
         }
       }
     }

@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
 import graft.bam.{AlignmentRecord, RecordToRow, SamHeader}
 import graft.cram.{CraiEntry, CraiIndex, CramContainer, CramContainers,
   CramRecordCodec, CramRecordWriter, CramRefSource, Fasta, FastaRefSource, NoRefSource}
-import graft.sources.{GenomicInterval, GraftProvider, HadoopIO, PartEncoder, PushedRegion, RecordFormat,
-  SerializableConf, SinkFormat, Stringency, StringencyLog}
+import graft.sources.{FilePlan, GenomicInterval, GraftProvider, GraftScan, HadoopIO, PartEncoder, PlanInput,
+  PlannedSplit, PushedRegion, ReadsTraversal, RecordFormat, SerializableConf, SinkFormat, Stringency,
+  StringencyLog}
 
 /** `format("cram")` — CRAM scan/sink (reference CramSource.java:57-151,
   * CramSink.java:35-85).
@@ -283,35 +284,22 @@ private[cram] final case class RecordsContainerPred(ivs: Seq[RefInterval], keepU
 class CramScan(options: Map[String, String], required: StructType,
                pushed: Array[Filter] = Array.empty,
                limitHint: Int = -1)
-    extends Scan with Batch {
+    extends GraftScan("cram", options, required, limitHint) {
   private val records = CramFormat.records(options)
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-cram ${options.getOrElse("path", "")}" +
-      (if (records) " records" else "") +
+  override protected def describe: String =
+    (if (records) " records" else "") +
       options.get("intervals").map(i => s" intervals=$i").getOrElse("") +
       (if (pushed.nonEmpty) s" pushed=[${pushed.mkString(",")}]" else "") +
-      (if (limitHint >= 0) s" limit=$limitHint" else "") +
       graft.sources.bam.TagCols.attrKeys(options)
         .map(k => s" attrKeys=[${k.mkString(",")}]").getOrElse("")
 
-  private def parsedIntervals: Option[Seq[GenomicInterval]] =
-    options.get("intervals").map(s => GenomicInterval.optimize(GenomicInterval.parseList(s)))
+  /** Records mode: the reads traversal BAM and SAM apply. */
+  private val traversal: Option[ReadsTraversal] =
+    if (records) Some(ReadsTraversal(options, pushed)) else None
 
-  /** Records-mode effective intervals: the explicit option, else derived
-    * from pushed contig/start filters (filter-derived pushdown — the same
-    * only-prunes contract as BAM: every filter stays residual).
-    */
-  private def recordIntervals: Option[Seq[GenomicInterval]] =
-    if (!records) None
-    else parsedIntervals.orElse(PushedRegion.toIntervals(pushed))
-  private def unplacedUnmapped: Boolean =
-    options.get("unplacedunmapped").exists(_.toBoolean)
-
-  /** contig-name intervals → refSeqId intervals via the `refs` option
-    * (name:length,… — same format the BAM sink takes); bare numeric contigs
-    * are accepted as refSeqIds directly.
+  /** Container mode: contig-name intervals → refSeqId intervals via the
+    * `refs` option (name:length,… — same format the BAM sink takes); bare
+    * numeric contigs are accepted as refSeqIds directly.
     */
   private def containerPred: Option[ContainerPredicate] = options.get("intervals").map { s =>
     val names: Map[String, Int] = options.get("refs")
@@ -324,180 +312,140 @@ class CramScan(options: Map[String, String], required: StructType,
       })
   }.orElse(CramPushedRegion.toPredicate(pushed)) // filter-derived pushdown
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val pathStr = options.getOrElse("path", throw new IllegalArgumentException("cram source requires a path"))
-    val basePred = if (records) None else containerPred
-    val recIvs = recordIntervals
-    val keepUnm = unplacedUnmapped
-    val filesWithLen = HadoopIO.listInputFilesWithLen(pathStr, conf)
-    val files = filesWithLen.map(_._1)
-    val splitSize = options.get("splitsize").map(_.toLong).getOrElse(
-      graft.sources.SplitSizing.derive(filesWithLen.iterator.map(_._2).sum,
-        SparkSession.active.sparkContext.defaultParallelism))
-
-    def planFile(file: Path): Seq[InputPartition] = {
-      val in = HadoopIO.open(file, conf)
-      try {
-        val (major, _) = CramContainers.readFileDefinition(in)
-        val size = in.size
-        // records mode resolves interval contig names against the FILE's own
-        // header dictionary (one O(1) container read per file at planning;
-        // container mode keeps the refs-option/numeric resolution above)
-        val pred: Option[ContainerPredicate] = recIvs match {
-          case None => basePred
-          case Some(ivs) =>
-            val hdr = CramRecordCodec.readSamHeader(in)
-            Some(RecordsContainerPred(
-              ivs.flatMap { iv =>
-                val id = hdr.refId(iv.contig)
-                if (id >= 0) Some(RefInterval(id, iv.start, iv.end)) else None
-              }, keepUnm))
+  override protected def planFile(f: PlanInput): FilePlan = {
+    val file = f.path.toString
+    val (major, _) = CramContainers.readFileDefinition(f.in)
+    val size = f.size
+    // records mode resolves interval contig names against the FILE's own
+    // header dictionary (one O(1) container read per file at planning;
+    // container mode keeps the refs-option/numeric resolution above)
+    val pred: Option[ContainerPredicate] = traversal match {
+      case None => containerPred
+      case Some(ReadsTraversal(None, _)) => None
+      case Some(ReadsTraversal(Some(ivs), keepUnmapped)) =>
+        val hdr = CramRecordCodec.readSamHeader(f.in)
+        Some(RecordsContainerPred(
+          ivs.flatMap { iv =>
+            val id = hdr.refId(iv.contig)
+            if (id >= 0) Some(RefInterval(id, iv.start, iv.end)) else None
+          }, keepUnmapped))
+    }
+    val start0 = CramContainers.FileDefinitionLength.toLong
+    def range(s: Long, e: Long) = PlannedSplit(s, e, CramRangePartition(file, s, e, pred, _))
+    if (limitHint >= 0 && pred.isEmpty)
+      // limit fast path: one whole-file range partition, no `.crai` read,
+      // no derive job — capped by the shell
+      FilePlan(Seq(range(start0, size)))
+    else f.freshSidecar(".crai") match {
+      case Some(craiPath) =>
+        // index route: container offsets come from `.crai` — O(index)
+        // driver I/O, no header walk (the shape that matters at 100 TB).
+        // A .crai older than its CRAM (in-place rewrite without
+        // re-indexing) must not steer container seeks: the container-walk
+        // route below takes over
+        val cin = HadoopIO.open(craiPath, f.conf)
+        val crai = try CraiIndex.read(cin) finally cin.close()
+        val all = crai.entries.map(_.containerOffset).distinct.sorted
+        val want: Set[Long] = pred match {
+          case None => all.toSet
+          case Some(IntervalContainerPred(rs)) =>
+            rs.flatMap(r => crai.containerOffsets(r.refId, r.start1, r.end1)).toSet
+          case Some(RecordsContainerPred(rs, keepUnmapped)) =>
+            // same slice-overlap selection; unmapped (−1) entries added
+            // when the traversal wants the unplaced tail (−2 is already
+            // kept by containerOffsets' multi-ref conservatism)
+            rs.flatMap(r => crai.containerOffsets(r.refId, r.start1, r.end1)).toSet ++
+              (if (keepUnmapped)
+                crai.entries.filter(e => e.seqId == -1 || e.seqId == -2)
+                  .map(_.containerOffset).toSet
+               else Set.empty[Long])
+          case Some(PushedContainerPred(refId, _, _)) if refId >= 0 =>
+            // `.crai` entries record SLICE coordinates, not the header
+            // start_pos the pushed predicate constrains, so prune on
+            // seqId equality only (−2 kept defensively — superset) and
+            // leave the start_pos bounds to the reader's header re-test
+            crai.entries.filter(e => e.seqId == refId || e.seqId == -2)
+              .map(_.containerOffset).toSet
+          case Some(PushedContainerPred(_, _, _)) =>
+            // negative pushed ids (unmapped −1, multi-ref −2): index
+            // conventions vary (multi-ref containers may be indexed as
+            // one entry PER reference with real seqIds; unmapped entries
+            // may be absent), so seqId pruning could under-select — scan
+            // all indexed containers and let the reader's header re-test
+            // apply the predicate exactly
+            all.toSet
         }
-        val fs = file.getFileSystem(conf)
-        // locality hints: block hosts of each partition's byte range (one
-        // block-list fetch per file, shared by every partition)
-        val hostsOf = HadoopIO.blockHostsFor(fs, file, size)
-        val craiPath = new Path(file.toString + ".crai")
-        if (limitHint >= 0 && pred.isEmpty) {
-          // limit fast path: one whole-file range partition, no `.crai`
-          // read, no derive job — readers stop after `limitHint` rows
-          val start0 = CramContainers.FileDefinitionLength.toLong
-          Seq(CramRangePartition(file.toString, start0, size, pred, hostsOf(start0, size)))
-        } else if (fs.exists(craiPath) &&
-                   fs.getFileStatus(craiPath).getModificationTime >=
-                     fs.getFileStatus(file).getModificationTime) {
-          // index route: container offsets come from `.crai` — O(index)
-          // driver I/O, no header walk (the shape that matters at 100 TB).
-          // Stale-guard: a .crai older than its CRAM (in-place rewrite
-          // without re-indexing) must not steer container seeks — fall
-          // through to the container-walk route instead
-          val cin = HadoopIO.open(craiPath, conf)
-          val crai = try CraiIndex.read(cin) finally cin.close()
-          val all = crai.entries.map(_.containerOffset).distinct.sorted
-          val want: Set[Long] = pred match {
-            case None => all.toSet
-            case Some(IntervalContainerPred(rs)) =>
-              rs.flatMap(r => crai.containerOffsets(r.refId, r.start1, r.end1)).toSet
-            case Some(RecordsContainerPred(rs, keepUnmapped)) =>
-              // same slice-overlap selection; unmapped (−1) entries added
-              // when the traversal wants the unplaced tail (−2 is already
-              // kept by containerOffsets' multi-ref conservatism)
-              rs.flatMap(r => crai.containerOffsets(r.refId, r.start1, r.end1)).toSet ++
-                (if (keepUnmapped)
-                  crai.entries.filter(e => e.seqId == -1 || e.seqId == -2)
-                    .map(_.containerOffset).toSet
-                 else Set.empty[Long])
-            case Some(PushedContainerPred(refId, _, _)) if refId >= 0 =>
-              // `.crai` entries record SLICE coordinates, not the header
-              // start_pos the pushed predicate constrains, so prune on
-              // seqId equality only (−2 kept defensively — superset) and
-              // leave the start_pos bounds to the reader's header re-test
-              crai.entries.filter(e => e.seqId == refId || e.seqId == -2)
-                .map(_.containerOffset).toSet
-            case Some(PushedContainerPred(_, _, _)) =>
-              // negative pushed ids (unmapped −1, multi-ref −2): index
-              // conventions vary (multi-ref containers may be indexed as
-              // one entry PER reference with real seqIds; unmapped entries
-              // may be absent), so seqId pruning could under-select — scan
-              // all indexed containers and let the reader's header re-test
-              // apply the predicate exactly
-              all.toSet
-          }
-          // (offset, estimated container bytes) of the containers to scan
-          val sizes = all.zipAll(all.drop(1).map(Some(_)), 0L, None).map {
-            case (o, Some(next)) => (o, next - o)
-            case (o, None) => (o, size - o) // tail estimate incl. EOF container
-          }
-          val selected = sizes.filter { case (o, _) => want.contains(o) }
-          // tile into partitions of ~splitSize, never splitting a container
-          val parts = Seq.newBuilder[InputPartition]
-          val cur = Seq.newBuilder[Long]
-          var bytes = 0L
-          var n = 0
-          var groupEnd = 0L
-          def flush(): Unit = {
-            val offs = cur.result().toArray
-            parts += CramInputPartition(file.toString, offs, pred,
-              hostsOf(offs.head, groupEnd))
-            cur.clear(); bytes = 0L; n = 0
-          }
-          selected.foreach { case (o, len) =>
-            if (n > 0 && bytes + len > splitSize) flush()
-            cur += o; bytes += len; n += 1; groupEnd = o + len
-          }
-          if (n > 0) flush()
-          parts.result()
-        } else {
-          // no index: plain byte-range splits — container discovery happens
-          // EXECUTOR-side (each reader snaps its range start to the first
-          // CRC-confirmed container boundary, CramContainers.findBoundary).
-          // The driver does O(1) I/O per file: file definition + size. The
-          // reference walks every container header on the driver here
-          // (CramSource.java:121-151) — O(file bytes) of driver I/O before
-          // the first task, a scale-killer this path must not inherit.
-          // Predicate pruning runs in the reader (it sees each header
-          // anyway); each container belongs to the split containing its
-          // START offset.
-          // first-contact derivation: run the boundary snap + header walk
-          // ONCE as a tiny distributed job, write the .crai back, re-plan
-          // O(index)
-          if (options.get("deriveindex").exists(_.toBoolean) &&
-              graft.sources.DeriveIndex.deriveCramCrai(
-                file.toString, size, splitSize, new graft.sources.SerializableConf(conf)))
-            return planFile(file) // .crai now exists → indexed route
-          val start0 = CramContainers.FileDefinitionLength.toLong
+        // (offset, estimated container bytes) of the containers to scan
+        val selected = all.zip(all.drop(1) :+ size).collect {
+          case (o, next) if want.contains(o) => (o, next - o) // the tail includes the EOF container
+        }
+        // tile into partitions of ~splitSize, never splitting a container
+        val groups = Seq.newBuilder[Seq[(Long, Long)]]
+        var cur = Vector.empty[(Long, Long)]
+        var bytes = 0L
+        selected.foreach { case c @ (_, len) =>
+          if (cur.nonEmpty && bytes + len > f.splitSize) { groups += cur; cur = Vector.empty; bytes = 0L }
+          cur :+= c; bytes += len
+        }
+        if (cur.nonEmpty) groups += cur
+        FilePlan(groups.result().map { g =>
+          PlannedSplit(g.head._1, g.last._1 + g.last._2, CramInputPartition(file, g.map(_._1).toArray, pred, _))
+        }, if (pred.isDefined) selected.iterator.map(_._2).sum else 0L)
+      case None =>
+        // no index: plain byte-range splits — container discovery happens
+        // EXECUTOR-side (each reader snaps its range start to the first
+        // CRC-confirmed container boundary, CramContainers.findBoundary).
+        // The driver does O(1) I/O per file: file definition + size. The
+        // reference walks every container header on the driver here
+        // (CramSource.java:121-151) — O(file bytes) of driver I/O before
+        // the first task, a scale-killer this path must not inherit.
+        // Predicate pruning runs in the reader (it sees each header
+        // anyway); each container belongs to the split containing its
+        // START offset.
+        // first-contact derivation: run the boundary snap + header walk
+        // ONCE as a tiny distributed job, write the .crai back, re-plan
+        // O(index)
+        if (options.get("deriveindex").exists(_.toBoolean) &&
+            graft.sources.DeriveIndex.deriveCramCrai(file, size, f.splitSize, new SerializableConf(f.conf)))
+          return planFile(f) // .crai now exists → indexed route
+        FilePlan(
           if (major < 3)
             // CRAM 2.x container headers carry no CRC32, so a mid-range
             // boundary snap can't be validated — one split per file (the
             // gzip-fallback convention; 2.x files wanting parallel scans
             // should carry a `.crai` or be rewritten as v3)
-            Seq(CramRangePartition(file.toString, start0, size, pred, hostsOf(start0, size)))
-          else Iterator.iterate(start0)(_ + splitSize).takeWhile(_ < size).map { s =>
-            val e = math.min(s + splitSize, size)
-            CramRangePartition(file.toString, s, e, pred, hostsOf(s, e))
-              : InputPartition
-          }.toSeq
-        }
-      } finally in.close()
+            Seq(range(start0, size))
+          else f.tiles(start0, size).map { case (s, e) => range(s, e) })
     }
-
-    // per-file container/index I/O fanned out on the shared bounded pool
-    HadoopIO.planFiles(files)(planFile).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConf(SparkSession.active.sessionState.newHadoopConf())
+  override protected def readerFactory(conf: SerializableConf): PartitionReaderFactory = {
     val req = required
-    val mode = graft.sources.Stringency.fromOptions(options)
-    val lim = limitHint
-    def capped(r: PartitionReader[InternalRow]): PartitionReader[InternalRow] =
-      if (lim >= 0) new graft.sources.LimitingReader(r, lim) else r
-    if (records) {
-      val ivs = recordIntervals
-      val keepUnm = unplacedUnmapped
-      val fasta = options.get("fasta")
-      val ak = graft.sources.bam.TagCols.attrKeys(options)
-      (partition: InputPartition) => partition match {
-        case p: CramInputPartition =>
-          capped(new CramRecordsPartitionReader(p.file, Left(p.offsets), p.pred, ivs, keepUnm, fasta, conf, req, mode, ak))
-        case p: CramRangePartition =>
-          capped(new CramRecordsPartitionReader(p.file, Right((p.start, p.end)), p.pred, ivs, keepUnm, fasta, conf, req, mode, ak))
-        case other => throw new IllegalArgumentException(s"unexpected partition $other")
-      }
-    } else (partition: InputPartition) => partition match {
-      case p: CramInputPartition => capped(new CramPartitionReader(p, conf, req, mode))
-      case p: CramRangePartition => capped(new CramRangePartitionReader(p, conf, req, mode))
-      case other => throw new IllegalArgumentException(s"unexpected partition $other")
+    val mode = Stringency.fromOptions(options)
+    traversal match {
+      case Some(t) =>
+        val fasta = options.get("fasta")
+        val ak = graft.sources.bam.TagCols.attrKeys(options)
+        (p: InputPartition) =>
+          new CramRecordsPartitionReader(p.asInstanceOf[CramPartition], t, fasta, conf, req, mode, ak)
+      case None =>
+        (p: InputPartition) => new CramPartitionReader(p.asInstanceOf[CramPartition], conf, req, mode)
     }
   }
 }
 
-case class CramInputPartition(file: String, offsets: Array[Long],
-                              pred: Option[ContainerPredicate],
-                              hosts: Array[String] = Array.empty) extends InputPartition {
+/** The containers of one file a CRAM reader owns. */
+sealed trait CramPartition extends InputPartition {
+  def file: String
+  def pred: Option[ContainerPredicate]
+  def hosts: Array[String]
   override def preferredLocations(): Array[String] = hosts
 }
+
+/** Indexed route: the `.crai`-listed container offsets. */
+case class CramInputPartition(file: String, offsets: Array[Long],
+                              pred: Option[ContainerPredicate],
+                              hosts: Array[String] = Array.empty) extends CramPartition
 
 /** Unindexed route: a raw byte range; the READER discovers the first
   * container boundary at-or-after `start` and owns every container whose
@@ -505,9 +453,7 @@ case class CramInputPartition(file: String, offsets: Array[Long],
   */
 case class CramRangePartition(file: String, start: Long, end: Long,
                               pred: Option[ContainerPredicate],
-                              hosts: Array[String] = Array.empty) extends InputPartition {
-  override def preferredLocations(): Array[String] = hosts
-}
+                              hosts: Array[String] = Array.empty) extends CramPartition
 
 private[cram] object ContainerRow {
   def getters(required: StructType): Array[CramContainer => Any] =
@@ -530,112 +476,84 @@ private[cram] object ContainerRow {
   }
 }
 
-class CramPartitionReader(p: CramInputPartition, conf: SerializableConf, required: StructType,
-                          mode: graft.sources.Stringency = graft.sources.Stringency.Strict)
-    extends PartitionReader[InternalRow] {
-  import graft.sources.Stringency
-  private val input = HadoopIO.open(new Path(p.file), conf.conf)
-  private val size = input.size
-  private val (major, _) = CramContainers.readFileDefinition(input)
-  private var i = 0
-  private var currentRow: InternalRow = _
-  private val getters = ContainerRow.getters(required)
-  private val slog = new graft.sources.StringencyLog(s"cram ${p.file}")
-
-  /** residual exactness filter — `.crai` pruning may overclaim */
-  private def keep(c: CramContainer): Boolean = !c.isEof && p.pred.forall(_.keep(c))
-
-  override def next(): Boolean = {
-    while (i < p.offsets.length) {
-      val off = p.offsets(i)
-      i += 1
-      CramContainers.readHeaderOption(input, off, size, major) match {
-        case Some(c) =>
-          if (keep(c)) {
-            currentRow = ContainerRow.toRow(c, getters)
-            return true
-          }
-        case None => mode match {
-          // `.crai`-listed offsets are independent: the malformed container
-          // is droppable without losing the rest of the partition
-          case Stringency.Strict =>
-            throw new java.io.IOException(
-              s"malformed CRAM container header at $off in ${p.file}")
-          case Stringency.Lenient => slog.skip(s"container at $off in ${p.file}")
-          case Stringency.Permissive => slog.skipSilently()
-        }
-      }
-    }
-    false
-  }
-  override def get(): InternalRow = currentRow
-  override def close(): Unit = { slog.summarize(); input.close() }
-}
-
-/** Unindexed route: snap the range start to the first CRC-confirmed
-  * container boundary (executor-side discovery — the driver planned a bare
-  * byte range), then follow the container chain while starts stay inside
-  * the range. A container straddling `end` belongs to THIS split; the next
-  * split's own boundary search lands past it — exactly-once ownership with
-  * zero coordination.
+/** The containers a partition owns, in file order, that pass its
+  * predicate (a residual test: `.crai` pruning may overclaim). Indexed
+  * partitions visit their listed offsets. Range partitions snap `start` to
+  * the first CRC-confirmed container boundary (executor-side discovery —
+  * the driver planned a bare byte range), starting at `dataStart` for the
+  * file's first range, and follow the container chain while starts stay
+  * inside the range: a container straddling `end` belongs to this split,
+  * and the next split's own boundary search lands past it — exactly-once
+  * ownership with zero coordination.
+  *
+  * A malformed header fails a strict scan. Lenient and permissive scans
+  * drop it: a listed offset is independent of the next, and a range walk
+  * re-syncs to the next CRC-confirmed boundary, so a skip never emits
+  * garbage.
   */
-class CramRangePartitionReader(p: CramRangePartition, conf: SerializableConf, required: StructType,
-                               mode: graft.sources.Stringency = graft.sources.Stringency.Strict)
-    extends PartitionReader[InternalRow] {
-  import graft.sources.Stringency
-  private val input = HadoopIO.open(new Path(p.file), conf.conf)
+private[cram] final class ContainerWalk(input: graft.bgzf.SeekableInput, p: CramPartition, major: Int,
+                                        dataStart: Long, mode: Stringency, slog: StringencyLog) {
   private val size = input.size
-  private val (major, _) = CramContainers.readFileDefinition(input)
-  private var off: Long =
-    if (p.start <= CramContainers.FileDefinitionLength)
-      CramContainers.FileDefinitionLength.toLong
-    else CramContainers.findBoundary(input, p.start, size)
-  private var currentRow: InternalRow = _
-  private val getters = ContainerRow.getters(required)
-  private val slog = new graft.sources.StringencyLog(s"cram ${p.file}")
+  private var i = 0 // indexed: next position in the offsets
+  private var off: Long = p match { // range: next container start
+    case r: CramRangePartition =>
+      if (r.start <= CramContainers.FileDefinitionLength) dataStart
+      else CramContainers.findBoundary(input, r.start, size)
+    case _ => 0L
+  }
 
-  private def keep(c: CramContainer): Boolean = !c.isEof && p.pred.forall(_.keep(c))
-
-  override def next(): Boolean = {
-    while (off < p.end && off < size) {
-      CramContainers.readHeaderOption(input, off, size, major) match {
+  /** The next owned container passing the predicate, or null. */
+  def next(): CramContainer = {
+    while (true) {
+      val at = p match {
+        case ip: CramInputPartition if i < ip.offsets.length => i += 1; ip.offsets(i - 1)
+        case r: CramRangePartition if off < r.end && off < size => off
+        case _ => return null
+      }
+      CramContainers.readHeaderOption(input, at, size, major) match {
         case Some(c) =>
           off += c.totalLength
-          if (keep(c)) {
-            currentRow = ContainerRow.toRow(c, getters)
-            return true
+          if (!c.isEof && c.offset >= dataStart && p.pred.forall(_.keep(c))) return c
+        case None =>
+          if (mode == Stringency.Strict)
+            throw new java.io.IOException(s"malformed CRAM container header at $at in ${p.file}")
+          val resync = p match {
+            case _: CramRangePartition =>
+              off = CramContainers.findBoundary(input, at + 1, size)
+              s" (re-synced to $off)"
+            case _ => ""
           }
-        case None => mode match {
-          case Stringency.Strict =>
-            throw new java.io.IOException(
-              s"malformed CRAM container header at $off in ${p.file}")
-          case _ =>
-            // LENIENT/PERMISSIVE salvage: re-sync to the next CRC-confirmed
-            // boundary — the CRC requirement means a skip can never emit
-            // garbage rows, only drop the corrupt container (the Stringency
-            // contract's framing rule is honored because re-sync is
-            // validated, not guessed)
-            val resync = CramContainers.findBoundary(input, off + 1, size)
-            if (mode == Stringency.Lenient)
-              slog.skip(s"container at $off in ${p.file} (re-synced to $resync)")
-            else slog.skipSilently()
-            off = resync
-        }
+          if (mode == Stringency.Lenient) slog.skip(s"container at $at in ${p.file}$resync")
+          else slog.skipSilently()
       }
     }
-    false
+    null
+  }
+}
+
+/** Container-level rows: one per owned container header. */
+class CramPartitionReader(p: CramPartition, conf: SerializableConf, required: StructType,
+                          mode: Stringency = Stringency.Strict)
+    extends PartitionReader[InternalRow] {
+  private val input = HadoopIO.open(new Path(p.file), conf.conf)
+  private val slog = new StringencyLog(s"cram ${p.file}")
+  private val walk = new ContainerWalk(input, p, CramContainers.readFileDefinition(input)._1,
+    CramContainers.FileDefinitionLength.toLong, mode, slog)
+  private val getters = ContainerRow.getters(required)
+  private var currentRow: InternalRow = _
+
+  override def next(): Boolean = walk.next() match {
+    case null => false
+    case c => currentRow = ContainerRow.toRow(c, getters); true
   }
   override def get(): InternalRow = currentRow
   override def close(): Unit = { slog.summarize(); input.close() }
 }
 
-/** Records-mode reader for BOTH planning routes: `Left(offsets)` is the
-  * `.crai`-indexed container list, `Right((start, end))` the unindexed byte
-  * range (snap to the first CRC-confirmed boundary, walk the chain — the
-  * same exactly-once ownership as [[CramRangePartitionReader]]). Each
-  * selected container is decoded by the native record codec; the `intervals`
-  * option is re-applied per RECORD for exactness (container pruning may
-  * overclaim), mirroring the BAM reader's residual filter.
+/** Records-mode reader for both planning routes: each container the
+  * [[ContainerWalk]] yields past the SAM-header container is decoded by the
+  * native record codec, and the reads traversal is re-applied per RECORD
+  * for exactness (container pruning may overclaim), as in the BAM reader.
   *
   * Per-partition setup cost is O(1): file definition + header container +
   * (for `fasta`) the `.fai`; reference bases are pread per slice span, so an
@@ -643,13 +561,12 @@ class CramRangePartitionReader(p: CramRangePartition, conf: SerializableConf, re
   * hands htsjdk a lazy ReferenceSource — same access pattern).
   */
 class CramRecordsPartitionReader(
-    file: String, plan: Either[Array[Long], (Long, Long)],
-    pred: Option[ContainerPredicate], intervals: Option[Seq[GenomicInterval]],
-    unplacedUnmapped: Boolean, fastaPath: Option[String],
+    p: CramPartition, traversal: ReadsTraversal, fastaPath: Option[String],
     conf: SerializableConf, required: StructType, mode: Stringency,
     attrKeys: Option[IndexedSeq[String]] = None)
     extends PartitionReader[InternalRow] {
 
+  private val file = p.file
   private val input = HadoopIO.open(new Path(file), conf.conf)
   private val size = input.size
   private val (major, _) = CramContainers.readFileDefinition(input)
@@ -659,7 +576,7 @@ class CramRecordsPartitionReader(
       input, CramContainers.FileDefinitionLength.toLong, size, major)
     hc.offset + hc.totalLength
   }
-  private val fastaOpened = fastaPath.map(p => FastaRefs.open(p, conf.conf, header.refName))
+  private val fastaOpened = fastaPath.map(FastaRefs.open(_, conf.conf, header.refName))
   private val fastaIn = fastaOpened.map(_._1)
   private val refSource: CramRefSource = fastaOpened.map(_._2).getOrElse(NoRefSource)
   // record-level field projection: pruned qualities/sequence/attributes are
@@ -679,27 +596,10 @@ class CramRecordsPartitionReader(
   private val getters =
     RecordToRow.getters(required, fieldMask.tagCols, tagHolder, fieldMask.attrKeys.map(_.toSet))
   private val slog = new StringencyLog(s"cram ${file}")
+  private val walk = new ContainerWalk(input, p, major, headerEnd, mode, slog)
 
-  private var idxI = 0 // Left route: next index into the offsets array
-  private var off: Long = plan match { // Right route: walking offset
-    case Right((start, _)) =>
-      if (start <= CramContainers.FileDefinitionLength) headerEnd
-      else CramContainers.findBoundary(input, start, size)
-    case _ => 0L
-  }
   private var recIt: Iterator[AlignmentRecord] = Iterator.empty
   private var currentRow: InternalRow = _
-
-  private def keepC(c: CramContainer): Boolean =
-    !c.isEof && c.offset >= headerEnd && pred.forall(_.keep(c))
-
-  private def keepR(r: AlignmentRecord): Boolean = intervals match {
-    case None => true
-    case Some(ivs) =>
-      val unplaced = (r.flags & AlignmentRecord.FlagUnmapped) != 0 && r.start == 0
-      (unplacedUnmapped && unplaced) ||
-        (r.contig != null && ivs.exists(_.overlaps(r.contig, r.start, math.max(r.end, r.start))))
-  }
 
   /** Decode `c`'s payload into `recIt`; false = container skipped (lenient/
     * permissive salvage — the NEXT container is independent, so a payload
@@ -719,51 +619,17 @@ class CramRecordsPartitionReader(
     }
 
   /** Advance to the next selected+decoded container; false when exhausted. */
-  private def advance(): Boolean = plan match {
-    case Left(offsets) =>
-      while (idxI < offsets.length) {
-        val o = offsets(idxI)
-        idxI += 1
-        CramContainers.readHeaderOption(input, o, size, major) match {
-          case Some(c) =>
-            if (keepC(c) && decodeInto(c)) return true
-          case None => mode match {
-            case Stringency.Strict =>
-              throw new java.io.IOException(
-                s"malformed CRAM container header at $o in $file")
-            case Stringency.Lenient => slog.skip(s"container at $o in $file")
-            case Stringency.Permissive => slog.skipSilently()
-          }
-        }
-      }
-      false
-    case Right((_, end)) =>
-      while (off < end && off < size) {
-        CramContainers.readHeaderOption(input, off, size, major) match {
-          case Some(c) =>
-            off += c.totalLength
-            if (keepC(c) && decodeInto(c)) return true
-          case None => mode match {
-            case Stringency.Strict =>
-              throw new java.io.IOException(
-                s"malformed CRAM container header at $off in $file")
-            case _ =>
-              val resync = CramContainers.findBoundary(input, off + 1, size)
-              if (mode == Stringency.Lenient)
-                slog.skip(s"container at $off in $file (re-synced to $resync)")
-              else slog.skipSilently()
-              off = resync
-          }
-        }
-      }
-      false
+  private def advance(): Boolean = {
+    var c = walk.next()
+    while (c != null && !decodeInto(c)) c = walk.next()
+    c != null
   }
 
   override def next(): Boolean = {
     while (true) {
       while (recIt.hasNext) {
         val r = recIt.next()
-        if (keepR(r)) {
+        if (traversal.keep(r)) {
           if (tagHolder.length > 0) {
             var i = 0
             while (i < tagHolder.length) {

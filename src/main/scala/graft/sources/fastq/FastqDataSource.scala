@@ -1,7 +1,6 @@
 package graft.sources.fastq
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
@@ -10,8 +9,8 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.fastq.{FastqCodec, FastqRecord}
-import graft.sources.{GraftProvider, HadoopIO, PartEncoder, RecordFormat, SerializableConf, SinkFormat,
-  SplitSizing, SplitTextReader, Stringency, StringencyLog}
+import graft.sources.{FilePlan, GraftProvider, GraftScan, HadoopIO, PartEncoder, PlanInput, PlannedSplit,
+  RecordFormat, SerializableConf, SinkFormat, SplitTextReader, Stringency, StringencyLog}
 
 /** `format("fastq")` — splittable raw-read scan/sink over plain, BGZF, or
   * single-split gzip text. Beyond the reference's surface (disq starts at
@@ -46,50 +45,24 @@ object FastqFormat extends RecordFormat {
 }
 
 class FastqScan(options: Map[String, String], required: StructType, limitHint: Int)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String = {
-    val lim = if (limitHint >= 0) s" limit=$limitHint" else ""
-    s"graft-fastq ${options.getOrElse("path", "")}$lim"
+    extends GraftScan("fastq", options, required, limitHint) {
+  private val stringency = Stringency.fromOptions(options)
+
+  override protected def planFile(f: PlanInput): FilePlan = {
+    val bgzf = SplitTextReader.isBgzf(f.in)
+    val wholeGzip = !bgzf && SplitTextReader.isPlainGzip(f.in)
+    FilePlan(
+      if (wholeGzip || limitHint >= 0)
+        // plain gzip is single-split; the limit fast path is one
+        // whole-file partition, capped by the shell
+        Seq(PlannedSplit(0L, f.size,
+          FastqInputPartition(f.path.toString, 0L, Long.MaxValue, bgzf, wholeGzip, stringency, _)))
+      else f.tiles(0L, f.size).map { case (s0, e0) =>
+        PlannedSplit(s0, e0, FastqInputPartition(f.path.toString, s0, e0, bgzf, wholeGzip = false, stringency, _))
+      })
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val pathStr = options.getOrElse("path",
-      throw new IllegalArgumentException("fastq source requires a path"))
-    val stringency = Stringency.fromOptions(options)
-    val filesWithLen = HadoopIO.listInputFilesWithLen(pathStr, conf)
-    val files = filesWithLen.map(_._1)
-    val splitSize = options.get("splitsize").map(_.toLong).getOrElse(
-      SplitSizing.derive(filesWithLen.iterator.map(_._2).sum,
-        SparkSession.active.sparkContext.defaultParallelism))
-    HadoopIO.planFiles(files) { file =>
-      val in = HadoopIO.open(file, conf)
-      try {
-        val size = in.size
-        val bgzf = SplitTextReader.isBgzf(in)
-        val wholeGzip = !bgzf && SplitTextReader.isPlainGzip(in)
-        val hostsOf = HadoopIO.blockHostsFor(file.getFileSystem(conf), file, size)
-        if (wholeGzip || (limitHint >= 0))
-          // plain gzip is single-split; the limit fast path is one
-          // whole-file partition with an emit cap, zero extra planning
-          Seq(FastqInputPartition(file.toString, 0L, Long.MaxValue, bgzf, wholeGzip,
-            stringency, limitHint, hostsOf(0L, size)))
-        else {
-          val nSplits = math.max(1L, (size + splitSize - 1) / splitSize)
-          (0L until nSplits).map { i =>
-            val (s0, e0) = (i * splitSize, math.min(size, (i + 1) * splitSize))
-            FastqInputPartition(file.toString, s0, e0, bgzf, wholeGzip = false,
-              stringency, -1, hostsOf(s0, e0))
-          }
-        }
-      } finally in.close()
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConf(SparkSession.active.sessionState.newHadoopConf())
+  override protected def readerFactory(conf: SerializableConf): PartitionReaderFactory = {
     val req = required
     (partition: InputPartition) => new FastqPartitionReader(
       partition.asInstanceOf[FastqInputPartition], conf, req)
@@ -98,7 +71,7 @@ class FastqScan(options: Map[String, String], required: StructType, limitHint: I
 
 case class FastqInputPartition(file: String, splitStart: Long, splitEnd: Long,
     bgzf: Boolean, wholeGzip: Boolean, stringency: Stringency,
-    limit: Int = -1, hosts: Array[String] = Array.empty) extends InputPartition {
+    hosts: Array[String] = Array.empty) extends InputPartition {
   override def preferredLocations(): Array[String] = hosts
 }
 
@@ -146,10 +119,8 @@ class FastqPartitionReader(p: FastqInputPartition, conf: SerializableConf, requi
   }
 
   private var currentRow: InternalRow = _
-  private var emitted = 0
 
   override def next(): Boolean = {
-    if (p.limit >= 0 && emitted >= p.limit) return false
     if (!aligned) align()
     while (true) {
       fill(4)
@@ -168,7 +139,6 @@ class FastqPartitionReader(p: FastqInputPartition, conf: SerializableConf, requi
       try {
         val rec = FastqCodec.parse(l0, l1, l2, l3)
         currentRow = FastqRowBuilder.build(rec, getters)
-        emitted += 1
         return true
       } catch {
         case _: Exception if p.stringency eq Stringency.Permissive => slog.skipSilently()

@@ -1,16 +1,16 @@
 package graft.sources.sam
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
-import graft.bam.{AlignmentRecord, BamFieldMask, RecordToRow, SamHeader}
+import graft.bam.{BamFieldMask, RecordToRow, SamHeader}
 import graft.sam.SamCodec
-import graft.sources.{GenomicInterval, GraftProvider, HadoopIO, PartEncoder, PushedRegion, RecordFormat,
-  SerializableConf, SinkFormat, SplitTextReader}
+import graft.sources.{FilePlan, GraftProvider, GraftScan, HadoopIO, PartEncoder, PlanInput, PlannedSplit,
+  PushedRegion, ReadsTraversal, RecordFormat, SerializableConf, SinkFormat, SplitTextReader, Stringency,
+  StringencyLog}
 import graft.sources.bam.TagCols
 
 /** `format("sam")` — plain-text SAM scan/sink (reference SamSource.java:35-87,
@@ -48,69 +48,27 @@ object SamFormat extends RecordFormat {
 
 class SamScan(options: Map[String, String], required: StructType,
               pushed: Array[Filter],
-              limitHint: Int = -1) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String = {
-    val lim = if (limitHint >= 0) s" limit=$limitHint" else ""
-    val ak = graft.sources.bam.TagCols.attrKeys(options)
-      .map(k => s" attrKeys=[${k.mkString(",")}]").getOrElse("")
-    s"graft-sam ${options.getOrElse("path", "")} pushed=[${pushed.mkString(",")}]$lim$ak"
+              limitHint: Int = -1) extends GraftScan("sam", options, required, limitHint) {
+  override protected def describe: String =
+    s" pushed=[${pushed.mkString(",")}]" +
+      TagCols.attrKeys(options).map(k => s" attrKeys=[${k.mkString(",")}]").getOrElse("")
+
+  private val traversal = ReadsTraversal(options, pushed)
+  private val stringency = Stringency.fromOptions(options)
+
+  override protected def planFile(f: PlanInput): FilePlan = {
+    // header text: leading @-lines of the file
+    val headerText = SplitTextReader.lines(f.in, 0, Long.MaxValue, bgzf = false)
+      .takeWhile(_.startsWith("@")).mkString("", "\n", "\n")
+    val header = SamHeader(headerText, SamHeader.refsFromText(headerText))
+    // limit fast path: one whole-file partition, capped by the shell
+    val ranges = if (limitHint >= 0 && traversal.intervals.isEmpty) Seq((0L, f.size)) else f.tiles(0L, f.size)
+    FilePlan(ranges.map { case (s0, e0) =>
+      PlannedSplit(s0, e0, SamInputPartition(f.path.toString, s0, e0, header, traversal, stringency, _))
+    })
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val pathStr = options.getOrElse("path", throw new IllegalArgumentException("sam source requires a path"))
-    val intervals0 = options.get("intervals")
-      .map(s => GenomicInterval.optimize(GenomicInterval.parseList(s)))
-      .orElse(PushedRegion.toIntervals(pushed)) // filter-derived pushdown
-    val unplacedUnmappedOpt = options.get("unplacedunmapped").map(_.toBoolean)
-    val unplacedUnmapped = unplacedUnmappedOpt.getOrElse(false)
-    // traversal-parameter parity (reference AbstractBinarySamSource.java:50-54):
-    // explicit unplacedUnmapped without intervals = mapped-only (rejected)
-    // or unplaced-unmapped-only (empty interval list)
-    val intervals =
-      if (intervals0.isEmpty && unplacedUnmappedOpt.isDefined) {
-        if (!unplacedUnmapped)
-          throw new IllegalArgumentException("traversing mapped reads only is not supported")
-        Some(Nil)
-      } else intervals0
-    val stringency = graft.sources.Stringency.fromOptions(options)
-    // per-file header I/O fanned out on the shared bounded pool (O(files)
-    // serial driver RPCs otherwise), lexicographic file order preserved
-    val filesWithLen = HadoopIO.listInputFilesWithLen(pathStr, conf)
-    val files = filesWithLen.map(_._1)
-    val splitSize = options.get("splitsize").map(_.toLong).getOrElse(
-      graft.sources.SplitSizing.derive(filesWithLen.iterator.map(_._2).sum,
-        SparkSession.active.sparkContext.defaultParallelism))
-    HadoopIO.planFiles(files) { file =>
-      val in = HadoopIO.open(file, conf)
-      try {
-        // header text: leading @-lines of the file
-        val headerText = SplitTextReader.lines(in, 0, Long.MaxValue, bgzf = false)
-          .takeWhile(_.startsWith("@")).mkString("", "\n", "\n")
-        val header = SamHeader(headerText, SamHeader.refsFromText(headerText))
-        val size = in.size
-        val nSplits = math.max(1L, (size + splitSize - 1) / splitSize)
-        // locality hints: block hosts of each split's byte range (one
-        // block-list fetch per file, shared by every split)
-        val hostsOf = HadoopIO.blockHostsFor(file.getFileSystem(conf), file, size)
-        if (limitHint >= 0 && intervals.isEmpty)
-          // limit fast path: one whole-file partition; the reader stops
-          // after `limitHint` emitted records
-          Seq(SamInputPartition(file.toString, 0L, size, header, None,
-            unplacedUnmapped, stringency, limitHint, hostsOf(0L, size)))
-        else (0L until nSplits).map { i =>
-          val (s0, e0) = (i * splitSize, math.min(size, (i + 1) * splitSize))
-          SamInputPartition(file.toString, s0, e0,
-            header, intervals, unplacedUnmapped, stringency, limitHint, hostsOf(s0, e0))
-        }
-      } finally in.close()
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConf(SparkSession.active.sessionState.newHadoopConf())
+  override protected def readerFactory(conf: SerializableConf): PartitionReaderFactory = {
     val req = required
     val ak = TagCols.attrKeys(options)
     (partition: InputPartition) => new SamPartitionReader(
@@ -119,9 +77,8 @@ class SamScan(options: Map[String, String], required: StructType,
 }
 
 case class SamInputPartition(file: String, splitStart: Long, splitEnd: Long,
-    header: SamHeader, intervals: Option[Seq[GenomicInterval]], unplacedUnmapped: Boolean,
-    stringency: graft.sources.Stringency, // malformed-line policy
-    limit: Int = -1, // pushed-limit emit cap per reader (-1 = unlimited)
+    header: SamHeader, traversal: ReadsTraversal,
+    stringency: Stringency, // malformed-line policy
     hosts: Array[String] = Array.empty) // block hosts of the split's range
   extends InputPartition {
   override def preferredLocations(): Array[String] = hosts
@@ -142,26 +99,9 @@ class SamPartitionReader(p: SamInputPartition, conf: SerializableConf, required:
   private val tagHolder = new Array[String](mask.tagCols.length)
   private val getters = RecordToRow.getters(required, mask.tagCols, tagHolder, mask.attrKeys.map(_.toSet))
   private var currentRow: InternalRow = _
-  private val slog = new graft.sources.StringencyLog(s"${p.file} [${p.splitStart}, ${p.splitEnd})")
-
-  private def keep(r: AlignmentRecord): Boolean = p.intervals match {
-    case None => true
-    case Some(ivs) =>
-      val unplaced = (r.flags & AlignmentRecord.FlagUnmapped) != 0 && r.start == 0
-      (p.unplacedUnmapped && unplaced) ||
-        (r.contig != null && ivs.exists(_.overlaps(r.contig, r.start, math.max(r.end, r.start))))
-  }
-
-  private var emitted = 0
+  private val slog = new StringencyLog(s"${p.file} [${p.splitStart}, ${p.splitEnd})")
 
   override def next(): Boolean = {
-    if (p.limit >= 0 && emitted >= p.limit) return false
-    val has = advance()
-    if (has) emitted += 1
-    has
-  }
-
-  private def advance(): Boolean = {
     while (lines.hasNext) {
       val line = lines.next()
       if (line.nonEmpty && !line.startsWith("@")) {
@@ -169,13 +109,13 @@ class SamPartitionReader(p: SamInputPartition, conf: SerializableConf, required:
         // strict fails fast with context, lenient warns+counts (salvaging
         // lines whose failure is confined to the optional columns past the
         // 11 mandatory SAM fields), permissive skips silently
-        val strictTail = p.stringency eq graft.sources.Stringency.Strict
+        val strictTail = p.stringency eq Stringency.Strict
         val rec =
           try SamCodec.fromLine(line, p.header, mask, tagHolder, strictTail)
           catch {
-            case _: Exception if p.stringency eq graft.sources.Stringency.Permissive =>
+            case _: Exception if p.stringency eq Stringency.Permissive =>
               slog.skipSilently(); null
-            case e: Exception if p.stringency eq graft.sources.Stringency.Lenient =>
+            case e: Exception if p.stringency eq Stringency.Lenient =>
               val mandatory = line.split('\t').take(11).mkString("\t")
               val salvagedRec =
                 try SamCodec.fromLine(mandatory, p.header, mask, tagHolder)
@@ -187,7 +127,7 @@ class SamPartitionReader(p: SamInputPartition, conf: SerializableConf, required:
             case e: Exception =>
               throw new java.io.IOException(s"bad SAM line in ${p.file}: $line", e)
           }
-        if (rec != null && keep(rec)) {
+        if (rec != null && p.traversal.keep(rec)) {
           currentRow = RecordToRow.toRow(rec, getters)
           return true
         }

@@ -1,7 +1,6 @@
 package graft.sources.vcf
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -10,8 +9,9 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{ArrayType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.{CountingOutputStream, GenomicInterval, GraftProvider, HadoopIO, PartEncoder,
-  PushedRegion, RecordFormat, SerializableConf, SinkFormat, SplitTextReader}
+import graft.sources.{CountingOutputStream, FilePlan, GenomicInterval, GraftProvider, GraftScan, HadoopIO,
+  PartEncoder, PlanInput, PlannedSplit, PushedRegion, RecordFormat, SerializableConf, SinkFormat,
+  SplitTextReader, Stringency}
 import graft.vcf.{Genotype, Variant, VcfCodec, VcfHeader}
 
 /** `format("vcf")` — VCF scan/sink over plain, BGZF (.vcf.bgz / BGZF .vcf.gz,
@@ -65,168 +65,90 @@ object VcfFormat extends RecordFormat {
 
 class VcfScan(options: Map[String, String], required: StructType,
               pushed: Array[Filter],
-              limitHint: Int = -1) extends Scan with Batch {
+              limitHint: Int = -1) extends GraftScan("vcf", options, required, limitHint) {
   // FORMAT/INFO-field projection: validated at planning so a bad option
   // fails before any task launches
   private val formatKeys: Option[IndexedSeq[String]] =
     graft.vcf.VcfFormatMask.parseOption(options.get("formatfields"))
   private val infoKeys: Option[IndexedSeq[String]] =
     graft.vcf.VcfFormatMask.parseInfoOption(options.get("infofields"))
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String = {
-    val iv = options.get("intervals").map(i => s" intervals=$i").getOrElse("")
-    val lim = if (limitHint >= 0) s" limit=$limitHint" else ""
-    val ff = formatKeys.map(k => s" formatFields=[${k.mkString(",")}]").getOrElse("")
-    val inf = infoKeys.map(k => s" infoFields=[${k.mkString(",")}]").getOrElse("")
-    s"graft-vcf ${options.getOrElse("path", "")}$iv pushed=[${pushed.mkString(",")}]$lim$ff$inf"
-  }
+  override protected def describe: String =
+    options.get("intervals").map(i => s" intervals=$i").getOrElse("") +
+      s" pushed=[${pushed.mkString(",")}]" +
+      formatKeys.map(k => s" formatFields=[${k.mkString(",")}]").getOrElse("") +
+      infoKeys.map(k => s" infoFields=[${k.mkString(",")}]").getOrElse("")
+  // genotype columns are decoded against the per-file sample list, so
+  // shards with different sample sets would silently mislabel genotypes
+  override protected def headerKind: String = "sample lists"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val pathStr = options.getOrElse("path", throw new IllegalArgumentException("vcf source requires a path"))
-    val intervals = options.get("intervals")
-      .map(s => GenomicInterval.optimize(GenomicInterval.parseList(s)))
-      .orElse(PushedRegion.toIntervals(pushed)) // filter-derived pushdown
-    val stringency = graft.sources.Stringency.fromOptions(options)
-    // per-file header/index I/O fanned out on the shared bounded pool
-    // (O(files) serial driver RPCs otherwise), lexicographic order preserved
-    val filesWithLen = HadoopIO.listInputFilesWithLen(pathStr, conf)
-    val files = filesWithLen.map(_._1)
-    val splitSize = options.get("splitsize").map(_.toLong).getOrElse(
-      graft.sources.SplitSizing.derive(filesWithLen.iterator.map(_._2).sum,
-        SparkSession.active.sparkContext.defaultParallelism))
-    HadoopIO.planFiles(files) { file =>
-      val in = HadoopIO.open(file, conf)
-      try {
-        val bgzf = SplitTextReader.isBgzf(in)
-        val plainGzip = !bgzf && SplitTextReader.isPlainGzip(in)
-        val header = VcfHeader.parse(SplitTextReader.allLines(in))
-        val size = in.size
-        val fs = file.getFileSystem(conf)
-        val hostsOf = HadoopIO.blockHostsFor(fs, file, size)
-        val parts: Seq[VcfInputPartition] = if (plainGzip) {
-          // non-splittable: one whole-file partition (reference
-          // BGZFEnhancedGzipCodec fallback semantics)
-          Seq(VcfInputPartition(file.toString, 0L, Long.MaxValue, header, bgzf = false,
-            wholeGzip = true, intervals, stringency))
-        } else if (limitHint >= 0 && intervals.isEmpty) {
-          // limit fast path: one whole-file partition, no index I/O or
-          // split tiling — the reader stops after `limitHint` records
-          Seq(VcfInputPartition(file.toString, 0L, size, header, bgzf,
-            wholeGzip = false, None, stringency))
-        } else {
-          // tabix split pruning: with intervals and a `.tbi` next to a BGZF
-          // file, plan only byte ranges whose blocks can hold overlapping
-          // records (reference TribbleIndexIntervalFilteringTextInputFormat
-          // .java:33-73 / VcfSource.java:143-168); record-level residual
-          // filters keep exactness
-          // stale-index guard (in-place rewrite without re-indexing): a
-          // tabix/tribble index carries no file length, so freshness is
-          // proven by mtime >= the data file's; a stale index would steer
-          // seeks into the middle of unrelated records
-          val dataMtime = fs.getFileStatus(file).getModificationTime
-          def idxFresh(p: org.apache.hadoop.fs.Path): Boolean =
-            fs.exists(p) && fs.getFileStatus(p).getModificationTime >= dataMtime
-          val tbiPath = new org.apache.hadoop.fs.Path(file.toString + ".tbi")
-          def tbiRangesNow(): Option[Seq[(Long, Long)]] =
-            if (bgzf && intervals.isDefined && idxFresh(tbiPath)) {
-              val tin = HadoopIO.open(tbiPath, conf)
-              val tbi = try scala.util.Try(graft.index.TbiIndex.read(tin)).toOption
-                finally tin.close()
-              tbi.map { t =>
-                intervals.get.flatMap(iv => t.spans(iv.contig, iv.start - 1, iv.end - 1))
-                  .map { case (bv, ev) =>
-                    (graft.bgzf.Bgzf.blockStart(bv),
-                      math.min(size, graft.bgzf.Bgzf.blockStart(ev) + 1))
-                  }.filter(r => r._1 < r._2).sortBy(_._1)
-                  .foldLeft(List.empty[(Long, Long)]) {
-                    case ((ps, pe) :: rest, (s0, e0)) if s0 <= pe => (ps, math.max(pe, e0)) :: rest
-                    case (acc, r) => r :: acc
-                  }.reverse
-              }
-            } else None
-          val tbiRanges = tbiRangesNow()
-          // tribble `.idx` pruning — the plain-text counterpart of tabix
-          // (reference loads either via IndexFactory, VcfSource.java:157).
-          // Index positions are plain byte offsets for uncompressed text,
-          // BGZF virtual offsets when htsjdk indexed a compressed file.
-          val idxPath = new org.apache.hadoop.fs.Path(file.toString + ".idx")
-          val idxRanges: Option[Seq[(Long, Long)]] =
-            if (tbiRanges.isEmpty && intervals.isDefined && idxFresh(idxPath)) {
-              val iin = HadoopIO.open(idxPath, conf)
-              val idx = try scala.util.Try(graft.index.TribbleIdx.read(iin)).toOption
-                finally iin.close()
-              idx.map { t =>
-                intervals.get.flatMap(iv => t.blocks(iv.contig, iv.start, iv.end))
-                  .map { case (s0, e0) =>
-                    if (bgzf) (graft.bgzf.Bgzf.blockStart(s0),
-                      math.min(size, graft.bgzf.Bgzf.blockStart(e0) + 1))
-                    else (s0, math.min(size, e0))
-                  }.filter(r => r._1 < r._2).sortBy(_._1)
-                  .foldLeft(List.empty[(Long, Long)]) {
-                    case ((ps, pe) :: rest, (s0, e0)) if s0 <= pe => (ps, math.max(pe, e0)) :: rest
-                    case (acc, r) => r :: acc
-                  }.reverse
-              }
-            } else None
-          def tileRanges(ranges: Seq[(Long, Long)]): Seq[VcfInputPartition] =
-            ranges.flatMap { case (rs, re) =>
-              val n = ((re - rs) + splitSize - 1) / splitSize
-              (0L until n).map { i =>
-                VcfInputPartition(file.toString, rs + i * splitSize, math.min(re, rs + (i + 1) * splitSize),
-                  header, bgzf, wholeGzip = false, intervals, stringency)
-              }
-            }
-          tbiRanges.orElse(idxRanges) match {
-            case Some(ranges) => tileRanges(ranges)
-            case None =>
-              // first-contact derivation (the VCF face of the BAM/CRAM
-              // deriveIndex option): run the voff-tracking line walk ONCE
-              // as a distributed job, write the .tbi back, re-plan pruned
-              val derived =
-                if (bgzf && intervals.isDefined && !fs.exists(tbiPath) &&
-                    options.get("deriveindex").exists(_.toBoolean) &&
-                    graft.sources.DeriveIndex.deriveVcfTbi(
-                      file.toString, size, splitSize, new graft.sources.SerializableConf(conf)))
-                  tbiRangesNow()
-                else None
-              derived match {
-                case Some(ranges) => tileRanges(ranges)
-                case None =>
-                  val nSplits = math.max(1L, (size + splitSize - 1) / splitSize)
-                  (0L until nSplits).map { i =>
-                    VcfInputPartition(file.toString, i * splitSize, math.min(size, (i + 1) * splitSize),
-                      header, bgzf, wholeGzip = false, intervals, stringency)
-                  }
-              }
-          }
-        }
-        // locality hints: block hosts of each split's byte range (one
-        // block-list fetch per file, shared by every split)
-        parts.map(p => p.copy(hosts = hostsOf(p.splitStart, p.splitEnd), limit = limitHint))
-      } finally in.close()
-    }.toArray match { case planned =>
-      // header-compat across directory inputs: genotype columns are decoded
-      // against the per-file sample list, so shards with different sample
-      // sets would silently mislabel genotypes — fail at planning instead
-      val samplesByFile = scala.collection.mutable.LinkedHashMap[String, Seq[String]]()
-      planned.foreach { p =>
-        samplesByFile.getOrElseUpdate(p.file, p.header.samples)
-      }
-      samplesByFile.headOption.foreach { case (firstFile, firstSamples) =>
-        samplesByFile.foreach { case (f, ss) =>
-          if (ss != firstSamples)
-            throw new IllegalArgumentException(
-              s"incompatible sample lists in directory input: $f does not match $firstFile")
-        }
-      }
-      planned.toArray[InputPartition]
+  private val intervals = PushedRegion.intervals(options, pushed)
+  private val stringency = Stringency.fromOptions(options)
+
+  override protected def planFile(f: PlanInput): FilePlan = {
+    val bgzf = SplitTextReader.isBgzf(f.in)
+    val plainGzip = !bgzf && SplitTextReader.isPlainGzip(f.in)
+    val header = VcfHeader.parse(SplitTextReader.allLines(f.in))
+    def split(s0: Long, e0: Long) = PlannedSplit(s0, e0,
+      VcfInputPartition(f.path.toString, s0, e0, header, bgzf, wholeGzip = false, intervals, stringency, _))
+    // byte ranges whose blocks can hold overlapping records, sorted and
+    // merged, plus their bytes before merging (the index span bytes)
+    def pruned(ranges: Seq[(Long, Long)]): (Seq[(Long, Long)], Long) = {
+      val rs = ranges.filter(r => r._1 < r._2).sortBy(_._1)
+      (rs.foldLeft(List.empty[(Long, Long)]) {
+        case ((ps, pe) :: rest, (s0, e0)) if s0 <= pe => (ps, math.max(pe, e0)) :: rest
+        case (acc, r) => r :: acc
+      }.reverse, rs.iterator.map(r => r._2 - r._1).sum)
     }
+    def blockRange(b: Long, e: Long) =
+      (graft.bgzf.Bgzf.blockStart(b), math.min(f.size, graft.bgzf.Bgzf.blockStart(e) + 1))
+    // tabix split pruning: with intervals and a fresh `.tbi` next to a BGZF
+    // file (reference TribbleIndexIntervalFilteringTextInputFormat
+    // .java:33-73 / VcfSource.java:143-168); record-level residual filters
+    // keep exactness
+    def tbiRanges(): Option[(Seq[(Long, Long)], Long)] =
+      if (!bgzf || intervals.isEmpty) None
+      else f.sidecar(".tbi", fresh = true)(graft.index.TbiIndex.read).map { t =>
+        pruned(intervals.get.flatMap(iv => t.spans(iv.contig, iv.start - 1, iv.end - 1))
+          .map { case (bv, ev) => blockRange(bv, ev) })
+      }
+    // tribble `.idx` pruning — the plain-text counterpart of tabix
+    // (reference loads either via IndexFactory, VcfSource.java:157). Index
+    // positions are plain byte offsets for uncompressed text, BGZF virtual
+    // offsets when htsjdk indexed a compressed file.
+    def idxRanges(): Option[(Seq[(Long, Long)], Long)] =
+      if (intervals.isEmpty) None
+      else f.sidecar(".idx", fresh = true)(graft.index.TribbleIdx.read).map { t =>
+        pruned(intervals.get.flatMap(iv => t.blocks(iv.contig, iv.start, iv.end))
+          .map { case (s0, e0) => if (bgzf) blockRange(s0, e0) else (s0, math.min(f.size, e0)) })
+      }
+    // first-contact derivation (the VCF face of the BAM/CRAM deriveIndex
+    // option): run the voff-tracking line walk ONCE as a distributed job,
+    // write the .tbi back, re-plan pruned
+    def derived(): Option[(Seq[(Long, Long)], Long)] =
+      if (bgzf && intervals.isDefined && !f.fs.exists(new Path(f.path.toString + ".tbi")) &&
+          options.get("deriveindex").exists(_.toBoolean) &&
+          graft.sources.DeriveIndex.deriveVcfTbi(f.path.toString, f.size, f.splitSize, new SerializableConf(f.conf)))
+        tbiRanges()
+      else None
+    val (splits, spanBytes) =
+      if (plainGzip)
+        // non-splittable: one whole-file partition (reference
+        // BGZFEnhancedGzipCodec fallback semantics)
+        (Seq(PlannedSplit(0L, f.size, VcfInputPartition(f.path.toString, 0L, Long.MaxValue, header,
+          bgzf = false, wholeGzip = true, intervals, stringency, _))), 0L)
+      else if (limitHint >= 0 && intervals.isEmpty)
+        // limit fast path: one whole-file partition, no index I/O or split
+        // tiling, capped by the shell
+        (Seq(split(0L, f.size)), 0L)
+      else tbiRanges().orElse(idxRanges()).orElse(derived()) match {
+        case Some((ranges, bytes)) =>
+          (ranges.flatMap { case (rs, re) => f.tiles(rs, re) }.map { case (s0, e0) => split(s0, e0) }, bytes)
+        case None => (f.tiles(0L, f.size).map { case (s0, e0) => split(s0, e0) }, 0L)
+      }
+    FilePlan(splits, spanBytes, Some(header.samples))
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConf(SparkSession.active.sessionState.newHadoopConf())
+  override protected def readerFactory(conf: SerializableConf): PartitionReaderFactory = {
     val req = required
     val mask = graft.vcf.VcfFormatMask.from(req, formatKeys, infoKeys)
     (partition: InputPartition) => new VcfPartitionReader(
@@ -237,8 +159,7 @@ class VcfScan(options: Map[String, String], required: StructType,
 case class VcfInputPartition(file: String, splitStart: Long, splitEnd: Long,
     header: VcfHeader, bgzf: Boolean, wholeGzip: Boolean,
     intervals: Option[Seq[GenomicInterval]],
-    stringency: graft.sources.Stringency,
-    limit: Int = -1, // pushed-limit emit cap per reader (-1 = unlimited)
+    stringency: Stringency,
     hosts: Array[String] = Array.empty) extends InputPartition {
   override def preferredLocations(): Array[String] = hosts
 }
@@ -265,16 +186,7 @@ class VcfPartitionReader(p: VcfInputPartition, conf: SerializableConf, required:
     case Some(ivs) => ivs.exists(_.overlaps(v.contig, v.start, v.end))
   }
 
-  private var emitted = 0
-
   override def next(): Boolean = {
-    if (p.limit >= 0 && emitted >= p.limit) return false
-    val has = advance()
-    if (has) emitted += 1
-    has
-  }
-
-  private def advance(): Boolean = {
     while (lines.hasNext) {
       val line = lines.next()
       if (line.nonEmpty && line.charAt(0) != '#') {
@@ -284,9 +196,9 @@ class VcfPartitionReader(p: VcfInputPartition, conf: SerializableConf, required:
         val v =
           try VcfCodec.fromLine(line, p.header.samples, mask, null)
           catch {
-            case _: Exception if p.stringency eq graft.sources.Stringency.Permissive =>
+            case _: Exception if p.stringency eq Stringency.Permissive =>
               slog.skipSilently(); null
-            case e: Exception if p.stringency eq graft.sources.Stringency.Lenient =>
+            case e: Exception if p.stringency eq Stringency.Lenient =>
               val mandatory = line.split('\t').take(8).mkString("\t")
               val salvagedV =
                 try VcfCodec.fromLine(mandatory, Nil)

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
 import graft.bam.{BamIO, TestReads}
 
-/** Pins the pushed-limit plan shape on all four format sources: `.limit(n)`
+/** Pins the pushed-limit plan shape on all five format sources: `.limit(n)`
   * directly over a scan must plan ONE whole-file partition per file (not one
   * per split) and still return n correct rows — the single most common first
   * query a user types on a lake must not plan or read the world. A filter
@@ -129,5 +129,41 @@ class LimitPushdownSpec extends AnyFunSuite with SparkFixture {
     assert(scanPartCounts(limited) == Seq(1))
     assert(limited.collect().map(_.getString(0)).toSeq ==
       recs.take(5).map(_.readName))
+  }
+
+  test("CRAM containers: .limit(5) plans one range partition and returns the head containers") {
+    val dir = tmpDir()
+    val out = dir.resolve("c.cram")
+    spark.range(400).select(
+      (col("id") % 3).cast("int").as("ref_seq_id"),
+      (col("id") * 100 + 1).cast("int").as("start_pos"),
+      lit(90).as("span"),
+      (col("id") % 10 + 1).cast("int").as("n_records"),
+      ((col("id") % 5) * 8).cast("int").as("data_length"))
+      .coalesce(1).write.format("cram").mode("overwrite").option("writeCrai", "true").save(out.toString)
+    def read() = spark.read.format("cram").option("splitSize", 4096).load(out.toString)
+    assert(scanPartCounts(read()).head > 1, "fixture must be multi-split")
+    val limited = read().limit(5)
+    assert(scanPartCounts(limited) == Seq(1))
+    assert(limited.collect().map(_.getLong(0)).toSeq ==
+      read().orderBy("offset").collect().map(_.getLong(0)).take(5).toSeq)
+  }
+
+  test("FASTQ: .limit(5) plans one partition per multi-split file and returns the head records") {
+    import spark.implicits._
+    val dir = tmpDir()
+    val recs = (0 until 1000).map(i => graft.fastq.FastqRecord(f"r$i%04d", null, "ACGTACGTAC", "IIIIIIIIII"))
+    Seq("a", "b").foreach { n =>
+      spark.createDataset(recs).toDF().coalesce(1).write.format("fastq").mode("overwrite")
+        .save(dir.resolve(s"$n.fastq").toString)
+    }
+    def read(p: String) = spark.read.format("fastq").option("splitSize", 4096).load(p)
+    val one = dir.resolve("a.fastq").toString
+    assert(scanPartCounts(read(one)).head > 1, "fixture must be multi-split")
+    val limited = read(one).limit(5)
+    assert(scanPartCounts(limited) == Seq(1))
+    assert(limited.collect().map(_.getString(0)).toSeq == recs.take(5).map(_.readName))
+    // a directory of two such files: one partition per file
+    assert(scanPartCounts(read(dir.toString).limit(5)) == Seq(2))
   }
 }

@@ -132,4 +132,32 @@ class WriteAbortSpec extends AnyFunSuite with SparkFixture {
     val expected = spark.read.format("bam").load(clean.toString).collect().map(_.toString).sorted
     assert(rows.sameElements(expected))
   }
+
+  test("two attempts of one sharded partition: the aborted one leaves the committed shard intact") {
+    val s = spark
+    import s.implicits._
+    val out = tmpDir().resolve("shards")
+    val df = spark.createDataset(TestReads.mixed(100)).toDF()
+    val rows = df.queryExecution.toRdd.map(_.copy()).collect()
+    val sink = graft.sources.bam.BamFormat.sink(out.toString, -1,
+      Map("refs" -> refsOpt, "writesbi" -> "true"), df.schema)
+    val write = new StagedBatchWrite(sink, out.toString,
+      new SerializableConf(spark.sessionState.newHadoopConf()))
+    val factory = write.createBatchWriterFactory(new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
+      override def numPartitions(): Int = 1
+    })
+    val winner = factory.createWriter(0, 1L)
+    val loser = factory.createWriter(0, 2L)
+    rows.foreach { r => winner.write(r); loser.write(r) }
+    val committed = winner.commit()
+    winner.close()
+    loser.abort()
+    loser.close()
+    Files.write(Path.of(out.toString + ".parts", "part-000000007.bam"), "stray".getBytes("UTF-8"))
+    write.commit(Array(committed))
+    val names = Files.list(out).toArray.map(_.asInstanceOf[Path].getFileName.toString)
+      .filterNot(_.startsWith(".")).sorted.toSeq
+    assert(names == Seq("part-000000000.bam", "part-000000000.bam.sbi"), names.mkString(", "))
+    assert(spark.read.format("bam").load(out.toString).count() == rows.length)
+  }
 }

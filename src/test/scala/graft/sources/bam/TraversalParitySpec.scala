@@ -11,6 +11,7 @@ import graft.bam._
   *    → rejected at planning;
   *  - unplacedUnmapped=true with no intervals = unplaced-unmapped-ONLY
   *    traversal (not read-everything);
+  *  - both hold for BAM, SAM and CRAM records mode alike;
   *  - a sink path with no format signal and no refs dictionary fails fast.
   */
 class TraversalParitySpec extends AnyFunSuite with SparkFixture {
@@ -58,6 +59,43 @@ class TraversalParitySpec extends AnyFunSuite with SparkFixture {
     val n = spark.read.format("bam").option("unplacedUnmapped", "true")
       .option("splitSize", 4096).load(path).count()
     assert(n == 2)
+  }
+
+  /** A records-mode CRAM of `TestReads.mixed(n)` in small containers, with
+    * or without its `.crai`.
+    */
+  private def writeCram(n: Int, crai: Boolean): String = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("traversal-cram")
+    dir.toFile.deleteOnExit()
+    val out = dir.resolve("t.cram").toString
+    spark.createDataset(TestReads.mixed(n)).toDF().coalesce(1)
+      .write.format("cram").mode("overwrite").option("records", "true")
+      .option("refs", "chr20:1000000,chr21:1000135").option("recordsPerContainer", "50")
+      .option("writeCrai", crai.toString).save(out)
+    assert(Files.exists(dir.resolve("t.cram.crai")) == crai)
+    out
+  }
+
+  for (crai <- Seq(true, false)) {
+    test(s"cram records: unplaced-unmapped-only traversal returns only the unmapped tail (crai=$crai)") {
+      val path = writeCram(200, crai) // 402 records, last 2 unplaced-unmapped
+      def read(splitSize: Int) = spark.read.format("cram").option("records", "true")
+        .option("unplacedUnmapped", "true").option("splitSize", splitSize).load(path)
+      val rows = read(1 << 20).selectExpr("readName", "contig", "start").collect()
+      assert(rows.map(_.getString(0)).sorted.toSeq == Seq("unplaced-000", "unplaced-001"))
+      assert(rows.forall(r => r.isNullAt(1) && r.getInt(2) == 0))
+      assert(read(4096).count() == 2)
+    }
+
+    test(s"cram records: mapped-only traversal is rejected (crai=$crai)") {
+      val path = writeCram(50, crai)
+      val e = intercept[Exception] {
+        spark.read.format("cram").option("records", "true")
+          .option("unplacedUnmapped", "false").load(path).count()
+      }
+      assert(messages(e).mkString(" | ").contains("mapped reads only is not supported"))
+    }
   }
 
   test("bam sink without a refs dictionary fails fast") {
