@@ -145,6 +145,22 @@ final class BgzfInputStream(in: SeekableInput) extends InputStream {
 
   def atEof: Boolean = eof
 
+  /** The inflated current block, for byte scanners: the unread bytes are
+    * `blockBytes(blockPos until blockLimit)` (non-empty unless at EOF),
+    * valid until the next read, [[consume]] or seek.
+    */
+  def blockBytes: Array[Byte] = ucomp
+  def blockPos: Int = intra
+  def blockLimit: Int = ucompLen
+
+  /** Skip `n` unread bytes of the current block (`n <= blockLimit -
+    * blockPos`), advancing into the next block at its end as [[read]] does.
+    */
+  def consume(n: Int): Unit = {
+    intra += n
+    if (intra == ucompLen && !eof) loadNextBlock()
+  }
+
   private def loadNextBlock(): Unit = {
     var loaded = false
     while (!loaded) {

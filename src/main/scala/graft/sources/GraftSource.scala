@@ -159,7 +159,8 @@ abstract class GraftScan(format: String, options: Map[String, String], required:
 
   // planning-time metrics of the last planInputPartitions call
   @volatile private var driverMetrics: Array[CustomTaskMetric] = Array.empty
-  override def supportedCustomMetrics(): Array[CustomMetric] = PlanMetrics.supported
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    PlanMetrics.supported ++ StringencyLog.supported
   override def reportDriverMetrics(): Array[CustomTaskMetric] = driverMetrics
 
   override def planInputPartitions(): Array[InputPartition] = {

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read.PartitionReader
 
 /** Emit-cap wrapper for pushed limits (`SupportsPushDownLimit`, partial
@@ -19,5 +20,6 @@ class LimitingReader(underlying: PartitionReader[InternalRow], limit: Int)
     has
   }
   override def get(): InternalRow = underlying.get()
+  override def currentMetricsValues(): Array[CustomTaskMetric] = underlying.currentMetricsValues()
   override def close(): Unit = underlying.close()
 }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.ByteArrayOutputStream
 import graft.bgzf.{Bgzf, BgzfBlockGuesser, BgzfInputStream, SeekableInput}
 
 /** Splittable line reading over plain or BGZF-compressed text, with *exact*
@@ -34,10 +33,17 @@ object SplitTextReader {
     got >= 2 && (hdr(0) & 0xff) == 0x1f && (hdr(1) & 0xff) == 0x8b && !isBgzf(in)
   }
 
+  /** Byte-level walk over the lines owned by split [splitStart, splitEnd):
+    * every reader's line source, the `String` views below included, so the
+    * ownership, seam and CR rules exist once.
+    */
+  def cursor(in: SeekableInput, splitStart: Long, splitEnd: Long, bgzf: Boolean): LineCursor =
+    if (bgzf) new BgzfLineCursor(bgzfStreamAt(in, splitStart, splitEnd), splitEnd)
+    else new PlainLineCursor(in, splitStart, splitEnd)
+
   /** Iterator over the lines owned by split [splitStart, splitEnd). */
   def lines(in: SeekableInput, splitStart: Long, splitEnd: Long, bgzf: Boolean): Iterator[String] =
-    if (bgzf) bgzfLines(in, splitStart, splitEnd)
-    else plainLines(in, splitStart, splitEnd)
+    views(cursor(in, splitStart, splitEnd, bgzf))(_.text)
 
   /** Lines paired with their OWNERSHIP KEY — the raw byte offset of the
     * line start for plain text, the BGZF block start for compressed text.
@@ -49,68 +55,72 @@ object SplitTextReader {
     */
   def linesWithKeys(in: SeekableInput, splitStart: Long, splitEnd: Long,
                     bgzf: Boolean): Iterator[(Long, String)] =
-    if (bgzf) bgzfLinesWithVoff(in, splitStart, splitEnd)
-      .map { case (l, beg, _) => (Bgzf.blockStart(beg), l) }
-    else plainLinesWithPos(in, splitStart, splitEnd)
+    views(cursor(in, splitStart, splitEnd, bgzf))(c =>
+      (if (bgzf) Bgzf.blockStart(c.start) else c.start, c.text))
+
+  /** BGZF lines with each line's [begin, end) VIRTUAL offsets — the feed
+    * for deriving tabix-style indexes from an existing file. Ownership
+    * rule identical to [[lines]].
+    */
+  def bgzfLinesWithVoff(in: SeekableInput, splitStart: Long,
+                        splitEnd: Long): Iterator[(String, Long, Long)] =
+    views(cursor(in, splitStart, splitEnd, bgzf = true))(c => (c.text, c.start, c.end))
+
+  private def views[T](c: LineCursor)(view: LineCursor => T): Iterator[T] = new Iterator[T] {
+    private var ready = c.next()
+    def hasNext: Boolean = ready
+    def next(): T = { val t = view(c); ready = c.next(); t }
+  }
+
+  private def indexOfNewline(b: Array[Byte], from: Int, until: Int): Int = {
+    var i = from
+    while (i < until) { if (b(i) == '\n') return i; i += 1 }
+    -1
+  }
 
   // ---- plain text -------------------------------------------------------
 
-  private def plainLines(in: SeekableInput, splitStart: Long, splitEnd: Long): Iterator[String] =
-    plainLinesWithPos(in, splitStart, splitEnd).map(_._2)
-
-  private def plainLinesWithPos(in: SeekableInput, splitStart: Long,
-                                splitEnd: Long): Iterator[(Long, String)] = {
-    // NB: named fileSize, not `size` — inside the anonymous Iterator below a
-    // bare `size` would resolve to Iterator.size and consume the iterator.
-    val fileSize = in.size
-    if (splitStart >= fileSize) return Iterator.empty
+  private final class PlainLineCursor(in: SeekableInput, splitStart: Long, splitEnd: Long)
+      extends LineCursor {
+    private val fileSize = in.size
+    private var buf = new Array[Byte](64 * 1024)
+    private var bufPos = 0L
+    private var bufLen = 0
     // first line start at/after splitStart: splitStart itself iff it begins
     // a line (file start or preceded by '\n'); else after the next '\n'
-    var pos = splitStart
-    if (splitStart > 0) {
-      val b = new Array[Byte](1)
-      in.preadFully(splitStart - 1, b, 0, 1)
-      if (b(0) != '\n') {
-        pos = scanForNewline(in, splitStart, fileSize)
-        if (pos < 0) return Iterator.empty
-      }
-    }
-    val firstLineStart = pos
-    if (firstLineStart >= splitEnd || firstLineStart >= fileSize) return Iterator.empty
-    new Iterator[(Long, String)] {
-      private var cur = firstLineStart
-      private val buf = new Array[Byte](64 * 1024)
-      private var bufPos = 0L
-      private var bufLen = 0
-      private var nextLine: (Long, String) = advance()
-
-      private def fill(at: Long): Boolean = {
-        bufLen = in.preadFully(at, buf, 0, buf.length)
-        bufPos = at
-        bufLen > 0
+    private var cur: Long =
+      if (splitStart == 0 || splitStart >= fileSize) splitStart
+      else {
+        val b = new Array[Byte](1)
+        in.preadFully(splitStart - 1, b, 0, 1)
+        if (b(0) == '\n') splitStart
+        else { val p = scanForNewline(in, splitStart, fileSize); if (p < 0) fileSize else p }
       }
 
-      private def advance(): (Long, String) = {
-        if (cur >= splitEnd || cur >= fileSize) return null
-        val lineStart = cur
-        val out = new ByteArrayOutputStream(160)
-        var p = cur
-        var done = false
-        while (!done) {
-          if (p < bufPos || p >= bufPos + bufLen) { if (!fill(p)) done = true }
-          if (!done) {
-            val i = (p - bufPos).toInt
-            val b = buf(i)
-            p += 1
-            if (b == '\n') done = true else out.write(b)
-          }
-        }
-        cur = p
-        (lineStart, stripCr(out.toString("UTF-8")))
-      }
+    private def fill(at: Long): Unit = { bufLen = in.preadFully(at, buf, 0, buf.length); bufPos = at }
 
-      def hasNext: Boolean = nextLine != null
-      def next(): (Long, String) = { val l = nextLine; nextLine = advance(); l }
+    def next(): Boolean = {
+      if (cur >= splitEnd || cur >= fileSize) return false
+      if (cur < bufPos || cur >= bufPos + bufLen) fill(cur)
+      var s = (cur - bufPos).toInt
+      var nl = indexOfNewline(buf, s, bufLen)
+      var more = nl < 0
+      while (more) {
+        // the line crosses the buffer end: refill from its start, growing
+        // the buffer when the line alone fills it
+        val have = bufLen - s
+        if (s == 0 && bufLen == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+        fill(cur)
+        s = 0
+        nl = indexOfNewline(buf, have, bufLen)
+        more = nl < 0 && bufLen > have
+      }
+      val e = if (nl >= 0) nl else bufLen // no '\n': the line runs to EOF
+      if (nl < 0 && e == s) return false
+      set(buf, s, e - s, cur)
+      cur = bufPos + e + (if (nl >= 0) 1 else 0)
+      end = cur
+      true
     }
   }
 
@@ -120,50 +130,50 @@ object SplitTextReader {
     while (pos < size) {
       val n = in.preadFully(pos, buf, 0, buf.length)
       if (n <= 0) return -1
-      var i = 0
-      while (i < n) {
-        if (buf(i) == '\n') return pos + i + 1
-        i += 1
-      }
+      val i = indexOfNewline(buf, 0, n)
+      if (i >= 0) return pos + i + 1
       pos += n
     }
     -1
   }
 
-  private def stripCr(s: String): String =
-    if (s.nonEmpty && s.charAt(s.length - 1) == '\r') s.substring(0, s.length - 1) else s
-
   // ---- BGZF text --------------------------------------------------------
 
-  // one iterator implementation: the plain-line scan is the voff-tracking
-  // walk minus the offsets, so the ownership/EOF rules can never drift
-  // between the scan and the index derivation
-  private def bgzfLines(in: SeekableInput, splitStart: Long, splitEnd: Long): Iterator[String] =
-    bgzfLinesWithVoff(in, splitStart, splitEnd).map(_._1)
-
-  /** BGZF lines with each line's [begin, end) VIRTUAL offsets — the feed
-    * for deriving tabix-style indexes from an existing file. Ownership
-    * rule identical to [[lines]].
+  /** Scans the inflated block in place; a line that reaches the block end
+    * is gathered into an own buffer, so the stream may advance under it.
     */
-  def bgzfLinesWithVoff(in: SeekableInput, splitStart: Long,
-                        splitEnd: Long): Iterator[(String, Long, Long)] = {
-    val stream = bgzfStreamAt(in, splitStart, splitEnd)
-    if (stream == null) return Iterator.empty
-    new Iterator[(String, Long, Long)] {
-      private var nextLine: (String, Long, Long) = advance()
+  private final class BgzfLineCursor(stream: BgzfInputStream, splitEnd: Long) extends LineCursor {
+    private var own = new Array[Byte](256)
 
-      private def advance(): (String, Long, Long) = {
-        if (stream.atEof || stream.blockStartOffset >= splitEnd) return null
-        val beg = stream.virtualOffset
-        val out = new ByteArrayOutputStream(160)
-        var c = stream.read()
-        if (c < 0) return null
-        while (c >= 0 && c != '\n') { out.write(c); c = stream.read() }
-        (stripCr(out.toString("UTF-8")), beg, stream.virtualOffset)
+    def next(): Boolean = {
+      if (stream == null || stream.atEof || stream.blockStartOffset >= splitEnd) return false
+      val beg = stream.virtualOffset
+      val b = stream.blockBytes
+      val p = stream.blockPos
+      val nl = indexOfNewline(b, p, stream.blockLimit)
+      if (nl >= 0 && nl + 1 < stream.blockLimit) {
+        set(b, p, nl - p, beg)
+        stream.consume(nl + 1 - p)
+      } else {
+        var n = 0
+        var done = false
+        while (!done) {
+          val b = stream.blockBytes
+          val p = stream.blockPos
+          val lim = stream.blockLimit
+          val nl = indexOfNewline(b, p, lim)
+          val stop = if (nl >= 0) nl else lim
+          if (n + stop - p > own.length)
+            own = java.util.Arrays.copyOf(own, math.max(own.length * 2, n + stop - p))
+          System.arraycopy(b, p, own, n, stop - p)
+          n += stop - p
+          stream.consume(if (nl >= 0) nl + 1 - p else lim - p)
+          done = nl >= 0 || stream.atEof
+        }
+        set(own, 0, n, beg)
       }
-
-      def hasNext: Boolean = nextLine != null
-      def next(): (String, Long, Long) = { val l = nextLine; nextLine = advance(); l }
+      end = stream.virtualOffset
+      true
     }
   }
 
@@ -242,7 +252,7 @@ object SplitTextReader {
 
   /** Whole-stream sequential lines (plain, bgzf, or plain-gzip fallback). */
   def allLines(in: SeekableInput): Iterator[String] = {
-    if (isBgzf(in)) return bgzfLines(in, 0L, Long.MaxValue)
+    if (isBgzf(in)) return lines(in, 0L, Long.MaxValue, bgzf = true)
     if (isPlainGzip(in)) {
       val raw = new java.io.InputStream {
         private var pos = 0L
@@ -261,6 +271,30 @@ object SplitTextReader {
       val br = new java.io.BufferedReader(new java.io.InputStreamReader(gz, "UTF-8"))
       return Iterator.continually(br.readLine()).takeWhile(_ != null)
     }
-    plainLines(in, 0L, Long.MaxValue)
+    lines(in, 0L, Long.MaxValue, bgzf = false)
+  }
+}
+
+/** One line of a split, as bytes. After [[next]] returns true the line is
+  * `bytes(off until off + len)` — its '\n' and one trailing '\r' excluded —
+  * valid until the next call; `start` is where it begins (the byte offset
+  * for plain text, the virtual offset for BGZF) and `end` the offset just
+  * past its '\n'.
+  */
+abstract class LineCursor {
+  var bytes: Array[Byte] = Array.emptyByteArray
+  var off: Int = 0
+  var len: Int = 0
+  var start: Long = 0L
+  var end: Long = 0L
+
+  /** Moves to the next owned line; false when the split has no more. */
+  def next(): Boolean
+
+  def text: String = new String(bytes, off, len, java.nio.charset.StandardCharsets.UTF_8)
+
+  protected final def set(b: Array[Byte], o: Int, n: Int, at: Long): Unit = {
+    bytes = b; off = o; start = at
+    len = if (n > 0 && b(o + n - 1) == '\r') n - 1 else n
   }
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
+
 /** Three-level validation stringency (reference HtsjdkReadsRddStorage.java:97-100,
   * htsjdk ValidationStringency semantics):
   *
@@ -53,7 +55,39 @@ final class StringencyLog(where: String) {
   }
   def skipSilently(): Unit = skipped += 1
 
+  /** The counts as the reader's task metrics (`currentMetricsValues`). */
+  def metrics: Array[CustomTaskMetric] =
+    Array(StringencyLog.metric(StringencyLog.Skipped, skipped),
+      StringencyLog.metric(StringencyLog.Salvaged, salvaged))
+
   def summarize(): Unit =
     if (skipped > 0 || salvaged > 0)
       log.warn(s"$where: $skipped malformed records skipped, $salvaged salvaged without optional fields")
+}
+
+/** Records a lenient or permissive scan dropped (`recordsSkipped`) or kept
+  * without their optional fields (`recordsSalvaged`), summed over tasks
+  * into the scan's plan metrics.
+  */
+object StringencyLog {
+  val Skipped = "recordsSkipped"
+  val Salvaged = "recordsSalvaged"
+
+  def supported: Array[CustomMetric] = Array(new RecordsSkippedMetric, new RecordsSalvagedMetric)
+
+  private[sources] def metric(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = n
+    override def value(): Long = v
+  }
+}
+
+// Spark re-instantiates metric classes by name: top-level, no-arg constructors
+class RecordsSkippedMetric extends CustomSumMetric {
+  override def name(): String = StringencyLog.Skipped
+  override def description(): String = "malformed records skipped"
+}
+
+class RecordsSalvagedMetric extends CustomSumMetric {
+  override def name(): String = StringencyLog.Salvaged
+  override def description(): String = "records salvaged without optional fields"
 }

@@ -3,6 +3,7 @@ package graft.sources.bam
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -541,6 +542,7 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
   }
 
   override def get(): InternalRow = currentRow
+  override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
   override def close(): Unit = {
     slog.summarize()
     stream.close()

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
@@ -336,15 +337,13 @@ class CramScan(options: Map[String, String], required: StructType,
       // limit fast path: one whole-file range partition, no `.crai` read,
       // no derive job — capped by the shell
       FilePlan(Seq(range(start0, size)))
-    else f.freshSidecar(".crai") match {
-      case Some(craiPath) =>
+    else f.sidecar(".crai", fresh = true)(CraiIndex.read) match {
+      case Some(crai) =>
         // index route: container offsets come from `.crai` — O(index)
         // driver I/O, no header walk (the shape that matters at 100 TB).
         // A .crai older than its CRAM (in-place rewrite without
-        // re-indexing) must not steer container seeks: the container-walk
-        // route below takes over
-        val cin = HadoopIO.open(craiPath, f.conf)
-        val crai = try CraiIndex.read(cin) finally cin.close()
+        // re-indexing) must not steer container seeks, and an unreadable
+        // one only costs the index: the byte-range route below takes over
         val all = crai.entries.map(_.containerOffset).distinct.sorted
         val want: Set[Long] = pred match {
           case None => all.toSet
@@ -547,6 +546,7 @@ class CramPartitionReader(p: CramPartition, conf: SerializableConf, required: St
     case c => currentRow = ContainerRow.toRow(c, getters); true
   }
   override def get(): InternalRow = currentRow
+  override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
   override def close(): Unit = { slog.summarize(); input.close() }
 }
 
@@ -647,6 +647,7 @@ class CramRecordsPartitionReader(
     false
   }
   override def get(): InternalRow = currentRow
+  override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
   override def close(): Unit = {
     slog.summarize()
     fastaIn.foreach(_.close())

@@ -3,6 +3,7 @@ package graft.sources.fastq
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -151,6 +152,7 @@ class FastqPartitionReader(p: FastqInputPartition, conf: SerializableConf, requi
     false
   }
   override def get(): InternalRow = currentRow
+  override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
   override def close(): Unit = { slog.summarize(); input.close() }
 }
 

@@ -2,6 +2,7 @@ package graft.sources.sam
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -136,6 +137,7 @@ class SamPartitionReader(p: SamInputPartition, conf: SerializableConf, required:
     false
   }
   override def get(): InternalRow = currentRow
+  override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
   override def close(): Unit = { slog.summarize(); input.close() }
 }
 

@@ -1,18 +1,18 @@
 package graft.sources.vcf
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{ArrayType, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.{CountingOutputStream, FilePlan, GenomicInterval, GraftProvider, GraftScan, HadoopIO,
-  PartEncoder, PlanInput, PlannedSplit, PushedRegion, RecordFormat, SerializableConf, SinkFormat,
-  SplitTextReader, Stringency}
-import graft.vcf.{Genotype, Variant, VcfCodec, VcfHeader}
+  LineCursor, PartEncoder, PlanInput, PlannedSplit, PushedRegion, RecordFormat, SerializableConf, SinkFormat,
+  SplitTextReader, Stringency, StringencyLog}
+import graft.vcf.{Genotype, Variant, VcfFormatMask, VcfHeader, VcfRowDecoder}
 
 /** `format("vcf")` — VCF scan/sink over plain, BGZF (.vcf.bgz / BGZF .vcf.gz,
   * splittable), or plain-gzip (readable, single split) text, mirroring the
@@ -165,7 +165,7 @@ case class VcfInputPartition(file: String, splitStart: Long, splitEnd: Long,
 }
 
 class VcfPartitionReader(p: VcfInputPartition, conf: SerializableConf, required: StructType,
-                         mask0: graft.vcf.VcfFormatMask = graft.vcf.VcfFormatMask.All)
+                         mask0: VcfFormatMask = VcfFormatMask.All)
     extends PartitionReader[InternalRow] {
   // the interval residual filter compares against the record's END-aware
   // span, so a pruned-away `end` column is forced back on whenever an
@@ -174,108 +174,91 @@ class VcfPartitionReader(p: VcfInputPartition, conf: SerializableConf, required:
   private val mask =
     if (p.intervals.isDefined) mask0.copy(end = true) else mask0
   private val input = HadoopIO.open(new Path(p.file), conf.conf)
-  private val lines =
-    if (p.wholeGzip) SplitTextReader.allLines(input)
-    else SplitTextReader.lines(input, p.splitStart, p.splitEnd, p.bgzf)
-  private val getters = VariantRowBuilder.getters(required)
+  private val lines: LineCursor =
+    if (p.wholeGzip) new VcfPartitionReader.TextLines(SplitTextReader.allLines(input))
+    else SplitTextReader.cursor(input, p.splitStart, p.splitEnd, p.bgzf)
+  private val decoder = new VcfRowDecoder(required, p.header.samples, mask)
+  // lenient salvage: the 8 mandatory fields alone, decoded with the full mask
+  private lazy val salvager = new VcfRowDecoder(required, Nil, VcfFormatMask.All)
+  private val intervals: Array[(Array[Byte], Int, Int)] = p.intervals.toArray.flatten
+    .map(iv => (iv.contig.getBytes(UTF_8), iv.start, iv.end))
   private var currentRow: InternalRow = _
-  private val slog = new graft.sources.StringencyLog(s"${p.file} [${p.splitStart}, ${p.splitEnd})")
+  private val slog = new StringencyLog(s"${p.file} [${p.splitStart}, ${p.splitEnd})")
 
-  private def keep(v: Variant): Boolean = p.intervals match {
-    case None => true
-    case Some(ivs) => ivs.exists(_.overlaps(v.contig, v.start, v.end))
+  private def keep(d: VcfRowDecoder): Boolean = intervals.isEmpty || intervals.exists {
+    case (c, s, e) => d.start <= e && d.end >= s && d.contigIs(c)
   }
 
   override def next(): Boolean = {
-    while (lines.hasNext) {
-      val line = lines.next()
-      if (line.nonEmpty && line.charAt(0) != '#') {
-        // stringency: strict fails fast, lenient warns+counts (salvaging
-        // lines whose failure is confined to the FORMAT/genotype columns
-        // past the 8 mandatory VCF fields), permissive skips silently
-        val v =
-          try VcfCodec.fromLine(line, p.header.samples, mask, null)
-          catch {
-            case _: Exception if p.stringency eq Stringency.Permissive =>
-              slog.skipSilently(); null
-            case e: Exception if p.stringency eq Stringency.Lenient =>
-              val mandatory = line.split('\t').take(8).mkString("\t")
-              val salvagedV =
-                try VcfCodec.fromLine(mandatory, Nil)
-                catch { case _: Exception => null }
-              if (salvagedV != null)
-                slog.salvage(s"genotype columns of VCF line in ${p.file}: ${e.getMessage}")
-              else slog.skip(s"bad VCF line in ${p.file}: ${e.getMessage}")
-              salvagedV
-            case e: Exception =>
-              throw new java.io.IOException(s"bad VCF line in ${p.file}: $line", e)
-          }
-        if (v != null && keep(v)) {
-          currentRow = VariantRowBuilder.build(v, getters)
+    while (lines.next()) {
+      val b = lines.bytes
+      if (lines.len > 0 && b(lines.off) != '#') {
+        val d = decode(b, lines.off, lines.len)
+        if (d != null && keep(d)) {
+          currentRow = d.row()
           return true
         }
       }
     }
     false
   }
+
+  /** The decoder holding the parsed line, or null when it is dropped.
+    * Stringency: strict fails fast, lenient warns+counts (salvaging lines
+    * whose failure is confined to the FORMAT/genotype columns past the 8
+    * mandatory VCF fields), permissive skips silently.
+    */
+  private def decode(b: Array[Byte], off: Int, len: Int): VcfRowDecoder =
+    try { decoder.parse(b, off, len); decoder }
+    catch {
+      case _: Exception if p.stringency eq Stringency.Permissive =>
+        slog.skipSilently(); null
+      case e: Exception if p.stringency eq Stringency.Lenient =>
+        val salvaged =
+          try { salvager.parse(b, off, VcfRowDecoder.mandatoryLength(b, off, len)); salvager }
+          catch { case _: Exception => null }
+        if (salvaged != null)
+          slog.salvage(s"genotype columns of VCF line in ${p.file}: ${e.getMessage}")
+        else slog.skip(s"bad VCF line in ${p.file}: ${e.getMessage}")
+        salvaged
+      case e: Exception =>
+        throw new java.io.IOException(
+          s"bad VCF line in ${p.file} at $where: ${VcfPartitionReader.preview(b, off, len)}", e)
+    }
+
+  /** Where the current line starts: a byte offset, a BGZF virtual offset,
+    * or a line number in a plain-gzip file.
+    */
+  private def where: String = {
+    val at = lines.start
+    if (p.wholeGzip) s"line $at"
+    else if (p.bgzf) s"virtual offset $at (block ${at >>> 16}, byte ${at & 0xffff})"
+    else s"offset $at"
+  }
+
   override def get(): InternalRow = currentRow
+  override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
   override def close(): Unit = { slog.summarize(); input.close() }
 }
 
-object VariantRowBuilder {
-  type Getter = Variant => Any
+object VcfPartitionReader {
+  private val PreviewChars = 200
 
-  private def strArray(xs: Seq[String]): GenericArrayData =
-    new GenericArrayData(xs.map(x => UTF8String.fromString(x): Any).toArray)
-
-  private def strMap(m: Map[String, String]): ArrayBasedMapData = {
-    val keys = new Array[Any](m.size)
-    val vals = new Array[Any](m.size)
-    var i = 0
-    m.foreach { case (k, v) => keys(i) = UTF8String.fromString(k); vals(i) = UTF8String.fromString(v); i += 1 }
-    new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals))
+  /** At most the first 200 characters of a line, for error messages. */
+  def preview(b: Array[Byte], off: Int, len: Int): String = {
+    val s = new String(b, off, math.min(len, 4 * PreviewChars), UTF_8)
+    if (s.length > PreviewChars) s.take(PreviewChars) + "…" else s
   }
 
-  def getters(required: StructType): Array[Getter] =
-    required.fieldNames.map[Getter] {
-      case "contig" => v => UTF8String.fromString(v.contig)
-      case "start" => v => v.start
-      case "end" => v => v.end
-      case "id" => v => if (v.id == null) null else UTF8String.fromString(v.id)
-      case "ref" => v => UTF8String.fromString(v.ref)
-      case "alt" => v => strArray(v.alt)
-      case "qual" => v => if (v.qual == null) null else v.qual.doubleValue()
-      case "filters" => v => strArray(v.filters)
-      case "info" => v => strMap(v.info)
-      // Catalyst nested-schema pruning may hand us a genotype struct with a
-      // SUBSET of {sample, gt, fields} in any order (e.g. `genotypes[0].gt`
-      // prunes to {gt}); consumers read the struct POSITIONALLY against the
-      // pruned schema, so the emitted fields must match it, not the full
-      // struct — emitting all three would silently serve `sample` as `gt`.
-      case "genotypes" =>
-        val elem = required("genotypes").dataType.asInstanceOf[ArrayType]
-          .elementType.asInstanceOf[StructType]
-        val subs = elem.fieldNames.map[Genotype => Any] {
-          case "sample" => g => UTF8String.fromString(g.sample)
-          case "gt" => g => UTF8String.fromString(g.gt)
-          case "fields" => g => strMap(g.fields)
-          case other =>
-            throw new IllegalArgumentException(s"unknown genotype field $other")
-        }
-        v => new GenericArrayData(v.genotypes.map { g =>
-          val a = new Array[Any](subs.length)
-          var i = 0
-          while (i < subs.length) { a(i) = subs(i)(g); i += 1 }
-          new GenericInternalRow(a): Any
-        }.toArray)
-      case other => throw new IllegalArgumentException(s"unknown column $other")
+  /** Plain-gzip lines (whole-file fallback) as a cursor; `start` is the
+    * 1-based line number.
+    */
+  private final class TextLines(it: Iterator[String]) extends LineCursor {
+    def next(): Boolean = it.hasNext && {
+      val b = it.next().getBytes(UTF_8)
+      set(b, 0, b.length, start + 1)
+      true
     }
-
-  def build(v: Variant, getters: Array[Getter]): InternalRow = {
-    val vals = new Array[Any](getters.length)
-    var i = 0
-    while (i < vals.length) { vals(i) = getters(i)(v); i += 1 }
-    new GenericInternalRow(vals)
   }
 }
 

@@ -223,6 +223,40 @@ class CramDataSourceSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("a corrupt .crai only costs the index: records and container scans fall back to byte ranges") {
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir()
+    val rec = dir.resolve("rec.cram")
+    spark.createDataset(graft.bam.TestReads.mixed(600)).toDF().coalesce(1)
+      .write.format("cram").mode("overwrite").option("records", "true")
+      .option("refs", "chr20:1000000,chr21:2000135").option("recordsPerContainer", "100")
+      .option("writeCrai", "true").save(rec.toString)
+    val con = dir.resolve("con.cram")
+    containers(300).coalesce(1).sortWithinPartitions(col("ref_seq_id"), col("start_pos"))
+      .write.format("cram").mode("overwrite").option("writeCrai", "true").save(con.toString)
+    val scans = Seq((rec, true, None), (rec, true, Some("chr21:100000-150000")),
+      (con, false, None), (con, false, Some("1:5001-9000")))
+    def rows(): Seq[Seq[String]] = scans.map { case (p, records, ivs) =>
+      var r = spark.read.format("cram").option("splitSize", 4096)
+      if (records) r = r.option("records", "true")
+      ivs.foreach(iv => r = r.option("intervals", iv))
+      r.load(p.toString).collect().map(_.toString).sorted.toSeq
+    }
+    val indexed = rows()
+    assert(indexed.forall(_.nonEmpty))
+    // a fresh `.crai` overwritten with text (and Hadoop's checksum of it dropped)
+    Seq(rec, con).foreach { p =>
+      Files.write(dir.resolve(s"${p.getFileName}.crai"), "not a crai index\n".getBytes("UTF-8"))
+      Files.deleteIfExists(dir.resolve(s".${p.getFileName}.crai.crc"))
+    }
+    val corrupt = rows()
+    Seq(rec, con).foreach(p => Files.delete(dir.resolve(s"${p.getFileName}.crai")))
+    val unindexed = rows()
+    assert(corrupt == unindexed)
+    assert(unindexed == indexed)
+  }
+
   test("unindexed interval scan prunes on container-header coordinates") {
     val dir = tmpDir()
     val out = dir.resolve("noidx.cram")

@@ -148,6 +148,64 @@ class SplitTextReaderSpec extends AnyFunSuite {
       assert(got.result() == all, s"splitSize=$splitSize")
     }
   }
+
+  test("cursor: the byte lines equal lines() at every split size, with exact start/end offsets") {
+    // newline-aligned and mid-line block cuts, empty mid-file blocks, CRLF
+    // and empty lines, and lines longer than a BGZF block and than the
+    // plain reader's 64 KiB buffer
+    val rng2 = new scala.util.Random(29)
+    val texts = (0 until 600).map { i =>
+      if (i % 97 == 5) "L" * (70000 + i) else if (i % 41 == 0) "" else mkLines(1).head
+    }
+    val ends = texts.indices.map(i => if (i % 3 == 0) "\r\n" else "\n")
+    val payload = texts.zip(ends).map { case (t, e) => t + e }.mkString.getBytes("UTF-8")
+    val want = texts
+    val bos = new java.io.ByteArrayOutputStream()
+    var off = 0
+    while (off < payload.length) {
+      val cut = rng2.nextInt(4) match {
+        case 0 => val i = payload.indexOf('\n', off + 1); if (i < 0) payload.length else i + 1
+        case 1 => bos.write(graft.bgzf.Bgzf.EofBlock); math.min(payload.length, off + 1 + rng2.nextInt(40))
+        case _ => math.min(payload.length, off + 1 + rng2.nextInt(3000))
+      }
+      var o = off
+      while (o < cut) { // a block holds at most 64 KiB
+        val n = math.min(cut - o, 60000)
+        bos.write(graft.bgzf.Bgzf.compressBlock(payload, o, n)); o += n
+      }
+      off = cut
+    }
+    bos.write(graft.bgzf.Bgzf.EofBlock)
+    for ((file, bgzf) <- Seq((bos.toByteArray, true), (payload, false))) {
+      val in = SeekableInput.ofBytes(file)
+      for (splitSize <- Seq(211, 4096, 65536, file.length + 1)) {
+        val got = Seq.newBuilder[(String, Long, Long)]
+        var start = 0L
+        while (start < file.length) {
+          val end = math.min(file.length.toLong, start + splitSize)
+          val c = SplitTextReader.cursor(in, start, end, bgzf)
+          val mine = Iterator.continually(c.next()).takeWhile(identity).map(_ => (c.text, c.start, c.end)).toVector
+          assert(mine.map(_._1) == SplitTextReader.lines(in, start, end, bgzf).toVector, s"split $start")
+          got ++= mine
+          start = end
+        }
+        val all = got.result()
+        assert(all.map(_._1) == want, s"bgzf=$bgzf splitSize=$splitSize")
+        // each line starts at its offset, and ends where the next begins
+        all.zip(all.drop(1)).foreach { case (a, b) => assert(a._3 == b._2, s"end of '${a._1.take(20)}'") }
+        all.zipWithIndex.filter(_._2 % 7 == 0).foreach { case ((t, at, _), i) =>
+          val n = t.getBytes("UTF-8").length
+          val bytes = new Array[Byte](n)
+          if (bgzf) {
+            val s = new graft.bgzf.BgzfInputStream(in)
+            s.seekVirtual(at)
+            s.readFully(bytes, 0, n)
+          } else in.preadFully(at, bytes, 0, n)
+          assert(new String(bytes, "UTF-8") == t, s"line $i at $at")
+        }
+      }
+    }
+  }
 }
 
 class SamVcfSourceSpec extends AnyFunSuite with SparkFixture {
