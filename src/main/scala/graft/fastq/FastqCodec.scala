@@ -77,12 +77,12 @@ object FastqCodec {
     */
   def parse(l0: String, l1: String, l2: String, l3: String): FastqRecord = {
     if (l0.isEmpty || l0.charAt(0) != '@')
-      throw new java.io.IOException(s"FASTQ header must start with '@': $l0")
+      throw new java.io.IOException("FASTQ header must start with '@'")
     if (l2.isEmpty || l2.charAt(0) != '+')
-      throw new java.io.IOException(s"FASTQ separator must start with '+': $l2")
+      throw new java.io.IOException("FASTQ separator must start with '+'")
     if (l1.length != l3.length)
       throw new java.io.IOException(
-        s"FASTQ seq/qual length mismatch: ${l1.length} vs ${l3.length} for $l0")
+        s"FASTQ seq/qual length mismatch: ${l1.length} vs ${l3.length}")
     val sp = l0.indexOf(' ')
     val name = if (sp < 0) l0.substring(1) else l0.substring(1, sp)
     val comment = if (sp < 0 || sp == l0.length - 1) null else l0.substring(sp + 1)

@@ -45,26 +45,18 @@ object SplitTextReader {
   def lines(in: SeekableInput, splitStart: Long, splitEnd: Long, bgzf: Boolean): Iterator[String] =
     views(cursor(in, splitStart, splitEnd, bgzf))(_.text)
 
-  /** Lines paired with their OWNERSHIP KEY — the raw byte offset of the
-    * line start for plain text, the BGZF block start for compressed text.
-    * The key is what split tiling assigns: a line belongs to the split
-    * whose [start, end) contains its key. Multi-line record formats
-    * (FASTQ) pass splitEnd = file size and cut on the key themselves, so a
-    * record's trailing lines can be consumed past the split boundary by
-    * the split that owns the record's FIRST line.
+  /** A cursor's lines paired with their OWNERSHIP KEY ([[LineCursor.key]]).
+    * Multi-line record formats (FASTQ) read with splitEnd = file size and
+    * cut on the key themselves, so a record's trailing lines can be
+    * consumed past the split boundary by the split that owns the record's
+    * FIRST line.
     */
-  def linesWithKeys(in: SeekableInput, splitStart: Long, splitEnd: Long,
-                    bgzf: Boolean): Iterator[(Long, String)] =
-    views(cursor(in, splitStart, splitEnd, bgzf))(c =>
-      (if (bgzf) Bgzf.blockStart(c.start) else c.start, c.text))
+  def linesWithKeys(c: LineCursor): Iterator[(Long, String)] = views(c)(c => (c.key, c.text))
 
-  /** BGZF lines with each line's [begin, end) VIRTUAL offsets — the feed
-    * for deriving tabix-style indexes from an existing file. Ownership
-    * rule identical to [[lines]].
+  /** Every line of a plain-gzip file, the single split such a file has;
+    * `start` and `key` are the 1-based line number (no `end`).
     */
-  def bgzfLinesWithVoff(in: SeekableInput, splitStart: Long,
-                        splitEnd: Long): Iterator[(String, Long, Long)] =
-    views(cursor(in, splitStart, splitEnd, bgzf = true))(c => (c.text, c.start, c.end))
+  def gzipCursor(in: SeekableInput): LineCursor = new GzipLineCursor(in)
 
   private def views[T](c: LineCursor)(view: LineCursor => T): Iterator[T] = new Iterator[T] {
     private var ready = c.next()
@@ -82,6 +74,8 @@ object SplitTextReader {
 
   private final class PlainLineCursor(in: SeekableInput, splitStart: Long, splitEnd: Long)
       extends LineCursor {
+    def where: String = s"offset $start"
+
     private val fileSize = in.size
     private var buf = new Array[Byte](64 * 1024)
     private var bufPos = 0L
@@ -144,6 +138,9 @@ object SplitTextReader {
     */
   private final class BgzfLineCursor(stream: BgzfInputStream, splitEnd: Long) extends LineCursor {
     private var own = new Array[Byte](256)
+
+    override def key: Long = Bgzf.blockStart(start)
+    def where: String = s"virtual offset $start (block ${start >>> 16}, byte ${start & 0xffff})"
 
     def next(): Boolean = {
       if (stream == null || stream.atEof || stream.blockStartOffset >= splitEnd) return false
@@ -251,27 +248,54 @@ object SplitTextReader {
   }
 
   /** Whole-stream sequential lines (plain, bgzf, or plain-gzip fallback). */
-  def allLines(in: SeekableInput): Iterator[String] = {
-    if (isBgzf(in)) return lines(in, 0L, Long.MaxValue, bgzf = true)
-    if (isPlainGzip(in)) {
-      val raw = new java.io.InputStream {
-        private var pos = 0L
-        def read(): Int = {
-          val b = new Array[Byte](1)
-          val n = in.pread(pos, b, 0, 1)
-          if (n <= 0) -1 else { pos += 1; b(0) & 0xff }
-        }
-        override def read(b: Array[Byte], off: Int, len: Int): Int = {
-          val n = in.pread(pos, b, off, len)
-          if (n > 0) pos += n
-          n
-        }
+  def allLines(in: SeekableInput): Iterator[String] =
+    if (isBgzf(in)) lines(in, 0L, Long.MaxValue, bgzf = true)
+    else if (isPlainGzip(in)) views(gzipCursor(in))(_.text)
+    else lines(in, 0L, Long.MaxValue, bgzf = false)
+
+  // ---- plain gzip -------------------------------------------------------
+
+  /** Inflates the whole stream and cuts it on '\n' only, the rule of the
+    * other cursors (a lone '\r' stays inside its line).
+    */
+  private final class GzipLineCursor(in: SeekableInput) extends LineCursor {
+    private val gz = new java.util.zip.GZIPInputStream(new java.io.InputStream {
+      private var pos = 0L
+      def read(): Int = {
+        val b = new Array[Byte](1)
+        if (read(b, 0, 1) <= 0) -1 else b(0) & 0xff
       }
-      val gz = new java.util.zip.GZIPInputStream(raw, 64 * 1024)
-      val br = new java.io.BufferedReader(new java.io.InputStreamReader(gz, "UTF-8"))
-      return Iterator.continually(br.readLine()).takeWhile(_ != null)
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        val n = in.pread(pos, b, off, len)
+        if (n > 0) pos += n
+        n
+      }
+    }, 64 * 1024)
+    private var buf = new Array[Byte](64 * 1024)
+    private var pos = 0 // first unread byte of buf
+    private var lim = 0
+    private var eof = false
+
+    def next(): Boolean = {
+      var nl = indexOfNewline(buf, pos, lim)
+      while (nl < 0 && !eof) {
+        // keep the partial line at the buffer start, growing the buffer
+        // when the line alone fills it, and inflate more after it
+        System.arraycopy(buf, pos, buf, 0, lim - pos)
+        lim -= pos; pos = 0
+        if (lim == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+        val n = gz.read(buf, lim, buf.length - lim)
+        if (n < 0) eof = true
+        else { nl = indexOfNewline(buf, lim, lim + n); lim += n }
+      }
+      val e = if (nl >= 0) nl else lim // no '\n': the line runs to EOF
+      if (nl < 0 && e == pos) return false
+      set(buf, pos, e - pos, start + 1)
+      pos = if (nl >= 0) nl + 1 else lim
+      true
     }
-    lines(in, 0L, Long.MaxValue, bgzf = false)
+
+    def where: String = s"line $start"
   }
 }
 
@@ -291,10 +315,30 @@ abstract class LineCursor {
   /** Moves to the next owned line; false when the split has no more. */
   def next(): Boolean
 
+  /** The line's ownership key: the split whose `[start, end)` holds it owns
+    * the line (the byte offset for plain text, the BGZF block start).
+    */
+  def key: Long = start
+
+  /** Where the line starts, for error messages. */
+  def where: String
+
   def text: String = new String(bytes, off, len, java.nio.charset.StandardCharsets.UTF_8)
+
+  /** At most the first 200 characters of the line, for error messages. */
+  def preview: String = LineCursor.preview(new String(bytes, off, math.min(len, 4 * LineCursor.PreviewChars),
+    java.nio.charset.StandardCharsets.UTF_8))
 
   protected final def set(b: Array[Byte], o: Int, n: Int, at: Long): Unit = {
     bytes = b; off = o; start = at
     len = if (n > 0 && b(o + n - 1) == '\r') n - 1 else n
   }
+}
+
+object LineCursor {
+  private val PreviewChars = 200
+
+  /** At most the first 200 characters of `line`, for error messages. */
+  def preview(line: String): String =
+    if (line.length > PreviewChars) line.take(PreviewChars) + "…" else line
 }

@@ -267,8 +267,7 @@ class BamScan(options: Map[String, String], required: StructType, pushed: Array[
         // first-contact derivation: run the guesser ONCE as a tiny
         // distributed job, write the .sbi back, re-plan O(index)
         if (options.get("deriveindex").exists(_.toBoolean) &&
-            graft.sources.DeriveIndex.deriveBamSbi(
-              f.path.toString, header, headerEnd, size, f.splitSize, new SerializableConf(f.conf)))
+            graft.sources.DeriveIndex.deriveBamSbi(f, header, headerEnd))
           return planFile(f) // .sbi now exists → SBI route
         // heuristic path: byte splits tile the file; each split owns
         // records whose start voff lies in a block starting within it
@@ -284,6 +283,44 @@ class BamScan(options: Map[String, String], required: StructType, pushed: Array[
 
   override protected def readerFactory(conf: SerializableConf): PartitionReaderFactory =
     new BamPartitionReaderFactory(conf, required, TagCols.attrKeys(options))
+}
+
+object BamScan {
+  private val SpanMask = BamFieldMask(cigarAndEnd = true, seq = false, qual = false, attrs = false, name = false)
+
+  /** One index-derivation tile `[start, end)`: the heuristic reader's walk
+    * (its first owned record, then every record whose block starts in the
+    * tile) fed to a one-window [[BamIndexSampler]], so the tile reports
+    * what a sink part writer reports. The flag is false when a record fails
+    * the strict decode; the walk stops there, so count and span are partial.
+    */
+  def indexTile(file: String, header: SamHeader, headerEndVoff: Long)
+               (in: graft.bgzf.SeekableInput, start: Long, end: Long): (BamPartMessage, Boolean) = {
+    val sampler = new BamIndexSampler(Long.MaxValue)
+    var clean = true
+    val first = new BamRecordGuesser(in, header.refs, headerEndVoff).firstRecordAtOrAfter(start, end)
+    if (first >= 0) {
+      val stream = new graft.bgzf.BgzfInputStream(in)
+      stream.seekVirtual(first)
+      val frame = new BamFrame(file)
+      try {
+        while (clean && !stream.atEof && stream.blockStartOffset < end && frame.next(stream)) {
+          val refId = frame.refId
+          val span =
+            try {
+              if (refId < -1 || refId >= header.refs.length) throw new java.io.IOException(s"bad refID $refId")
+              val r = BamCodec.decodeRecord(frame.bytes, frame.size, header, SpanMask)
+              math.max(0, r.end - r.start)
+            } catch { case scala.util.control.NonFatal(_) => clean = false; 0 }
+          sampler.add(frame.voff, refId, frame.pos0, span)
+        }
+      } catch { case scala.util.control.NonFatal(_) => clean = false }
+      // the tile's first record is its .sbi offset: without it the records
+      // before the next offset would belong to no split
+      if (sampler.records == 0) throw new java.io.IOException(s"unreadable BAM record at voff $first in $file")
+    }
+    (sampler.result(null), clean)
+  }
 }
 
 /** Interval planning over an index's answer: virtual-offset spans that may
@@ -393,14 +430,15 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
   private var prevName: String = _     // name of the record before our first
 
   private val exactChunk = p.chunkStartVoff >= 0
+  private val frame = new BamFrame(p.file)
 
   // boundary: exact from the planned chunk (SBI split or index span), else
   // heuristic search (the guesser shares the pread-based input with the stream)
   locally {
     if (exactChunk) stream.seekVirtual(p.chunkStartVoff)
     else {
-      val guesser = new BamRecordGuesser(input, p.header.refs, p.headerEndVoff)
-      val first = guesser.firstRecordAtOrAfter(p.splitStart, p.splitEnd)
+      val first = new BamRecordGuesser(input, p.header.refs, p.headerEndVoff)
+        .firstRecordAtOrAfter(p.splitStart, p.splitEnd)
       if (first < 0) exhausted = true
       else stream.seekVirtual(first)
     }
@@ -442,14 +480,8 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
     s2.seekVirtual(found)
     val m = BamFieldMask(cigarAndEnd = false, seq = false, qual = false, attrs = false)
     var name: String = null
-    val szb = new Array[Byte](4)
-    while (!s2.atEof && s2.virtualOffset < firstVoff) {
-      s2.readFully(szb, 0, 4)
-      val blockSize = (szb(0) & 0xff) | ((szb(1) & 0xff) << 8) | ((szb(2) & 0xff) << 16) | ((szb(3) & 0xff) << 24)
-      val rec = new Array[Byte](blockSize)
-      s2.readFully(rec, 0, blockSize)
-      name = BamCodec.decodeRecord(rec, blockSize, p.header, m).readName
-    }
+    while (!s2.atEof && s2.virtualOffset < firstVoff && frame.next(s2))
+      name = BamCodec.decodeRecord(frame.bytes, frame.size, p.header, m).readName
     name
   }
 
@@ -495,20 +527,10 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
   private val slog = new StringencyLog(s"${p.file} [${p.splitStart}, ${p.splitEnd})")
 
   private def readOne(): AlignmentRecord = {
-    while (true) {
-      val recVoff = stream.virtualOffset
-      val szb = new Array[Byte](4)
-      val got = stream.read(szb, 0, 1)
-      if (got < 0) return null
-      stream.readFully(szb, 1, 3)
-      val blockSize = (szb(0) & 0xff) | ((szb(1) & 0xff) << 8) | ((szb(2) & 0xff) << 16) | ((szb(3) & 0xff) << 24)
-      if (blockSize < 32 || blockSize > (64 << 20))
-        // implausible framing means the stream itself is desynced — fatal in
-        // every stringency (skipping would emit garbage, not drop one record)
-        throw new java.io.IOException(
-          s"bad BAM record block_size $blockSize at voff $recVoff in ${p.file}")
-      val rec = new Array[Byte](blockSize)
-      stream.readFully(rec, 0, blockSize)
+    while (frame.next(stream)) {
+      val rec = frame.bytes
+      val blockSize = frame.size
+      val recVoff = frame.voff
       try return BamCodec.decodeRecord(rec, blockSize, p.header, mask, tagHolder)
       catch {
         case _: Exception if p.stringency eq Stringency.Permissive =>
@@ -538,7 +560,7 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
             s"undecodable BAM record at voff $recVoff in ${p.file}", e)
       }
     }
-    null // unreachable
+    null
   }
 
   override def get(): InternalRow = currentRow
@@ -547,6 +569,41 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
     slog.summarize()
     stream.close()
   }
+}
+
+/** BAM record framing over a BGZF stream: the 4-byte `block_size`, then
+  * the record into one reused buffer. Implausible framing means the stream
+  * itself is desynced, which is fatal in every stringency (skipping would
+  * emit garbage, not drop one record).
+  */
+private[sources] final class BamFrame(file: String) {
+  /** The last record read is `bytes(0 until size)`, starting at `voff`. */
+  var bytes: Array[Byte] = new Array[Byte](1024)
+  var size: Int = 0
+  var voff: Long = 0L
+
+  /** Reads the next record; false at the end of the stream. */
+  def next(stream: graft.bgzf.BgzfInputStream): Boolean = {
+    voff = stream.virtualOffset
+    if (stream.read(bytes, 0, 1) < 0) return false
+    stream.readFully(bytes, 1, 3)
+    size = BamFrame.leInt(bytes, 0)
+    if (size < 32 || size > BamFrame.MaxRecordBytes)
+      throw new java.io.IOException(s"bad BAM record block_size $size at voff $voff in $file")
+    if (size > bytes.length) bytes = new Array[Byte](math.max(size, 2 * bytes.length))
+    stream.readFully(bytes, 0, size)
+    true
+  }
+
+  def refId: Int = BamFrame.leInt(bytes, 0)
+  def pos0: Int = BamFrame.leInt(bytes, 4)
+}
+
+private[sources] object BamFrame {
+  val MaxRecordBytes: Int = 64 << 20
+
+  def leInt(b: Array[Byte], p: Int): Int =
+    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
 }
 
 // ---------------------------------------------------------------------------
@@ -586,44 +643,15 @@ case class BamSink(header: SamHeader, singleFile: Boolean, schema: StructType,
 
   override def indexes(target: Path, parts: Seq[(BamPartMessage, Long)], dataEnd: Long)
       : Seq[(String, java.io.OutputStream => Unit)] = {
-    // the file is coordinate-sorted iff every part is internally sorted and
-    // part boundaries are non-decreasing (writers checked every record)
-    var sorted = parts.forall(_._1.partSorted)
-    var prevRef = Int.MinValue; var prevPos = Int.MinValue
-    var lastRef = -1; var lastPos = -1
-    parts.foreach { case (m, _) =>
-      if (m.records > 0) {
-        val fr = GciIndex.orderRef(m.firstRef)
-        if (fr < prevRef || (fr == prevRef && m.firstPos < prevPos)) sorted = false
-        prevRef = GciIndex.orderRef(m.lastRef); prevPos = m.lastPos
-        lastRef = m.lastRef; lastPos = m.lastPos
-      }
-    }
     val sbi: Seq[(String, java.io.OutputStream => Unit)] = if (sbiGranularity <= 0) Nil else {
-      // parts' sampled offsets shift by the bytes that precede them after
-      // the merge: voff += base << 16
-      val all = Array.newBuilder[Long]
-      val gRefs = Array.newBuilder[Int]
-      val gPos = Array.newBuilder[Int]
-      val gSpans = Array.newBuilder[Int]
-      parts.foreach { case (m, base) =>
-        all ++= m.sampledVoffs.iterator.map(_ + (base << 16))
-        gRefs ++= m.sampledRefs; gPos ++= m.sampledPos; gSpans ++= m.sampledSpans
-      }
-      all += (dataEnd << 16) // sentinel: end of records (terminator start)
-      gRefs += lastRef; gPos += lastPos; gSpans += 0 // sentinel window is empty
-      val offsets = all.result() // single result() call: builders are one-shot
-      val total = parts.map(_._1.records).sum
-      Seq(
-        ".sbi" -> (o => SbiIndex.write(o,
-          SbiIndex(dataEnd + Bgzf.EofBlock.length, total, sbiGranularity, offsets))),
-        ".gci" -> (o => GciIndex.write(o, GciIndex(sorted, sbiGranularity, offsets,
-          gRefs.result(), gPos.result(), gSpans.result()))))
+      val (s, g) = BamSink.sampleIndexes(parts, dataEnd, dataEnd + Bgzf.EofBlock.length, sbiGranularity,
+        parts.map(_._1.records).sum)
+      Seq(".sbi" -> (o => SbiIndex.write(o, s)), ".gci" -> (o => GciIndex.write(o, g)))
     }
     // a .bai is only meaningful for coordinate-sorted output
     val bai: Seq[(String, java.io.OutputStream => Unit)] =
       if (!writeBai) Nil
-      else if (sorted) Seq(".bai" -> (o => BaiIndex.write(o,
+      else if (BamSink.sorted(parts.map(_._1))) Seq(".bai" -> (o => BaiIndex.write(o,
         graft.index.BaiPartData.merge(parts.map(_._1.bai), parts.map(_._2), header.refs.length))))
       else {
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -634,26 +662,98 @@ case class BamSink(header: SamHeader, singleFile: Boolean, schema: StructType,
   }
 }
 
+object BamSink {
+  /** True iff the parts, concatenated in order, are coordinate-sorted: every
+    * part is internally sorted and part boundaries do not step back.
+    */
+  def sorted(parts: Seq[BamPartMessage]): Boolean = {
+    var sorted = parts.forall(_.partSorted)
+    var prevRef = Int.MinValue; var prevPos = Int.MinValue
+    parts.foreach { m =>
+      if (m.records > 0) {
+        val fr = GciIndex.orderRef(m.firstRef)
+        if (fr < prevRef || (fr == prevRef && m.firstPos < prevPos)) sorted = false
+        prevRef = GciIndex.orderRef(m.lastRef); prevPos = m.lastPos
+      }
+    }
+    sorted
+  }
+
+  /** The `.sbi` and `.gci` of a file made of `parts`, each at its `base`
+    * byte offset (its sampled voffs shift by `base << 16`). The records end
+    * at `dataEnd`, which is the sentinel offset; its `.gci` window holds the
+    * last record's coordinates and span 0. `fileLength` is the `.sbi`'s
+    * stale guard, `granularity` the header field and `total` the record
+    * count (-1 when unknown).
+    */
+  def sampleIndexes(parts: Seq[(BamPartMessage, Long)], dataEnd: Long, fileLength: Long,
+                    granularity: Long, total: Long): (SbiIndex, GciIndex) = {
+    val offsets = (parts.iterator.flatMap { case (m, base) => m.sampledVoffs.iterator.map(_ + (base << 16)) } ++
+      Iterator(dataEnd << 16)).toArray
+    val last = parts.reverseIterator.map(_._1).find(_.records > 0)
+    def all[T: scala.reflect.ClassTag](f: BamPartMessage => Array[T], sentinel: T): Array[T] =
+      (parts.iterator.flatMap(p => f(p._1)) ++ Iterator(sentinel)).toArray
+    (SbiIndex(fileLength, total, granularity, offsets),
+      GciIndex(sorted(parts.map(_._1)), granularity, offsets,
+        all(_.sampledRefs, last.fold(-1)(_.lastRef)), all(_.sampledPos, last.fold(-1)(_.lastPos)),
+        all(_.sampledSpans, 0)))
+  }
+}
+
+/** Per-record index sampling of one BAM part, fed by the sink's part
+  * writer and by index derivation: every `granularity` records (≤ 0: none)
+  * a `.sbi`/`.gci` window of the record's voff and coordinates with the max
+  * alignment span of the window's records, plus the part's sortedness,
+  * first/last coordinates and record count.
+  */
+private[sources] final class BamIndexSampler(granularity: Long) {
+  private val voffs = Array.newBuilder[Long]
+  private val refs = Array.newBuilder[Int]
+  private val pos = Array.newBuilder[Int]
+  private val spans = Array.newBuilder[Int]
+  private var curSpan = 0
+  private var sorted = true
+  private var firstRef = -2; private var firstPos = -2
+  private var prevRef = Int.MinValue; private var prevPos = Int.MinValue
+  private var count = 0L
+
+  def records: Long = count
+
+  /** One record at `voff`: 0-based `pos0` and span `end - start`. */
+  def add(voff: Long, refId: Int, pos0: Int, span: Int): Unit = {
+    if (granularity > 0) {
+      if (count % granularity == 0) {
+        if (count > 0) { spans += curSpan; curSpan = 0 } // close previous window
+        voffs += voff; refs += refId; pos += pos0
+      }
+      if (span > curSpan) curSpan = span
+    }
+    val oRef = GciIndex.orderRef(refId)
+    if (oRef < prevRef || (oRef == prevRef && pos0 < prevPos)) sorted = false
+    prevRef = oRef; prevPos = pos0
+    if (firstRef == -2) { firstRef = refId; firstPos = pos0 }
+    count += 1
+  }
+
+  /** The part's report; call once. */
+  def result(bai: graft.index.BaiPartData): BamPartMessage = {
+    if (granularity > 0 && count > 0) spans += curSpan // close the final (possibly partial) window
+    BamPartMessage(count, voffs.result(), refs.result(), pos.result(), spans.result(),
+      sorted, firstRef, firstPos, if (prevRef == Int.MinValue) -2 else prevRef, prevPos, bai)
+  }
+}
+
 /** One BAM part: direct InternalRow → wire encoding (BamRowEncoder, no
   * per-record AlignmentRecord/String/Map on the hot path; it falls back to
   * the RowToRecord spec path for shapes it can't prove byte-identical),
-  * sampling SBI/GCI windows, tracking sortedness and building BAI bins.
+  * sampled by a [[BamIndexSampler]] and building BAI bins.
   */
 private final class BamPartWriter(s: BamSink, raw: java.io.OutputStream,
                                   sidecar: String => java.io.OutputStream)
     extends PartEncoder[BamPartMessage] {
   private val out = new graft.bgzf.BgzfOutputStream(raw, writeEof = !s.singleFile, level = s.level)
-  private var count = 0L
   private val enc = new graft.bam.BamRowEncoder(s.schema, s.header)
-  private val sbiGranularity = s.sbiGranularity
-  private val sVoffs = Array.newBuilder[Long]
-  private val sRefs = Array.newBuilder[Int]
-  private val sPos = Array.newBuilder[Int]
-  private val sSpans = Array.newBuilder[Int] // max (end−start) per window
-  private var curSpan = 0
-  private var partSorted = true
-  private var firstRef = -2; private var firstPos = -2
-  private var prevRef = Int.MinValue; private var prevPos = Int.MinValue
+  private val sampler = new BamIndexSampler(s.sbiGranularity)
 
   if (!s.singleFile) BamCodec.writeHeader(out, s.header)
 
@@ -663,42 +763,25 @@ private final class BamPartWriter(s: BamSink, raw: java.io.OutputStream,
     val len = enc.encode(row)
     val refId = enc.lastRefId
     val pos0 = enc.lastStart - 1
-    if (sbiGranularity > 0) {
-      if (count % sbiGranularity == 0) {
-        if (count > 0) { sSpans += curSpan; curSpan = 0 } // close previous window
-        sVoffs += out.virtualOffset; sRefs += refId; sPos += pos0
-      }
-      val span = math.max(0, enc.lastEnd - enc.lastStart) // == end0 − pos0
-      if (span > curSpan) curSpan = span
-    }
-    if (sbiGranularity > 0 || bai != null) {
-      val oRef = GciIndex.orderRef(refId)
-      if (oRef < prevRef || (oRef == prevRef && pos0 < prevPos)) partSorted = false
-      prevRef = oRef; prevPos = pos0
-      if (firstRef == -2) { firstRef = refId; firstPos = pos0 }
-    }
     val vBeg = out.virtualOffset
+    sampler.add(vBeg, refId, pos0, math.max(0, enc.lastEnd - enc.lastStart)) // span == end0 − pos0
     out.write(enc.buf, 0, len)
     if (bai != null) bai.add(refId, pos0, math.max(pos0, enc.lastEnd - 1), vBeg, out.virtualOffset,
       mapped = (enc.lastFlags & AlignmentRecord.FlagUnmapped) == 0)
-    count += 1
   }
   override def finish(): BamPartMessage = {
     out.close()
-    if (sbiGranularity > 0 && !s.singleFile) {
+    val m = sampler.result(if (bai != null) bai.result() else null)
+    if (s.sbiGranularity > 0 && !s.singleFile) {
       // sharded mode: each complete file gets its own .sbi directly;
       // compressed bytes exclude the trailing EOF block
       val compressed = Bgzf.blockStart(out.virtualOffset)
       val so = sidecar(".sbi")
-      try SbiIndex.write(so, SbiIndex(compressed + Bgzf.EofBlock.length, count,
-        sbiGranularity, sVoffs.result() :+ (compressed << 16)))
+      try SbiIndex.write(so, SbiIndex(compressed + Bgzf.EofBlock.length, m.records,
+        s.sbiGranularity, m.sampledVoffs :+ (compressed << 16)))
       finally so.close()
     }
-    if (count > 0) sSpans += curSpan // close the final (possibly partial) window
-    BamPartMessage(count, sVoffs.result(), sRefs.result(), sPos.result(), sSpans.result(),
-      partSorted, firstRef, firstPos,
-      if (prevRef == Int.MinValue) -2 else prevRef, prevPos,
-      if (bai != null) bai.result() else null)
+    m
   }
   override def abort(): Unit = out.close()
 }

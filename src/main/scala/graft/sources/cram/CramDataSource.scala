@@ -404,8 +404,7 @@ class CramScan(options: Map[String, String], required: StructType,
         // first-contact derivation: run the boundary snap + header walk
         // ONCE as a tiny distributed job, write the .crai back, re-plan
         // O(index)
-        if (options.get("deriveindex").exists(_.toBoolean) &&
-            graft.sources.DeriveIndex.deriveCramCrai(file, size, f.splitSize, new SerializableConf(f.conf)))
+        if (options.get("deriveindex").exists(_.toBoolean) && graft.sources.DeriveIndex.deriveCramCrai(f, major))
           return planFile(f) // .crai now exists → indexed route
         FilePlan(
           if (major < 3)
@@ -430,6 +429,21 @@ class CramScan(options: Map[String, String], required: StructType,
       case None =>
         (p: InputPartition) => new CramPartitionReader(p.asInstanceOf[CramPartition], conf, req, mode)
     }
+  }
+}
+
+object CramScan {
+  /** One index-derivation tile `[start, end)`: the range reader's strict
+    * [[ContainerWalk]] (a malformed header throws), each container holding
+    * records kept as the [[CraiEntry]] a sink part writer reports for it —
+    * record-less containers (the records-mode SAM-header container) are
+    * not slices.
+    */
+  def indexTile(file: String, major: Int)(in: graft.bgzf.SeekableInput, start: Long, end: Long): Seq[CraiEntry] = {
+    val walk = new ContainerWalk(in, CramRangePartition(file, start, end, None), major,
+      CramContainers.FileDefinitionLength.toLong, Stringency.Strict, new StringencyLog(file))
+    Iterator.continually(walk.next()).takeWhile(_ != null).filter(_.nRecords > 0)
+      .map(c => CraiEntry(c.refSeqId, c.startPos, c.alignmentSpan, c.offset, 0, c.dataLength)).toVector
   }
 }
 
@@ -678,14 +692,18 @@ case class CramSink(singleFile: Boolean, writeCrai: Boolean, schema: StructType,
   override def indexes(target: Path, parts: Seq[(Seq[CraiEntry], Long)], dataEnd: Long)
       : Seq[(String, java.io.OutputStream => Unit)] =
     if (!writeCrai) Nil
-    else Seq(".crai" -> (o => CraiIndex.write(o, CraiIndex(parts.flatMap { case (es, base) =>
-      es.map(e => e.copy(containerOffset = e.containerOffset + base))
-    }))))
+    else Seq(".crai" -> (o => CraiIndex.write(o, CramSink.crai(parts))))
   override def openPart(raw: java.io.OutputStream, sidecar: String => java.io.OutputStream)
       : PartEncoder[Seq[CraiEntry]] = recordsHeader match {
     case Some(h) => new CramRecordsPartWriter(this, h, raw, sidecar)
     case None => new CramSpecPartWriter(this, raw, sidecar)
   }
+}
+
+object CramSink {
+  /** The `.crai` of a file made of `parts`, each at its `base` byte offset. */
+  def crai(parts: Seq[(Seq[CraiEntry], Long)]): CraiIndex =
+    CraiIndex(parts.flatMap { case (es, base) => es.map(e => e.copy(containerOffset = e.containerOffset + base)) })
 }
 
 /** Shared part framing: buffered container bytes with their offsets, the

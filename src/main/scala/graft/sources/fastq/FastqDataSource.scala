@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.fastq.{FastqCodec, FastqRecord}
-import graft.sources.{FilePlan, GraftProvider, GraftScan, HadoopIO, PartEncoder, PlanInput, PlannedSplit,
-  RecordFormat, SerializableConf, SinkFormat, SplitTextReader, Stringency, StringencyLog}
+import graft.sources.{FilePlan, GraftProvider, GraftScan, HadoopIO, LineCursor, PartEncoder, PlanInput,
+  PlannedSplit, RecordFormat, SerializableConf, SinkFormat, SplitTextReader, Stringency, StringencyLog}
 
 /** `format("fastq")` — splittable raw-read scan/sink over plain, BGZF, or
   * single-split gzip text. Beyond the reference's surface (disq starts at
@@ -82,9 +82,9 @@ class FastqPartitionReader(p: FastqInputPartition, conf: SerializableConf, requi
   // read UNBOUNDED from the split start: the cut is on the RECORD key
   // (header-line position), and a record whose header this split owns may
   // trail lines into the next split's byte range
-  private val lines: Iterator[(Long, String)] =
-    if (p.wholeGzip) SplitTextReader.allLines(input).map((0L, _))
-    else SplitTextReader.linesWithKeys(input, p.splitStart, Long.MaxValue, p.bgzf)
+  private val lines: Iterator[(Long, String)] = SplitTextReader.linesWithKeys(
+    if (p.wholeGzip) SplitTextReader.gzipCursor(input)
+    else SplitTextReader.cursor(input, p.splitStart, Long.MaxValue, p.bgzf))
   private val getters = FastqRowBuilder.getters(required)
   private val slog = new StringencyLog(s"${p.file} [${p.splitStart}, ${p.splitEnd})")
 
@@ -130,12 +130,12 @@ class FastqPartitionReader(p: FastqInputPartition, conf: SerializableConf, requi
       if (look.size < 4) {
         // truncated trailing record
         if (p.stringency eq Stringency.Strict)
-          throw new java.io.IOException(
-            s"truncated FASTQ record '${look.head._2}' at end of ${p.file}")
+          throw new java.io.IOException(s"truncated FASTQ record at end of ${p.file} at " +
+            s"${where(look.head._1)}: ${LineCursor.preview(look.head._2)}")
         slog.skip(s"truncated FASTQ record at end of ${p.file}")
         look.clear(); return false
       }
-      val l0 = look.removeHead()._2; val l1 = look.removeHead()._2
+      val (key, l0) = look.removeHead(); val l1 = look.removeHead()._2
       val l2 = look.removeHead()._2; val l3 = look.removeHead()._2
       try {
         val rec = FastqCodec.parse(l0, l1, l2, l3)
@@ -144,13 +144,19 @@ class FastqPartitionReader(p: FastqInputPartition, conf: SerializableConf, requi
       } catch {
         case _: Exception if p.stringency eq Stringency.Permissive => slog.skipSilently()
         case e: Exception if p.stringency eq Stringency.Lenient =>
-          slog.skip(s"bad FASTQ record in ${p.file}: ${e.getMessage}")
+          slog.skip(s"bad FASTQ record in ${p.file} at ${where(key)}: ${e.getMessage}")
         case e: Exception =>
-          throw new java.io.IOException(s"bad FASTQ record in ${p.file}: $l0", e)
+          throw new java.io.IOException(
+            s"bad FASTQ record in ${p.file} at ${where(key)}: ${LineCursor.preview(l0)}", e)
       }
     }
     false
   }
+
+  /** Where the record with header-line key `key` starts, for error messages. */
+  private def where(key: Long): String =
+    if (p.wholeGzip) s"line $key" else if (p.bgzf) s"BGZF block at offset $key" else s"offset $key"
+
   override def get(): InternalRow = currentRow
   override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
   override def close(): Unit = { slog.summarize(); input.close() }

@@ -89,7 +89,7 @@ class SamPartitionReader(p: SamInputPartition, conf: SerializableConf, required:
                          attrKeys: Option[IndexedSeq[String]] = None)
     extends PartitionReader[InternalRow] {
   private val input = HadoopIO.open(new Path(p.file), conf.conf)
-  private val lines = SplitTextReader.lines(input, p.splitStart, p.splitEnd, bgzf = false)
+  private val lines = SplitTextReader.cursor(input, p.splitStart, p.splitEnd, bgzf = false)
   // column-pruned decode mask: tag_XX columns drive the selective tail
   // scan, a projection without `attributes` skips the per-tag split, and a
   // key-masked map (attrKeys) boundary-scans the tail for just those tags
@@ -103,9 +103,9 @@ class SamPartitionReader(p: SamInputPartition, conf: SerializableConf, required:
   private val slog = new StringencyLog(s"${p.file} [${p.splitStart}, ${p.splitEnd})")
 
   override def next(): Boolean = {
-    while (lines.hasNext) {
-      val line = lines.next()
-      if (line.nonEmpty && !line.startsWith("@")) {
+    while (lines.next()) {
+      if (lines.len > 0 && lines.bytes(lines.off) != '@') {
+        val line = lines.text
         // validation stringency (reference HtsjdkReadsRddStorage.java:97-100):
         // strict fails fast with context, lenient warns+counts (salvaging
         // lines whose failure is confined to the optional columns past the
@@ -122,11 +122,11 @@ class SamPartitionReader(p: SamInputPartition, conf: SerializableConf, required:
                 try SamCodec.fromLine(mandatory, p.header, mask, tagHolder)
                 catch { case _: Exception => null }
               if (salvagedRec != null)
-                slog.salvage(s"optional columns of SAM line in ${p.file}: ${e.getMessage}")
-              else slog.skip(s"bad SAM line in ${p.file}: ${e.getMessage}")
+                slog.salvage(s"optional columns of SAM line in ${p.file} at ${lines.where}: ${e.getMessage}")
+              else slog.skip(s"bad SAM line in ${p.file} at ${lines.where}: ${e.getMessage}")
               salvagedRec
             case e: Exception =>
-              throw new java.io.IOException(s"bad SAM line in ${p.file}: $line", e)
+              throw new java.io.IOException(s"bad SAM line in ${p.file} at ${lines.where}: ${lines.preview}", e)
           }
         if (rec != null && p.traversal.keep(rec)) {
           currentRow = RecordToRow.toRow(rec, getters)

@@ -122,12 +122,11 @@ class VcfScan(options: Map[String, String], required: StructType,
           .map { case (s0, e0) => if (bgzf) blockRange(s0, e0) else (s0, math.min(f.size, e0)) })
       }
     // first-contact derivation (the VCF face of the BAM/CRAM deriveIndex
-    // option): run the voff-tracking line walk ONCE as a distributed job,
-    // write the .tbi back, re-plan pruned
+    // option): run the reader's line walk ONCE as a distributed job, write
+    // the .tbi back, re-plan pruned
     def derived(): Option[(Seq[(Long, Long)], Long)] =
       if (bgzf && intervals.isDefined && !f.fs.exists(new Path(f.path.toString + ".tbi")) &&
-          options.get("deriveindex").exists(_.toBoolean) &&
-          graft.sources.DeriveIndex.deriveVcfTbi(f.path.toString, f.size, f.splitSize, new SerializableConf(f.conf)))
+          options.get("deriveindex").exists(_.toBoolean) && graft.sources.DeriveIndex.deriveVcfTbi(f))
         tbiRanges()
       else None
     val (splits, spanBytes) =
@@ -156,6 +155,36 @@ class VcfScan(options: Map[String, String], required: StructType,
   }
 }
 
+object VcfScan {
+  // contig, POS and the END-aware end: no INFO map, no genotypes
+  private val SpanMask = VcfFormatMask(genotypes = false, sample = false, gt = false, fields = false,
+    fieldKeys = None, info = false, end = true)
+
+  /** One index-derivation tile `[start, end)` of a BGZF VCF: the reader's
+    * line walk and decoder (so the scan's END rule), each line added to a
+    * [[graft.index.TbiBuilder]] exactly as the sink's part writer adds it.
+    * None when the strict decoder rejects a line.
+    */
+  def indexTile(in: graft.bgzf.SeekableInput, start: Long, end: Long): Option[graft.index.TbiPartData] = {
+    val lines = SplitTextReader.cursor(in, start, end, bgzf = true)
+    val d = new VcfRowDecoder(new StructType(), Nil, SpanMask)
+    val tbi = new graft.index.TbiBuilder
+    var contig: String = null
+    var contigBytes = Array.emptyByteArray
+    try {
+      while (lines.next()) {
+        val b = lines.bytes
+        if (lines.len > 0 && b(lines.off) != '#') {
+          d.parse(b, lines.off, lines.len)
+          if (contig == null || !d.contigIs(contigBytes)) { contig = d.contig; contigBytes = contig.getBytes(UTF_8) }
+          tbi.add(contig, d.start - 1, math.max(d.start, d.end) - 1, lines.start, lines.end)
+        }
+      }
+      Some(tbi.result())
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+}
+
 case class VcfInputPartition(file: String, splitStart: Long, splitEnd: Long,
     header: VcfHeader, bgzf: Boolean, wholeGzip: Boolean,
     intervals: Option[Seq[GenomicInterval]],
@@ -175,11 +204,9 @@ class VcfPartitionReader(p: VcfInputPartition, conf: SerializableConf, required:
     if (p.intervals.isDefined) mask0.copy(end = true) else mask0
   private val input = HadoopIO.open(new Path(p.file), conf.conf)
   private val lines: LineCursor =
-    if (p.wholeGzip) new VcfPartitionReader.TextLines(SplitTextReader.allLines(input))
+    if (p.wholeGzip) SplitTextReader.gzipCursor(input)
     else SplitTextReader.cursor(input, p.splitStart, p.splitEnd, p.bgzf)
   private val decoder = new VcfRowDecoder(required, p.header.samples, mask)
-  // lenient salvage: the 8 mandatory fields alone, decoded with the full mask
-  private lazy val salvager = new VcfRowDecoder(required, Nil, VcfFormatMask.All)
   private val intervals: Array[(Array[Byte], Int, Int)] = p.intervals.toArray.flatten
     .map(iv => (iv.contig.getBytes(UTF_8), iv.start, iv.end))
   private var currentRow: InternalRow = _
@@ -204,9 +231,8 @@ class VcfPartitionReader(p: VcfInputPartition, conf: SerializableConf, required:
   }
 
   /** The decoder holding the parsed line, or null when it is dropped.
-    * Stringency: strict fails fast, lenient warns+counts (salvaging lines
-    * whose failure is confined to the FORMAT/genotype columns past the 8
-    * mandatory VCF fields), permissive skips silently.
+    * Stringency: strict fails fast with the file and offset, lenient warns,
+    * skips and counts, permissive skips silently.
     */
   private def decode(b: Array[Byte], off: Int, len: Int): VcfRowDecoder =
     try { decoder.parse(b, off, len); decoder }
@@ -214,52 +240,14 @@ class VcfPartitionReader(p: VcfInputPartition, conf: SerializableConf, required:
       case _: Exception if p.stringency eq Stringency.Permissive =>
         slog.skipSilently(); null
       case e: Exception if p.stringency eq Stringency.Lenient =>
-        val salvaged =
-          try { salvager.parse(b, off, VcfRowDecoder.mandatoryLength(b, off, len)); salvager }
-          catch { case _: Exception => null }
-        if (salvaged != null)
-          slog.salvage(s"genotype columns of VCF line in ${p.file}: ${e.getMessage}")
-        else slog.skip(s"bad VCF line in ${p.file}: ${e.getMessage}")
-        salvaged
+        slog.skip(s"bad VCF line in ${p.file} at ${lines.where}: ${e.getMessage}"); null
       case e: Exception =>
-        throw new java.io.IOException(
-          s"bad VCF line in ${p.file} at $where: ${VcfPartitionReader.preview(b, off, len)}", e)
+        throw new java.io.IOException(s"bad VCF line in ${p.file} at ${lines.where}: ${lines.preview}", e)
     }
-
-  /** Where the current line starts: a byte offset, a BGZF virtual offset,
-    * or a line number in a plain-gzip file.
-    */
-  private def where: String = {
-    val at = lines.start
-    if (p.wholeGzip) s"line $at"
-    else if (p.bgzf) s"virtual offset $at (block ${at >>> 16}, byte ${at & 0xffff})"
-    else s"offset $at"
-  }
 
   override def get(): InternalRow = currentRow
   override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
   override def close(): Unit = { slog.summarize(); input.close() }
-}
-
-object VcfPartitionReader {
-  private val PreviewChars = 200
-
-  /** At most the first 200 characters of a line, for error messages. */
-  def preview(b: Array[Byte], off: Int, len: Int): String = {
-    val s = new String(b, off, math.min(len, 4 * PreviewChars), UTF_8)
-    if (s.length > PreviewChars) s.take(PreviewChars) + "…" else s
-  }
-
-  /** Plain-gzip lines (whole-file fallback) as a cursor; `start` is the
-    * 1-based line number.
-    */
-  private final class TextLines(it: Iterator[String]) extends LineCursor {
-    def next(): Boolean = it.hasNext && {
-      val b = it.next().getBytes(UTF_8)
-      set(b, 0, b.length, start + 1)
-      true
-    }
-  }
 }
 
 // ---- write path -----------------------------------------------------------

@@ -158,6 +158,9 @@ final class VcfRowDecoder(required: StructType, samples: Seq[String], mask: VcfF
     true
   }
 
+  /** The parsed line's contig. */
+  def contig: String = new String(line, fs(0), fe(0) - fs(0), UTF_8)
+
   /** Writes the parsed line as a row of the required schema. */
   def row(): UnsafeRow = {
     out.reset()
@@ -451,23 +454,6 @@ object VcfRowDecoder {
 
   private val MaxCached = 4096
   private val Pow10: Array[Double] = Array.tabulate(23)(i => math.pow(10, i))
-
-  /** Length of the prefix of `b(off until off + len)` that holds its first
-    * 8 tab-separated fields after Java `split`'s trailing-empty rule: the
-    * line lenient salvage re-decodes (`split('\t').take(8).mkString("\t")`).
-    */
-  def mandatoryLength(b: Array[Byte], off: Int, len: Int): Int = {
-    // end of the last non-empty field
-    var last = off + len
-    while (last > off && b(last - 1) == '\t') last -= 1
-    var tabs = 0
-    var p = off
-    while (p < last) {
-      if (b(p) == '\t') { tabs += 1; if (tabs == 8) return p - off }
-      p += 1
-    }
-    last - off
-  }
 
   /** A spec map's entry order: entry `j` takes its key from token
     * `keyAt(j)` (first occurrence) and its value from token `valueAt(j)`

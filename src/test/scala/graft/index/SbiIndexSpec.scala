@@ -82,4 +82,21 @@ class SbiIndexSpec extends AnyFunSuite with SparkFixture {
     val back = spark.read.format("bam").option("splitSize", 4096).load(dir.toString)
     assert(back.count() == recs.size)
   }
+
+  test("sharded write with writeSbi: a shard of exactly 16 sampled windows") {
+    // 16 is the sample builders' first capacity: the per-shard .sbi and the
+    // part report both read the shard's sampled offsets
+    import spark.implicits._
+    val recs = TestReads.pairs(8)
+    val dir = tmpDir().resolve("sixteen")
+    spark.createDataset(recs).toDF().coalesce(1)
+      .write.format("bam").mode("overwrite")
+      .option("refs", "chr20:1000000,chr21:1000135")
+      .option("writeSbi", "true").option("sbiGranularity", "1")
+      .save(dir.toString)
+    val sbi = Files.list(dir).filter(_.getFileName.toString.endsWith(".sbi")).findFirst().get()
+    val idx = SbiIndex.read(SeekableInput.ofBytes(Files.readAllBytes(sbi)))
+    assert(idx.totalRecords == 16 && idx.offsets.length == 17)
+    assert(spark.read.format("bam").load(dir.toString).count() == 16)
+  }
 }

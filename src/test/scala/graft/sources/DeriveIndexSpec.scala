@@ -21,6 +21,103 @@ class DeriveIndexSpec extends AnyFunSuite with SparkFixture {
 
   private val refsOpt = "chr20:1000000,chr21:2000135"
 
+  /** A sink-written BAM of `recs` with no sidecars. */
+  private def writeBam(out: java.nio.file.Path, recs: Seq[graft.bam.AlignmentRecord]): Unit = {
+    val s = spark
+    import s.implicits._
+    spark.createDataset(recs).toDF()
+      .write.format("bam").mode("overwrite").option("refs", refsOpt).save(out.toString)
+    assert(!Files.exists(java.nio.file.Paths.get(out.toString + ".sbi")))
+  }
+
+  private def readSbi(bam: java.nio.file.Path): graft.index.SbiIndex =
+    graft.index.SbiIndex.read(graft.bgzf.SeekableInput.ofBytes(
+      Files.readAllBytes(java.nio.file.Paths.get(bam.toString + ".sbi"))))
+
+  /** Reads `bam` once with deriveIndex at a small split size. */
+  private def derive(bam: java.nio.file.Path, cols: String*): Unit =
+    spark.read.format("bam").option("splitSize", 4096).option("deriveIndex", "true")
+      .load(bam.toString).selectExpr(cols: _*).collect()
+
+  /** The executed plan of a plain COUNT(*) over `bam`. */
+  private def countPlan(bam: java.nio.file.Path): String =
+    spark.read.format("bam").load(bam.toString).groupBy().count().queryExecution.executedPlan.toString
+
+  /** `bam`'s BGZF payload inflated, edited, and re-deflated into `out`. */
+  private def rewriteBam(bam: java.nio.file.Path, out: java.nio.file.Path)(edit: Array[Byte] => Unit): Unit = {
+    val in = new graft.bgzf.BgzfInputStream(graft.bgzf.SeekableInput.ofBytes(Files.readAllBytes(bam)))
+    val raw = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](65536)
+    var n = in.read(buf, 0, buf.length)
+    while (n >= 0) { raw.write(buf, 0, n); n = in.read(buf, 0, buf.length) }
+    val bytes = raw.toByteArray
+    edit(bytes)
+    val o = new graft.bgzf.BgzfOutputStream(Files.newOutputStream(out))
+    o.write(bytes); o.close()
+  }
+
+  private def le32(b: Array[Byte], p: Int): Int =
+    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
+
+  test("BAM: COUNT(*) after derivation is the exact record count") {
+    val dir = tmpDir()
+    val out = dir.resolve("c.bam")
+    writeBam(out, TestReads.mixed(800)) // 1,602 records
+    derive(out, "readName")
+    assert(readSbi(out).totalRecords == 1602)
+    assert(countPlan(out).contains("indexCount=1602"))
+    val df = spark.read.format("bam").load(out.toString)
+    assert(df.count() == 1602)
+    assert(df.collect().length == 1602)
+  }
+
+  test("BAM: a file without the EOF block derives an .sbi the stale guard accepts") {
+    val dir = tmpDir()
+    val full = dir.resolve("full.bam")
+    writeBam(full, TestReads.mixed(800))
+    val bytes = Files.readAllBytes(full)
+    val eof = graft.bgzf.Bgzf.EofBlock
+    assert(bytes.takeRight(eof.length).sameElements(eof))
+    val out = dir.resolve("noeof.bam")
+    Files.write(out, bytes.dropRight(eof.length))
+    val base = spark.read.format("bam").option("splitSize", 4096).load(out.toString).collect().map(_.toSeq)
+    derive(out, "readName")
+    val sbi = readSbi(out)
+    assert(sbi.fileLength == Files.size(out) && sbi.totalRecords == 1602)
+    assert(sbi.offsets.last == Files.size(out) << 16, "sentinel past the last record")
+    val parts = new graft.sources.bam.BamScan(Map("path" -> out.toString, "splitsize" -> "4096"),
+      graft.bam.AlignmentRecord.schema, Array.empty).planInputPartitions()
+    assert(parts.forall(_.asInstanceOf[graft.sources.bam.BamInputPartition].chunkStartVoff >= 0),
+      "the stale guard rejected the derived .sbi")
+    val again = spark.read.format("bam").option("splitSize", 4096).load(out.toString).collect().map(_.toSeq)
+    assert(again.toSeq == base.toSeq)
+  }
+
+  test("BAM: a corrupt mid-file record derives no record count and no .gci") {
+    val dir = tmpDir()
+    val good = dir.resolve("good.bam")
+    writeBam(good, TestReads.mixed(800))
+    val out = dir.resolve("bad.bam")
+    rewriteBam(good, out) { b =>
+      // header: magic, l_text, text, n_ref, refs (l_name, name, l_ref)
+      var p = 8 + le32(b, 4)
+      val nRef = le32(b, p); p += 4
+      (0 until nRef).foreach(_ => p += 4 + le32(b, p) + 4)
+      // record 800: give its first cigar op the undefined code 9
+      (0 until 800).foreach(_ => p += 4 + le32(b, p))
+      assert(le32(b, p + 4) >= 0 && ((b(p + 16) & 0xff) | ((b(p + 17) & 0xff) << 8)) > 0, "want a mapped record")
+      val cigar = p + 4 + 32 + (b(p + 12) & 0xff)
+      b(cigar) = ((b(cigar) & 0xf0) | 9).toByte
+    }
+    derive(out, "readName")
+    assert(Files.exists(dir.resolve("bad.bam.sbi")))
+    assert(readSbi(out).totalRecords == -1)
+    assert(!Files.exists(dir.resolve("bad.bam.gci")))
+    assert(!countPlan(out).contains("indexCount"))
+    // the record still frames, so a scan that does not decode its cigar counts it
+    assert(spark.read.format("bam").load(out.toString).count() == 1602)
+  }
+
   test("BAM: first deriveIndex read writes .sbi; second scan plans the SBI route") {
     val s = spark
     import s.implicits._
@@ -149,6 +246,43 @@ class DeriveIndexSpec extends AnyFunSuite with SparkFixture {
     val ids = got.select($"id").collect().map(_.getString(0))
     assert(Files.exists(dir.resolve("sv.vcf.bgz.tbi")))
     assert(ids.contains("sv1"), s"SV lost under derived-index pruning: ${ids.toSeq}")
+  }
+
+  /** `lines` (after a minimal header) as a BGZF VCF with no sidecars. */
+  private def writeBgzfVcf(out: java.nio.file.Path, lines: Seq[String]): Unit = {
+    val o = new graft.bgzf.BgzfOutputStream(Files.newOutputStream(out))
+    o.write((Seq("##fileformat=VCFv4.2", "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO") ++ lines)
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    o.close()
+  }
+
+  private def snpLines(n: Int): Seq[String] =
+    (0 until n).map(i => s"chr1\t${1000 + i * 150}\t.\tA\tG\t30\tPASS\tDP=$i")
+
+  test("VCF: a derived .tbi keeps the scan's last-END rule") {
+    val dir = tmpDir()
+    val out = dir.resolve("dup.vcf.bgz")
+    // the scan reads the site's end as 900000 (the last END wins)
+    writeBgzfVcf(out, "chr1\t100\tdup\tN\t<DEL>\t60\tPASS\tEND=150;END=900000" +: snpLines(6000))
+    def ids(derive: Boolean) = spark.read.format("vcf").option("splitSize", 4096)
+      .option("deriveIndex", derive.toString).option("intervals", "chr1:899000-899500")
+      .load(out.toString).selectExpr("id").collect().map(_.getString(0)).toSeq
+    val base = ids(derive = false)
+    assert(base.length == 5 && base.contains("dup"), base)
+    assert(ids(derive = true) == base)
+    assert(Files.exists(dir.resolve("dup.vcf.bgz.tbi")))
+    assert(ids(derive = false) == base)
+  }
+
+  test("VCF: a line the strict decoder rejects refuses derivation") {
+    val dir = tmpDir()
+    val out = dir.resolve("badqual.vcf.bgz")
+    writeBgzfVcf(out, snpLines(3000) ++ Seq("chr1\t500000\tbad\tA\tG\tbogus\tPASS\tDP=1") ++
+      snpLines(6000).drop(3330))
+    val n = spark.read.format("vcf").option("splitSize", 4096).option("mode", "lenient")
+      .option("deriveIndex", "true").option("intervals", "chr1:200000-220000").load(out.toString).count()
+    assert(n == 134)
+    assert(!Files.exists(dir.resolve("badqual.vcf.bgz.tbi")))
   }
 
   test("CRAM: first deriveIndex read writes .crai; second scan plans the indexed route") {

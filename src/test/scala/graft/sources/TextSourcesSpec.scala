@@ -365,6 +365,29 @@ class SamVcfSourceSpec extends AnyFunSuite with SparkFixture {
     assert(back.rdd.getNumPartitions == 1) // not splittable
   }
 
+  test("VCF: a lone \\r inside a line reads the same plain, BGZF and gzipped") {
+    // the line rule is '\n' only with one trailing '\r' stripped, for every
+    // compression: a lone '\r' mid-INFO stays part of the value
+    val text = Seq("##fileformat=VCFv4.2", "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1",
+      "chr1\t100\ta\tA\tG\t30\tPASS\tDP=5\rX=1;AF=0.5\tGT\t0/1",
+      "chr1\t200\tb\tC\tT\t40\tPASS\tDP=7\tGT\t1/1\r",
+      "chr1\t300\tc\tG\tA\t50\tPASS\tDP=9\r\tGT\t0/0").mkString("", "\n", "\n").getBytes("UTF-8")
+    val dir = tmpDir()
+    val plain = dir.resolve("cr.vcf")
+    Files.write(plain, text)
+    val bgz = dir.resolve("cr.vcf.bgz")
+    val bo = new BgzfOutputStream(Files.newOutputStream(bgz))
+    bo.write(text); bo.close()
+    val gz = dir.resolve("cr.vcf.gz")
+    val go = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+    go.write(text); go.close()
+    def rows(p: java.nio.file.Path) = spark.read.format("vcf").load(p.toString).collect().map(_.toString).toSeq
+    val want = rows(plain)
+    assert(want.length == 3 && want.head.contains("5\rX"), want)
+    assert(rows(bgz) == want)
+    assert(rows(gz) == want)
+  }
+
   test("VCF: intervals filter + sharded write") {
     import spark.implicits._
     val vs = sampleVariants(500)

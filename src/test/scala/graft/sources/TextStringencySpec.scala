@@ -45,6 +45,36 @@ class TextStringencySpec extends AnyFunSuite with SparkFixture {
     assert(kept.map(_.getString(0)).toSeq == Seq("r1"))
   }
 
+  /** Every message of `t` and its causes. */
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  /** Byte offset of `line` in the file written from `lines`. */
+  private def offsetOf(lines: Seq[String], line: String): Int =
+    lines.takeWhile(_ != line).map(_.getBytes("UTF-8").length + 1).sum
+
+  test("sam strict: the error names the file and the line's offset, not the whole line") {
+    val bad = samLine("r2", 200).replace("\t200\t", "\tbogus\t") + "\tXC:Z:" + ("y" * 10000)
+    val lines = samHeader ++ Seq(samLine("r1", 100), bad)
+    val path = writeLines(".sam", lines)
+    val ex = intercept[org.apache.spark.SparkException](
+      spark.read.format("sam").load(path).selectExpr("readName").collect())
+    val msg = messages(ex).find(_.contains("bad SAM line")).getOrElse(fail(s"no SAM error in $ex"))
+    assert(msg.contains(path) && msg.contains(s"offset ${offsetOf(lines, bad)}"), msg)
+    assert(msg.contains(bad.take(150)) && !msg.contains(bad.take(201)), msg.length)
+  }
+
+  test("fastq strict: the error names the file and the record's offset, not the whole line") {
+    val badHeader = "@r2 " + ("z" * 10000)
+    val lines = Seq("@r1", "ACGT", "+", "IIII", badHeader, "ACGT", "+", "III")
+    val path = writeLines(".fastq", lines)
+    val ex = intercept[org.apache.spark.SparkException](
+      spark.read.format("fastq").load(path).selectExpr("readName").collect())
+    val msg = messages(ex).find(_.contains("bad FASTQ record")).getOrElse(fail(s"no FASTQ error in $ex"))
+    assert(msg.contains(path) && msg.contains(s"offset ${offsetOf(lines, badHeader)}"), msg)
+    assert(msg.contains(badHeader.take(150)) && !msg.contains(badHeader.take(201)), msg.length)
+  }
+
   private val vcfHeader = Seq("##fileformat=VCFv4.2",
     "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO")
 

@@ -14,8 +14,7 @@ import graft.sources.vcf.VariantRowBuilder
   * copied through `VariantRowBuilder` and projected to `UnsafeRow` — on
   * seeded random lines and hand-written edge lines, under every mask
   * shape a scan can hand it: the rows must be byte-identical, and the
-  * decoder must throw iff the spec throws. The lenient salvage pass (the
-  * 8 mandatory fields, full mask, no samples) is held to the same rule.
+  * decoder must throw iff the spec throws.
   */
 class VcfRowDecoderSpec extends AnyFunSuite {
 
@@ -82,9 +81,6 @@ class VcfRowDecoderSpec extends AnyFunSuite {
     val m0 = VcfFormatMask.from(req, ff.map(_.toIndexedSeq), inf.map(_.toIndexedSeq))
     new Pair(label, req, s, if (forceEnd) m0.copy(end = true) else m0)
   }
-
-  /** The lenient salvage pair of a shape: full mask, no samples. */
-  private def salvage(req: StructType): Pair = new Pair("salvage", req, Nil, VcfFormatMask.All)
 
   // ---- lines ---------------------------------------------------------------
 
@@ -202,20 +198,9 @@ class VcfRowDecoderSpec extends AnyFunSuite {
 
   private def checkAll(lines: Seq[Array[Byte]]): Unit = {
     val ps = pairs()
-    val salvagers = shapes.map(s => salvage(s._2))
-    for (b <- lines) {
-      ps.foreach(_.check(b))
-      // lenient salvage: the prefix the reader hands the salvager against
-      // the spec's `split('\t').take(8).mkString("\t")`
-      val n = if (b.nonEmpty && b.last == '\r') b.length - 1 else b.length
-      val line = stripCr(new String(b, UTF_8))
-      val mandatory = line.split('\t').take(8).mkString("\t")
-      val cut = VcfRowDecoder.mandatoryLength(b, 0, n)
-      assert(stripCr(new String(b, 0, cut, UTF_8)) == mandatory, line)
-      salvagers.foreach(_.check(b.take(cut)))
-    }
+    for (b <- lines) ps.foreach(_.check(b))
     // both outcomes are exercised under every shape
-    (ps ++ salvagers).foreach(p => assert(p.rows > lines.size / 5 && p.throws > 0, (p.rows, p.throws)))
+    ps.foreach(p => assert(p.rows > lines.size / 5 && p.throws > 0, (p.rows, p.throws)))
   }
 
   test("edge lines: rows byte-identical to the spec path, throws iff it throws, every mask") {
