@@ -4,8 +4,9 @@ import java.io.{EOFException, IOException}
 import java.nio.{ByteBuffer, ByteOrder}
 import graft.bgzf.BgzfInputStream
 
-/** BAM binary codec — both directions, written from the public SAM/BAM spec
-  * (samtools/hts-specs §4.2). The reference delegates this to htsjdk
+/** BAM binary codec — header both directions, record decode — written from
+  * the public SAM/BAM spec (samtools/hts-specs §4.2); records are encoded by
+  * `BamRowEncoder`. The reference delegates this to htsjdk
   * (BAMRecordCodec); field layout it validates is documented at
   * /root/reference impl/formats/bam/BamRecordGuesser.java:80-96.
   */
@@ -440,88 +441,6 @@ object BamCodec {
     sb.toString
   }
 
-  // ---- record encode ---------------------------------------------------
-
-  def encodeRecord(r: AlignmentRecord, header: SamHeader): Array[Byte] = {
-    val name = if (r.readName == null || r.readName.isEmpty) "*" else r.readName
-    val nameBytes = name.getBytes("UTF-8")
-    require(nameBytes.length <= 254, s"read name too long: $name")
-    val cigarOps0: Array[Int] =
-      if (r.cigar == null || r.cigar == "*") Array.empty
-      else parseCigar(r.cigar)
-    // BAM's n_cigar_op field is uint16. Ultralong-read alignments (nanopore)
-    // legitimately exceed 65535 ops; the SAMv1 spec's escape is the CG
-    // spill: the CIGAR field holds the kSmN sentinel (k = query length
-    // consumed, m = reference length consumed) and the real ops move to a
-    // CG:B,I tag. Silent truncation here would misalign every downstream
-    // byte of the record.
-    val (cigarOps, tagAttrs) =
-      if (cigarOps0.length <= 0xFFFF) (cigarOps0, r.attributes)
-      else {
-        var qlen = 0
-        cigarOps0.foreach { v =>
-          val op = v & 0xf // M I S = X consume query
-          if (op == 0 || op == 1 || op == 4 || op == 7 || op == 8) qlen += (v >>> 4)
-        }
-        val rl = cigarRefLength(cigarOps0)
-        val sentinel = Array((qlen << 4) | 4 /* S */, (rl << 4) | 3 /* N */)
-        val cg = "B:I," +
-          cigarOps0.iterator.map(v => (v.toLong & 0xffffffffL).toString).mkString(",")
-        val base = if (r.attributes == null) Map.empty[String, String] else r.attributes
-        (sentinel, base + ("CG" -> cg))
-      }
-    val seq = if (r.seq == null || r.seq == "*") "" else r.seq
-    val lSeq = seq.length
-    val qual: Array[Byte] =
-      if (r.qual == null || r.qual == "*") Array.fill[Byte](lSeq)(0xff.toByte)
-      else { require(r.qual.length == lSeq, "qual/seq length mismatch"); r.qual.map(c => (c - 33).toByte).toArray }
-    val tags = encodeTags(tagAttrs)
-    val size = 32 + nameBytes.length + 1 + 4 * cigarOps.length + (lSeq + 1) / 2 + lSeq + tags.length
-    val bb = ByteBuffer.allocate(4 + size).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(size)
-    val refId = header.refId(r.contig)
-    // a contig absent from the dictionary must fail, not silently become
-    // unmapped — a wrong `refs` option would otherwise corrupt every record
-    // (htsjdk throws the same way)
-    if (r.contig != null && refId < 0)
-      throw new IllegalArgumentException(
-        s"contig '${r.contig}' not in reference dictionary (refs option / header @SQ lines)")
-    val pos = r.start - 1 // 1-based → 0-based; start=0 → -1 (unplaced)
-    bb.putInt(refId)
-    bb.putInt(pos)
-    bb.put((nameBytes.length + 1).toByte)
-    // uint8 / uint16 wire fields — out-of-range inputs must not wrap
-    require(r.mapq >= 0 && r.mapq <= 255, s"mapq ${r.mapq} outside uint8")
-    bb.put(r.mapq.toByte)
-    val refLen = cigarRefLength(cigarOps)
-    val bin = if (pos >= 0) reg2bin(pos, if (refLen > 0) pos + refLen else pos + 1) else 4680
-    bb.putShort(bin.toShort)
-    bb.putShort(cigarOps.length.toShort)
-    require(r.flags >= 0 && r.flags <= 0xFFFF, s"flags ${r.flags} outside uint16")
-    bb.putShort(r.flags.toShort)
-    bb.putInt(lSeq)
-    bb.putInt(header.refId(r.mateContig))
-    bb.putInt(r.mateStart - 1)
-    bb.putInt(r.tlen)
-    bb.put(nameBytes); bb.put(0.toByte)
-    cigarOps.foreach(bb.putInt)
-    var i = 0
-    while (i < lSeq) {
-      val hi = seqNibble(seq.charAt(i))
-      val lo = if (i + 1 < lSeq) seqNibble(seq.charAt(i + 1)) else 0
-      bb.put(((hi << 4) | lo).toByte)
-      i += 2
-    }
-    bb.put(qual)
-    bb.put(tags)
-    bb.array()
-  }
-
-  private def seqNibble(c: Char): Int = {
-    val i = SeqNibbles.indexOf(c.toUpper)
-    if (i < 0) 15 else i // unknown base → N
-  }
-
   /** "10M2I3D" → packed (len<<4|op) ints. */
   def parseCigar(s: String): Array[Int] = {
     val out = Array.newBuilder[Int]
@@ -550,60 +469,5 @@ object BamCodec {
       if (op == 0 || op == 2 || op == 3 || op == 7 || op == 8) n += (v >>> 4)
     }
     n
-  }
-
-  /** SAM spec §5.3 bin computation (beg inclusive, end exclusive, 0-based). */
-  def reg2bin(beg: Int, end0: Int): Int = {
-    val end = end0 - 1
-    if (beg >> 14 == end >> 14) return ((1 << 15) - 1) / 7 + (beg >> 14)
-    if (beg >> 17 == end >> 17) return ((1 << 12) - 1) / 7 + (beg >> 17)
-    if (beg >> 20 == end >> 20) return ((1 << 9) - 1) / 7 + (beg >> 20)
-    if (beg >> 23 == end >> 23) return ((1 << 6) - 1) / 7 + (beg >> 23)
-    if (beg >> 26 == end >> 26) return ((1 << 3) - 1) / 7 + (beg >> 26)
-    0
-  }
-
-  private def encodeTags(attrs: Map[String, String]): Array[Byte] = {
-    if (attrs == null || attrs.isEmpty) return Array.emptyByteArray
-    val bb = ByteBuffer.allocate(attrs.iterator.map(t => 8 + t._2.length * 4 + 16).sum)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    // sorted for deterministic bytes (Map iteration order is not stable)
-    attrs.toSeq.sortBy(_._1).foreach { case (tag, typed) =>
-      require(tag.length == 2, s"bad tag name $tag")
-      require(typed.length >= 2 && typed.charAt(1) == ':', s"bad typed value '$typed' (want T:value)")
-      bb.put(tag.charAt(0).toByte); bb.put(tag.charAt(1).toByte)
-      val t = typed.charAt(0)
-      val v = typed.substring(2)
-      bb.put(t.toByte)
-      t match {
-        case 'A' => bb.put(v.charAt(0).toByte)
-        case 'c' => bb.put(v.toInt.toByte)
-        case 'C' => bb.put(v.toInt.toByte)
-        case 's' => bb.putShort(v.toInt.toShort)
-        case 'S' => bb.putShort(v.toInt.toShort)
-        case 'i' => bb.putInt(v.toInt)
-        case 'I' => bb.putInt(v.toLong.toInt)
-        case 'f' => bb.putFloat(v.toFloat)
-        case 'Z' => bb.put(v.getBytes("UTF-8")); bb.put(0.toByte)
-        case 'H' => bb.put(v.getBytes("UTF-8")); bb.put(0.toByte)
-        case 'B' =>
-          val parts = v.split(',')
-          val sub = parts(0).charAt(0)
-          bb.put(sub.toByte)
-          bb.putInt(parts.length - 1)
-          parts.iterator.drop(1).foreach { p =>
-            sub match {
-              case 'c' | 'C' => bb.put(p.toInt.toByte)
-              case 's' | 'S' => bb.putShort(p.toInt.toShort)
-              case 'i' => bb.putInt(p.toInt)
-              case 'I' => bb.putInt(p.toLong.toInt)
-              case 'f' => bb.putFloat(p.toFloat)
-              case x => throw new IOException(s"bad B subtype $x")
-            }
-          }
-        case x => throw new IOException(s"bad tag type $x")
-      }
-    }
-    java.util.Arrays.copyOf(bb.array(), bb.position())
   }
 }

@@ -1,27 +1,13 @@
 package graft.bam
 
-import java.io.OutputStream
-import graft.bgzf.{BgzfInputStream, BgzfOutputStream, SeekableInput}
+import graft.bgzf.{BgzfInputStream, SeekableInput}
 
-/** Whole-file BAM read/write helpers: the sequential, single-threaded path.
-  * The DSv2 source/sink builds on the same codec; this is also the
+/** Whole-file BAM read helpers: the sequential, single-threaded path.
+  * The DSv2 source builds on the same codec; this is also the
   * differential-count oracle for tests (reference test strategy SURVEY.md §5:
   * engine count vs plain sequential decode).
   */
 object BamIO {
-
-  /** Write a complete BAM (header + records + EOF terminator). */
-  def write(out: OutputStream, header: SamHeader, records: Iterator[AlignmentRecord]): Unit = {
-    val bgzf = new BgzfOutputStream(out, writeEof = true)
-    BamCodec.writeHeader(bgzf, header)
-    records.foreach(r => bgzf.write(BamCodec.encodeRecord(r, header)))
-    bgzf.close()
-  }
-
-  def writeFile(path: java.nio.file.Path, header: SamHeader, records: Iterator[AlignmentRecord]): Unit = {
-    val os = java.nio.file.Files.newOutputStream(path)
-    try write(os, header, records) finally os.close()
-  }
 
   def readHeader(in: SeekableInput): (SamHeader, Long) = {
     val s = new BgzfInputStream(in)

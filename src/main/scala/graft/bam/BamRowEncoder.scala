@@ -1,32 +1,32 @@
 package graft.bam
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.bam.RowToRecord
+import graft.index.BaiIndex
+import graft.sources.{RowBytes, RowText, SortedKeys}
 
-/** Direct InternalRow → BAM wire bytes, bypassing the AlignmentRecord
-  * materialization (UTF8String→String ×6, per-record attribute Map) the
-  * object path pays per record. Byte-compatible with
-  * `BamCodec.encodeRecord(RowToRecord.convert(row, idx), header)` — the
-  * object path stays as the executable spec (BamRowEncoderSpec proves
-  * byte identity on production and adversarial shapes) and as the runtime
-  * fallback: any shape the fast path can't prove it renders identically
-  * (non-ASCII text, CG-spill cigars, unusual tag values) is re-encoded
-  * through the spec path, so correctness never depends on fast-path
-  * coverage.
+/** InternalRow → BAM wire bytes (block_size + record): the BAM sink's only
+  * write path. It renders every row shape in place, byte for byte as the
+  * test-scope object-model writer (`BamSpecWriter` over the row converted
+  * to an `AlignmentRecord`) does, and throws where that writer throws, with
+  * the same exception class (BamRowEncoderSpec and RowEncoderSweepSpec).
   *
-  * The encoder owns a reusable output buffer: `encode` returns the record
-  * length and the caller writes `buf` — zero per-record allocation on the
-  * fast path.
+  * ASCII text is rendered from the row's bytes. Non-ASCII text takes the
+  * writer's `String` semantics: a malformed UTF-8 sequence becomes U+FFFD,
+  * seq/qual lengths count UTF-16 units, tag keys sort in `String` order.
+  * A cigar of more than 65,535 ops spills to `CG:B,I` behind the kSmN
+  * sentinel (SAMv1 §4.2.2).
   */
-final class BamRowEncoder(schema: StructType, header: SamHeader) {
-  private val idx = RowToRecord.indices(schema)
+final class BamRowEncoder(schema: StructType, header: SamHeader) extends RowBytes(1 << 16) {
+  import BamRowEncoder._
 
-  /** Reusable record buffer (block_size + record bytes). */
-  var buf: Array[Byte] = new Array[Byte](1 << 16)
-  private var pos = 0
+  private val idx = indices(schema)
+  private val keys = new SortedKeys
+  /** Parsed cigar ops (len << 4 | op) of the row being encoded. */
+  private var ops = new Array[Int](64)
 
   // coordinates of the record just encoded, for writer-side index bookkeeping
   var lastRefId: Int = -1
@@ -42,14 +42,6 @@ final class BamRowEncoder(schema: StructType, header: SamHeader) {
   private var lastMateContig: UTF8String = _
   private var lastMateRefId: Int = -1
 
-  private def ensure(n: Int): Unit =
-    if (pos + n > buf.length) {
-      var cap = buf.length
-      while (cap < pos + n) cap <<= 1
-      buf = java.util.Arrays.copyOf(buf, cap)
-    }
-
-  private def putByte(b: Int): Unit = { ensure(1); buf(pos) = b.toByte; pos += 1 }
   private def putShortLE(v: Int): Unit = {
     ensure(2)
     buf(pos) = v.toByte; buf(pos + 1) = (v >> 8).toByte; pos += 2
@@ -63,23 +55,6 @@ final class BamRowEncoder(schema: StructType, header: SamHeader) {
   private def putIntLEAt(at: Int, v: Int): Unit = {
     buf(at) = v.toByte; buf(at + 1) = (v >> 8).toByte
     buf(at + 2) = (v >> 16).toByte; buf(at + 3) = (v >> 24).toByte
-  }
-  private def putUtf8(s: UTF8String): Unit = {
-    val n = s.numBytes()
-    ensure(n)
-    s.writeToMemory(buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + pos)
-    pos += n
-  }
-
-  /** All bytes < 0x80 — the precondition under which byte-wise rendering is
-    * identical to the String path (UTF-16 length == byte length, toUpper is
-    * the ASCII table, sort order matches).
-    */
-  private def ascii(s: UTF8String): Boolean = {
-    val n = s.numBytes()
-    var i = 0
-    while (i < n) { if (s.getByte(i) < 0) return false; i += 1 }
-    true
   }
 
   private def refIdOfContig(s: UTF8String): Int =
@@ -103,92 +78,69 @@ final class BamRowEncoder(schema: StructType, header: SamHeader) {
     }
 
   /** Encode one row into `buf`; returns the total length (block_size field +
-    * record). Falls back to the object path for any shape outside the proven
-    * fast path; validation failures always route through the spec path so
-    * error behavior is identical.
+    * record). Checks run in the object-model writer's order: null tag
+    * values, name length, cigar, seq/qual lengths, tags, then contig, mapq
+    * and flags.
     */
   def encode(row: InternalRow): Int = {
     pos = 0
     val x = idx
-    // coordinates for the writer's index bookkeeping (same row reads the
-    // object path does)
     lastStart = if (x.start < 0 || row.isNullAt(x.start)) 0 else row.getInt(x.start)
     lastEnd = if (x.end < 0 || row.isNullAt(x.end)) 0 else row.getInt(x.end)
     lastFlags = if (x.flags < 0 || row.isNullAt(x.flags)) 0 else row.getInt(x.flags)
 
-    val name: UTF8String =
-      if (x.readName < 0 || row.isNullAt(x.readName)) null else row.getUTF8String(x.readName)
-    val contig: UTF8String =
-      if (x.contig < 0 || row.isNullAt(x.contig)) null else row.getUTF8String(x.contig)
-    val cigar: UTF8String =
-      if (x.cigar < 0 || row.isNullAt(x.cigar)) null else row.getUTF8String(x.cigar)
-    val mateContig: UTF8String =
-      if (x.mateContig < 0 || row.isNullAt(x.mateContig)) null else row.getUTF8String(x.mateContig)
-    val seq: UTF8String =
-      if (x.seq < 0 || row.isNullAt(x.seq)) null else row.getUTF8String(x.seq)
-    val qual: UTF8String =
-      if (x.qual < 0 || row.isNullAt(x.qual)) null else row.getUTF8String(x.qual)
+    val attrs: MapData =
+      if (x.attributes < 0 || row.isNullAt(x.attributes)) null else row.getMap(x.attributes)
+    if (attrs != null)
+      RowText.requireValues(attrs, "null value for attributes key '", "' (SAM tag values cannot be null)")
 
-    // fast-path preconditions; anything else → spec path
-    if ((name != null && !ascii(name)) || (contig != null && !ascii(contig)) ||
-        (cigar != null && !ascii(cigar)) || (mateContig != null && !ascii(mateContig)) ||
-        (seq != null && !ascii(seq)) || (qual != null && !ascii(qual)))
-      return fallback(row)
-
+    val name = RowText.text(str(row, x.readName))
+    val contig = str(row, x.contig)
+    val cigar = str(row, x.cigar)
+    val mateContig = str(row, x.mateContig)
+    val seq = str(row, x.seq)
+    val qual = str(row, x.qual)
     val mapq = if (x.mapq < 0 || row.isNullAt(x.mapq)) 0 else row.getInt(x.mapq)
     val tlen = if (x.tlen < 0 || row.isNullAt(x.tlen)) 0 else row.getInt(x.tlen)
     val mateStart = if (x.mateStart < 0 || row.isNullAt(x.mateStart)) 0 else row.getInt(x.mateStart)
-    if (mapq < 0 || mapq > 255 || lastFlags < 0 || lastFlags > 0xFFFF) return fallback(row)
-
-    val refId = refIdOfContig(contig)
-    if (contig != null && refId < 0) return fallback(row) // dictionary error path
-    lastRefId = refId
 
     // name: null/empty → "*"
     val starName = name == null || name.numBytes() == 0
     val nameLen = if (starName) 1 else name.numBytes()
-    if (nameLen > 254) return fallback(row)
+    if (nameLen > 254) throw new IllegalArgumentException(s"requirement failed: read name too long: $name")
 
-    // cigar: parse "[0-9]+[MIDNSHP=X]"... from bytes; "*"/null → 0 ops
-    var nCigar = 0
-    var refLen = 0
-    val cigarStar = cigar == null ||
-      (cigar.numBytes() == 1 && cigar.getByte(0) == '*')
-    // record header is 32 bytes + name; cigar ops appended after — emit
-    // into buf after the fixed fields, so parse first into a growable pass
-    // (two-pass over the cigar bytes: count, then emit)
-    if (!cigarStar) {
-      val n = cigar.numBytes()
+    val nOps = if (cigar == null || isStar(cigar)) 0 else parseCigar(cigar)
+    // BAM's n_cigar_op is uint16: past it the ops move to a CG:B,I tag and
+    // the cigar holds the kSmN sentinel (k = query, m = reference length)
+    val spill = nOps > 0xFFFF
+    var sentinelS = 0
+    var sentinelN = 0
+    if (spill) {
+      var qlen = 0
       var i = 0
-      while (i < n) {
-        var len = 0L
-        val d0 = i
-        var b = cigar.getByte(i)
-        while (i < n && b >= '0' && b <= '9') {
-          len = len * 10 + (b - '0')
-          if (len > 0xFFFFFFFL) return fallback(row) // spec path throws (28-bit field)
-          i += 1
-          if (i < n) b = cigar.getByte(i)
-        }
-        if (i == d0 || i >= n) return fallback(row)
-        val op = "MIDNSHP=X".indexOf(b.toChar)
-        if (op < 0) return fallback(row)
-        if (op == 0 || op == 2 || op == 3 || op == 7 || op == 8) refLen += len.toInt
-        nCigar += 1
+      while (i < nOps) {
+        val op = ops(i) & 0xf // M I S = X consume query
+        if (op == 0 || op == 1 || op == 4 || op == 7 || op == 8) qlen += ops(i) >>> 4
         i += 1
       }
-      if (nCigar > 0xFFFF) return fallback(row) // CG-spill: spec path handles it
+      sentinelS = (qlen << 4) | 4
+      sentinelN = (refLength(ops, nOps) << 4) | 3
     }
+    val refLen = if (spill) sentinelN >>> 4 else refLength(ops, nOps)
 
-    val lSeq = if (seq == null || (seq.numBytes() == 1 && seq.getByte(0) == '*')) 0 else seq.numBytes()
-    val qualStar = qual == null || (qual.numBytes() == 1 && qual.getByte(0) == '*')
-    if (!qualStar && qual.numBytes() != lSeq) return fallback(row)
+    // seq/qual: the writer counts and maps UTF-16 units
+    val seqStr = if (seq == null || RowText.ascii(seq)) null else seq.toString
+    val lSeq =
+      if (seq == null || isStar(seq)) 0 else if (seqStr == null) seq.numBytes() else seqStr.length
+    val qualStar = qual == null || isStar(qual)
+    val qualStr = if (qualStar || RowText.ascii(qual)) null else qual.toString
+    if (!qualStar && (if (qualStr == null) qual.numBytes() else qualStr.length) != lSeq)
+      throw new IllegalArgumentException("requirement failed: qual/seq length mismatch")
 
-    // tags into the tail of a locally-tracked region: encode AFTER the
-    // fixed fields, directly in buf
+    val refId = refIdOfContig(contig)
+    lastRefId = refId
     val mateRefId = refIdOfMate(mateContig)
 
-    // layout
     val sizeAt = pos
     putIntLE(0) // block_size placeholder
     val recStart = pos
@@ -198,10 +150,10 @@ final class BamRowEncoder(schema: StructType, header: SamHeader) {
     putByte(mapq)
     val bin =
       if (lastStart - 1 >= 0)
-        BamCodec.reg2bin(lastStart - 1, if (refLen > 0) lastStart - 1 + refLen else lastStart)
+        BaiIndex.reg2bin(lastStart - 1, if (refLen > 0) lastStart - 1 + refLen else lastStart)
       else 4680
     putShortLE(bin)
-    putShortLE(nCigar)
+    putShortLE(if (spill) 2 else nOps)
     putShortLE(lastFlags)
     putIntLE(lSeq)
     putIntLE(mateRefId)
@@ -209,99 +161,122 @@ final class BamRowEncoder(schema: StructType, header: SamHeader) {
     putIntLE(tlen)
     if (starName) putByte('*') else putUtf8(name)
     putByte(0)
-    if (!cigarStar) {
-      val n = cigar.numBytes()
+    if (spill) { putIntLE(sentinelS); putIntLE(sentinelN) }
+    else {
       var i = 0
-      while (i < n) {
-        var len = 0
-        var b = cigar.getByte(i)
-        while (b >= '0' && b <= '9') { len = len * 10 + (b - '0'); i += 1; b = cigar.getByte(i) }
-        putIntLE((len << 4) | "MIDNSHP=X".indexOf(b.toChar))
-        i += 1
-      }
+      while (i < nOps) { putIntLE(ops(i)); i += 1 }
     }
     if (lSeq > 0) {
       ensure((lSeq + 1) / 2)
       var i = 0
       while (i < lSeq) {
-        val hi = BamRowEncoder.nibble(seq.getByte(i))
-        val lo = if (i + 1 < lSeq) BamRowEncoder.nibble(seq.getByte(i + 1)) else 0
+        val hi = if (seqStr == null) nibble(seq.getByte(i)) else nibbleOf(seqStr.charAt(i))
+        val lo =
+          if (i + 1 >= lSeq) 0
+          else if (seqStr == null) nibble(seq.getByte(i + 1)) else nibbleOf(seqStr.charAt(i + 1))
         buf(pos) = ((hi << 4) | lo).toByte
         pos += 1
         i += 2
       }
     }
-    if (qualStar) {
-      ensure(lSeq)
-      java.util.Arrays.fill(buf, pos, pos + lSeq, 0xff.toByte)
-      pos += lSeq
-    } else {
-      ensure(lSeq)
+    ensure(lSeq)
+    if (qualStar) java.util.Arrays.fill(buf, pos, pos + lSeq, 0xff.toByte)
+    else {
       var i = 0
-      while (i < lSeq) { buf(pos + i) = (qual.getByte(i) - 33).toByte; i += 1 }
-      pos += lSeq
-    }
-    // attributes: sorted by key, dup keys last-value-wins (Map semantics of
-    // the spec path)
-    if (x.attributes >= 0 && !row.isNullAt(x.attributes)) {
-      val m = row.getMap(x.attributes)
-      val n = m.numElements()
-      if (n > 0) {
-        val ks = m.keyArray(); val vs = m.valueArray()
-        if (n == 1) {
-          if (!putTag(ks.getUTF8String(0), vs.getUTF8String(0))) { pos = 0; return fallback(row) }
-        } else {
-          // small-n insertion sort over index array by key bytes; equal keys
-          // keep only the LAST occurrence (stable sort + last-wins filter)
-          val order = new Array[Int](n)
-          var i = 0
-          while (i < n) { order(i) = i; i += 1 }
-          i = 1
-          while (i < n) {
-            val v = order(i)
-            val kv = ks.getUTF8String(v)
-            var j = i - 1
-            while (j >= 0 && ks.getUTF8String(order(j)).binaryCompare(kv) > 0) {
-              order(j + 1) = order(j); j -= 1
-            }
-            order(j + 1) = v
-            i += 1
-          }
-          i = 0
-          while (i < n) {
-            val ki = ks.getUTF8String(order(i))
-            if (!ascii(ki)) { pos = 0; return fallback(row) }
-            // among an equal-key run, emit only the occurrence latest in
-            // ORIGINAL map order (Map `+` keeps last inserted value)
-            var bestIdx = order(i)
-            var j = i + 1
-            while (j < n && ks.getUTF8String(order(j)).binaryCompare(ki) == 0) {
-              if (order(j) > bestIdx) bestIdx = order(j)
-              j += 1
-            }
-            if (!putTag(ks.getUTF8String(bestIdx), vs.getUTF8String(bestIdx))) {
-              pos = 0; return fallback(row)
-            }
-            i = j
-          }
-        }
+      while (i < lSeq) {
+        val q = if (qualStr == null) qual.getByte(i).toInt else qualStr.charAt(i).toInt
+        buf(pos + i) = (q - 33).toByte
+        i += 1
       }
     }
-    val size = pos - recStart
-    putIntLEAt(sizeAt, size)
+    pos += lSeq
+    if ((attrs != null && attrs.numElements() > 0) || spill) putTags(attrs, if (spill) nOps else 0)
+
+    // a contig absent from the dictionary must fail, not silently become
+    // unmapped — a wrong `refs` option would otherwise corrupt every record
+    if (contig != null && refId < 0)
+      throw new IllegalArgumentException(
+        s"contig '$contig' not in reference dictionary (refs option / header @SQ lines)")
+    // uint8 / uint16 wire fields — out-of-range inputs must not wrap
+    if (mapq < 0 || mapq > 255)
+      throw new IllegalArgumentException(s"requirement failed: mapq $mapq outside uint8")
+    if (lastFlags < 0 || lastFlags > 0xFFFF)
+      throw new IllegalArgumentException(s"requirement failed: flags $lastFlags outside uint16")
+    putIntLEAt(sizeAt, pos - recStart)
     pos
   }
 
-  /** Emit one tag; false = shape outside the fast path (caller falls back).
-    * Mirrors BamCodec.encodeTags for the common tag types; B-arrays and
-    * floats route through the tiny-string slow lane (identical output, rare
-    * in practice).
+  /** "10M2I3D" → `ops`; returns the op count. Digits are `Character.isDigit`
+    * and the length is an Int that may wrap, as in the object-model writer.
     */
-  private def putTag(k: UTF8String, v: UTF8String): Boolean = {
-    if (k.numBytes() != 2 || v == null || v.numBytes() < 2 || v.getByte(1) != ':') return false
-    if (!ascii(k) || !ascii(v)) return false
-    val t = v.getByte(0).toChar
+  private def parseCigar(cigar: UTF8String): Int = {
+    val s = if (RowText.ascii(cigar)) null else cigar.toString
+    val n = if (s == null) cigar.numBytes() else s.length
+    def ch(i: Int): Char = if (s == null) cigar.getByte(i).toChar else s.charAt(i)
+    var nOps = 0
+    var i = 0
+    while (i < n) {
+      var len = 0
+      while (i < n && isDigit(ch(i))) { len = len * 10 + (ch(i) - '0'); i += 1 }
+      if (i >= n) throw new IllegalArgumentException(s"requirement failed: bad cigar: $cigar")
+      // BAM packs the length into 28 bits; a larger value would wrap into
+      // the op nibble silently
+      if (len > 0xFFFFFFF) throw new IllegalArgumentException(
+        s"requirement failed: cigar op length $len exceeds BAM's 28-bit field in $cigar")
+      val op = CigarOps.indexOf(ch(i))
+      if (op < 0) throw new IllegalArgumentException(
+        s"requirement failed: bad cigar op '${ch(i)}' in $cigar")
+      if (nOps == ops.length) ops = java.util.Arrays.copyOf(ops, nOps * 2)
+      ops(nOps) = (len << 4) | op
+      nOps += 1
+      i += 1
+    }
+    nOps
+  }
+
+  /** Tags sorted by key, duplicate keys last-wins; a spilled cigar's
+    * `CG:B,I` (its `nSpill` real ops) takes CG's place, replacing a user CG.
+    */
+  private def putTags(m: MapData, nSpill: Int): Unit = {
+    val n = if (m == null) 0 else m.numElements()
+    val c = if (n == 0) 0 else keys.sort(m.keyArray(), n)
+    var cgDone = nSpill == 0
+    var i = 0
+    while (i < c) {
+      val e = keys.order(i)
+      val k = keys.key(e)
+      val vsCg = if (cgDone) -1 else compareToCg(k)
+      if (vsCg >= 0) {
+        putCg(nSpill)
+        cgDone = true
+      }
+      if (vsCg != 0) putTag(k, m.valueArray().getUTF8String(e))
+      i += 1
+    }
+    if (!cgDone) putCg(nSpill)
+  }
+
+  private def compareToCg(k: UTF8String): Int =
+    if (RowText.ascii(k)) k.binaryCompare(CgKey) else k.toString.compareTo("CG")
+
+  private def putCg(n: Int): Unit = {
+    putByte('C'); putByte('G'); putByte('B'); putByte('I')
+    putIntLE(n)
+    var i = 0
+    while (i < n) { putIntLE(ops(i)); i += 1 }
+  }
+
+  private def putTag(k: UTF8String, v: UTF8String): Unit =
+    if (!(RowText.ascii(k) && RowText.ascii(v) && putAsciiTag(k, v))) putTextTag(k.toString, v.toString)
+
+  /** The common ASCII shapes straight from bytes: Z/H, one-character A and
+    * canonical integers (optional '-', at most 18 digits, in range). False,
+    * with nothing written, for every other shape.
+    */
+  private def putAsciiTag(k: UTF8String, v: UTF8String): Boolean = {
     val vn = v.numBytes()
+    if (k.numBytes() != 2 || vn < 2 || v.getByte(1) != ':') return false
+    val t = v.getByte(0).toChar
     t match {
       case 'Z' | 'H' =>
         putByte(k.getByte(0)); putByte(k.getByte(1)); putByte(t)
@@ -315,9 +290,6 @@ final class BamRowEncoder(schema: StructType, header: SamHeader) {
         putByte(k.getByte(0)); putByte(k.getByte(1)); putByte('A'); putByte(v.getByte(2))
         true
       case 'c' | 'C' | 's' | 'S' | 'i' | 'I' =>
-        // signed ASCII int; any non-canonical form (sign chars beyond '-',
-        // >18 digits, empty) falls back — overflow/range semantics of
-        // String.toInt/toLong are then preserved by the spec path
         var i = 2
         var neg = false
         if (i < vn && v.getByte(i) == '-') { neg = true; i += 1 }
@@ -330,62 +302,113 @@ final class BamRowEncoder(schema: StructType, header: SamHeader) {
           i += 1
         }
         if (neg) num = -num
+        // I: the writer parses a Long and truncates; the rest parse an Int
+        if (t != 'I' && (num < Int.MinValue || num > Int.MaxValue)) return false
+        putByte(k.getByte(0)); putByte(k.getByte(1)); putByte(t)
         t match {
-          case 'c' | 'C' =>
-            if (num < Int.MinValue || num > Int.MaxValue) return false
-            putByte(k.getByte(0)); putByte(k.getByte(1)); putByte(t); putByte(num.toInt)
-          case 's' | 'S' =>
-            if (num < Int.MinValue || num > Int.MaxValue) return false
-            putByte(k.getByte(0)); putByte(k.getByte(1)); putByte(t); putShortLE(num.toInt)
-          case 'i' =>
-            if (num < Int.MinValue || num > Int.MaxValue) return false
-            putByte(k.getByte(0)); putByte(k.getByte(1)); putByte('i'); putIntLE(num.toInt)
-          case 'I' =>
-            // spec path: v.toLong.toInt (Long range required, then truncate)
-            putByte(k.getByte(0)); putByte(k.getByte(1)); putByte('I'); putIntLE(num.toInt)
+          case 'c' | 'C' => putByte(num.toInt)
+          case 's' | 'S' => putShortLE(num.toInt)
+          case _ => putIntLE(num.toInt)
         }
         true
-      case 'f' =>
-        putByte(k.getByte(0)); putByte(k.getByte(1)); putByte('f')
-        val fv = try java.lang.Float.parseFloat(v.substring(2, vn).toString)
-        catch { case _: NumberFormatException => return false }
-        putIntLE(java.lang.Float.floatToIntBits(fv))
-        true
-      case _ => false // 'B' arrays and unknown types: spec path
+      case _ => false
     }
   }
 
-  private def fallback(row: InternalRow): Int = {
-    pos = 0
-    val rec = RowToRecord.convert(row, idx)
-    lastRefId = header.refId(rec.contig)
-    lastStart = rec.start
-    lastEnd = rec.end
-    lastFlags = rec.flags
-    val bytes = BamCodec.encodeRecord(rec, header)
-    ensure(bytes.length)
-    System.arraycopy(bytes, 0, buf, 0, bytes.length)
-    pos = bytes.length
-    pos
+  /** Any tag, with the object-model writer's `String` semantics and
+    * exceptions (`require`, `toInt`/`toLong`/`toFloat`, `charAt`, the
+    * `IOException` for an unknown type or B subtype).
+    */
+  private def putTextTag(tag: String, typed: String): Unit = {
+    if (tag.length != 2) throw new IllegalArgumentException(s"requirement failed: bad tag name $tag")
+    if (typed.length < 2 || typed.charAt(1) != ':')
+      throw new IllegalArgumentException(s"requirement failed: bad typed value '$typed' (want T:value)")
+    putByte(tag.charAt(0)); putByte(tag.charAt(1))
+    val t = typed.charAt(0)
+    val v = typed.substring(2)
+    putByte(t)
+    t match {
+      case 'A' => putByte(v.charAt(0))
+      case 'c' | 'C' => putByte(v.toInt)
+      case 's' | 'S' => putShortLE(v.toInt)
+      case 'i' => putIntLE(v.toInt)
+      case 'I' => putIntLE(v.toLong.toInt)
+      case 'f' => putIntLE(java.lang.Float.floatToRawIntBits(v.toFloat))
+      case 'Z' | 'H' =>
+        val b = v.getBytes("UTF-8")
+        ensure(b.length)
+        System.arraycopy(b, 0, buf, pos, b.length)
+        pos += b.length
+        putByte(0)
+      case 'B' =>
+        val parts = v.split(',')
+        val sub = parts(0).charAt(0)
+        putByte(sub)
+        putIntLE(parts.length - 1)
+        var i = 1
+        while (i < parts.length) {
+          val p = parts(i)
+          sub match {
+            case 'c' | 'C' => putByte(p.toInt)
+            case 's' | 'S' => putShortLE(p.toInt)
+            case 'i' => putIntLE(p.toInt)
+            case 'I' => putIntLE(p.toLong.toInt)
+            case 'f' => putIntLE(java.lang.Float.floatToRawIntBits(p.toFloat))
+            case x => throw new java.io.IOException(s"bad B subtype $x")
+          }
+          i += 1
+        }
+      case x => throw new java.io.IOException(s"bad tag type $x")
+    }
   }
 }
 
 object BamRowEncoder {
-  /** seq nibble table, derived from the spec path's `seqNibble(c.toUpper)`
-    * for every ASCII byte — identity with the String path by construction.
-    */
-  private val NibbleTable: Array[Byte] = {
-    val t = new Array[Byte](128)
-    val nibbles = "=ACMGRSVTWYHKDBN"
-    var c = 0
-    while (c < 128) {
-      val u = Character.toUpperCase(c.toChar)
-      val i = nibbles.indexOf(u)
-      t(c) = (if (i < 0) 15 else i).toByte
-      c += 1
-    }
-    t
+  /** Column positions of the read schema in a sink's input (-1 = absent). */
+  final case class Idx(readName: Int, flags: Int, contig: Int, start: Int, end: Int, mapq: Int,
+                       cigar: Int, mateContig: Int, mateStart: Int, tlen: Int, seq: Int, qual: Int,
+                       attributes: Int) extends Serializable
+
+  def indices(schema: StructType): Idx = {
+    def i(n: String) = schema.fieldNames.indexOf(n)
+    Idx(i("readName"), i("flags"), i("contig"), i("start"), i("end"), i("mapq"), i("cigar"),
+      i("mateContig"), i("mateStart"), i("tlen"), i("seq"), i("qual"), i("attributes"))
   }
 
-  def nibble(b: Byte): Int = NibbleTable(b & 0x7f)
+  private val CigarOps = "MIDNSHP=X"
+  private val SeqNibbles = "=ACMGRSVTWYHKDBN"
+  private val CgKey = UTF8String.fromString("CG")
+
+  private def str(row: InternalRow, i: Int): UTF8String =
+    if (i < 0 || row.isNullAt(i)) null else row.getUTF8String(i)
+
+  private def isStar(s: UTF8String): Boolean = s.numBytes() == 1 && s.getByte(0) == '*'
+
+  private def isDigit(c: Char): Boolean =
+    if (c < 128) c >= '0' && c <= '9' else Character.isDigit(c)
+
+  /** Sum of the reference-consuming (M D N = X) op lengths, wrapping as Int. */
+  private def refLength(ops: Array[Int], n: Int): Int = {
+    var r = 0
+    var i = 0
+    while (i < n) {
+      val op = ops(i) & 0xf
+      if (op == 0 || op == 2 || op == 3 || op == 7 || op == 8) r += ops(i) >>> 4
+      i += 1
+    }
+    r
+  }
+
+  /** The seq nibble of one UTF-16 unit: its upper case's place in
+    * `=ACMGRSVTWYHKDBN`, or 15 (N).
+    */
+  private def nibbleOf(c: Char): Int = {
+    val i = SeqNibbles.indexOf(Character.toUpperCase(c))
+    if (i < 0) 15 else i
+  }
+
+  /** [[nibbleOf]] for every ASCII byte. */
+  private val NibbleTable: Array[Byte] = Array.tabulate[Byte](128)(c => nibbleOf(c.toChar).toByte)
+
+  private def nibble(b: Byte): Int = NibbleTable(b & 0x7f)
 }

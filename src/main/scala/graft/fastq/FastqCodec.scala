@@ -88,12 +88,4 @@ object FastqCodec {
     val comment = if (sp < 0 || sp == l0.length - 1) null else l0.substring(sp + 1)
     FastqRecord(name, comment, l1, l3)
   }
-
-  /** Record → the four wire lines (bare '+' separator). */
-  def toLines(r: FastqRecord, sb: StringBuilder): Unit = {
-    sb.append('@').append(r.readName)
-    if (r.comment != null && r.comment.nonEmpty) sb.append(' ').append(r.comment)
-    sb.append('\n').append(r.seq).append('\n').append('+').append('\n')
-      .append(r.qual).append('\n')
-  }
 }

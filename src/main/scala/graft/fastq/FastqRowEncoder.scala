@@ -3,59 +3,38 @@ package graft.fastq
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.{RowBytes, RowText}
 import graft.sources.fastq.RowToFastq
 
-/** Direct InternalRow → FASTQ wire bytes ('@name[ comment]\nseq\n+\nqual\n'),
-  * bypassing the FastqRecord/String materialization. The rendering is pure
-  * byte concatenation, so it is identical to the object path for every
-  * valid-UTF-8 input by construction (FastqRowEncoderSpec proves it); null
-  * mandatory columns route through the spec path so its NPE surface is
-  * preserved.
+/** InternalRow → FASTQ wire bytes ('@name[ comment]\nseq\n+\nqual\n'): the
+  * FASTQ sink's only write path. Byte for byte the record the test-scope
+  * object-model writer (`FastqSpecWriter`) renders, proven by
+  * FastqRowEncoderSpec and RowEncoderSweepSpec: non-ASCII
+  * text is written as its `String` round trip (malformed UTF-8 becomes
+  * U+FFFD), and a null name, seq or qual is the converter's
+  * `NullPointerException`.
   */
-final class FastqRowEncoder(idx: RowToFastq.Idx) {
-  var buf: Array[Byte] = new Array[Byte](1 << 12)
-  private var pos = 0
+final class FastqRowEncoder(idx: RowToFastq.Idx) extends RowBytes(1 << 12) {
 
-  private def ensure(n: Int): Unit =
-    if (pos + n > buf.length) {
-      var cap = buf.length
-      while (cap < pos + n) cap <<= 1
-      buf = java.util.Arrays.copyOf(buf, cap)
-    }
-  private def putByte(b: Int): Unit = { ensure(1); buf(pos) = b.toByte; pos += 1 }
-  private def putUtf8(s: UTF8String): Unit = {
-    val n = s.numBytes()
-    ensure(n)
-    s.writeToMemory(buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + pos)
-    pos += n
-  }
+  private def required(row: InternalRow, i: Int, what: String): UTF8String =
+    if (row.isNullAt(i)) throw new NullPointerException(s"null FASTQ $what")
+    else RowText.text(row.getUTF8String(i))
 
   def encode(row: InternalRow): Int = {
     pos = 0
-    if (row.isNullAt(idx.readName) || row.isNullAt(idx.seq) || row.isNullAt(idx.qual))
-      return fallback(row) // spec path NPEs on null mandatory fields
+    val name = required(row, idx.readName, "readName")
+    val comment =
+      if (idx.comment < 0 || row.isNullAt(idx.comment)) null else row.getUTF8String(idx.comment)
+    val seq = required(row, idx.seq, "seq")
+    val qual = required(row, idx.qual, "qual")
     putByte('@')
-    putUtf8(row.getUTF8String(idx.readName))
-    if (idx.comment >= 0 && !row.isNullAt(idx.comment)) {
-      val c = row.getUTF8String(idx.comment)
-      if (c.numBytes() > 0) { putByte(' '); putUtf8(c) }
-    }
+    putUtf8(name)
+    if (comment != null && comment.numBytes() > 0) { putByte(' '); putUtf8(RowText.text(comment)) }
     putByte('\n')
-    putUtf8(row.getUTF8String(idx.seq))
+    putUtf8(seq)
     putByte('\n'); putByte('+'); putByte('\n')
-    putUtf8(row.getUTF8String(idx.qual))
+    putUtf8(qual)
     putByte('\n')
-    pos
-  }
-
-  private def fallback(row: InternalRow): Int = {
-    pos = 0
-    val sb = new StringBuilder(256)
-    FastqCodec.toLines(RowToFastq.convert(row, idx), sb)
-    val bytes = sb.toString.getBytes("UTF-8")
-    ensure(bytes.length)
-    System.arraycopy(bytes, 0, buf, 0, bytes.length)
-    pos = bytes.length
     pos
   }
 }

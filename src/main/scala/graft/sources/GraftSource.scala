@@ -178,10 +178,10 @@ abstract class GraftScan(format: String, options: Map[String, String], required:
       try {
         val f = new PlanInput(file, in, conf, splitSize)
         val plan = planFile(f)
-        // locality hints: block hosts of each split's byte range (one
+        // locality hints: block hosts of each split's byte ranges (one
         // block-list fetch per file, shared by every split)
         val hostsOf = HadoopIO.blockHostsFor(f.fs, file, f.size)
-        Seq((file.toString, plan, plan.splits.map(s => s.partition(hostsOf(s.start, s.end)))))
+        Seq((file.toString, plan, plan.splits.map(s => s.partition(hostsOf(s.ranges)))))
       } finally in.close()
     }
     // header-compat across directory inputs (the reference silently uses
@@ -196,7 +196,7 @@ abstract class GraftScan(format: String, options: Map[String, String], required:
       }
     }
     val splits = plans.flatMap(_._2.splits)
-    driverMetrics = PlanMetrics.report(splits.length, splits.iterator.map(s => s.end - s.start).sum,
+    driverMetrics = PlanMetrics.report(splits.length, splits.iterator.map(_.bytes).sum,
       plans.iterator.map(_._2.indexSpanBytes).sum)
     plans.flatMap(_._3).toArray
   }
@@ -249,10 +249,18 @@ final class PlanInput(val path: Path, val in: SeekableInput, val conf: Configura
   }
 }
 
-/** One planned split: the byte range its reader covers (for locality
-  * hints and plan metrics) and its partition, built from the range's hosts.
+/** One planned split: the byte ranges its reader covers (for locality
+  * hints and plan metrics) and its partition, built from the ranges' hosts.
   */
-final case class PlannedSplit(start: Long, end: Long, partition: Array[String] => InputPartition)
+final case class PlannedSplit(ranges: Seq[(Long, Long)], partition: Array[String] => InputPartition) {
+  def bytes: Long = ranges.iterator.map { case (s, e) => e - s }.sum
+}
+
+object PlannedSplit {
+  /** A split reading one contiguous range `[start, end)`. */
+  def apply(start: Long, end: Long, partition: Array[String] => InputPartition): PlannedSplit =
+    PlannedSplit(Seq((start, end)), partition)
+}
 
 /** One file's plan: its splits, the bytes of the index spans that
   * narrowed it (0 when no index did), and the header key every file of a

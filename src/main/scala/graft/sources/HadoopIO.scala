@@ -122,28 +122,29 @@ object HadoopIO {
     * carries block hosts); DSv2 sources must ask for it. ONE
     * `getFileBlockLocations` RPC fetches the whole file's block list; the
     * returned closure then ranks hosts per split locally — top 3 by bytes
-    * of the range they hold (FileInputFormat's split-host semantics) — so
+    * of the ranges they hold (FileInputFormat's split-host semantics) — so
     * planning stays O(1) filesystem calls per file no matter how many
     * splits tile it. Filesystems that report no topology (object stores)
     * or throw yield empty hints, which Spark treats as "schedule anywhere"
     * — never worse than before.
     */
-  def blockHostsFor(fs: FileSystem, file: Path, size: Long): (Long, Long) => Array[String] = {
+  def blockHostsFor(fs: FileSystem, file: Path, size: Long): Seq[(Long, Long)] => Array[String] = {
     val blocks =
       try fs.getFileBlockLocations(fs.getFileStatus(file), 0, size)
       catch { case _: Exception => Array.empty[org.apache.hadoop.fs.BlockLocation] }
-    (start: Long, end0: Long) => {
-      val end = math.min(end0, size)
-      if (blocks == null || blocks.isEmpty || end <= start) Array.empty[String]
+    (ranges: Seq[(Long, Long)]) =>
+      if (blocks == null || blocks.isEmpty) Array.empty[String]
       else {
         val w = scala.collection.mutable.LinkedHashMap[String, Long]()
-        blocks.foreach { b =>
-          val o = math.min(end, b.getOffset + b.getLength) - math.max(start, b.getOffset)
-          if (o > 0) b.getHosts.foreach(h => w.update(h, w.getOrElse(h, 0L) + o))
+        ranges.foreach { case (start, end0) =>
+          val end = math.min(end0, size)
+          blocks.foreach { b =>
+            val o = math.min(end, b.getOffset + b.getLength) - math.max(start, b.getOffset)
+            if (o > 0) b.getHosts.foreach(h => w.update(h, w.getOrElse(h, 0L) + o))
+          }
         }
         w.toSeq.sortBy(-_._2).take(3).map(_._1).toArray
       }
-    }
   }
 
   /** Concatenates `parts`, in the given order, into `target` — exactly the

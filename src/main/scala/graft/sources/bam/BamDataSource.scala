@@ -193,7 +193,6 @@ class BamScan(options: Map[String, String], required: StructType, pushed: Array[
   // context, lenient warns+counts (salvaging tag-only failures), and
   // permissive skips silently — framing stays aligned in every tier
   private val stringency = Stringency.fromOptions(options)
-  private val extraSlack = options.get("intervalslack").map(_.toInt).getOrElse(0)
 
   override protected def planFile(f: PlanInput): FilePlan = {
     val (header, headerEnd) = BamIO.readHeader(f.in)
@@ -230,7 +229,7 @@ class BamScan(options: Map[String, String], required: StructType, pushed: Array[
         // unknown/old .gci versions and unsorted files disable pruning,
         // never mis-prune
         f.sidecar(".gci")(GciIndex.read).filter(_.sorted).map { gci =>
-          (BamIntervalPlan.gciWindows(gci, ivs, header.refIndex, traversal.unplacedUnmapped, extraSlack),
+          (BamIntervalPlan.gciWindows(gci, ivs, header.refIndex, traversal.unplacedUnmapped),
             () => sbi.offsets)
         }
       })
@@ -367,16 +366,15 @@ private[bam] object BamIntervalPlan {
     * fixed slack would be mis-pruned).
     */
   def gciWindows(g: GciIndex, ivs: Seq[GenomicInterval], refIndex: Map[String, Int],
-                 unplacedUnmapped: Boolean, extraSlack: Int): Seq[(Long, Long)] =
+                 unplacedUnmapped: Boolean): Seq[(Long, Long)] =
     (0 until g.voffs.length - 1).filter { j =>
       val loR = GciIndex.orderRef(g.refs(j)); val loP = g.pos(j)
       val hiR = GciIndex.orderRef(g.refs(j + 1)); val hiP = g.pos(j + 1)
-      val slack = g.spans(j) + extraSlack
       (unplacedUnmapped && hiR == Int.MaxValue) ||
         ivs.exists { iv =>
           refIndex.get(iv.contig).exists { r =>
             // lexicographic overlap of [(loR,loP),(hiR,hiP)] with [(r,ivLoP),(r,ivHiP)]
-            val below = hiR < r || (hiR == r && hiP < iv.start - 1 - slack)
+            val below = hiR < r || (hiR == r && hiP < iv.start - 1 - g.spans(j))
             val above = loR > r || (loR == r && loP > iv.end - 1)
             !below && !above
           }
@@ -744,9 +742,8 @@ private[sources] final class BamIndexSampler(granularity: Long) {
 }
 
 /** One BAM part: direct InternalRow → wire encoding (BamRowEncoder, no
-  * per-record AlignmentRecord/String/Map on the hot path; it falls back to
-  * the RowToRecord spec path for shapes it can't prove byte-identical),
-  * sampled by a [[BamIndexSampler]] and building BAI bins.
+  * per-record AlignmentRecord/String/Map), sampled by a [[BamIndexSampler]]
+  * and building BAI bins.
   */
 private final class BamPartWriter(s: BamSink, raw: java.io.OutputStream,
                                   sidecar: String => java.io.OutputStream)
@@ -784,40 +781,4 @@ private final class BamPartWriter(s: BamSink, raw: java.io.OutputStream,
     m
   }
   override def abort(): Unit = out.close()
-}
-
-/** InternalRow (in dataframe column order) → AlignmentRecord. */
-object RowToRecord {
-  case class Idx(readName: Int, flags: Int, contig: Int, start: Int, end: Int, mapq: Int,
-                 cigar: Int, mateContig: Int, mateStart: Int, tlen: Int, seq: Int, qual: Int,
-                 attributes: Int) extends Serializable
-
-  def indices(schema: StructType): Idx = {
-    def i(n: String) = schema.fieldNames.indexOf(n)
-    Idx(i("readName"), i("flags"), i("contig"), i("start"), i("end"), i("mapq"), i("cigar"),
-      i("mateContig"), i("mateStart"), i("tlen"), i("seq"), i("qual"), i("attributes"))
-  }
-
-  def convert(row: InternalRow, x: Idx): AlignmentRecord = {
-    def str(i: Int): String = if (i < 0 || row.isNullAt(i)) null else row.getUTF8String(i).toString
-    def int(i: Int): Int = if (i < 0 || row.isNullAt(i)) 0 else row.getInt(i)
-    val attrs: Map[String, String] =
-      if (x.attributes < 0 || row.isNullAt(x.attributes)) Map.empty
-      else {
-        val m = row.getMap(x.attributes)
-        val ks = m.keyArray(); val vs = m.valueArray()
-        (0 until m.numElements()).map { i =>
-          val v = vs.getUTF8String(i)
-          // the permissive table schema (valueContainsNull=true, which keeps
-          // the write plan in codegen) no longer guards this path — fail
-          // with the field named instead of an opaque NPE in the encoder
-          if (v == null) throw new IllegalArgumentException(
-            s"null value for attributes key '${ks.getUTF8String(i)}' (SAM tag values cannot be null)")
-          ks.getUTF8String(i).toString -> v.toString
-        }.toMap
-      }
-    AlignmentRecord(str(x.readName), int(x.flags), str(x.contig), int(x.start), int(x.end),
-      int(x.mapq), str(x.cigar), str(x.mateContig), int(x.mateStart), int(x.tlen),
-      str(x.seq), str(x.qual), attrs)
-  }
 }

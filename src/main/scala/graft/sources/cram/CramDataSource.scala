@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 
-import graft.bam.{AlignmentRecord, RecordToRow, SamHeader}
+import graft.bam.{AlignmentRecord, BamRowEncoder, RecordToRow, SamHeader}
 import graft.cram.{CraiEntry, CraiIndex, CramContainer, CramContainers,
   CramRecordCodec, CramRecordWriter, CramRefSource, Fasta, FastaRefSource, NoRefSource}
 import graft.sources.{FilePlan, GenomicInterval, GraftProvider, GraftScan, HadoopIO, PartEncoder, PlanInput,
@@ -388,7 +388,9 @@ class CramScan(options: Map[String, String], required: StructType,
         }
         if (cur.nonEmpty) groups += cur
         FilePlan(groups.result().map { g =>
-          PlannedSplit(g.head._1, g.last._1 + g.last._2, CramInputPartition(file, g.map(_._1).toArray, pred, _))
+          // the reader visits only the selected containers: hints and
+          // plannedBytes cover those, not the containers between them
+          PlannedSplit(g.map { case (o, len) => (o, o + len) }, CramInputPartition(file, g.map(_._1).toArray, pred, _))
         }, if (pred.isDefined) selected.iterator.map(_._2).sum else 0L)
       case None =>
         // no index: plain byte-range splits — container discovery happens
@@ -793,7 +795,7 @@ private final class CramRecordsPartWriter(s: CramSink, header: SamHeader, raw: j
     put(CramContainers.encodeFileDefinition(minor = if (s.wire > 0) 1 else 0))
     put(CramRecordWriter.encodeHeaderContainer(header))
   }
-  private val idx = graft.sources.bam.RowToRecord.indices(s.schema)
+  private val idx = RowToRecord.indices(s.schema)
   private val buf = scala.collection.mutable.ArrayBuffer.empty[AlignmentRecord]
   private var recordCounter = 0L
   // reference-based encode when the write carries a fasta option
@@ -810,8 +812,38 @@ private final class CramRecordsPartWriter(s: CramSink, header: SamHeader, raw: j
   }
 
   override def write(row: InternalRow): Unit = {
-    buf += graft.sources.bam.RowToRecord.convert(row, idx)
+    buf += RowToRecord.convert(row, idx)
     if (buf.length >= s.perContainer) flush()
   }
   override def close(): Unit = fastaOpened.foreach(_._1.close())
+}
+
+/** InternalRow (in dataframe column order) → AlignmentRecord: the CRAM
+  * records sink's converter (the v3 record writer takes records).
+  */
+object RowToRecord {
+  def indices(schema: StructType): BamRowEncoder.Idx = BamRowEncoder.indices(schema)
+
+  def convert(row: InternalRow, x: BamRowEncoder.Idx): AlignmentRecord = {
+    def str(i: Int): String = if (i < 0 || row.isNullAt(i)) null else row.getUTF8String(i).toString
+    def int(i: Int): Int = if (i < 0 || row.isNullAt(i)) 0 else row.getInt(i)
+    val attrs: Map[String, String] =
+      if (x.attributes < 0 || row.isNullAt(x.attributes)) Map.empty
+      else {
+        val m = row.getMap(x.attributes)
+        val ks = m.keyArray(); val vs = m.valueArray()
+        (0 until m.numElements()).map { i =>
+          val v = vs.getUTF8String(i)
+          // the permissive table schema (valueContainsNull=true, which keeps
+          // the write plan in codegen) no longer guards this path — fail
+          // with the field named instead of an opaque NPE in the encoder
+          if (v == null) throw new IllegalArgumentException(
+            s"null value for attributes key '${ks.getUTF8String(i)}' (SAM tag values cannot be null)")
+          ks.getUTF8String(i).toString -> v.toString
+        }.toMap
+      }
+    AlignmentRecord(str(x.readName), int(x.flags), str(x.contig), int(x.start), int(x.end),
+      int(x.mapq), str(x.cigar), str(x.mateContig), int(x.mateStart), int(x.tlen),
+      str(x.seq), str(x.qual), attrs)
+  }
 }

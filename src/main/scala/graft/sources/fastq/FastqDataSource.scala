@@ -197,8 +197,7 @@ case class FastqSink(singleFile: Boolean, bgzf: Boolean, partSuffix: String, lev
       else if (!singleFile && (partSuffix.endsWith(".gz") || partSuffix.endsWith(".bgz")))
         new graft.bgzf.BgzfOutputStream(raw, writeEof = true, level = level)
       else new java.io.BufferedOutputStream(raw, 1 << 16)
-    // direct InternalRow → four-line record bytes; falls back to the
-    // RowToFastq + FastqCodec.toLines spec path on null mandatory fields
+    // direct InternalRow → four-line record bytes
     private val enc = new graft.fastq.FastqRowEncoder(RowToFastq.indices(schema))
     override def write(row: InternalRow): Unit = {
       val len = enc.encode(row)
@@ -209,7 +208,7 @@ case class FastqSink(singleFile: Boolean, bgzf: Boolean, partSuffix: String, lev
   }
 }
 
-/** InternalRow → FastqRecord against the sink's input schema. */
+/** Column positions of the FASTQ schema in the sink's input (-1 = no comment). */
 object RowToFastq {
   case class Idx(readName: Int, comment: Int, seq: Int, qual: Int)
   def indices(schema: StructType): Idx = Idx(
@@ -217,10 +216,4 @@ object RowToFastq {
     if (schema.fieldNames.contains("comment")) schema.fieldIndex("comment") else -1,
     schema.fieldIndex("seq"),
     schema.fieldIndex("qual"))
-  def convert(row: InternalRow, i: Idx): FastqRecord = FastqRecord(
-    readName = row.getUTF8String(i.readName).toString,
-    comment = if (i.comment < 0 || row.isNullAt(i.comment)) null
-      else row.getUTF8String(i.comment).toString,
-    seq = row.getUTF8String(i.seq).toString,
-    qual = row.getUTF8String(i.qual).toString)
 }

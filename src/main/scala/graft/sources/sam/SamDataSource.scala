@@ -156,8 +156,7 @@ case class SamSink(header: SamHeader, singleFile: Boolean, schema: StructType)
   override def openPart(raw: java.io.OutputStream, sidecar: String => java.io.OutputStream)
       : PartEncoder[Unit] = new PartEncoder[Unit] {
     private val out = new java.io.BufferedOutputStream(raw, 1 << 16)
-    // direct InternalRow → line-bytes encoder; falls back to the
-    // RowToRecord + SamCodec.toLine spec path for non-fast-path shapes
+    // direct InternalRow → line-bytes encoder
     private val enc = new graft.sam.SamRowEncoder(schema)
     if (!singleFile) out.write(header.text.getBytes("UTF-8"))
     override def write(row: InternalRow): Unit = {

@@ -7,12 +7,12 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.{CountingOutputStream, FilePlan, GenomicInterval, GraftProvider, GraftScan, HadoopIO,
   LineCursor, PartEncoder, PlanInput, PlannedSplit, PushedRegion, RecordFormat, SerializableConf, SinkFormat,
   SplitTextReader, Stringency, StringencyLog}
-import graft.vcf.{Genotype, Variant, VcfFormatMask, VcfHeader, VcfRowDecoder}
+import graft.vcf.{Variant, VcfFormatMask, VcfHeader, VcfRowDecoder}
 
 /** `format("vcf")` — VCF scan/sink over plain, BGZF (.vcf.bgz / BGZF .vcf.gz,
   * splittable), or plain-gzip (readable, single split) text, mirroring the
@@ -324,8 +324,7 @@ private final class VcfPartWriter(s: VcfSink, raw: java.io.OutputStream)
     else null
   private val out: java.io.OutputStream = if (bgzfOut != null) bgzfOut else counting
   // direct InternalRow → line-bytes encoder (VcfRowEncoder): no per-row
-  // Variant/Genotype/String/Map materialization on the hot path; falls back
-  // to the RowToVariant spec path for shapes it can't prove byte-identical
+  // Variant/Genotype/String/Map materialization
   private val enc = new graft.vcf.VcfRowEncoder(s.schema)
   private var samples: Seq[String] = Seq.empty
   private var wroteShardHeader = false
@@ -359,85 +358,4 @@ private final class VcfPartWriter(s: VcfSink, raw: java.io.OutputStream)
       if (tidx != null) tidx.result() else null)
   }
   override def abort(): Unit = out.close()
-}
-
-/** InternalRow → Variant (write side). */
-object RowToVariant {
-  case class Idx(contig: Int, start: Int, end: Int, id: Int, ref: Int, alt: Int,
-                 qual: Int, filters: Int, info: Int, genotypes: Int,
-                 gSample: Int, gGt: Int, gFields: Int, gArity: Int) extends Serializable
-
-  def indices(schema: StructType): Idx = {
-    def i(n: String) = schema.fieldNames.indexOf(n)
-    // genotype SUBFIELDS resolve by name too: a user df built as
-    // struct(gt, sample, fields) — legal, same names — must not have its
-    // sample written as the GT call (the read side has the mirror rule)
-    val gi = i("genotypes")
-    val (gs, gg, gf, ga) =
-      if (gi < 0) (-1, -1, -1, 0)
-      else schema(gi).dataType match {
-        case ArrayType(st: StructType, _) =>
-          (st.fieldNames.indexOf("sample"), st.fieldNames.indexOf("gt"),
-            st.fieldNames.indexOf("fields"), st.length)
-        case _ => (-1, -1, -1, 0)
-      }
-    Idx(i("contig"), i("start"), i("end"), i("id"), i("ref"), i("alt"), i("qual"),
-      i("filters"), i("info"), gi, gs, gg, gf, ga)
-  }
-
-  def convert(row: InternalRow, x: Idx): Variant = {
-    def str(i: Int): String = if (i < 0 || row.isNullAt(i)) null else row.getUTF8String(i).toString
-    def strSeq(i: Int): Seq[String] =
-      if (i < 0 || row.isNullAt(i)) Nil
-      else {
-        val a = row.getArray(i)
-        (0 until a.numElements()).map(j => a.getUTF8String(j).toString)
-      }
-    def strMap(i: Int): Map[String, String] =
-      if (i < 0 || row.isNullAt(i)) Map.empty
-      else {
-        val m = row.getMap(i)
-        val ks = m.keyArray(); val vs = m.valueArray()
-        (0 until m.numElements()).map { j =>
-          val v = vs.getUTF8String(j)
-          // permissive table schema (valueContainsNull=true) no longer
-          // guards this path — fail with the key named, not an opaque NPE
-          if (v == null) throw new IllegalArgumentException(
-            s"null value for map key '${ks.getUTF8String(j)}' in VCF write (INFO/FORMAT values cannot be null)")
-          ks.getUTF8String(j).toString -> v.toString
-        }.toMap
-      }
-    val genotypes: Seq[Genotype] =
-      if (x.genotypes < 0 || row.isNullAt(x.genotypes)) Nil
-      else {
-        val a = row.getArray(x.genotypes)
-        (0 until a.numElements()).map { j =>
-          val g = a.getStruct(j, x.gArity)
-          val fields =
-            if (x.gFields < 0 || g.isNullAt(x.gFields)) Map.empty[String, String]
-            else {
-              val m = g.getMap(x.gFields)
-              val ks = m.keyArray(); val vs = m.valueArray()
-              (0 until m.numElements()).map { t =>
-                val v = vs.getUTF8String(t)
-                if (v == null) throw new IllegalArgumentException(
-                  s"null value for FORMAT key '${ks.getUTF8String(t)}' in VCF write (use '.' for missing)")
-                ks.getUTF8String(t).toString -> v.toString
-              }.toMap
-            }
-          Genotype(
-            if (x.gSample < 0 || g.isNullAt(x.gSample)) null
-            else g.getUTF8String(x.gSample).toString,
-            if (x.gGt < 0 || g.isNullAt(x.gGt)) "./."
-            else g.getUTF8String(x.gGt).toString,
-            fields)
-        }
-      }
-    Variant(str(x.contig),
-      if (row.isNullAt(x.start)) 0 else row.getInt(x.start),
-      if (x.end < 0 || row.isNullAt(x.end)) 0 else row.getInt(x.end),
-      str(x.id), str(x.ref), strSeq(x.alt),
-      if (x.qual < 0 || row.isNullAt(x.qual)) null else java.lang.Double.valueOf(row.getDouble(x.qual)),
-      strSeq(x.filters), strMap(x.info), genotypes)
-  }
 }

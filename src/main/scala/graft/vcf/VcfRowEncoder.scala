@@ -1,29 +1,34 @@
 package graft.vcf
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.util.MapData
+import org.apache.spark.sql.types.{ArrayType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.vcf.RowToVariant
+import graft.sources.{RowBytes, RowText, SortedKeys}
 
-/** Direct InternalRow → VCF line bytes (trailing '\n' included), bypassing
-  * the Variant/Genotype materialization (UTF8String→String per field,
-  * per-genotype Scala Maps) the object path pays per row. Byte-compatible
-  * with `(VcfCodec.toLine(RowToVariant.convert(row, idx)) + "\n").getBytes`
-  * — the object path stays as the executable spec (VcfRowEncoderSpec proves
-  * byte identity) and as the runtime fallback for any shape the fast path
-  * can't prove it renders identically (non-ASCII text, null contig/ref).
+/** InternalRow → VCF line bytes (trailing '\n' included): the VCF sink's
+  * only write path. Byte for byte the line the test-scope object-model
+  * writer (`VcfSpecWriter` over the row converted to a `Variant`) renders,
+  * and it throws where that writer throws, with the same exception class
+  * (VcfRowEncoderSpec and RowEncoderSweepSpec).
   *
-  * The encoder owns a reusable output buffer: `encode` returns the line
-  * length and the caller writes `buf` — zero per-row allocation on the
-  * GT-only cohort fast shape (the hot write path, VcfWriteCostSpec).
+  * ASCII text is copied from the row's bytes; non-ASCII text is written as
+  * its `String` round trip (malformed UTF-8 becomes U+FFFD) and map keys sort
+  * in `String` order. A null CHROM or REF is written as the text `null`, as
+  * the writer's `StringBuilder` does. No per-row allocation on the ASCII
+  * GT-only cohort shape (the hot write path, VcfWriteCostSpec).
   */
-final class VcfRowEncoder(schema: StructType) {
-  private val idx = RowToVariant.indices(schema)
+final class VcfRowEncoder(schema: StructType) extends RowBytes(1 << 12) {
+  import VcfRowEncoder._
 
-  var buf: Array[Byte] = new Array[Byte](1 << 12)
-  private var pos = 0
+  private val idx = indices(schema)
+  private val keys = new SortedKeys
+  /** FORMAT keys of the row being encoded, in their `String` forms. */
+  private val fmtKeys = new java.util.ArrayList[UTF8String]()
+  /** The row's genotype structs and FORMAT maps, fetched once per row. */
+  private var gRows = new Array[InternalRow](16)
+  private var gMaps = new Array[MapData](16)
 
   // coordinates of the row just encoded, for writer-side index bookkeeping
   var lastContig: String = _
@@ -35,46 +40,24 @@ final class VcfRowEncoder(schema: StructType) {
   // incoming bytes are writer-reused, so the key must be cloned
   private var memoContig: UTF8String = _
 
-  private def ensure(n: Int): Unit =
-    if (pos + n > buf.length) {
-      var cap = buf.length
-      while (cap < pos + n) cap <<= 1
-      buf = java.util.Arrays.copyOf(buf, cap)
-    }
-
-  private def putByte(b: Int): Unit = { ensure(1); buf(pos) = b.toByte; pos += 1 }
-  private def putUtf8(s: UTF8String): Unit = {
-    val n = s.numBytes()
-    ensure(n)
-    s.writeToMemory(buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + pos)
-    pos += n
-  }
-  private def putAsciiString(s: String): Unit = {
-    ensure(s.length)
-    var i = 0
-    while (i < s.length) { buf(pos + i) = s.charAt(i).toByte; i += 1 }
-    pos += s.length
-  }
   private def putInt(v0: Int): Unit =
-    if (v0 < 0) putAsciiString(v0.toString) // rare; Int.MinValue-safe
+    if (v0 < 0) putAscii(v0.toString) // rare; Int.MinValue-safe
     else {
       var v = v0
-      ensure(11)
+      ensure(10)
       var digits = 1
       var p = 10
       while (p <= v && p < 1000000000) { digits += 1; p *= 10 }
-      if (v >= 1000000000 * 10L) digits = 10 // unreachable for Int, guard
+      if (p <= v) digits = 10
       var i = pos + digits - 1
       while (i >= pos) { buf(i) = ('0' + v % 10).toByte; v /= 10; i -= 1 }
       pos += digits
     }
 
-  private def ascii(s: UTF8String): Boolean = {
-    val n = s.numBytes()
-    var i = 0
-    while (i < n) { if (s.getByte(i) < 0) return false; i += 1 }
-    true
-  }
+  /** `s`'s `String` form; the text `null` for null, as `StringBuilder.append`. */
+  private def putNullable(s: UTF8String): Unit =
+    if (s == null) { putByte('n'); putByte('u'); putByte('l'); putByte('l') }
+    else putUtf8(RowText.text(s))
 
   /** Sample names of this row's genotypes (writer header bootstrap — called
     * until the first genotyped row is seen, then never again).
@@ -89,256 +72,202 @@ final class VcfRowEncoder(schema: StructType) {
     }
   }
 
-  /** Encode one row into `buf` (line + '\n'); returns the length. */
+  /** Encode one row into `buf` (line + '\n'); returns the length. Checks run
+    * in the converter's order: per genotype a null struct or a null FORMAT
+    * value, then a null ALT or FILTER element, then a null INFO value.
+    */
   def encode(row: InternalRow): Int = {
     pos = 0
     val x = idx
     lastStart = if (row.isNullAt(x.start)) 0 else row.getInt(x.start)
     lastEnd = if (x.end < 0 || row.isNullAt(x.end)) 0 else row.getInt(x.end)
 
-    val contig: UTF8String =
-      if (x.contig < 0 || row.isNullAt(x.contig)) null else row.getUTF8String(x.contig)
-    if (contig == null || !ascii(contig)) return fallback(row)
-    if (memoContig == null || !memoContig.equals(contig)) {
+    // the converter builds the genotypes before the site fields: a null
+    // genotype or FORMAT value fails first
+    val gts = if (x.genotypes < 0 || row.isNullAt(x.genotypes)) null else row.getArray(x.genotypes)
+    val nG = if (gts == null) 0 else gts.numElements()
+    lastHasGenotypes = nG > 0
+    if (gRows.length < nG) { gRows = new Array[InternalRow](nG); gMaps = new Array[MapData](nG) }
+    var noFields = true
+    var j = 0
+    while (j < nG) {
+      val g = gts.getStruct(j, x.gArity)
+      if (g == null && (x.gFields >= 0 || x.gSample >= 0 || x.gGt >= 0))
+        throw new NullPointerException(s"null genotype $j")
+      val m = fields(g)
+      gRows(j) = g
+      gMaps(j) = m
+      if (m != null && m.numElements() > 0) {
+        RowText.requireValues(m, "null value for FORMAT key '", "' in VCF write (use '.' for missing)")
+        noFields = false
+      }
+      j += 1
+    }
+
+    val contig = str(row, x.contig)
+    if (contig == null) { memoContig = null; lastContig = null }
+    else if (memoContig == null || !memoContig.equals(contig)) {
       memoContig = contig.clone()
       lastContig = memoContig.toString
     }
-
-    val ref: UTF8String =
-      if (x.ref < 0 || row.isNullAt(x.ref)) null else row.getUTF8String(x.ref)
-    if (ref == null || !ascii(ref)) return fallback(row)
-    val id: UTF8String =
-      if (x.id < 0 || row.isNullAt(x.id)) null else row.getUTF8String(x.id)
-    if (id != null && !ascii(id)) return fallback(row)
-
-    putUtf8(contig); putByte('\t')
+    putNullable(contig); putByte('\t')
     putInt(lastStart); putByte('\t')
-    if (id == null) putByte('.') else putUtf8(id)
+    val id = str(row, x.id)
+    if (id == null) putByte('.') else putUtf8(RowText.text(id))
     putByte('\t')
-    putUtf8(ref); putByte('\t')
-
-    // alt: "." when absent/empty, else ','-joined
-    if (x.alt < 0 || row.isNullAt(x.alt)) putByte('.')
-    else {
-      val a = row.getArray(x.alt)
-      val n = a.numElements()
-      if (n == 0) putByte('.')
-      else {
-        var j = 0
-        while (j < n) {
-          if (a.isNullAt(j)) { pos = 0; return fallback(row) } // spec path NPEs
-          val s = a.getUTF8String(j)
-          if (!ascii(s)) { pos = 0; return fallback(row) }
-          if (j > 0) putByte(',')
-          putUtf8(s)
-          j += 1
-        }
-      }
-    }
+    putNullable(str(row, x.ref)); putByte('\t')
+    putList(row, x.alt, ',')
     putByte('\t')
 
-    // qual: formatQual semantics (integral & |d|<1e15 → Long text)
+    // qual: integral & |d| < 1e15 → Long text
     if (x.qual < 0 || row.isNullAt(x.qual)) putByte('.')
     else {
       val d = row.getDouble(x.qual)
-      putAsciiString(
-        if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString else d.toString)
+      putAscii(if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString else d.toString)
     }
     putByte('\t')
-
-    // filters: "." when empty, else ';'-joined
-    if (x.filters < 0 || row.isNullAt(x.filters)) putByte('.')
-    else {
-      val a = row.getArray(x.filters)
-      val n = a.numElements()
-      if (n == 0) putByte('.')
-      else {
-        var j = 0
-        while (j < n) {
-          if (a.isNullAt(j)) { pos = 0; return fallback(row) }
-          val s = a.getUTF8String(j)
-          if (!ascii(s)) { pos = 0; return fallback(row) }
-          if (j > 0) putByte(';')
-          putUtf8(s)
-          j += 1
-        }
-      }
-    }
+    putList(row, x.filters, ';')
     putByte('\t')
 
     // info: sorted by key, dup keys last-wins; flag values ("") emit bare key
-    if (x.info < 0 || row.isNullAt(x.info)) putByte('.')
-    else if (!putSortedMap(row.getMap(x.info), ';', emptyDot = true)) { pos = 0; return fallback(row) }
-
-    // genotypes
-    lastHasGenotypes = false
-    if (x.genotypes >= 0 && !row.isNullAt(x.genotypes)) {
-      val a = row.getArray(x.genotypes)
-      val n = a.numElements()
-      if (n > 0) {
-        lastHasGenotypes = true
-        // convert() substitutes "./." for null/absent gt, so the row path
-        // always has gt — hasGt is simply n > 0 (spec: exists(_.gt != null))
-        var noFields = true
-        var j = 0
-        while (j < n && noFields) {
-          val g = a.getStruct(j, x.gArity)
-          if (x.gFields >= 0 && !g.isNullAt(x.gFields) && g.getMap(x.gFields).numElements() > 0)
-            noFields = false
-          j += 1
-        }
-        if (noFields) {
-          putByte('\t'); putByte('G'); putByte('T')
-          j = 0
-          while (j < n) {
-            putByte('\t')
-            val g = a.getStruct(j, x.gArity)
-            if (x.gGt < 0 || g.isNullAt(x.gGt)) { putByte('.'); putByte('/'); putByte('.') }
-            else {
-              val gt = g.getUTF8String(x.gGt)
-              if (!ascii(gt)) { pos = 0; return fallback(row) }
-              putUtf8(gt)
-            }
-            j += 1
-          }
-        } else if (!putGenotypesWithFields(a, n)) { pos = 0; return fallback(row) }
+    val info = if (x.info < 0 || row.isNullAt(x.info)) null else row.getMap(x.info)
+    if (info == null || info.numElements() == 0) putByte('.')
+    else {
+      RowText.requireValues(info, "null value for map key '",
+        "' in VCF write (INFO/FORMAT values cannot be null)")
+      val ks = info.keyArray(); val vs = info.valueArray()
+      val n = keys.sort(ks, info.numElements())
+      var i = 0
+      while (i < n) {
+        val e = keys.order(i)
+        if (i > 0) putByte(';')
+        putUtf8(RowText.text(keys.key(e)))
+        val v = vs.getUTF8String(e)
+        if (v.numBytes() > 0) { putByte('='); putUtf8(RowText.text(v)) }
+        i += 1
       }
+    }
+
+    if (nG > 0) {
+      // the converter substitutes "./." for a null gt, so GT is always first
+      putByte('\t'); putByte('G'); putByte('T')
+      if (noFields) {
+        j = 0
+        while (j < nG) { putByte('\t'); putGt(gRows(j)); j += 1 }
+      } else putGenotypesWithFields(nG)
     }
     putByte('\n')
     pos
   }
 
-  /** FORMAT columns with per-sample fields: union of field keys (sorted,
-    * distinct), "GT:" + keys header, per sample gt then each key's value or
-    * ".". Returns false on any shape the fast path can't prove (non-ASCII,
-    * null map values).
+  private def fields(g: InternalRow): MapData =
+    if (idx.gFields < 0 || g.isNullAt(idx.gFields)) null else g.getMap(idx.gFields)
+
+  private def putGt(g: InternalRow): Unit =
+    if (idx.gGt < 0 || g.isNullAt(idx.gGt)) { putByte('.'); putByte('/'); putByte('.') }
+    else putUtf8(RowText.text(g.getUTF8String(idx.gGt)))
+
+  /** ALT / FILTER: '.' when absent or empty, else `sep`-joined; a null
+    * element is the converter's `NullPointerException`.
     */
-  private def putGenotypesWithFields(a: ArrayData, n: Int): Boolean = {
-    val x = idx
-    // distinct keys across all genotypes, then sorted (binary == String
-    // order for the ASCII keys the fast path requires)
-    val keys = new java.util.ArrayList[UTF8String]()
+  private def putList(row: InternalRow, col: Int, sep: Char): Unit =
+    if (col < 0 || row.isNullAt(col)) putByte('.')
+    else {
+      val a = row.getArray(col)
+      val n = a.numElements()
+      if (n == 0) putByte('.')
+      var j = 0
+      while (j < n) {
+        if (a.isNullAt(j)) throw new NullPointerException(s"null element $j of ${schema(col).name}")
+        if (j > 0) putByte(sep)
+        putUtf8(RowText.text(a.getUTF8String(j)))
+        j += 1
+      }
+    }
+
+  /** FORMAT columns with per-sample fields: the union of field keys (distinct
+    * and sorted as `String`s) after "GT", then per sample the gt and each
+    * key's last value or ".".
+    */
+  private def putGenotypesWithFields(n: Int): Unit = {
+    fmtKeys.clear()
+    var allAscii = true
     var j = 0
     while (j < n) {
-      val g = a.getStruct(j, x.gArity)
-      if (x.gFields >= 0 && !g.isNullAt(x.gFields)) {
-        val m = g.getMap(x.gFields)
+      val m = gMaps(j)
+      if (m != null) {
         val ks = m.keyArray()
         var t = 0
         while (t < m.numElements()) {
-          val k = ks.getUTF8String(t)
-          if (!ascii(k)) return false
-          var seen = false
-          var q = 0
-          while (q < keys.size && !seen) { if (keys.get(q).equals(k)) seen = true; q += 1 }
-          if (!seen) keys.add(k.clone())
+          val k = RowText.text(ks.getUTF8String(t))
+          if (!fmtKeys.contains(k)) {
+            fmtKeys.add(k)
+            if (allAscii && !RowText.ascii(k)) allAscii = false
+          }
           t += 1
         }
       }
       j += 1
     }
-    keys.sort((p: UTF8String, q: UTF8String) => p.binaryCompare(q))
-    putByte('\t')
-    putByte('G'); putByte('T')
+    fmtKeys.sort(if (allAscii) ByteOrder else StringOrder)
     var q = 0
-    while (q < keys.size) { putByte(':'); putUtf8(keys.get(q)); q += 1 }
+    while (q < fmtKeys.size) { putByte(':'); putUtf8(fmtKeys.get(q)); q += 1 }
     j = 0
     while (j < n) {
       putByte('\t')
-      val g = a.getStruct(j, x.gArity)
-      if (x.gGt < 0 || g.isNullAt(x.gGt)) { putByte('.'); putByte('/'); putByte('.') }
-      else {
-        val gt = g.getUTF8String(x.gGt)
-        if (!ascii(gt)) return false
-        putUtf8(gt)
-      }
-      val m: MapData =
-        if (x.gFields < 0 || g.isNullAt(x.gFields)) null else g.getMap(x.gFields)
+      putGt(gRows(j))
+      val m = gMaps(j)
       q = 0
-      while (q < keys.size) {
+      while (q < fmtKeys.size) {
         putByte(':')
-        val k = keys.get(q)
+        val k = fmtKeys.get(q)
         var vi = -1
         if (m != null) {
           val ks = m.keyArray()
           var t = 0
           while (t < m.numElements()) { // last match wins (Map + semantics)
-            if (ks.getUTF8String(t).equals(k)) vi = t
+            val kt = ks.getUTF8String(t)
+            if ((if (allAscii) kt else RowText.text(kt)).equals(k)) vi = t
             t += 1
           }
         }
-        if (vi < 0) putByte('.')
-        else {
-          if (m.valueArray().isNullAt(vi)) return false // spec path NPEs
-          val v = m.valueArray().getUTF8String(vi)
-          if (!ascii(v)) return false
-          putUtf8(v)
-        }
+        if (vi < 0) putByte('.') else putUtf8(RowText.text(m.valueArray().getUTF8String(vi)))
         q += 1
       }
       j += 1
     }
-    true
   }
+}
 
-  /** Sorted key=value rendering of a map column (INFO): '.', or entries
-    * sorted by key, dup keys keep the LAST value, flag ("") values emit the
-    * bare key. False → caller falls back.
+object VcfRowEncoder {
+  /** Column positions of the variant schema in a sink's input (-1 = absent);
+    * the genotype subfields resolve by name inside the struct.
     */
-  private def putSortedMap(m: MapData, sep: Char, emptyDot: Boolean): Boolean = {
-    val n = m.numElements()
-    if (n == 0) { if (emptyDot) putByte('.'); return true }
-    val ks = m.keyArray(); val vs = m.valueArray()
-    val order = new Array[Int](n)
-    var i = 0
-    while (i < n) { order(i) = i; i += 1 }
-    i = 1
-    while (i < n) {
-      val v = order(i)
-      val kv = ks.getUTF8String(v)
-      var j = i - 1
-      while (j >= 0 && ks.getUTF8String(order(j)).binaryCompare(kv) > 0) {
-        order(j + 1) = order(j); j -= 1
+  final case class Idx(contig: Int, start: Int, end: Int, id: Int, ref: Int, alt: Int,
+                       qual: Int, filters: Int, info: Int, genotypes: Int,
+                       gSample: Int, gGt: Int, gFields: Int, gArity: Int) extends Serializable
+
+  def indices(schema: StructType): Idx = {
+    def i(n: String) = schema.fieldNames.indexOf(n)
+    // genotype SUBFIELDS resolve by name too: a user df built as
+    // struct(gt, sample, fields) — legal, same names — must not have its
+    // sample written as the GT call (the read side has the mirror rule)
+    val gi = i("genotypes")
+    val (gs, gg, gf, ga) =
+      if (gi < 0) (-1, -1, -1, 0)
+      else schema(gi).dataType match {
+        case ArrayType(st: StructType, _) =>
+          (st.fieldNames.indexOf("sample"), st.fieldNames.indexOf("gt"),
+            st.fieldNames.indexOf("fields"), st.length)
+        case _ => (-1, -1, -1, 0)
       }
-      order(j + 1) = v
-      i += 1
-    }
-    var first = true
-    i = 0
-    while (i < n) {
-      val ki = ks.getUTF8String(order(i))
-      if (!ascii(ki)) return false
-      var bestIdx = order(i)
-      var j = i + 1
-      while (j < n && ks.getUTF8String(order(j)).binaryCompare(ki) == 0) {
-        if (order(j) > bestIdx) bestIdx = order(j)
-        j += 1
-      }
-      if (vs.isNullAt(bestIdx)) return false // spec path NPEs
-      val v = vs.getUTF8String(bestIdx)
-      if (!ascii(v)) return false
-      if (!first) putByte(sep)
-      putUtf8(ks.getUTF8String(bestIdx))
-      if (v.numBytes() > 0) { putByte('='); putUtf8(v) }
-      first = false
-      i = j
-    }
-    true
+    Idx(i("contig"), i("start"), i("end"), i("id"), i("ref"), i("alt"), i("qual"),
+      i("filters"), i("info"), gi, gs, gg, gf, ga)
   }
 
-  private def fallback(row: InternalRow): Int = {
-    pos = 0
-    val v = RowToVariant.convert(row, idx)
-    lastContig = v.contig
-    lastStart = v.start
-    lastEnd = v.end
-    lastHasGenotypes = v.genotypes.nonEmpty
-    val bytes = VcfCodec.toLine(v).getBytes("UTF-8")
-    ensure(bytes.length + 1)
-    System.arraycopy(bytes, 0, buf, 0, bytes.length)
-    pos = bytes.length
-    buf(pos) = '\n'
-    pos += 1
-    pos
-  }
+  private def str(row: InternalRow, i: Int): UTF8String =
+    if (i < 0 || row.isNullAt(i)) null else row.getUTF8String(i)
+
+  private val ByteOrder: java.util.Comparator[UTF8String] = (p, q) => p.binaryCompare(q)
+  private val StringOrder: java.util.Comparator[UTF8String] = (p, q) => p.toString.compareTo(q.toString)
 }

@@ -77,7 +77,7 @@ class ApiSpec extends AnyFunSuite with SparkFixture {
   test("permissive mode skips malformed lines; default mode fails fast") {
     val dir = tmpDir()
     val sam = dir.resolve("bad.sam")
-    val good = TestReads.pairs(3).map(graft.sam.SamCodec.toLine)
+    val good = TestReads.pairs(3).map(graft.sam.SamSpecWriter.toLine)
     val content = ("@HD\tVN:1.6" +: good.take(2)) ++ Seq("this is \t not a sam line") ++ good.drop(2)
     Files.write(sam, String.join("\n", content: _*).getBytes("UTF-8"))
 

@@ -45,7 +45,7 @@ class BamCodecSpec extends AnyFunSuite {
   private val header = TestReads.header
 
   private def roundTrip(r: AlignmentRecord): AlignmentRecord = {
-    val bytes = BamCodec.encodeRecord(r, header)
+    val bytes = BamSpecWriter.encodeRecord(r, header)
     BamCodec.decodeRecord(java.util.Arrays.copyOfRange(bytes, 4, bytes.length), bytes.length - 4, header)
   }
 
@@ -56,7 +56,7 @@ class BamCodecSpec extends AnyFunSuite {
 
   test("name-pruned decode: readName null, every other field identical") {
     val r = TestReads.pairs(1).head
-    val bytes = BamCodec.encodeRecord(r, header)
+    val bytes = BamSpecWriter.encodeRecord(r, header)
     val m = BamFieldMask.All.copy(name = false)
     val got = BamCodec.decodeRecord(
       java.util.Arrays.copyOfRange(bytes, 4, bytes.length), bytes.length - 4, header, m)
@@ -110,7 +110,7 @@ class BamCodecSpec extends AnyFunSuite {
   test("whole-file round-trip: 1000 pairs + unmapped tail, multi-block") {
     val recs = TestReads.mixed(1000)
     val bos = new ByteArrayOutputStream()
-    BamIO.write(bos, header, recs.iterator)
+    BamSpecWriter.write(bos, header, recs.iterator)
     val file = bos.toByteArray
     // multi-block: ~2002 records × ~90 B uncompressed spans several 64 KiB blocks
     var nBlocks = 0; var off = 0
@@ -134,7 +134,7 @@ class BamCodecSpec extends AnyFunSuite {
     val truth = scala.collection.mutable.Set[Long]()
     recs.foreach { r =>
       truth += bgzf.virtualOffset
-      bgzf.write(BamCodec.encodeRecord(r, header))
+      bgzf.write(BamSpecWriter.encodeRecord(r, header))
     }
     bgzf.close()
     val file = bos.toByteArray
@@ -168,7 +168,7 @@ class BamCodecSpec extends AnyFunSuite {
     BamCodec.writeHeader(bgzf, header)
     val headerEnd = bgzf.virtualOffset
     val starts = Seq.newBuilder[Long]
-    recs.foreach { r => starts += bgzf.virtualOffset; bgzf.write(BamCodec.encodeRecord(r, header)) }
+    recs.foreach { r => starts += bgzf.virtualOffset; bgzf.write(BamSpecWriter.encodeRecord(r, header)) }
     bgzf.close()
     val file = bos.toByteArray
     val truth = starts.result()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.bam.RowToRecord
+import graft.sources.cram.RowToRecord
 
 /** Throughput sanity for the direct encoder vs the object path — not a
   * correctness gate (times printed, no assertion on them): run manually with
@@ -44,7 +44,7 @@ class BamEncoderMicroBench extends AnyFunSuite {
     timeIt("old-object") {
       var acc = 0L; var i = 0
       while (i < n) {
-        val b = BamCodec.encodeRecord(RowToRecord.convert(rows(i), idx), header)
+        val b = BamSpecWriter.encodeRecord(RowToRecord.convert(rows(i), idx), header)
         acc += b.length + b(b.length - 1)
         i += 1
       }

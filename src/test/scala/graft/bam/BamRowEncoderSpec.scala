@@ -5,11 +5,11 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.bam.RowToRecord
+import graft.sources.cram.RowToRecord
 
 /** Byte-identity proof for the direct row→wire encoder: for every row shape,
   * `BamRowEncoder.encode(row)` must produce EXACTLY the bytes of the object
-  * path `BamCodec.encodeRecord(RowToRecord.convert(row, idx), header)` — the
+  * path `BamSpecWriter.encodeRecord(RowToRecord.convert(row, idx), header)` — the
   * object path is the executable spec. Coverage spans the production shapes
   * (ASCII names/cigars/seq/qual, int/string tags) and the adversarial ones
   * that must route through the fallback (non-ASCII text, CG-spill cigars,
@@ -37,7 +37,7 @@ class BamRowEncoderSpec extends AnyFunSuite {
 
   private def specBytes(r: GenericInternalRow): Array[Byte] = {
     val rec = RowToRecord.convert(r, idx)
-    val body = BamCodec.encodeRecord(rec, header)
+    val body = BamSpecWriter.encodeRecord(rec, header)
     body
   }
 

@@ -29,7 +29,7 @@ class CgSpillSpec extends AnyFunSuite with SparkFixture {
 
   test("70k-op CIGAR round-trips the record codec via the CG spill") {
     val rec = longRead(70000)
-    val bytes = BamCodec.encodeRecord(rec, TestReads.header)
+    val bytes = BamSpecWriter.encodeRecord(rec, TestReads.header)
     // the wire form holds the sentinel + a CG tag
     val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     bb.getInt; bb.getInt; bb.getInt; bb.get; bb.get; bb.getShort
@@ -46,7 +46,7 @@ class CgSpillSpec extends AnyFunSuite with SparkFixture {
 
   test("CG spill reconstitutes under column pruning (cigar without attrs)") {
     val rec = longRead(70000)
-    val bytes = BamCodec.encodeRecord(rec, TestReads.header)
+    val bytes = BamSpecWriter.encodeRecord(rec, TestReads.header)
     val mask = BamFieldMask(cigarAndEnd = true, seq = false, qual = false, attrs = false)
     val rec2 = java.util.Arrays.copyOfRange(bytes, 4, bytes.length)
     val back = BamCodec.decodeRecord(rec2, rec2.length, TestReads.header, mask)
@@ -60,7 +60,7 @@ class CgSpillSpec extends AnyFunSuite with SparkFixture {
     // projected — an attrs-only scan leaking CG:B,I would make the record
     // expose different attribute maps depending on column pruning
     val rec = longRead(70000)
-    val bytes = BamCodec.encodeRecord(rec, TestReads.header)
+    val bytes = BamSpecWriter.encodeRecord(rec, TestReads.header)
     val mask = BamFieldMask(cigarAndEnd = false, seq = false, qual = false, attrs = true)
     val rec2 = java.util.Arrays.copyOfRange(bytes, 4, bytes.length)
     val back = BamCodec.decodeRecord(rec2, rec2.length, TestReads.header, mask)
@@ -76,7 +76,7 @@ class CgSpillSpec extends AnyFunSuite with SparkFixture {
     // attrs-less re-decode too (reconstitution needs the tags), so the
     // reader skips the record
     val rec = longRead(70000)
-    val bytes = BamCodec.encodeRecord(rec, TestReads.header)
+    val bytes = BamSpecWriter.encodeRecord(rec, TestReads.header)
     val body = java.util.Arrays.copyOfRange(bytes, 4, bytes.length)
     // find the tag region start: 32 fixed + name+1 + 4*2 sentinel ops +
     // (lSeq+1)/2 + lSeq
@@ -97,7 +97,7 @@ class CgSpillSpec extends AnyFunSuite with SparkFixture {
       readName = "r1", flags = 0, contig = "chr20", start = 500, end = 0,
       mapq = 60, cigar = "10S90N", mateContig = null, mateStart = 0, tlen = 0,
       seq = "*", qual = "*", attributes = Map("XO" -> "i:1"))
-    val bytes = BamCodec.encodeRecord(rec, TestReads.header)
+    val bytes = BamSpecWriter.encodeRecord(rec, TestReads.header)
     val rec2 = java.util.Arrays.copyOfRange(bytes, 4, bytes.length)
     val back = BamCodec.decodeRecord(rec2, rec2.length, TestReads.header, BamFieldMask.All)
     assert(back.cigar == "10S90N")
@@ -125,7 +125,7 @@ class CgSpillSpec extends AnyFunSuite with SparkFixture {
         mateContig = null, mateStart = 0, tlen = 0,
         seq = if (qlen == 0) "*" else "A" * qlen, qual = "*",
         attributes = Map("XO" -> s"i:$trial"))
-      val bytes = BamCodec.encodeRecord(rec, TestReads.header)
+      val bytes = BamSpecWriter.encodeRecord(rec, TestReads.header)
       val body = java.util.Arrays.copyOfRange(bytes, 4, bytes.length)
       val back = BamCodec.decodeRecord(body, body.length, TestReads.header, BamFieldMask.All)
       assert(back.cigar == rec.cigar, s"trial $trial (nOps=$nOps)")

@@ -3,7 +3,7 @@ package graft.bgzf
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
-import graft.bam.{BamIO, TestReads}
+import graft.bam.{BamSpecWriter, TestReads}
 
 class BgzfBlocksSpec extends AnyFunSuite with SparkFixture {
 
@@ -12,7 +12,7 @@ class BgzfBlocksSpec extends AnyFunSuite with SparkFixture {
     val dir = Files.createTempDirectory("blocks")
     dir.toFile.deleteOnExit()
     val bam = dir.resolve("b.bam")
-    BamIO.writeFile(bam, TestReads.header, recs.iterator)
+    BamSpecWriter.writeFile(bam, TestReads.header, recs.iterator)
     val bytes = Files.readAllBytes(bam)
     // sequential truth
     val truth = Seq.newBuilder[(Long, Int)]

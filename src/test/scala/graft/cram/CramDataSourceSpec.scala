@@ -1,16 +1,19 @@
 package graft.cram
 
 import java.nio.file.Files
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
+import graft.sources.PlanMetrics
 
 /** `format("cram")` scan/sink behavior: single-file geometry (file
   * definition + containers + EOF terminator + rebased `.crai`), sharded
   * complete shards with per-shard `.crai`, and unindexed interval scans
   * pruning on container-header coordinates.
   */
-class CramDataSourceSpec extends AnyFunSuite with SparkFixture {
+class CramDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSparkPlanHelper {
 
   private def tmpDir(): java.nio.file.Path = {
     val d = Files.createTempDirectory("cramspec")
@@ -269,5 +272,33 @@ class CramDataSourceSpec extends AnyFunSuite with SparkFixture {
       i % 3 == 1 && i * 100 + 1 <= 60000 && i * 100 + 1 + 89 >= 50001
     }
     assert(iv.count() == want)
+  }
+
+  test(".crai plan: a partition's plannedBytes cover only the containers it reads") {
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir()
+    val out = dir.resolve("gaps.cram")
+    spark.createDataset(graft.bam.TestReads.mixed(1202)).toDF().coalesce(1)
+      .write.format("cram").mode("overwrite").option("records", "true")
+      .option("refs", "chr20:1000000,chr21:2000135").option("recordsPerContainer", "100")
+      .option("writeCrai", "true").save(out.toString)
+    // two intervals whose containers are not adjacent, one 1 MiB split
+    val ivs = "chr21:100000-101000,chr21:500000-501000"
+    def scan() = spark.read.format("cram").option("records", "true").option("splitSize", 1 << 20)
+      .option("intervals", ivs).load(out.toString)
+    val df = scan()
+    val plan = df.queryExecution.executedPlan
+    val rows = plan.executeCollect().map(_.toString).sorted.toSeq
+    val m = collect(plan) { case b: BatchScanExec => b }.head.metrics
+    assert(m(PlanMetrics.Partitions).value == 1)
+    assert(m(PlanMetrics.IndexSpanBytes).value > 0)
+    assert(m(PlanMetrics.Bytes).value == m(PlanMetrics.IndexSpanBytes).value,
+      s"plannedBytes ${m(PlanMetrics.Bytes).value} vs indexSpanBytes ${m(PlanMetrics.IndexSpanBytes).value}")
+    // the byte-range route reads the same rows
+    Files.delete(dir.resolve("gaps.cram.crai"))
+    Files.deleteIfExists(dir.resolve(".gaps.cram.crai.crc"))
+    assert(rows.nonEmpty)
+    assert(scan().queryExecution.executedPlan.executeCollect().map(_.toString).sorted.toSeq == rows)
   }
 }

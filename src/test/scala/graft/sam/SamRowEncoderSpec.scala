@@ -6,10 +6,10 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.bam.AlignmentRecord
-import graft.sources.bam.RowToRecord
+import graft.sources.cram.RowToRecord
 
 /** Byte-identity proof for the direct SAM row→line encoder against the
-  * object path (`SamCodec.toLine(RowToRecord.convert(row, idx)) + "\n"`).
+  * object path (`SamSpecWriter.toLine(RowToRecord.convert(row, idx)) + "\n"`).
   */
 class SamRowEncoderSpec extends AnyFunSuite {
   private val schema = AlignmentRecord.schema
@@ -31,7 +31,7 @@ class SamRowEncoderSpec extends AnyFunSuite {
     val enc = new SamRowEncoder(schema)
     val len = enc.encode(r)
     val fast = java.util.Arrays.copyOf(enc.buf, len)
-    val spec = (SamCodec.toLine(RowToRecord.convert(r, idx)) + "\n").getBytes("UTF-8")
+    val spec = (SamSpecWriter.toLine(RowToRecord.convert(r, idx)) + "\n").getBytes("UTF-8")
     assert(fast.sameElements(spec),
       s"$clue:\n fast: ${new String(fast, "UTF-8")} spec: ${new String(spec, "UTF-8")}")
   }

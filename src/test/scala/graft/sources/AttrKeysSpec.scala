@@ -82,7 +82,7 @@ class AttrKeysSpec extends AnyFunSuite with SparkFixture {
     val seq = "A" * (2 * ops)
     val r = AlignmentRecord("ul1", 0, "chr20", 100, 0, 60, cigar, null, 0, 0,
       seq, "I" * (2 * ops), Map("NM" -> "i:3"))
-    val enc = BamCodec.encodeRecord(r, header)
+    val enc = BamSpecWriter.encodeRecord(r, header)
     val body = java.util.Arrays.copyOfRange(enc, 4, enc.length)
 
     val masked = BamFieldMask(cigarAndEnd = true, seq = false, qual = false, attrs = true,
@@ -99,7 +99,7 @@ class AttrKeysSpec extends AnyFunSuite with SparkFixture {
 
     // ... but a GENUINE CG tag on a non-spilled record is a normal tag
     val plain = rec("p1", Map("CG" -> "Z:custom", "NM" -> "i:1"))
-    val encP = BamCodec.encodeRecord(plain, header)
+    val encP = BamSpecWriter.encodeRecord(plain, header)
     val gotP = BamCodec.decodeRecord(java.util.Arrays.copyOfRange(encP, 4, encP.length),
       encP.length - 4, header, masked.copy(attrKeys = Some(Vector("CG"))))
     assert(gotP.attributes == Map("CG" -> "Z:custom"))

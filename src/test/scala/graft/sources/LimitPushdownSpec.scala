@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
-import graft.bam.{BamIO, TestReads}
+import graft.bam.{BamSpecWriter, TestReads}
 
 /** Pins the pushed-limit plan shape on all five format sources: `.limit(n)`
   * directly over a scan must plan ONE whole-file partition per file (not one
@@ -43,7 +43,7 @@ class LimitPushdownSpec extends AnyFunSuite with SparkFixture {
     val recs = TestReads.mixed(1000) // 2002 records
     val dir = tmpDir()
     val bam = dir.resolve("t.bam")
-    BamIO.writeFile(bam, TestReads.header, recs.iterator)
+    BamSpecWriter.writeFile(bam, TestReads.header, recs.iterator)
 
     def read() = spark.read.format("bam").option("splitSize", 4096).load(bam.toString)
     // without a limit: many splits

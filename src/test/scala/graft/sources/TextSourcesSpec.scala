@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
 import graft.bam.TestReads
 import graft.bgzf.{BgzfOutputStream, SeekableInput}
-import graft.vcf.{Genotype, Variant, VcfCodec, VcfHeader}
+import graft.vcf.{Genotype, Variant, VcfCodec, VcfHeader, VcfSpecWriter}
 
 class SplitTextReaderSpec extends AnyFunSuite {
   private val rng = new scala.util.Random(7)
@@ -260,7 +260,7 @@ class SamVcfSourceSpec extends AnyFunSuite with SparkFixture {
 
   test("VCF codec: line round-trip") {
     sampleVariants(40).foreach { v =>
-      val line = VcfCodec.toLine(v)
+      val line = VcfSpecWriter.toLine(v)
       val v2 = VcfCodec.fromLine(line, Seq("s1", "s2"))
       assert(v2 == v, s"line: $line")
     }

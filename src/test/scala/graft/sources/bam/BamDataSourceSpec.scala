@@ -20,7 +20,7 @@ class BamDataSourceSpec extends AnyFunSuite with SparkFixture {
     val recs = TestReads.mixed(1000) // 2002 records
     val dir = tmpDir()
     val bam = dir.resolve("t.bam")
-    BamIO.writeFile(bam, TestReads.header, recs.iterator)
+    BamSpecWriter.writeFile(bam, TestReads.header, recs.iterator)
 
     for (splitSize <- Seq(4096, 64 * 1024, 64 * 1024 * 1024)) {
       val df = spark.read.format("bam").option("splitSize", splitSize).load(bam.toString)
@@ -85,7 +85,7 @@ class BamDataSourceSpec extends AnyFunSuite with SparkFixture {
     val recs = TestReads.mixed(1000)
     val dir = tmpDir()
     val bam = dir.resolve("iv.bam")
-    BamIO.writeFile(bam, TestReads.header, recs.iterator)
+    BamSpecWriter.writeFile(bam, TestReads.header, recs.iterator)
 
     def readIv(iv: String, uu: Boolean): Long =
       spark.read.format("bam").option("splitSize", 32 * 1024)
@@ -106,7 +106,7 @@ class BamDataSourceSpec extends AnyFunSuite with SparkFixture {
     val recs = TestReads.mixed(300)
     val dir = tmpDir()
     val bam = dir.resolve("prune.bam")
-    BamIO.writeFile(bam, TestReads.header, recs.iterator)
+    BamSpecWriter.writeFile(bam, TestReads.header, recs.iterator)
     val df = spark.read.format("bam").load(bam.toString).select("contig", "start")
     assert(df.count() == recs.size)
     val plan = df.queryExecution.executedPlan.toString
@@ -121,7 +121,7 @@ class BamDataSourceSpec extends AnyFunSuite with SparkFixture {
     val recs = TestReads.mixed(300)
     val dir = tmpDir()
     val bam = dir.resolve("push.bam")
-    BamIO.writeFile(bam, TestReads.header, recs.iterator)
+    BamSpecWriter.writeFile(bam, TestReads.header, recs.iterator)
     val df = spark.read.format("bam").load(bam.toString)
       .filter(col("contig") === "chr21" && col("start") >= 5000 && col("start") <= 9999)
     val want = recs.count(r => r.contig == "chr21" && r.start >= 5000 && r.start <= 9999)
@@ -131,7 +131,7 @@ class BamDataSourceSpec extends AnyFunSuite with SparkFixture {
   test("empty BAM (header only) reads as empty dataset") {
     val dir = tmpDir()
     val bam = dir.resolve("empty.bam")
-    BamIO.writeFile(bam, TestReads.header, Iterator.empty)
+    BamSpecWriter.writeFile(bam, TestReads.header, Iterator.empty)
     assert(spark.read.format("bam").load(bam.toString).count() == 0)
   }
 }

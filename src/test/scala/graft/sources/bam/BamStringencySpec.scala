@@ -3,7 +3,7 @@ package graft.sources.bam
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
-import graft.bam.{BamCodec, TestReads}
+import graft.bam.{BamCodec, BamSpecWriter, TestReads}
 import graft.bgzf.BgzfOutputStream
 
 /** Validation stringency on the BINARY path: a record whose framing is sane
@@ -22,7 +22,7 @@ class BamStringencySpec extends AnyFunSuite with SparkFixture {
     val out = new BgzfOutputStream(Files.newOutputStream(path))
     BamCodec.writeHeader(out, TestReads.header)
     recs.zipWithIndex.foreach { case (r, i) =>
-      val bytes = BamCodec.encodeRecord(r, TestReads.header)
+      val bytes = BamSpecWriter.encodeRecord(r, TestReads.header)
       if (i == corruptAt) {
         // l_read_name := 255 — name read overruns the record buffer however
         // few columns the scan decodes; framing (block_size) untouched
@@ -73,7 +73,7 @@ class BamStringencySpec extends AnyFunSuite with SparkFixture {
     val out = new BgzfOutputStream(Files.newOutputStream(path))
     BamCodec.writeHeader(out, TestReads.header)
     recs.zipWithIndex.foreach { case (r, i) =>
-      val bytes = BamCodec.encodeRecord(r, TestReads.header)
+      val bytes = BamSpecWriter.encodeRecord(r, TestReads.header)
       if (i == corruptAt) bytes(bytes.length - 5) = 'q'.toByte // bad tag type
       out.write(bytes)
     }

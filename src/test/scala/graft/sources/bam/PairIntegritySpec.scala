@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
-import graft.bam.{BamIO, TestReads}
+import graft.bam.{BamSpecWriter, TestReads}
 
 class PairIntegritySpec extends AnyFunSuite with SparkFixture {
 
@@ -16,7 +16,7 @@ class PairIntegritySpec extends AnyFunSuite with SparkFixture {
     val dir = Files.createTempDirectory("pairs")
     dir.toFile.deleteOnExit()
     val bam = dir.resolve("qn.bam")
-    BamIO.writeFile(bam, TestReads.header, recs.iterator)
+    BamSpecWriter.writeFile(bam, TestReads.header, recs.iterator)
 
     for (splitSize <- Seq(2048, 8192, 64 * 1024)) {
       val df = spark.read.format("bam")
@@ -41,7 +41,7 @@ class PairIntegritySpec extends AnyFunSuite with SparkFixture {
     val dir = Files.createTempDirectory("pairs2")
     dir.toFile.deleteOnExit()
     val bam = dir.resolve("qn.bam")
-    BamIO.writeFile(bam, TestReads.header, recs.iterator)
+    BamSpecWriter.writeFile(bam, TestReads.header, recs.iterator)
     val df = spark.read.format("bam").option("splitSize", 2048).load(bam.toString)
       .select(col("readName"), spark_partition_id().as("pid"))
     assert(df.count() == recs.size)

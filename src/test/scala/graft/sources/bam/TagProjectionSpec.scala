@@ -93,7 +93,7 @@ class TagProjectionSpec extends AnyFunSuite with SparkFixture {
     // selective decode must return NM untroubled (it stops once found).
     val r = rec("r1", scala.collection.immutable.ListMap(
       "NM" -> "i:5", "ZZ" -> "Z:junkvalue"))
-    val enc = BamCodec.encodeRecord(r, header) // 4-byte size prefix + record
+    val enc = BamSpecWriter.encodeRecord(r, header) // 4-byte size prefix + record
     val blockSize = enc.length - 4
     val body = java.util.Arrays.copyOfRange(enc, 4, enc.length)
     // the junk tag's type byte is the 3rd byte of the last 2+1+10 tag bytes
@@ -123,7 +123,7 @@ class TagProjectionSpec extends AnyFunSuite with SparkFixture {
     // branch: a crafted element count would otherwise surface as
     // BufferUnderflowException after allocating up to n strings
     val r = rec("r1", scala.collection.immutable.ListMap("XB" -> "B:i,1,2,3"))
-    val enc = BamCodec.encodeRecord(r, header)
+    val enc = BamSpecWriter.encodeRecord(r, header)
     val body = java.util.Arrays.copyOfRange(enc, 4, enc.length)
     // tag layout at tail: 'X','B','B',subtype,count(int32 LE),3×int32
     val countOff = body.length - 12 - 4
@@ -143,7 +143,7 @@ class TagProjectionSpec extends AnyFunSuite with SparkFixture {
       "XF" -> "f:2.5", "XZ" -> "Z:some text", "XB" -> "B:s,1,-2,3",
       "NM" -> "i:9")
     val r = rec("r1", attrs)
-    val enc = BamCodec.encodeRecord(r, header)
+    val enc = BamSpecWriter.encodeRecord(r, header)
     val sel = BamFieldMask(cigarAndEnd = false, seq = false, qual = false, attrs = false,
       tagCols = Vector("NM"))
     val holder = new Array[String](1)

@@ -20,7 +20,7 @@ class TraversalParitySpec extends AnyFunSuite with SparkFixture {
     val dir = Files.createTempDirectory("traversal")
     dir.toFile.deleteOnExit()
     val bam = dir.resolve("t.bam")
-    BamIO.writeFile(bam, TestReads.header, TestReads.mixed(n).iterator)
+    BamSpecWriter.writeFile(bam, TestReads.header, TestReads.mixed(n).iterator)
     bam.toString
   }
 

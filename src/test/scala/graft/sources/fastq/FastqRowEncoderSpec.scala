@@ -5,10 +5,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.fastq.{FastqCodec, FastqRowEncoder}
+import graft.fastq.{FastqRowEncoder, FastqSpecWriter}
 
 /** Byte-identity proof for the direct FASTQ row encoder against the object
-  * path (`FastqCodec.toLines(RowToFastq.convert(row, idx), sb)`).
+  * path (`FastqSpecWriter.toLines(FastqSpecWriter.convert(row, idx), sb)`).
   */
 class FastqRowEncoderSpec extends AnyFunSuite {
   private val schema = StructType(Seq(
@@ -26,7 +26,7 @@ class FastqRowEncoderSpec extends AnyFunSuite {
     val len = enc.encode(r)
     val fast = java.util.Arrays.copyOf(enc.buf, len)
     val sb = new StringBuilder
-    FastqCodec.toLines(RowToFastq.convert(r, idx), sb)
+    FastqSpecWriter.toLines(FastqSpecWriter.convert(r, idx), sb)
     val spec = sb.toString.getBytes("UTF-8")
     assert(fast.sameElements(spec), s"$clue: ${new String(fast, "UTF-8")} vs ${sb.toString}")
   }

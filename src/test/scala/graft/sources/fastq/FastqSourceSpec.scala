@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.SparkFixture
-import graft.fastq.{FastqCodec, FastqRecord}
+import graft.fastq.{FastqCodec, FastqRecord, FastqSpecWriter}
 
 /** FASTQ splittable source: record ownership by header-line position key,
   * phase detection across split boundaries (quality lines legally start
@@ -33,7 +33,7 @@ class FastqSourceSpec extends AnyFunSuite with SparkFixture {
 
   private def writePlain(recs: Seq[FastqRecord], dir: JPath, name: String): String = {
     val sb = new StringBuilder
-    recs.foreach(FastqCodec.toLines(_, sb))
+    recs.foreach(FastqSpecWriter.toLines(_, sb))
     val p = dir.resolve(name)
     Files.write(p, sb.toString.getBytes("UTF-8"))
     p.toString
@@ -44,7 +44,7 @@ class FastqSourceSpec extends AnyFunSuite with SparkFixture {
     val out = new graft.bgzf.BgzfOutputStream(
       Files.newOutputStream(p), writeEof = true)
     val sb = new StringBuilder
-    recs.foreach { r => sb.setLength(0); FastqCodec.toLines(r, sb); out.write(sb.toString.getBytes("UTF-8")) }
+    recs.foreach { r => sb.setLength(0); FastqSpecWriter.toLines(r, sb); out.write(sb.toString.getBytes("UTF-8")) }
     out.close()
     p.toString
   }
@@ -84,7 +84,7 @@ class FastqSourceSpec extends AnyFunSuite with SparkFixture {
     val dir = Files.createTempDirectory("fastq")
     val recs = mkRecords(120)
     val sb = new StringBuilder
-    recs.foreach(FastqCodec.toLines(_, sb))
+    recs.foreach(FastqSpecWriter.toLines(_, sb))
     val p = dir.resolve("r.fastq.gz")
     val gz = new java.util.zip.GZIPOutputStream(Files.newOutputStream(p))
     gz.write(sb.toString.getBytes("UTF-8")); gz.close()
@@ -137,7 +137,7 @@ class FastqSourceSpec extends AnyFunSuite with SparkFixture {
     val dir = Files.createTempDirectory("fastq")
     val recs = mkRecords(50)
     val sb = new StringBuilder
-    recs.foreach(FastqCodec.toLines(_, sb))
+    recs.foreach(FastqSpecWriter.toLines(_, sb))
     sb.append("@truncated\nACGT\n") // header + seq, no '+' / qual
     val p = dir.resolve("t.fastq")
     Files.write(p, sb.toString.getBytes("UTF-8"))
@@ -203,7 +203,7 @@ class FastqSourceSpec extends AnyFunSuite with SparkFixture {
     val recs = mkRecords(6)
     val lines = {
       val sb = new StringBuilder
-      recs.foreach(FastqCodec.toLines(_, sb))
+      recs.foreach(FastqSpecWriter.toLines(_, sb))
       sb.toString.split('\n').toIndexedSeq
     }
     for (off <- 0 until 8) {

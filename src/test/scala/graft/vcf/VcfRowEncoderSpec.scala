@@ -9,7 +9,7 @@ import graft.sources.vcf.RowToVariant
 
 /** Byte-identity proof for the direct VCF row→line encoder: for every row
   * shape, `VcfRowEncoder.encode(row)` must produce EXACTLY
-  * `(VcfCodec.toLine(RowToVariant.convert(row, idx)) + "\n").getBytes` —
+  * `(VcfSpecWriter.toLine(RowToVariant.convert(row, idx)) + "\n").getBytes` —
   * the object path is the executable spec. Covers the GT-only cohort fast
   * shape, per-sample FORMAT fields, INFO flag/dup keys, "." sentinels, qual
   * formatting edges, and the non-ASCII shapes that must route through the
@@ -42,7 +42,7 @@ class VcfRowEncoderSpec extends AnyFunSuite {
       if (genotypes == null) null else new GenericArrayData(genotypes.toArray[Any])))
 
   private def specBytes(r: GenericInternalRow): Array[Byte] =
-    (VcfCodec.toLine(RowToVariant.convert(r, idx)) + "\n").getBytes("UTF-8")
+    (VcfSpecWriter.toLine(RowToVariant.convert(r, idx)) + "\n").getBytes("UTF-8")
 
   private def assertIdentical(r: GenericInternalRow, clue: String): Unit = {
     val enc = new VcfRowEncoder(schema)

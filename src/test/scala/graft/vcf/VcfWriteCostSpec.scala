@@ -34,18 +34,18 @@ class VcfWriteCostSpec extends AnyFunSuite {
   test("write-cost attribution: encode vs deflate (printed split)") {
     val vs = mkVariants(100000, 12)
     // warm-up both paths (JIT)
-    vs.take(5000).foreach(v => VcfCodec.toLine(v))
+    vs.take(5000).foreach(v => VcfSpecWriter.toLine(v))
     def timeEncode(): (Double, Long) = {
       val t0 = System.nanoTime()
       var bytes = 0L
-      vs.foreach { v => bytes += VcfCodec.toLine(v).getBytes("UTF-8").length + 1 }
+      vs.foreach { v => bytes += VcfSpecWriter.toLine(v).getBytes("UTF-8").length + 1 }
       ((System.nanoTime() - t0) / 1e9, bytes)
     }
     val (encS, totalBytes) = timeEncode()
     // pre-encode once so the deflate phase times ONLY compression
     val blob = {
       val bos = new java.io.ByteArrayOutputStream(totalBytes.toInt + 16)
-      vs.foreach { v => bos.write(VcfCodec.toLine(v).getBytes("UTF-8")); bos.write('\n') }
+      vs.foreach { v => bos.write(VcfSpecWriter.toLine(v).getBytes("UTF-8")); bos.write('\n') }
       bos.toByteArray
     }
     def timeDeflate(level: Int): Double = {
