@@ -317,8 +317,8 @@ object CramProf {
       val end = math.min(start + split, fileLen)
       val t0 = System.nanoTime()
       val rd = new CramRecordsPartitionReader(CramRangePartition(path, start, end, None),
-        graft.sources.ReadsTraversal(None, unplacedUnmapped = false), Some(fasta), sconf,
-        AlignmentRecord.schema, graft.sources.Stringency.Strict)
+        graft.sources.ReadsTraversal(None, unplacedUnmapped = false), Some(fasta),
+        graft.sources.ReadContext(sconf, graft.sources.Stringency.Strict, -1), AlignmentRecord.schema)
       tSetup += (System.nanoTime() - t0) / 1e9
       while (rd.next()) rows += 1
       rd.close()

@@ -63,7 +63,8 @@ object BamCodec {
 
   val Magic: Array[Byte] = Array('B', 'A', 'M', 1).map(_.toByte)
   private val SeqNibbles = "=ACMGRSVTWYHKDBN"
-  private val CigarOps = "MIDNSHP=X"
+  /** BAM's cigar op codes, by their 4-bit value. */
+  val CigarOps = "MIDNSHP=X"
 
   // ---- header ----------------------------------------------------------
 
@@ -446,16 +447,19 @@ object BamCodec {
     val out = Array.newBuilder[Int]
     var i = 0
     while (i < s.length) {
-      var len = 0
-      while (i < s.length && s.charAt(i).isDigit) { len = len * 10 + (s.charAt(i) - '0'); i += 1 }
+      var len = 0L
+      while (i < s.length && s.charAt(i).isDigit) {
+        len = len * 10 + (s.charAt(i) - '0'); i += 1
+        // BAM packs the length into 28 bits; a larger value would wrap into
+        // the op nibble silently (no real chromosome is that long — only a
+        // corrupt input reaches this, and it must fail loudly). Checked per
+        // digit, so no length is long enough to wrap first.
+        require(len <= 0xFFFFFFF, s"cigar op length exceeds BAM's 28-bit field in $s")
+      }
       require(i < s.length, s"bad cigar: $s")
-      // BAM packs the length into 28 bits; a larger value would wrap into
-      // the op nibble silently (no real chromosome is that long — only a
-      // corrupt input reaches this, and it must fail loudly)
-      require(len <= 0xFFFFFFF, s"cigar op length $len exceeds BAM's 28-bit field in $s")
       val op = CigarOps.indexOf(s.charAt(i))
       require(op >= 0, s"bad cigar op '${s.charAt(i)}' in $s")
-      out += (len << 4) | op
+      out += (len.toInt << 4) | op
       i += 1
     }
     out.result()

@@ -216,18 +216,20 @@ final class BamRowEncoder(schema: StructType, header: SamHeader) extends RowByte
     var nOps = 0
     var i = 0
     while (i < n) {
-      var len = 0
-      while (i < n && isDigit(ch(i))) { len = len * 10 + (ch(i) - '0'); i += 1 }
+      var len = 0L
+      while (i < n && isDigit(ch(i))) {
+        len = len * 10 + (ch(i) - '0'); i += 1
+        // BAM packs the length into 28 bits; a larger value would wrap into
+        // the op nibble silently. Checked per digit, as BamCodec.parseCigar.
+        if (len > 0xFFFFFFF) throw new IllegalArgumentException(
+          s"requirement failed: cigar op length exceeds BAM's 28-bit field in $cigar")
+      }
       if (i >= n) throw new IllegalArgumentException(s"requirement failed: bad cigar: $cigar")
-      // BAM packs the length into 28 bits; a larger value would wrap into
-      // the op nibble silently
-      if (len > 0xFFFFFFF) throw new IllegalArgumentException(
-        s"requirement failed: cigar op length $len exceeds BAM's 28-bit field in $cigar")
-      val op = CigarOps.indexOf(ch(i))
+      val op = BamCodec.CigarOps.indexOf(ch(i))
       if (op < 0) throw new IllegalArgumentException(
         s"requirement failed: bad cigar op '${ch(i)}' in $cigar")
       if (nOps == ops.length) ops = java.util.Arrays.copyOf(ops, nOps * 2)
-      ops(nOps) = (len << 4) | op
+      ops(nOps) = (len.toInt << 4) | op
       nOps += 1
       i += 1
     }
@@ -375,7 +377,6 @@ object BamRowEncoder {
       i("mateContig"), i("mateStart"), i("tlen"), i("seq"), i("qual"), i("attributes"))
   }
 
-  private val CigarOps = "MIDNSHP=X"
   private val SeqNibbles = "=ACMGRSVTWYHKDBN"
   private val CgKey = UTF8String.fromString("CG")
 

@@ -1,7 +1,7 @@
 package graft.cram
 
 import java.io.IOException
-import graft.bam.{AlignmentRecord, SamHeader}
+import graft.bam.{AlignmentRecord, BamCodec, SamHeader}
 
 /** CRAM 3.0 record-layer encode (hts-specs CRAM v3.0 §8–11; the sink half
   * of the reference's CramSink.java:35-85, which delegates to htsjdk's
@@ -405,18 +405,11 @@ object CramRecordWriter {
     out.result()
   }
 
-  private[cram] def cigarOps(cigar: String): Seq[(Int, Char)] = {
-    val out = Seq.newBuilder[(Int, Char)]
-    var i = 0
-    var len = 0
-    while (i < cigar.length) {
-      val c = cigar.charAt(i)
-      if (c >= '0' && c <= '9') len = len * 10 + (c - '0')
-      else { out += ((len, c)); len = 0 }
-      i += 1
-    }
-    out.result()
-  }
+  /** (length, op) pairs of a cigar, by BAM's parser: a malformed cigar or
+    * an op length past 28 bits fails the write.
+    */
+  private[cram] def cigarOps(cigar: String): Seq[(Int, Char)] =
+    BamCodec.parseCigar(cigar).toSeq.map(v => (v >>> 4, BamCodec.CigarOps.charAt(v & 0xf)))
 
   private[cram] def cigarQueryLen(cigar: String): Int =
     cigarOps(cigar).iterator.collect { case (n, op) if "MIS=X".indexOf(op.toInt) >= 0 => n }.sum

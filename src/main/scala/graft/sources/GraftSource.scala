@@ -38,10 +38,12 @@ trait RecordFormat {
   def acceptsFilter(options: Map[String, String]): Filter => Boolean = _ => false
   /** The sink resolves its input columns by name (no schema check by Spark). */
   def acceptAnySchema: Boolean = false
-  /** Exact record count of the unrestricted traversal answered without a
-    * data scan, as (plan label, count); None runs the normal count plan.
+  /** COUNT(*) of the unrestricted traversal answered without a data scan:
+    * the plan label and one input file's exact count (None: that file
+    * cannot say, and the normal count plan runs). The shell sums it over
+    * the scan's listing; None here never tries.
     */
-  def exactCount(options: Map[String, String]): Option[(String, Long)] = None
+  def fileCount(options: Map[String, String]): Option[(String, PlanInput => Option[Long])] = None
   def scan(options: Map[String, String], required: StructType, pushed: Array[Filter],
            limit: Int): Scan
   def sink(path: String, level: Int, options: Map[String, String], schema: StructType): SinkFormat[_]
@@ -99,7 +101,16 @@ class GraftScanBuilder(format: RecordFormat, options: Map[String, String])
   private var pushed: Array[Filter] = Array.empty
   private var limit: Int = -1
   private var pushedCount: Option[(String, Long)] = None
-  private lazy val count = format.exactCount(options)
+  // a planning probe: a missing or unreadable input or sidecar means "no
+  // pushdown", never a failed query
+  private lazy val count: Option[(String, Long)] = format.fileCount(options).flatMap { case (label, perFile) =>
+    try {
+      val conf = SparkSession.active.sessionState.newHadoopConf()
+      val files = HadoopIO.listInputFilesWithLen(options("path"), conf)
+      val counts = PlanInput.each(files, conf, splitSize = 0L)(perFile)
+      if (counts.nonEmpty && counts.forall(_.isDefined)) Some(label -> counts.iterator.flatten.sum) else None
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
 
   override def pushLimit(l: Int): Boolean = { limit = l; true }
   override def isPartiallyPushed(): Boolean = true
@@ -137,16 +148,17 @@ class GraftScanBuilder(format: RecordFormat, options: Map[String, String])
 
 /** The scan every format shares: Hadoop conf, input listing, split sizing,
   * the per-file planning fan-out, locality hints, plan metrics, the
-  * directory header check and the pushed-limit cap. A format supplies its
-  * per-file planner, its reader factory and its description tokens (the
-  * reference plans splits once for every format, PathSplitSource.java:35-73).
+  * directory header check, the stringency and the pushed-limit cap. A
+  * format supplies its per-file planner, its reader factory and its
+  * description tokens (the reference plans splits once for every format,
+  * PathSplitSource.java:35-73).
   */
 abstract class GraftScan(format: String, options: Map[String, String], required: StructType,
                          limit: Int) extends Scan with Batch {
   /** Plans one input file; `f.in` is closed by the shell. */
   protected def planFile(f: PlanInput): FilePlan
-  /** The format's readers; the shell adds the limit cap. */
-  protected def readerFactory(conf: SerializableConf): PartitionReaderFactory
+  /** The format's readers, each a [[GraftReader]] built with `ctx`. */
+  protected def readerFactory(ctx: ReadContext): PartitionReaderFactory
   /** Description tokens after `graft-<format> <path>`. */
   protected def describe: String = ""
   /** What [[FilePlan.headerKey]] is, for the directory check's error. */
@@ -156,6 +168,9 @@ abstract class GraftScan(format: String, options: Map[String, String], required:
   override def toBatch: Batch = this
   override def description(): String =
     s"graft-$format ${options.getOrElse("path", "")}$describe" + (if (limit >= 0) s" limit=$limit" else "")
+
+  // an unknown mode fails when the scan is built, before any task
+  private val mode = Stringency.fromOptions(options)
 
   // planning-time metrics of the last planInputPartitions call
   @volatile private var driverMetrics: Array[CustomTaskMetric] = Array.empty
@@ -171,18 +186,12 @@ abstract class GraftScan(format: String, options: Map[String, String], required:
     val splitSize = options.get("splitsize").map(_.toLong).getOrElse(
       SplitSizing.derive(filesWithLen.iterator.map(_._2).sum,
         SparkSession.active.sparkContext.defaultParallelism))
-    // per-file header/index I/O fanned out on the shared bounded pool,
-    // lexicographic file order preserved
-    val plans = HadoopIO.planFiles(filesWithLen.map(_._1)) { file =>
-      val in = HadoopIO.open(file, conf)
-      try {
-        val f = new PlanInput(file, in, conf, splitSize)
-        val plan = planFile(f)
-        // locality hints: block hosts of each split's byte ranges (one
-        // block-list fetch per file, shared by every split)
-        val hostsOf = HadoopIO.blockHostsFor(f.fs, file, f.size)
-        Seq((file.toString, plan, plan.splits.map(s => s.partition(hostsOf(s.ranges)))))
-      } finally in.close()
+    val plans = PlanInput.each(filesWithLen, conf, splitSize) { f =>
+      val plan = planFile(f)
+      // locality hints: block hosts of each split's byte ranges (one
+      // block-list fetch per file, shared by every split)
+      val hostsOf = HadoopIO.blockHostsFor(f.fs, f.path, f.size)
+      (f.path.toString, plan, plan.splits.map(s => s.partition(hostsOf(s.ranges))))
     }
     // header-compat across directory inputs (the reference silently uses
     // the first header): a file whose key differs would be decoded against
@@ -201,22 +210,60 @@ abstract class GraftScan(format: String, options: Map[String, String], required:
     plans.flatMap(_._3).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val readers = readerFactory(new SerializableConf(SparkSession.active.sessionState.newHadoopConf()))
-    val cap = limit
-    // partial limit pushdown: every reader stops after `limit` rows and
-    // Spark keeps its own limit on top
-    if (cap < 0) readers
-    else (p: InputPartition) => new LimitingReader(readers.createReader(p), cap)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    readerFactory(ReadContext(new SerializableConf(SparkSession.active.sessionState.newHadoopConf()), mode, limit))
 }
 
-/** One input file as a format's planner sees it: open, with the scan's
-  * Hadoop conf and split size.
+/** What the shell hands every reader of one scan: the Hadoop conf, the
+  * stringency and the pushed-limit cap (-1: none).
   */
-final class PlanInput(val path: Path, val in: SeekableInput, val conf: Configuration,
-                      val splitSize: Long) {
-  val size: Long = in.size
+final case class ReadContext(conf: SerializableConf, mode: Stringency, limit: Int)
+
+/** The partition reader every format shares (the reference's one
+  * AbstractSamSource.createSamReader): it opens the partition's file once,
+  * holds the current row, stops after the pushed limit (partial pushdown:
+  * Spark keeps its own limit on top), decides each malformed record's fate
+  * through one [[StringencyLog]] and reports its counts as task metrics. A
+  * format implements [[advance]] only.
+  */
+abstract class GraftReader(file: String, ctx: ReadContext, where: String)
+    extends PartitionReader[InternalRow] {
+  protected final val input: SeekableInput = HadoopIO.open(new Path(file), ctx.conf.conf)
+  protected final val slog = new StringencyLog(where, ctx.mode)
+  private val limit = ctx.limit
+  private var row: InternalRow = _
+  private var emitted = 0L
+  private var done = false
+
+  /** The next row of the partition, or null at its end (then never called again). */
+  protected def advance(): InternalRow
+  /** Closes the format's own extra streams, after the stringency summary and
+    * before the input.
+    */
+  protected def closeExtra(): Unit = ()
+
+  final override def next(): Boolean = {
+    if (done || (limit >= 0 && emitted >= limit)) return false
+    row = advance()
+    if (row == null) done = true else emitted += 1
+    !done
+  }
+  final override def get(): InternalRow = row
+  final override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
+  final override def close(): Unit =
+    try { slog.summarize(); closeExtra() } finally input.close()
+}
+
+/** One input file as a format's planner sees it: its listed length, the
+  * scan's Hadoop conf and split size, and the file itself, opened on first
+  * use (an index-only probe never opens it).
+  */
+final class PlanInput(val path: Path, val size: Long, val conf: Configuration, val splitSize: Long) {
+  private var opened: SeekableInput = _
+  def in: SeekableInput = {
+    if (opened == null) opened = HadoopIO.open(path, conf)
+    opened
+  }
   lazy val fs: FileSystem = path.getFileSystem(conf)
 
   /** `<file><ext>` if it exists and is not older than the file. Tabix,
@@ -246,6 +293,20 @@ final class PlanInput(val path: Path, val in: SeekableInput, val conf: Configura
   def tiles(start: Long, end: Long): Seq[(Long, Long)] = {
     val n = math.max(1L, (end - start + splitSize - 1) / splitSize)
     (0L until n).map(i => (start + i * splitSize, math.min(end, start + (i + 1) * splitSize)))
+  }
+}
+
+object PlanInput {
+  /** `use` applied to every listed `(file, length)`, fanned out on
+    * [[HadoopIO.planFiles]]' bounded pool in listing order; each file is
+    * opened at most once and closed after.
+    */
+  def each[T](files: Seq[(Path, Long)], conf: Configuration, splitSize: Long)(use: PlanInput => T): Seq[T] = {
+    val lengths = files.toMap
+    HadoopIO.planFiles(files.map(_._1)) { file =>
+      val f = new PlanInput(file, lengths(file), conf, splitSize)
+      try Seq(use(f)) finally if (f.opened != null) f.opened.close()
+    }
   }
 }
 

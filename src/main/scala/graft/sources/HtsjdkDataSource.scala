@@ -11,6 +11,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.bam.BamDataSource
 import graft.sources.cram.CramDataSource
+import graft.sources.fastq.{FastqDataSource, FastqFormat}
 import graft.sources.sam.SamDataSource
 
 /** `format("htsjdk")` — auto-dispatch facade over the reads sources: routes
@@ -47,10 +48,7 @@ class HtsjdkDataSource extends TableProvider with DataSourceRegister {
       if (name.endsWith(".bam")) new BamDataSource
       else if (name.endsWith(".sam")) new SamDataSource
       else if (name.endsWith(".cram")) new CramDataSource
-      else if (name.endsWith(".fastq") || name.endsWith(".fq") ||
-               name.endsWith(".fastq.gz") || name.endsWith(".fastq.bgz") ||
-               name.endsWith(".fq.gz") || name.endsWith(".fq.bgz"))
-        new graft.sources.fastq.FastqDataSource
+      else if (FastqFormat.isFastq(name)) new FastqDataSource
       else throw new IllegalArgumentException(
         s"cannot infer reads format from '$name' (want .bam/.sam/.cram/.fastq); " +
           "use spark.read.format(\"bam\"|\"sam\"|\"cram\"|\"fastq\") directly")

@@ -1,9 +1,7 @@
 package graft.sources.bam
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -11,9 +9,8 @@ import org.apache.spark.sql.types.StructType
 import graft.bam._
 import graft.bgzf.Bgzf
 import graft.index.{BaiIndex, GciIndex, SbiIndex}
-import graft.sources.{FilePlan, GenomicInterval, GraftProvider, GraftScan, HadoopIO, PartEncoder, PlanInput,
-  PlannedSplit, PushedRegion, ReadsTraversal, RecordFormat, SerializableConf, SinkFormat, Stringency,
-  StringencyLog}
+import graft.sources.{FilePlan, GenomicInterval, GraftProvider, GraftReader, GraftScan, PartEncoder, PlanInput,
+  PlannedSplit, PushedRegion, ReadContext, ReadsTraversal, RecordFormat, SinkFormat, StringencyLog}
 
 /** `spark.read.format("bam")` / `df.write.format("bam")` — the Spark-native
   * re-expression of the reference's HtsjdkReadsRddStorage BAM path
@@ -44,8 +41,8 @@ object BamFormat extends RecordFormat {
     * (AbstractBinarySamSource.java:86-113).
     */
   override def acceptsFilter(options: Map[String, String]): Filter => Boolean = PushedRegion.accepts
-  override def exactCount(options: Map[String, String]): Option[(String, Long)] =
-    indexCount(options).map("indexCount" -> _)
+  override def fileCount(options: Map[String, String]): Option[(String, PlanInput => Option[Long])] =
+    Some("indexCount" -> indexCount)
   override def scan(options: Map[String, String], required: StructType, pushed: Array[Filter],
                     limit: Int): Scan = new BamScan(options, required, pushed, limit)
 
@@ -66,56 +63,23 @@ object BamFormat extends RecordFormat {
       options.get("writebai").exists(_.toBoolean) && singleFile, level)
   }
 
-  /** Exact record count of every input file from its indexes, or None if
-    * ANY file lacks one — O(files) tiny index reads, zero data I/O: `.sbi`
-    * carries an exact totalRecords; a samtools `.bai` carries per-ref
-    * pseudo-bin counts + the unplaced tail (exact only when every ref has a
-    * pseudo-bin AND the optional n_no_coor field is physically present).
+  /** Exact record count of one file from its indexes, or None if it lacks
+    * one — a tiny index read, zero data I/O: `.sbi` carries an exact
+    * totalRecords; a samtools `.bai` carries per-ref pseudo-bin counts + the
+    * unplaced tail (exact only when every ref has a pseudo-bin AND the
+    * optional n_no_coor field is physically present).
     *
     * Staleness guard: an index answering a query the data never sees must
     * PROVE it describes this exact file, or the scan falls back to reading.
     * The `.sbi` carries the BAM's byte length for precisely this check
-    * (compared against the live file status); a `.bai` carries no length,
-    * so we require its mtime to be >= the BAM's (a BAM rewritten in place
-    * after indexing is newer than its index → rejected).
+    * (compared against the listed length); a `.bai` carries no length, so
+    * it must be fresh by mtime (a BAM rewritten in place after indexing is
+    * newer than its index → rejected). A present `.sbi` decides alone.
     */
-  private def indexCount(options: Map[String, String]): Option[Long] =
-    try {
-      val conf = SparkSession.active.sessionState.newHadoopConf()
-      val pathStr = options.getOrElse("path", return None)
-      val files = HadoopIO.listInputFiles(pathStr, conf)
-      if (files.isEmpty) return None
-      var total = 0L
-      files.foreach { f =>
-        val fs = f.getFileSystem(conf)
-        val bamStatus = fs.getFileStatus(f)
-        val sbiP = new Path(f.toString + ".sbi")
-        val baiP = new Path(f.toString + ".bai")
-        val c: Option[Long] =
-          if (fs.exists(sbiP)) {
-            val in = HadoopIO.open(sbiP, conf)
-            try scala.util.Try(SbiIndex.read(in)).toOption
-              .filter(_.fileLength == bamStatus.getLen) // stale-index guard
-              .map(_.totalRecords).filter(_ >= 0)
-            finally in.close()
-          } else if (fs.exists(baiP) &&
-                     fs.getFileStatus(baiP).getModificationTime >= bamStatus.getModificationTime) {
-            val in = HadoopIO.open(baiP, conf)
-            try scala.util.Try(BaiIndex.read(in)).toOption.flatMap(_.exactRecordCount)
-            finally in.close()
-          } else None
-        c match {
-          case Some(n) => total += n
-          case None => return None
-        }
-      }
-      Some(total)
-    } catch {
-      // planning probe: missing/corrupt sidecars mean "no pushdown", but
-      // fatal VM errors must propagate
-      case _: java.io.IOException => None
-      case scala.util.control.NonFatal(_) => None
-    }
+  private def indexCount(f: PlanInput): Option[Long] =
+    if (f.fs.exists(new Path(f.path.toString + ".sbi")))
+      f.sidecar(".sbi")(SbiIndex.read).filter(_.fileLength == f.size).map(_.totalRecords).filter(_ >= 0)
+    else f.sidecar(".bai", fresh = true)(BaiIndex.read).flatMap(_.exactRecordCount)
 }
 
 /** Typed-tag projection (`.option("tagColumns", "NM:int,RG:string")`):
@@ -188,11 +152,6 @@ class BamScan(options: Map[String, String], required: StructType, pushed: Array[
 
   private val traversal = ReadsTraversal(options, pushed)
   private val pairAware = options.get("keeppairstogether").exists(_.toBoolean)
-  // validation stringency on the binary path (reference
-  // HtsjdkReadsRddStorage.java:97-100): strict fails with file/voff
-  // context, lenient warns+counts (salvaging tag-only failures), and
-  // permissive skips silently — framing stays aligned in every tier
-  private val stringency = Stringency.fromOptions(options)
 
   override protected def planFile(f: PlanInput): FilePlan = {
     val (header, headerEnd) = BamIO.readHeader(f.in)
@@ -236,7 +195,7 @@ class BamScan(options: Map[String, String], required: StructType, pushed: Array[
     }
     def split(start: Long, end: Long, cs: Long, ce: Long, pairSpan: Option[(Long, Long)] = None) =
       PlannedSplit(start, end, BamInputPartition(f.path.toString, start, end, header, headerEnd, traversal,
-        cs, ce, pairAware, pairSpan, stringency, _))
+        cs, ce, pairAware, pairSpan, _))
     val splits: Seq[PlannedSplit] = indexed match {
       case Some((spans, cuts)) =>
         // keepPairsTogether hands name-runs over between the pieces of
@@ -280,8 +239,8 @@ class BamScan(options: Map[String, String], required: StructType, pushed: Array[
       Some(header.refs))
   }
 
-  override protected def readerFactory(conf: SerializableConf): PartitionReaderFactory =
-    new BamPartitionReaderFactory(conf, required, TagCols.attrKeys(options))
+  override protected def readerFactory(ctx: ReadContext): PartitionReaderFactory =
+    new BamPartitionReaderFactory(ctx, required, TagCols.attrKeys(options))
 }
 
 object BamScan {
@@ -388,28 +347,26 @@ case class BamInputPartition(
     chunkStartVoff: Long, chunkEndVoff: Long, // record-exact voff range; -1 when heuristic
     pairAware: Boolean = false, // name-runs never split across partitions
     pairSpan: Option[(Long, Long)] = None, // pairAware: voff span runs are handed over within (None = file)
-    stringency: Stringency = Stringency.Strict, // malformed-record policy
     hosts: Array[String] = Array.empty) // block hosts of the split's range
   extends InputPartition {
   override def preferredLocations(): Array[String] = hosts
 }
 
-class BamPartitionReaderFactory(conf: SerializableConf, required: StructType,
+class BamPartitionReaderFactory(ctx: ReadContext, required: StructType,
                                 attrKeys: Option[IndexedSeq[String]] = None)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new BamPartitionReader(partition.asInstanceOf[BamInputPartition], conf, required, attrKeys)
+    new BamPartitionReader(partition.asInstanceOf[BamInputPartition], ctx, required, attrKeys)
 }
 
 /** Executor-side reader: boundary search then sequential decode, exactly the
   * reference's executor phases 4–5 (BamSource.getFirstReadInPartition:115-158,
   * AbstractBinarySamSource.getReads:61-135) with decode pruned to `required`.
   */
-class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required: StructType,
+class BamPartitionReader(p: BamInputPartition, ctx: ReadContext, required: StructType,
                          attrKeys: Option[IndexedSeq[String]] = None)
-    extends PartitionReader[InternalRow] {
+    extends GraftReader(p.file, ctx, s"${p.file} [${p.splitStart}, ${p.splitEnd})") {
 
-  private val input = HadoopIO.open(new Path(p.file), conf.conf)
   private val needFilter = p.traversal.intervals.isDefined
   private val mask = {
     val cols = required.fieldNames.toSet
@@ -422,7 +379,6 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
     if (m.attrs && attrKeys.isDefined) m.copy(attrKeys = attrKeys) else m
   }
   private val stream = new graft.bgzf.BgzfInputStream(input)
-  private var currentRow: InternalRow = _
   private var exhausted = false
   private var lastReadName: String = _ // run tracking for pairAware
   private var prevName: String = _     // name of the record before our first
@@ -489,84 +445,62 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
   private val fieldGetters: Array[AlignmentRecord => Any] =
     RecordToRow.getters(required, mask.tagCols, tagHolder, mask.attrKeys.map(_.toSet))
 
-  override def next(): Boolean = {
-    if (exhausted) return false
+  override protected def advance(): InternalRow = {
+    if (exhausted) return null
     while (true) {
       // territory: the next record start owned by this partition —
       // exact chunk end or block owned by this split (heuristic)
       val inTerritory = !stream.atEof &&
         (if (exactChunk) stream.virtualOffset < p.chunkEndVoff
          else stream.blockStartOffset < p.splitEnd)
-      if (!inTerritory) {
-        // pairAware: finish a name-run we started before stopping
-        if (!p.pairAware || lastReadName == null || stream.atEof ||
-            p.pairSpan.exists(stream.virtualOffset >= _._2)) { exhausted = true; return false }
-        val rec = readOne()
-        if (rec == null || rec.readName != lastReadName) { exhausted = true; return false }
-        if (p.traversal.keep(rec)) { currentRow = toRow(rec); return true }
-      } else {
-        val rec = readOne()
-        if (rec == null) { exhausted = true; return false }
-        if (p.pairAware && prevName != null) {
-          // leading run continuing from the previous partition: skip
-          if (rec.readName == prevName) { /* owned by predecessor */ }
-          else { prevName = null; lastReadName = rec.readName; if (p.traversal.keep(rec)) { currentRow = toRow(rec); return true } }
-        } else {
-          lastReadName = rec.readName
-          if (p.traversal.keep(rec)) { currentRow = toRow(rec); return true }
+      val rec =
+        if (inTerritory) readOne()
+        // pairAware: past the territory, finish a name-run we started
+        else if (!p.pairAware || lastReadName == null || stream.atEof ||
+                 p.pairSpan.exists(stream.virtualOffset >= _._2)) null
+        else {
+          val r = readOne()
+          if (r != null && r.readName == lastReadName) r else null
         }
-      }
-    }
-    false
-  }
-
-  private def toRow(rec: AlignmentRecord): InternalRow = RecordToRow.toRow(rec, fieldGetters)
-
-  private val slog = new StringencyLog(s"${p.file} [${p.splitStart}, ${p.splitEnd})")
-
-  private def readOne(): AlignmentRecord = {
-    while (frame.next(stream)) {
-      val rec = frame.bytes
-      val blockSize = frame.size
-      val recVoff = frame.voff
-      try return BamCodec.decodeRecord(rec, blockSize, p.header, mask, tagHolder)
-      catch {
-        case _: Exception if p.stringency eq Stringency.Permissive =>
-          slog.skipSilently() // framing was sane: next record follows
-        case e: Exception if p.stringency eq Stringency.Lenient =>
-          // a failure confined to the optional-tag region is recoverable:
-          // the record re-decodes cleanly without the attribute map.
-          // CG-spilled records (kSmN sentinel cigar) are NOT salvageable
-          // when the cigar is projected: the authoritative ops live in the
-          // broken tag region, so the re-decode's reconstitution attempt
-          // throws too and the record is skipped, never emitted with the
-          // sentinel as its cigar (the codec decodes tags whenever the raw
-          // ops show the sentinel shape and the cigar is requested)
-          val salvagedRec =
-            if (mask.attrs)
-              try BamCodec.decodeRecord(rec, blockSize, p.header,
-                mask.copy(attrs = false, tagCols = Vector.empty), tagHolder)
-              catch { case _: Exception => null }
-            else null
-          if (salvagedRec != null) {
-            slog.salvage(s"tag region of BAM record at voff $recVoff in ${p.file}: ${e.getMessage}")
-            return salvagedRec
-          }
-          slog.skip(s"undecodable BAM record at voff $recVoff in ${p.file}: ${e.getMessage}")
-        case e: Exception =>
-          throw new java.io.IOException(
-            s"undecodable BAM record at voff $recVoff in ${p.file}", e)
+      if (rec == null) return null
+      // pairAware: a leading run continuing from the previous partition
+      // is owned by the predecessor
+      if (prevName == null || rec.readName != prevName) {
+        prevName = null
+        lastReadName = rec.readName
+        if (p.traversal.keep(rec)) return RecordToRow.toRow(rec, fieldGetters)
       }
     }
     null
   }
 
-  override def get(): InternalRow = currentRow
-  override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
-  override def close(): Unit = {
-    slog.summarize()
-    stream.close()
+  private def readOne(): AlignmentRecord = {
+    while (frame.next(stream)) {
+      try return BamCodec.decodeRecord(frame.bytes, frame.size, p.header, mask, tagHolder)
+      catch {
+        case e: Exception =>
+          // framing was sane, so the next record follows. Lenient: a failure
+          // confined to the optional-tag region is recoverable — the record
+          // re-decodes cleanly without the attribute map. CG-spilled records
+          // (kSmN sentinel cigar) are NOT salvageable when the cigar is
+          // projected: the authoritative ops live in the broken tag region,
+          // so the re-decode's reconstitution attempt throws too and the
+          // record is skipped, never emitted with the sentinel as its cigar
+          // (the codec decodes tags whenever the raw ops show the sentinel
+          // shape and the cigar is requested)
+          val at = s"BAM record at voff ${frame.voff} in ${p.file}"
+          val salvaged =
+            if (!mask.attrs) null
+            else slog.salvage(s"tag region of $at: ${e.getMessage}", BamCodec.decodeRecord(
+              frame.bytes, frame.size, p.header, mask.copy(attrs = false, tagCols = Vector.empty), tagHolder))
+          if (salvaged != null) return salvaged
+          slog.reject(s"undecodable $at", e, StringencyLog.hex(frame.bytes, 0, frame.size))
+      }
+    }
+    null
   }
+
+  override protected def closeExtra(): Unit = stream.close()
 }
 
 /** BAM record framing over a BGZF stream: the 4-byte `block_size`, then

@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
@@ -12,9 +11,9 @@ import org.apache.spark.sql.types._
 import graft.bam.{AlignmentRecord, BamRowEncoder, RecordToRow, SamHeader}
 import graft.cram.{CraiEntry, CraiIndex, CramContainer, CramContainers,
   CramRecordCodec, CramRecordWriter, CramRefSource, Fasta, FastaRefSource, NoRefSource}
-import graft.sources.{FilePlan, GenomicInterval, GraftProvider, GraftScan, HadoopIO, PartEncoder, PlanInput,
-  PlannedSplit, PushedRegion, ReadsTraversal, RecordFormat, SerializableConf, SinkFormat, Stringency,
-  StringencyLog}
+import graft.sources.{FilePlan, GenomicInterval, GraftProvider, GraftReader, GraftScan, HadoopIO, PartEncoder,
+  PlanInput, PlannedSplit, PushedRegion, ReadContext, ReadsTraversal, RecordFormat, SerializableConf, SinkFormat,
+  Stringency, StringencyLog}
 
 /** `format("cram")` — CRAM scan/sink (reference CramSource.java:57-151,
   * CramSink.java:35-85).
@@ -62,32 +61,12 @@ object CramFormat extends RecordFormat {
     * source's `.sbi`-answered count, re-expressed for CRAM's self-indexing
     * container framing).
     */
-  override def exactCount(options: Map[String, String]): Option[(String, Long)] =
-    if (records(options)) containerCount(options).map("containerCount" -> _) else None
+  override def fileCount(options: Map[String, String]): Option[(String, PlanInput => Option[Long])] =
+    // the SAM-header container and EOF container both carry nRecords = 0
+    if (!records(options)) None
+    else Some("containerCount" -> (f => Some(CramContainers.containers(f.in).iterator.map(_.nRecords.toLong).sum)))
   override def scan(options: Map[String, String], required: StructType, pushed: Array[Filter],
                     limit: Int): Scan = new CramScan(options, required, pushed, limit)
-
-  /** Sum of `nRecords` over every container header of every input file
-    * (the SAM-header container and EOF container both carry nRecords = 0).
-    * Any failure → None → the normal scan plan runs.
-    */
-  private def containerCount(options: Map[String, String]): Option[Long] =
-    try {
-      val conf = SparkSession.active.sessionState.newHadoopConf()
-      val pathStr = options.getOrElse("path", return None)
-      val files = HadoopIO.listInputFiles(pathStr, conf)
-      if (files.isEmpty) return None
-      var total = 0L
-      files.foreach { f =>
-        val in = HadoopIO.open(f, conf)
-        try CramContainers.containers(in).foreach(c => total += c.nRecords)
-        finally in.close()
-      }
-      Some(total)
-    } catch {
-      case _: java.io.IOException => None
-      case scala.util.control.NonFatal(_) => None
-    }
 
   override def sink(path: String, level: Int, options: Map[String, String],
                     schema: StructType): SinkFormat[_] = {
@@ -419,17 +398,16 @@ class CramScan(options: Map[String, String], required: StructType,
     }
   }
 
-  override protected def readerFactory(conf: SerializableConf): PartitionReaderFactory = {
+  override protected def readerFactory(ctx: ReadContext): PartitionReaderFactory = {
     val req = required
-    val mode = Stringency.fromOptions(options)
     traversal match {
       case Some(t) =>
         val fasta = options.get("fasta")
         val ak = graft.sources.bam.TagCols.attrKeys(options)
         (p: InputPartition) =>
-          new CramRecordsPartitionReader(p.asInstanceOf[CramPartition], t, fasta, conf, req, mode, ak)
+          new CramRecordsPartitionReader(p.asInstanceOf[CramPartition], t, fasta, ctx, req, ak)
       case None =>
-        (p: InputPartition) => new CramPartitionReader(p.asInstanceOf[CramPartition], conf, req, mode)
+        (p: InputPartition) => new CramPartitionReader(p.asInstanceOf[CramPartition], ctx, req)
     }
   }
 }
@@ -443,7 +421,7 @@ object CramScan {
     */
   def indexTile(file: String, major: Int)(in: graft.bgzf.SeekableInput, start: Long, end: Long): Seq[CraiEntry] = {
     val walk = new ContainerWalk(in, CramRangePartition(file, start, end, None), major,
-      CramContainers.FileDefinitionLength.toLong, Stringency.Strict, new StringencyLog(file))
+      CramContainers.FileDefinitionLength.toLong, new StringencyLog(file, Stringency.Strict))
     Iterator.continually(walk.next()).takeWhile(_ != null).filter(_.nRecords > 0)
       .map(c => CraiEntry(c.refSeqId, c.startPos, c.alignmentSpan, c.offset, 0, c.dataLength)).toVector
   }
@@ -507,7 +485,7 @@ private[cram] object ContainerRow {
   * garbage.
   */
 private[cram] final class ContainerWalk(input: graft.bgzf.SeekableInput, p: CramPartition, major: Int,
-                                        dataStart: Long, mode: Stringency, slog: StringencyLog) {
+                                        dataStart: Long, slog: StringencyLog) {
   private val size = input.size
   private var i = 0 // indexed: next position in the offsets
   private var off: Long = p match { // range: next container start
@@ -530,16 +508,12 @@ private[cram] final class ContainerWalk(input: graft.bgzf.SeekableInput, p: Cram
           off += c.totalLength
           if (!c.isEof && c.offset >= dataStart && p.pred.forall(_.keep(c))) return c
         case None =>
-          if (mode == Stringency.Strict)
-            throw new java.io.IOException(s"malformed CRAM container header at $at in ${p.file}")
-          val resync = p match {
-            case _: CramRangePartition =>
-              off = CramContainers.findBoundary(input, at + 1, size)
-              s" (re-synced to $off)"
-            case _ => ""
-          }
-          if (mode == Stringency.Lenient) slog.skip(s"container at $at in ${p.file}$resync")
-          else slog.skipSilently()
+          slog.reject(s"malformed CRAM container header at $at in ${p.file}", null, {
+            val b = new Array[Byte](math.max(0L, math.min(32L, size - at)).toInt)
+            StringencyLog.hex(b, 0, input.preadFully(at, b, 0, b.length))
+          })
+          // a range walk re-syncs to the next CRC-confirmed boundary
+          if (p.isInstanceOf[CramRangePartition]) off = CramContainers.findBoundary(input, at + 1, size)
       }
     }
     null
@@ -547,23 +521,16 @@ private[cram] final class ContainerWalk(input: graft.bgzf.SeekableInput, p: Cram
 }
 
 /** Container-level rows: one per owned container header. */
-class CramPartitionReader(p: CramPartition, conf: SerializableConf, required: StructType,
-                          mode: Stringency = Stringency.Strict)
-    extends PartitionReader[InternalRow] {
-  private val input = HadoopIO.open(new Path(p.file), conf.conf)
-  private val slog = new StringencyLog(s"cram ${p.file}")
+class CramPartitionReader(p: CramPartition, ctx: ReadContext, required: StructType)
+    extends GraftReader(p.file, ctx, s"cram ${p.file}") {
   private val walk = new ContainerWalk(input, p, CramContainers.readFileDefinition(input)._1,
-    CramContainers.FileDefinitionLength.toLong, mode, slog)
+    CramContainers.FileDefinitionLength.toLong, slog)
   private val getters = ContainerRow.getters(required)
-  private var currentRow: InternalRow = _
 
-  override def next(): Boolean = walk.next() match {
-    case null => false
-    case c => currentRow = ContainerRow.toRow(c, getters); true
+  override protected def advance(): InternalRow = walk.next() match {
+    case null => null
+    case c => ContainerRow.toRow(c, getters)
   }
-  override def get(): InternalRow = currentRow
-  override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
-  override def close(): Unit = { slog.summarize(); input.close() }
 }
 
 /** Records-mode reader for both planning routes: each container the
@@ -578,12 +545,10 @@ class CramPartitionReader(p: CramPartition, conf: SerializableConf, required: St
   */
 class CramRecordsPartitionReader(
     p: CramPartition, traversal: ReadsTraversal, fastaPath: Option[String],
-    conf: SerializableConf, required: StructType, mode: Stringency,
-    attrKeys: Option[IndexedSeq[String]] = None)
-    extends PartitionReader[InternalRow] {
+    ctx: ReadContext, required: StructType, attrKeys: Option[IndexedSeq[String]] = None)
+    extends GraftReader(p.file, ctx, s"cram ${p.file}") {
 
   private val file = p.file
-  private val input = HadoopIO.open(new Path(file), conf.conf)
   private val size = input.size
   private val (major, _) = CramContainers.readFileDefinition(input)
   private val header = CramRecordCodec.readSamHeader(input)
@@ -592,7 +557,7 @@ class CramRecordsPartitionReader(
       input, CramContainers.FileDefinitionLength.toLong, size, major)
     hc.offset + hc.totalLength
   }
-  private val fastaOpened = fastaPath.map(FastaRefs.open(_, conf.conf, header.refName))
+  private val fastaOpened = fastaPath.map(FastaRefs.open(_, ctx.conf.conf, header.refName))
   private val fastaIn = fastaOpened.map(_._1)
   private val refSource: CramRefSource = fastaOpened.map(_._2).getOrElse(NoRefSource)
   // record-level field projection: pruned qualities/sequence/attributes are
@@ -611,37 +576,36 @@ class CramRecordsPartitionReader(
   private val tagHolder = new Array[String](fieldMask.tagCols.length)
   private val getters =
     RecordToRow.getters(required, fieldMask.tagCols, tagHolder, fieldMask.attrKeys.map(_.toSet))
-  private val slog = new StringencyLog(s"cram ${file}")
-  private val walk = new ContainerWalk(input, p, major, headerEnd, mode, slog)
+  private val walk = new ContainerWalk(input, p, major, headerEnd, slog)
 
   private var recIt: Iterator[AlignmentRecord] = Iterator.empty
-  private var currentRow: InternalRow = _
 
-  /** Decode `c`'s payload into `recIt`; false = container skipped (lenient/
-    * permissive salvage — the NEXT container is independent, so a payload
-    * failure drops only this one).
+  /** Decode `c`'s payload into `recIt`; false = container rejected (the
+    * NEXT container is independent, so a payload failure drops only this
+    * one).
     */
-  private def decodeInto(c: CramContainer): Boolean =
+  private def decodeInto(c: CramContainer): Boolean = {
+    var payload = Array.emptyByteArray
     try {
-      recIt = CramRecordCodec.decodeContainer(
-        CramRecordCodec.containerPayload(input, c), major, header, refSource, fieldMask)
+      payload = CramRecordCodec.containerPayload(input, c)
+      recIt = CramRecordCodec.decodeContainer(payload, major, header, refSource, fieldMask)
       true
     } catch {
-      case e: Exception if mode != Stringency.Strict =>
-        if (mode == Stringency.Lenient)
-          slog.skip(s"container payload at ${c.offset} in $file: ${e.getMessage}")
-        else slog.skipSilently()
+      case e: Exception =>
+        slog.reject(s"undecodable CRAM container payload at ${c.offset} in $file", e,
+          StringencyLog.hex(payload, 0, payload.length))
         false
     }
+  }
 
-  /** Advance to the next selected+decoded container; false when exhausted. */
-  private def advance(): Boolean = {
+  /** Move to the next selected+decoded container; false when exhausted. */
+  private def nextContainer(): Boolean = {
     var c = walk.next()
     while (c != null && !decodeInto(c)) c = walk.next()
     c != null
   }
 
-  override def next(): Boolean = {
+  override protected def advance(): InternalRow = {
     while (true) {
       while (recIt.hasNext) {
         val r = recIt.next()
@@ -655,20 +619,15 @@ class CramRecordsPartitionReader(
               i += 1
             }
           }
-          currentRow = RecordToRow.toRow(r, getters); return true
+          return RecordToRow.toRow(r, getters)
         }
       }
-      if (!advance()) return false
+      if (!nextContainer()) return null
     }
-    false
+    null
   }
-  override def get(): InternalRow = currentRow
-  override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
-  override def close(): Unit = {
-    slog.summarize()
-    fastaIn.foreach(_.close())
-    input.close()
-  }
+
+  override protected def closeExtra(): Unit = fastaIn.foreach(_.close())
 }
 
 // ---- write path -----------------------------------------------------------

@@ -1,17 +1,15 @@
 package graft.sources.fastq
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.fastq.{FastqCodec, FastqRecord}
-import graft.sources.{FilePlan, GraftProvider, GraftScan, HadoopIO, LineCursor, PartEncoder, PlanInput,
-  PlannedSplit, RecordFormat, SerializableConf, SinkFormat, SplitTextReader, Stringency, StringencyLog}
+import graft.sources.{FilePlan, GraftProvider, GraftReader, GraftScan, LineCursor, PartEncoder, PlanInput,
+  PlannedSplit, ReadContext, RecordFormat, SinkFormat, SplitTextReader}
 
 /** `format("fastq")` — splittable raw-read scan/sink over plain, BGZF, or
   * single-split gzip text. Beyond the reference's surface (disq starts at
@@ -30,14 +28,18 @@ class FastqDataSource extends GraftProvider(FastqFormat)
 
 object FastqFormat extends RecordFormat {
   override def name: String = "fastq"
+  private val Suffixes = Seq(".fastq", ".fq", ".fastq.gz", ".fastq.bgz", ".fq.gz", ".fq.bgz")
+  /** A path with a FASTQ suffix is one FASTQ file (the sink's single-file
+    * mode, the `htsjdk` facade's dispatch).
+    */
+  def isFastq(path: String): Boolean = Suffixes.exists(path.endsWith)
+
   override def schema(options: Map[String, String]): StructType = FastqRecord.schema
   override def scan(options: Map[String, String], required: StructType, pushed: Array[Filter],
                     limit: Int): Scan = new FastqScan(options, required, limit)
   override def sink(path: String, level: Int, options: Map[String, String],
                     schema: StructType): SinkFormat[_] = {
-    val single = path.endsWith(".fastq") || path.endsWith(".fq") ||
-      path.endsWith(".fastq.gz") || path.endsWith(".fastq.bgz") ||
-      path.endsWith(".fq.gz") || path.endsWith(".fq.bgz")
+    val single = isFastq(path)
     val shardSuffix = options.getOrElse("shardsuffix", ".fastq")
     require(Seq(".fastq", ".fq", ".fastq.gz", ".fastq.bgz").contains(shardSuffix),
       s"unsupported shardSuffix $shardSuffix")
@@ -47,8 +49,6 @@ object FastqFormat extends RecordFormat {
 
 class FastqScan(options: Map[String, String], required: StructType, limitHint: Int)
     extends GraftScan("fastq", options, required, limitHint) {
-  private val stringency = Stringency.fromOptions(options)
-
   override protected def planFile(f: PlanInput): FilePlan = {
     val bgzf = SplitTextReader.isBgzf(f.in)
     val wholeGzip = !bgzf && SplitTextReader.isPlainGzip(f.in)
@@ -57,28 +57,27 @@ class FastqScan(options: Map[String, String], required: StructType, limitHint: I
         // plain gzip is single-split; the limit fast path is one
         // whole-file partition, capped by the shell
         Seq(PlannedSplit(0L, f.size,
-          FastqInputPartition(f.path.toString, 0L, Long.MaxValue, bgzf, wholeGzip, stringency, _)))
+          FastqInputPartition(f.path.toString, 0L, Long.MaxValue, bgzf, wholeGzip, _)))
       else f.tiles(0L, f.size).map { case (s0, e0) =>
-        PlannedSplit(s0, e0, FastqInputPartition(f.path.toString, s0, e0, bgzf, wholeGzip = false, stringency, _))
+        PlannedSplit(s0, e0, FastqInputPartition(f.path.toString, s0, e0, bgzf, wholeGzip = false, _))
       })
   }
 
-  override protected def readerFactory(conf: SerializableConf): PartitionReaderFactory = {
+  override protected def readerFactory(ctx: ReadContext): PartitionReaderFactory = {
     val req = required
     (partition: InputPartition) => new FastqPartitionReader(
-      partition.asInstanceOf[FastqInputPartition], conf, req)
+      partition.asInstanceOf[FastqInputPartition], ctx, req)
   }
 }
 
 case class FastqInputPartition(file: String, splitStart: Long, splitEnd: Long,
-    bgzf: Boolean, wholeGzip: Boolean, stringency: Stringency,
+    bgzf: Boolean, wholeGzip: Boolean,
     hosts: Array[String] = Array.empty) extends InputPartition {
   override def preferredLocations(): Array[String] = hosts
 }
 
-class FastqPartitionReader(p: FastqInputPartition, conf: SerializableConf, required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val input = HadoopIO.open(new Path(p.file), conf.conf)
+class FastqPartitionReader(p: FastqInputPartition, ctx: ReadContext, required: StructType)
+    extends GraftReader(p.file, ctx, s"${p.file} [${p.splitStart}, ${p.splitEnd})") {
   // read UNBOUNDED from the split start: the cut is on the RECORD key
   // (header-line position), and a record whose header this split owns may
   // trail lines into the next split's byte range
@@ -86,7 +85,6 @@ class FastqPartitionReader(p: FastqInputPartition, conf: SerializableConf, requi
     if (p.wholeGzip) SplitTextReader.gzipCursor(input)
     else SplitTextReader.cursor(input, p.splitStart, Long.MaxValue, p.bgzf))
   private val getters = FastqRowBuilder.getters(required)
-  private val slog = new StringencyLog(s"${p.file} [${p.splitStart}, ${p.splitEnd})")
 
   private val look = scala.collection.mutable.ArrayDeque.empty[(Long, String)]
   private def fill(n: Int): Unit = while (look.size < n && lines.hasNext) look += lines.next()
@@ -105,12 +103,9 @@ class FastqPartitionReader(p: FastqInputPartition, conf: SerializableConf, requi
       // spilled tail of the predecessor's last record (normal operation,
       // not an error); with more, the split landed in garbage, which
       // stringency arbitrates
-      if (look.size > 3) {
-        if (p.stringency eq Stringency.Strict)
-          throw new java.io.IOException(
-            s"cannot find FASTQ record phase at split ${p.splitStart} of ${p.file}")
-        slog.skip(s"no FASTQ record phase at split ${p.splitStart} of ${p.file}")
-      }
+      if (look.size > 3)
+        slog.reject(s"cannot find FASTQ record phase at split ${p.splitStart} of ${p.file} at " +
+          where(look.head._1), null, LineCursor.preview(look.head._2))
       look.clear()
     } else {
       var i = 0
@@ -119,47 +114,31 @@ class FastqPartitionReader(p: FastqInputPartition, conf: SerializableConf, requi
     aligned = true
   }
 
-  private var currentRow: InternalRow = _
-
-  override def next(): Boolean = {
+  override protected def advance(): InternalRow = {
     if (!aligned) align()
     while (true) {
       fill(4)
-      if (look.isEmpty) return false
-      if (look.head._1 >= p.splitEnd) return false // next split owns it
+      if (look.isEmpty) return null
+      if (look.head._1 >= p.splitEnd) return null // next split owns it
       if (look.size < 4) {
-        // truncated trailing record
-        if (p.stringency eq Stringency.Strict)
-          throw new java.io.IOException(s"truncated FASTQ record at end of ${p.file} at " +
-            s"${where(look.head._1)}: ${LineCursor.preview(look.head._2)}")
-        slog.skip(s"truncated FASTQ record at end of ${p.file}")
-        look.clear(); return false
+        slog.reject(s"truncated FASTQ record at end of ${p.file} at ${where(look.head._1)}", null,
+          LineCursor.preview(look.head._2))
+        return null
       }
       val (key, l0) = look.removeHead(); val l1 = look.removeHead()._2
       val l2 = look.removeHead()._2; val l3 = look.removeHead()._2
-      try {
-        val rec = FastqCodec.parse(l0, l1, l2, l3)
-        currentRow = FastqRowBuilder.build(rec, getters)
-        return true
-      } catch {
-        case _: Exception if p.stringency eq Stringency.Permissive => slog.skipSilently()
-        case e: Exception if p.stringency eq Stringency.Lenient =>
-          slog.skip(s"bad FASTQ record in ${p.file} at ${where(key)}: ${e.getMessage}")
+      try return FastqRowBuilder.build(FastqCodec.parse(l0, l1, l2, l3), getters)
+      catch {
         case e: Exception =>
-          throw new java.io.IOException(
-            s"bad FASTQ record in ${p.file} at ${where(key)}: ${LineCursor.preview(l0)}", e)
+          slog.reject(s"bad FASTQ record in ${p.file} at ${where(key)}", e, LineCursor.preview(l0))
       }
     }
-    false
+    null
   }
 
   /** Where the record with header-line key `key` starts, for error messages. */
   private def where(key: Long): String =
     if (p.wholeGzip) s"line $key" else if (p.bgzf) s"BGZF block at offset $key" else s"offset $key"
-
-  override def get(): InternalRow = currentRow
-  override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
-  override def close(): Unit = { slog.summarize(); input.close() }
 }
 
 object FastqRowBuilder {

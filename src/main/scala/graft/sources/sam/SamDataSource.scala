@@ -1,17 +1,14 @@
 package graft.sources.sam
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 import graft.bam.{BamFieldMask, RecordToRow, SamHeader}
 import graft.sam.SamCodec
-import graft.sources.{FilePlan, GraftProvider, GraftScan, HadoopIO, PartEncoder, PlanInput, PlannedSplit,
-  PushedRegion, ReadsTraversal, RecordFormat, SerializableConf, SinkFormat, SplitTextReader, Stringency,
-  StringencyLog}
+import graft.sources.{FilePlan, GraftProvider, GraftReader, GraftScan, PartEncoder, PlanInput, PlannedSplit,
+  PushedRegion, ReadContext, ReadsTraversal, RecordFormat, SinkFormat, SplitTextReader}
 import graft.sources.bam.TagCols
 
 /** `format("sam")` — plain-text SAM scan/sink (reference SamSource.java:35-87,
@@ -55,7 +52,6 @@ class SamScan(options: Map[String, String], required: StructType,
       TagCols.attrKeys(options).map(k => s" attrKeys=[${k.mkString(",")}]").getOrElse("")
 
   private val traversal = ReadsTraversal(options, pushed)
-  private val stringency = Stringency.fromOptions(options)
 
   override protected def planFile(f: PlanInput): FilePlan = {
     // header text: leading @-lines of the file
@@ -65,30 +61,28 @@ class SamScan(options: Map[String, String], required: StructType,
     // limit fast path: one whole-file partition, capped by the shell
     val ranges = if (limitHint >= 0 && traversal.intervals.isEmpty) Seq((0L, f.size)) else f.tiles(0L, f.size)
     FilePlan(ranges.map { case (s0, e0) =>
-      PlannedSplit(s0, e0, SamInputPartition(f.path.toString, s0, e0, header, traversal, stringency, _))
+      PlannedSplit(s0, e0, SamInputPartition(f.path.toString, s0, e0, header, traversal, _))
     })
   }
 
-  override protected def readerFactory(conf: SerializableConf): PartitionReaderFactory = {
+  override protected def readerFactory(ctx: ReadContext): PartitionReaderFactory = {
     val req = required
     val ak = TagCols.attrKeys(options)
     (partition: InputPartition) => new SamPartitionReader(
-      partition.asInstanceOf[SamInputPartition], conf, req, ak)
+      partition.asInstanceOf[SamInputPartition], ctx, req, ak)
   }
 }
 
 case class SamInputPartition(file: String, splitStart: Long, splitEnd: Long,
     header: SamHeader, traversal: ReadsTraversal,
-    stringency: Stringency, // malformed-line policy
     hosts: Array[String] = Array.empty) // block hosts of the split's range
   extends InputPartition {
   override def preferredLocations(): Array[String] = hosts
 }
 
-class SamPartitionReader(p: SamInputPartition, conf: SerializableConf, required: StructType,
+class SamPartitionReader(p: SamInputPartition, ctx: ReadContext, required: StructType,
                          attrKeys: Option[IndexedSeq[String]] = None)
-    extends PartitionReader[InternalRow] {
-  private val input = HadoopIO.open(new Path(p.file), conf.conf)
+    extends GraftReader(p.file, ctx, s"${p.file} [${p.splitStart}, ${p.splitEnd})") {
   private val lines = SplitTextReader.cursor(input, p.splitStart, p.splitEnd, bgzf = false)
   // column-pruned decode mask: tag_XX columns drive the selective tail
   // scan, a projection without `attributes` skips the per-tag split, and a
@@ -99,46 +93,28 @@ class SamPartitionReader(p: SamInputPartition, conf: SerializableConf, required:
   }
   private val tagHolder = new Array[String](mask.tagCols.length)
   private val getters = RecordToRow.getters(required, mask.tagCols, tagHolder, mask.attrKeys.map(_.toSet))
-  private var currentRow: InternalRow = _
-  private val slog = new StringencyLog(s"${p.file} [${p.splitStart}, ${p.splitEnd})")
 
-  override def next(): Boolean = {
+  override protected def advance(): InternalRow = {
     while (lines.next()) {
       if (lines.len > 0 && lines.bytes(lines.off) != '@') {
         val line = lines.text
-        // validation stringency (reference HtsjdkReadsRddStorage.java:97-100):
-        // strict fails fast with context, lenient warns+counts (salvaging
-        // lines whose failure is confined to the optional columns past the
-        // 11 mandatory SAM fields), permissive skips silently
-        val strictTail = p.stringency eq Stringency.Strict
+        // lenient salvages a line whose failure is confined to the optional
+        // columns past the 11 mandatory SAM fields; only strict checks them
         val rec =
-          try SamCodec.fromLine(line, p.header, mask, tagHolder, strictTail)
+          try SamCodec.fromLine(line, p.header, mask, tagHolder, slog.strict)
           catch {
-            case _: Exception if p.stringency eq Stringency.Permissive =>
-              slog.skipSilently(); null
-            case e: Exception if p.stringency eq Stringency.Lenient =>
-              val mandatory = line.split('\t').take(11).mkString("\t")
-              val salvagedRec =
-                try SamCodec.fromLine(mandatory, p.header, mask, tagHolder)
-                catch { case _: Exception => null }
-              if (salvagedRec != null)
-                slog.salvage(s"optional columns of SAM line in ${p.file} at ${lines.where}: ${e.getMessage}")
-              else slog.skip(s"bad SAM line in ${p.file} at ${lines.where}: ${e.getMessage}")
-              salvagedRec
             case e: Exception =>
-              throw new java.io.IOException(s"bad SAM line in ${p.file} at ${lines.where}: ${lines.preview}", e)
+              val salvaged = slog.salvage(
+                s"optional columns of SAM line in ${p.file} at ${lines.where}: ${e.getMessage}",
+                SamCodec.fromLine(line.split('\t').take(11).mkString("\t"), p.header, mask, tagHolder))
+              if (salvaged == null) slog.reject(s"bad SAM line in ${p.file} at ${lines.where}", e, lines.preview)
+              salvaged
           }
-        if (rec != null && p.traversal.keep(rec)) {
-          currentRow = RecordToRow.toRow(rec, getters)
-          return true
-        }
+        if (rec != null && p.traversal.keep(rec)) return RecordToRow.toRow(rec, getters)
       }
     }
-    false
+    null
   }
-  override def get(): InternalRow = currentRow
-  override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
-  override def close(): Unit = { slog.summarize(); input.close() }
 }
 
 // (row building is RecordToRow in BamModel.scala — shared by BAM/CRAM/SAM

@@ -4,14 +4,13 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.{CountingOutputStream, FilePlan, GenomicInterval, GraftProvider, GraftScan, HadoopIO,
-  LineCursor, PartEncoder, PlanInput, PlannedSplit, PushedRegion, RecordFormat, SerializableConf, SinkFormat,
-  SplitTextReader, Stringency, StringencyLog}
+import graft.sources.{CountingOutputStream, FilePlan, GenomicInterval, GraftProvider, GraftReader, GraftScan,
+  LineCursor, PartEncoder, PlanInput, PlannedSplit, PushedRegion, ReadContext, RecordFormat, SinkFormat,
+  SplitTextReader}
 import graft.vcf.{Variant, VcfFormatMask, VcfHeader, VcfRowDecoder}
 
 /** `format("vcf")` — VCF scan/sink over plain, BGZF (.vcf.bgz / BGZF .vcf.gz,
@@ -82,14 +81,13 @@ class VcfScan(options: Map[String, String], required: StructType,
   override protected def headerKind: String = "sample lists"
 
   private val intervals = PushedRegion.intervals(options, pushed)
-  private val stringency = Stringency.fromOptions(options)
 
   override protected def planFile(f: PlanInput): FilePlan = {
     val bgzf = SplitTextReader.isBgzf(f.in)
     val plainGzip = !bgzf && SplitTextReader.isPlainGzip(f.in)
     val header = VcfHeader.parse(SplitTextReader.allLines(f.in))
     def split(s0: Long, e0: Long) = PlannedSplit(s0, e0,
-      VcfInputPartition(f.path.toString, s0, e0, header, bgzf, wholeGzip = false, intervals, stringency, _))
+      VcfInputPartition(f.path.toString, s0, e0, header, bgzf, wholeGzip = false, intervals, _))
     // byte ranges whose blocks can hold overlapping records, sorted and
     // merged, plus their bytes before merging (the index span bytes)
     def pruned(ranges: Seq[(Long, Long)]): (Seq[(Long, Long)], Long) = {
@@ -134,7 +132,7 @@ class VcfScan(options: Map[String, String], required: StructType,
         // non-splittable: one whole-file partition (reference
         // BGZFEnhancedGzipCodec fallback semantics)
         (Seq(PlannedSplit(0L, f.size, VcfInputPartition(f.path.toString, 0L, Long.MaxValue, header,
-          bgzf = false, wholeGzip = true, intervals, stringency, _))), 0L)
+          bgzf = false, wholeGzip = true, intervals, _))), 0L)
       else if (limitHint >= 0 && intervals.isEmpty)
         // limit fast path: one whole-file partition, no index I/O or split
         // tiling, capped by the shell
@@ -147,11 +145,11 @@ class VcfScan(options: Map[String, String], required: StructType,
     FilePlan(splits, spanBytes, Some(header.samples))
   }
 
-  override protected def readerFactory(conf: SerializableConf): PartitionReaderFactory = {
+  override protected def readerFactory(ctx: ReadContext): PartitionReaderFactory = {
     val req = required
     val mask = graft.vcf.VcfFormatMask.from(req, formatKeys, infoKeys)
     (partition: InputPartition) => new VcfPartitionReader(
-      partition.asInstanceOf[VcfInputPartition], conf, req, mask)
+      partition.asInstanceOf[VcfInputPartition], ctx, req, mask)
   }
 }
 
@@ -188,66 +186,47 @@ object VcfScan {
 case class VcfInputPartition(file: String, splitStart: Long, splitEnd: Long,
     header: VcfHeader, bgzf: Boolean, wholeGzip: Boolean,
     intervals: Option[Seq[GenomicInterval]],
-    stringency: Stringency,
     hosts: Array[String] = Array.empty) extends InputPartition {
   override def preferredLocations(): Array[String] = hosts
 }
 
-class VcfPartitionReader(p: VcfInputPartition, conf: SerializableConf, required: StructType,
+class VcfPartitionReader(p: VcfInputPartition, ctx: ReadContext, required: StructType,
                          mask0: VcfFormatMask = VcfFormatMask.All)
-    extends PartitionReader[InternalRow] {
+    extends GraftReader(p.file, ctx, s"${p.file} [${p.splitStart}, ${p.splitEnd})") {
   // the interval residual filter compares against the record's END-aware
   // span, so a pruned-away `end` column is forced back on whenever an
   // interval predicate is present — projection must never change which
   // records an interval scan returns
   private val mask =
     if (p.intervals.isDefined) mask0.copy(end = true) else mask0
-  private val input = HadoopIO.open(new Path(p.file), conf.conf)
   private val lines: LineCursor =
     if (p.wholeGzip) SplitTextReader.gzipCursor(input)
     else SplitTextReader.cursor(input, p.splitStart, p.splitEnd, p.bgzf)
   private val decoder = new VcfRowDecoder(required, p.header.samples, mask)
   private val intervals: Array[(Array[Byte], Int, Int)] = p.intervals.toArray.flatten
     .map(iv => (iv.contig.getBytes(UTF_8), iv.start, iv.end))
-  private var currentRow: InternalRow = _
-  private val slog = new StringencyLog(s"${p.file} [${p.splitStart}, ${p.splitEnd})")
 
   private def keep(d: VcfRowDecoder): Boolean = intervals.isEmpty || intervals.exists {
     case (c, s, e) => d.start <= e && d.end >= s && d.contigIs(c)
   }
 
-  override def next(): Boolean = {
+  override protected def advance(): InternalRow = {
     while (lines.next()) {
       val b = lines.bytes
-      if (lines.len > 0 && b(lines.off) != '#') {
-        val d = decode(b, lines.off, lines.len)
-        if (d != null && keep(d)) {
-          currentRow = d.row()
-          return true
-        }
-      }
+      if (lines.len > 0 && b(lines.off) != '#' && decode(b, lines.off, lines.len) && keep(decoder))
+        return decoder.row()
     }
-    false
+    null
   }
 
-  /** The decoder holding the parsed line, or null when it is dropped.
-    * Stringency: strict fails fast with the file and offset, lenient warns,
-    * skips and counts, permissive skips silently.
-    */
-  private def decode(b: Array[Byte], off: Int, len: Int): VcfRowDecoder =
-    try { decoder.parse(b, off, len); decoder }
+  /** Whether the decoder holds the parsed line; false when it is rejected. */
+  private def decode(b: Array[Byte], off: Int, len: Int): Boolean =
+    try { decoder.parse(b, off, len); true }
     catch {
-      case _: Exception if p.stringency eq Stringency.Permissive =>
-        slog.skipSilently(); null
-      case e: Exception if p.stringency eq Stringency.Lenient =>
-        slog.skip(s"bad VCF line in ${p.file} at ${lines.where}: ${e.getMessage}"); null
       case e: Exception =>
-        throw new java.io.IOException(s"bad VCF line in ${p.file} at ${lines.where}: ${lines.preview}", e)
+        slog.reject(s"bad VCF line in ${p.file} at ${lines.where}", e, lines.preview)
+        false
     }
-
-  override def get(): InternalRow = currentRow
-  override def currentMetricsValues(): Array[CustomTaskMetric] = slog.metrics
-  override def close(): Unit = { slog.summarize(); input.close() }
 }
 
 // ---- write path -----------------------------------------------------------

@@ -54,11 +54,6 @@ final class VcfRowEncoder(schema: StructType) extends RowBytes(1 << 12) {
       pos += digits
     }
 
-  /** `s`'s `String` form; the text `null` for null, as `StringBuilder.append`. */
-  private def putNullable(s: UTF8String): Unit =
-    if (s == null) { putByte('n'); putByte('u'); putByte('l'); putByte('l') }
-    else putUtf8(RowText.text(s))
-
   /** Sample names of this row's genotypes (writer header bootstrap — called
     * until the first genotyped row is seen, then never again).
     */
@@ -74,7 +69,8 @@ final class VcfRowEncoder(schema: StructType) extends RowBytes(1 << 12) {
 
   /** Encode one row into `buf` (line + '\n'); returns the length. Checks run
     * in the converter's order: per genotype a null struct or a null FORMAT
-    * value, then a null ALT or FILTER element, then a null INFO value.
+    * value, then a null ALT or FILTER element, then a null INFO value, then
+    * a null CHROM or REF.
     */
   def encode(row: InternalRow): Int = {
     pos = 0
@@ -110,12 +106,16 @@ final class VcfRowEncoder(schema: StructType) extends RowBytes(1 << 12) {
       memoContig = contig.clone()
       lastContig = memoContig.toString
     }
-    putNullable(contig); putByte('\t')
+    // a null CHROM or REF fails below, after the values the converter checks
+    if (contig != null) putUtf8(RowText.text(contig))
+    putByte('\t')
     putInt(lastStart); putByte('\t')
     val id = str(row, x.id)
     if (id == null) putByte('.') else putUtf8(RowText.text(id))
     putByte('\t')
-    putNullable(str(row, x.ref)); putByte('\t')
+    val ref = str(row, x.ref)
+    if (ref != null) putUtf8(RowText.text(ref))
+    putByte('\t')
     putList(row, x.alt, ',')
     putByte('\t')
 
@@ -147,6 +147,7 @@ final class VcfRowEncoder(schema: StructType) extends RowBytes(1 << 12) {
         i += 1
       }
     }
+    VcfRowEncoder.requireSiteFields(contig, ref)
 
     if (nG > 0) {
       // the converter substitutes "./." for a null gt, so GT is always first
@@ -240,6 +241,13 @@ final class VcfRowEncoder(schema: StructType) extends RowBytes(1 << 12) {
 }
 
 object VcfRowEncoder {
+  /** CHROM and REF have no missing value: a null one fails the write with
+    * its column named (the encoder and the spec writer both raise this).
+    */
+  def requireSiteFields(contig: AnyRef, ref: AnyRef): Unit =
+    if (contig == null || ref == null) throw new IllegalArgumentException(
+      s"null ${if (contig == null) "contig" else "ref"} in VCF write (CHROM and REF have no missing value)")
+
   /** Column positions of the variant schema in a sink's input (-1 = absent);
     * the genotype subfields resolve by name inside the struct.
     */

@@ -109,6 +109,12 @@ class CramRecordCodecSpec extends AnyFunSuite {
     assert(back == recs)
   }
 
+  test("the records writer parses cigars with BAM's parser: no wrap, no dropped digits") {
+    assert(CramRecordWriter.cigarOps("3M2D5M") == Seq((3, 'M'), (2, 'D'), (5, 'M')))
+    for (bad <- Seq("4294967297M", "268435456M", "4M3", "4Q"))
+      intercept[IllegalArgumentException](CramRecordWriter.cigarOps(bad))
+  }
+
   test("unknown-sequence mapped records keep their CIGAR shape") {
     val header = SamHeader(IndexedSeq(BamRef("chr1", 1000)))
     val r = AlignmentRecord("q", 0, "chr1", 5, end = 14, mapq = 7, cigar = "3M2D5M1N2M",

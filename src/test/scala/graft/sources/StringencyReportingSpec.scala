@@ -2,19 +2,27 @@ package graft.sources
 
 import java.nio.file.{Files, Path}
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
-import graft.bam.TestReads
+import graft.bam.{BamCodec, BamSpecWriter, TestReads}
+import graft.bgzf.BgzfOutputStream
+import graft.cram.CramContainers
 
 /** What a scan reports about the records it could not read as they are:
   * lenient and permissive reads count them as the `recordsSkipped` /
   * `recordsSalvaged` task metrics (exact values read from
-  * `executedPlan.metrics`), and a strict VCF read names the file and the
-  * bad line's offset without echoing the whole line.
+  * `executedPlan.metrics`), and a strict read names the file and the bad
+  * record's offset without echoing the whole line. Every partition reader
+  * (BAM, SAM, VCF, FASTQ, CRAM containers, CRAM records) applies the same
+  * policy: lenient warns per record, permissive does not.
   *
   * A VCF line is never salvaged in practice: the genotype columns never
   * fail the decode, and the mandatory-fields re-decode checks a superset
@@ -33,6 +41,13 @@ class StringencyReportingSpec extends AnyFunSuite with SparkFixture with Adaptiv
     Files.write(p, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     p.toString
   }
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  /** Byte offset of `line` in the file written from `lines`. */
+  private def offsetOf(lines: Seq[String], line: String): Int =
+    lines.takeWhile(_ != line).map(_.getBytes("UTF-8").length + 1).sum
 
   /** (rows, skipped, salvaged) of the very plan instance whose metrics are read. */
   private def counts(df: DataFrame): (Int, Long, Long) = {
@@ -88,10 +103,154 @@ class StringencyReportingSpec extends AnyFunSuite with SparkFixture with Adaptiv
     val offset = lines.takeWhile(_ != bad).map(_.getBytes("UTF-8").length + 1).sum
     val ex = intercept[org.apache.spark.SparkException](
       spark.read.format("vcf").load(path).selectExpr("start").collect())
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     val msg = messages(ex).find(_.contains("bad VCF line")).getOrElse(fail(s"no VCF error in $ex"))
     assert(msg.contains(path) && msg.contains(s"offset $offset"), msg)
     assert(msg.contains(bad.take(150)) && !msg.contains(bad.take(201)), msg.length)
+  }
+
+  // ---- one policy for every reader -----------------------------------------
+
+  /** The per-record stringency warnings logged while `body` runs. */
+  private def warningsDuring[T](body: => T): (T, Seq[String]) = {
+    val logger = LogManager.getLogger(classOf[StringencyLog]).asInstanceOf[CoreLogger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("stringency-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName == logger.getName) seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val level = logger.getLevel
+    logger.addAppender(capture)
+    logger.setLevel(Level.WARN)
+    try {
+      val out = body
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.toSeq.filter(_.startsWith("lenient:")))
+    } finally {
+      logger.removeAppender(capture)
+      logger.setLevel(level)
+      capture.stop()
+    }
+  }
+
+  /** One malformed input of one reader: its scan in a given mode, the rows
+    * and skipped records a lenient or permissive read reports, and the
+    * file-and-offset text a strict read's error carries.
+    */
+  private case class Malformed(reader: String, read: String => DataFrame, rows: Int, skipped: Long,
+                               names: String)
+
+  /** One partition per file, so each reader instance sees the whole input. */
+  private def load(format: String, path: String, mode: String, opts: (String, String)*): DataFrame =
+    spark.read.format(format).option("mode", mode).option("splitSize", 64L << 20).options(opts.toMap).load(path)
+
+  /** 40 BAM records; the 18th has l_read_name = 255, so its name overruns
+    * the record however few columns are decoded (its framing is intact).
+    */
+  private def malformedBam(): Malformed = {
+    val path = tmpDir().resolve("bad.bam")
+    val out = new BgzfOutputStream(Files.newOutputStream(path))
+    BamCodec.writeHeader(out, TestReads.header)
+    var badVoff = -1L
+    TestReads.pairs(20).zipWithIndex.foreach { case (r, i) =>
+      val bytes = BamSpecWriter.encodeRecord(r, TestReads.header)
+      if (i == 17) { badVoff = out.virtualOffset; bytes(4 + 8) = 0xff.toByte }
+      out.write(bytes)
+    }
+    out.close()
+    Malformed("BAM", load("bam", path.toString, _).selectExpr("readName", "start"), 39, 1L,
+      s"undecodable BAM record at voff $badVoff in $path")
+  }
+
+  private def malformedSam(): Malformed = {
+    def line(name: String, flags: String) = s"$name\t$flags\tchr20\t100\t60\t4M\t*\t0\t0\tACGT\tIIII"
+    val lines = Seq("@HD\tVN:1.6", "@SQ\tSN:chr20\tLN:1000000") ++
+      Seq(line("r1", "0"), line("r2", "0"), line("r3", "x"), line("r4", "0"), line("r5", "0"))
+    val path = write("bad.sam", lines)
+    Malformed("SAM", load("sam", path, _).selectExpr("readName"), 4, 1L,
+      s"bad SAM line in $path at offset ${offsetOf(lines, line("r3", "x"))}")
+  }
+
+  private def malformedVcf(): Malformed = {
+    val path = write("bad.vcf", vcfLines)
+    Malformed("VCF", load("vcf", path, _).selectExpr("start"), 3, 1L,
+      s"bad VCF line in $path at offset ${offsetOf(vcfLines, vcfLines(3))}")
+  }
+
+  /** 21 records, the 8th with a qual shorter than its seq, then a truncated
+    * trailing record: two skipped records.
+    */
+  private def malformedFastq(): Malformed = {
+    val recs = (0 until 21).map(i => Seq(s"@r$i", "ACGT", "+", if (i == 7) "III" else "IIII"))
+    val lines = recs.flatten ++ Seq("@truncated", "ACGT")
+    val path = write("bad.fastq", lines)
+    Malformed("FASTQ", load("fastq", path, _).selectExpr("readName"), 20, 2L,
+      s"bad FASTQ record in $path at offset ${offsetOf(lines, "@r7")}")
+  }
+
+  /** Flips `bit` of byte `at` of a Spark-written file and drops the local
+    * filesystem's checksum, so the reader itself sees the corrupt byte.
+    */
+  private def corrupt(path: Path, at: Long, bit: Int): Unit = {
+    val raf = new java.io.RandomAccessFile(path.toFile, "rw")
+    try {
+      raf.seek(at)
+      val b = raf.read()
+      raf.seek(at)
+      raf.write(b ^ bit)
+    } finally raf.close()
+    Files.deleteIfExists(path.resolveSibling(s".${path.getFileName}.crc"))
+  }
+
+  private def containerOffsets(path: Path): Seq[(Long, Long)] = {
+    val in = graft.bgzf.SeekableInput.ofFile(path)
+    try CramContainers.containers(in).map(c => (c.offset, c.totalLength - c.dataLength))
+    finally in.close()
+  }
+
+  /** 30 container specs; the 11th container's header fails its CRC. */
+  private def malformedCramContainers(): Malformed = {
+    val path = tmpDir().resolve("bad.cram")
+    spark.range(30L).selectExpr("cast(id % 3 as int) as ref_seq_id", "cast(id * 100 + 1 as int) as start_pos",
+      "90 as span", "cast(id % 10 + 1 as int) as n_records", "cast(id % 5 * 8 as int) as data_length")
+      .coalesce(1).write.format("cram").mode("overwrite").save(path.toString)
+    val victim = containerOffsets(path)(10)._1
+    corrupt(path, victim + 5, 0x40)
+    Malformed("CRAM containers", load("cram", path.toString, _).selectExpr("offset"), 29, 1L,
+      s"malformed CRAM container header at $victim in $path")
+  }
+
+  /** 100 reads in containers of 10; the payload of the third data
+    * container names a compression method that does not exist.
+    */
+  private def malformedCramRecords(): Malformed = {
+    val s = spark
+    import s.implicits._
+    val path = tmpDir().resolve("bad-records.cram")
+    spark.createDataset(TestReads.pairs(50)).toDF().coalesce(1).write.format("cram").mode("overwrite")
+      .option("records", "true").option("refs", "chr20:1000000,chr21:2000135")
+      .option("recordsPerContainer", "10").save(path.toString)
+    // container 0 holds the SAM header; the payload starts with the
+    // compression header block's method byte
+    val (victim, headerLen) = containerOffsets(path)(3)
+    corrupt(path, victim + headerLen, 0xe0)
+    Malformed("CRAM records", load("cram", path.toString, _, "records" -> "true").selectExpr("readName"),
+      90, 1L, s"undecodable CRAM container payload at $victim in $path")
+  }
+
+  test("every reader: strict names the file and offset, lenient warns and counts, permissive counts silently") {
+    val cases = Seq(malformedBam(), malformedSam(), malformedVcf(), malformedFastq(), malformedCramContainers(),
+      malformedCramRecords())
+    for (c <- cases) {
+      val ex = intercept[org.apache.spark.SparkException](c.read("strict").collect())
+      assert(messages(ex).exists(_.contains(c.names)), s"${c.reader}: ${messages(ex).mkString(" | ")}")
+      for (mode <- Seq("lenient", "permissive"); limit <- Seq(None, Some(100000))) {
+        val df = limit.fold(c.read(mode))(c.read(mode).limit)
+        val (got, warned) = warningsDuring(counts(df))
+        val clue = s"${c.reader} $mode limit=$limit"
+        assert(got == ((c.rows, c.skipped, 0L)), clue)
+        if (mode == "lenient") assert(warned.nonEmpty, clue) else assert(warned.isEmpty, s"$clue: $warned")
+      }
+    }
   }
 }

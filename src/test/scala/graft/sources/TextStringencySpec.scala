@@ -91,4 +91,21 @@ class TextStringencySpec extends AnyFunSuite with SparkFixture {
       spark.read.format("vcf").load(path).selectExpr("start").collect()
     }
   }
+
+  test("a cigar op length past 28 bits fails the BAM write and the strict SAM read") {
+    val s = spark
+    import s.implicits._
+    // 4294967297 = 2^32 + 1: an Int accumulator wraps it to a 1-base op
+    val cigar = "4294967297M"
+    val path = writeLines(".sam", samHeader :+ samLine("r1", 100).replace("\t4M\t", s"\t$cigar\t"))
+    val readEx = intercept[org.apache.spark.SparkException](spark.read.format("sam").load(path).collect())
+    assert(messages(readEx).exists(m => m.contains("bad SAM line") && m.contains(path)), readEx)
+    assert(messages(readEx).exists(_.contains("28-bit")), readEx)
+    val rec = graft.bam.TestReads.pairs(1).head.copy(cigar = cigar)
+    val out = Files.createTempDirectory("cigar-wrap").resolve("w.bam").toString
+    val writeEx = intercept[org.apache.spark.SparkException](
+      spark.createDataset(Seq(rec)).toDF().write.format("bam").mode("overwrite")
+        .option("refs", "chr20:1000000,chr21:2000135").save(out))
+    assert(messages(writeEx).exists(_.contains("28-bit")), writeEx)
+  }
 }

@@ -9,7 +9,7 @@ import graft.SparkFixture
 import graft.bam._
 import graft.bgzf.{Bgzf, SeekableInput}
 import graft.index.{BaiIndex, SbiIndex}
-import graft.sources.{GenomicInterval, PlanMetrics, SerializableConf}
+import graft.sources.{GenomicInterval, PlanMetrics, ReadContext, SerializableConf, Stringency}
 
 /** Exactness of interval planning over every index route: a `.bai` (exact
   * virtual-offset spans, cut at `.sbi` or linear-index record starts), a
@@ -118,7 +118,8 @@ class BamIntervalPlanSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
 
   private def readAll(p: BamInputPartition): Seq[(Row, InternalRow)] = {
     val conf = new SerializableConf(spark.sessionState.newHadoopConf())
-    val r = new BamPartitionReaderFactory(conf, AlignmentRecord.schema).createReader(p)
+    val r = new BamPartitionReaderFactory(ReadContext(conf, Stringency.Strict, -1), AlignmentRecord.schema)
+      .createReader(p)
     try Iterator.continually(r).takeWhile(_.next()).map(_.get()).map { row =>
       val contig = if (row.isNullAt(2)) null else row.getUTF8String(2).toString
       ((row.getUTF8String(0).toString, row.getInt(1), contig, row.getInt(3)), row.copy())

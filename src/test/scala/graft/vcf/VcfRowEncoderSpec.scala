@@ -53,6 +53,18 @@ class VcfRowEncoderSpec extends AnyFunSuite {
       s"$clue:\n fast: ${new String(fast, "UTF-8")} spec: ${new String(spec, "UTF-8")}")
   }
 
+  test("a null contig or ref fails the write with the column named, as the spec writer does") {
+    val enc = new VcfRowEncoder(schema)
+    for ((contig, ref, column) <- Seq((null, "A", "contig"), ("chr1", null, "ref"), (null, null, "contig"))) {
+      val r = row(contig, 100, 100, null, ref, Seq("C"), null, Nil, Seq("DP" -> "3"),
+        Seq(geno("s1", "0/1", Seq("DP" -> "2"))))
+      val fast = intercept[IllegalArgumentException](enc.encode(r))
+      val spec = intercept[IllegalArgumentException](specBytes(r))
+      assert(fast.getMessage.startsWith(s"null $column in VCF write"), fast.getMessage)
+      assert(fast.getMessage == spec.getMessage)
+    }
+  }
+
   test("production sweep: cohort GT-only lines are byte-identical") {
     val rnd = new scala.util.Random(7)
     for (i <- 0 until 1500) {

@@ -7,6 +7,7 @@ package graft.vcf
 object VcfSpecWriter {
 
   def toLine(v: Variant): String = {
+    VcfRowEncoder.requireSiteFields(v.contig, v.ref)
     val sb = new StringBuilder(128)
     sb.append(v.contig).append('\t').append(v.start).append('\t')
     sb.append(if (v.id == null) "." else v.id).append('\t')
