@@ -286,8 +286,7 @@ object CramProf {
     val t2 = System.nanoTime()
     var nRec = 0L
     payloads.foreach { payload =>
-      val it = CramRecordCodec.decodeContainer(payload, major, header, refSrc)
-      while (it.hasNext) { it.next(); nRec += 1 }
+      nRec += CramRecordCodec.decodeContainer(payload, major, header, refSrc).length
     }
     val tDecode = (System.nanoTime() - t2) / 1e9
     val tBlocks = {

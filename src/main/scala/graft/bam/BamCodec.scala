@@ -12,10 +12,11 @@ import graft.bgzf.BgzfInputStream
   */
 /** Which expensive record fields a scan actually needs (column pruning).
   * `cigarAndEnd` gates the cigar walk that also yields `end`. `tagCols` are
-  * the typed-tag projections (`tag_NM` → "NM"): requested tags are decoded
-  * SELECTIVELY in the self-describing tag walk — unrequested tag values are
-  * byte-skipped, never parsed, and the walk stops once every requested tag
-  * is found.
+  * the typed-tag projections (`tag_NM` → "NM"): each reads its value from
+  * the record's decoded attributes map, which is then key-masked to the
+  * requested tags unless the full `attributes` column is wanted — the walk
+  * byte-skips every other tag value and stops once every requested tag is
+  * found.
   */
 // tagCols is an IndexedSeq, NOT an Array: case-class equals/hashCode on an
 // Array compare by reference, so structurally identical masks would compare
@@ -31,8 +32,14 @@ final case class BamFieldMask(cigarAndEnd: Boolean, seq: Boolean, qual: Boolean,
                                 */
                               attrKeys: Option[IndexedSeq[String]] = None)
     extends Serializable {
-  /** Masked-map mode: the attributes map is wanted but key-restricted. */
-  def attrsMasked: Boolean = attrs && attrKeys.isDefined
+  /** The record carries an attributes map: the column is wanted, or a
+    * typed-tag column reads its value from it.
+    */
+  def decodesMap: Boolean = attrs || tagCols.nonEmpty
+  /** The map is key-masked to [[maskedWanted]]: `attrKeys` restricts the
+    * wanted column, or only typed-tag columns read the map.
+    */
+  def attrsMasked: Boolean = if (attrs) attrKeys.isDefined else tagCols.nonEmpty
   /** Tags the masked walk must surface: the map's keys plus any typed-tag
     * columns (whose getters pick from the same decoded superset). The row
     * layer filters the map back down to `attrKeys`.
@@ -57,6 +64,14 @@ object BamFieldMask {
     attrs = cols.contains("attributes"),
     tagCols = cols.filter(_.startsWith("tag_")).map(_.substring(4)).toVector.sorted,
     name = cols.contains("readName"))
+
+  /** A SAM-family reader's mask: [[fromColumns]], with the `attributes`
+    * column key-masked to `attrKeys` when that column is read.
+    */
+  def fromColumns(cols: Set[String], attrKeys: Option[IndexedSeq[String]]): BamFieldMask = {
+    val m = fromColumns(cols)
+    if (m.attrs) m.copy(attrKeys = attrKeys) else m
+  }
 }
 
 object BamCodec {
@@ -131,16 +146,7 @@ object BamCodec {
     * htsjdk, AbstractSamSource.java:66-69 — here driven by Catalyst's
     * SupportsPushDownRequiredColumns). Skipped fields are null/0.
     */
-  def decodeRecord(rec: Array[Byte], blockSize: Int, header: SamHeader, mask: BamFieldMask): AlignmentRecord =
-    decodeRecord(rec, blockSize, header, mask, null)
-
-  /** `tagOut`: reader-owned slots for the typed-tag projection, one per
-    * `mask.tagCols` entry (same order), overwritten per record with the
-    * "T:value" rendering or null when the tag is absent.
-    */
-  def decodeRecord(rec: Array[Byte], blockSize: Int, header: SamHeader, mask: BamFieldMask,
-                   tagOut: Array[String]): AlignmentRecord = {
-    if (tagOut != null) java.util.Arrays.fill(tagOut.asInstanceOf[Array[AnyRef]], null)
+  def decodeRecord(rec: Array[Byte], blockSize: Int, header: SamHeader, mask: BamFieldMask): AlignmentRecord = {
     val bb = ByteBuffer.wrap(rec, 0, blockSize).order(ByteOrder.LITTLE_ENDIAN)
     val refId = bb.getInt
     val pos = bb.getInt
@@ -222,26 +228,14 @@ object BamCodec {
     val mightBeSpilled = rawSentinel
     val attrs0 =
       if (mask.attrsMasked) {
-        // key-masked map: wanted tags decode, everything else byte-skips —
-        // same walk the typed-tag projection uses, rendered into a Map
+        // key-masked map: wanted tags decode, everything else byte-skips
         decodeTagsSelected(bb,
           if (mightBeSpilled && mask.cigarAndEnd) mask.maskedWantedCg else mask.maskedWanted)
       }
       else if (mask.attrs || (mightBeSpilled && mask.cigarAndEnd)) decodeTags(bb) else null
-    // typed-tag projection: when only tag columns are requested, walk the
-    // self-describing tag region selectively (skip unrequested values, stop
-    // when all found); when the full map was decoded anyway, pick from it
-    if (tagOut != null && mask.tagCols.nonEmpty) {
-      if (attrs0 != null) {
-        var i = 0
-        while (i < mask.tagCols.length) {
-          tagOut(i) = attrs0.getOrElse(mask.tagCols(i), null); i += 1
-        }
-      } else decodeSelectedTags(bb, mask.tagCols, tagOut)
-    }
     var finalCigar = cigarStr
     var finalRefLen = refLen
-    var attrs = if (mask.attrs) attrs0 else null
+    var attrs = if (mask.decodesMap) attrs0 else null
     if (mightBeSpilled && attrs0 != null) attrs0.get("CG") match {
       case Some(cg) if cg.startsWith("B:I,") =>
         if (mask.cigarAndEnd) {
@@ -279,37 +273,19 @@ object BamCodec {
       attributes = attrs)
   }
 
-  /** Key-masked map decode: [[decodeSelectedTags]]'s walk, collected into
-    * the `tag -> "T:value"` Map shape [[decodeTags]] produces — only the
-    * `wanted` keys are ever rendered; unrequested tag values are byte-
-    * skipped and the walk stops once every wanted tag is found.
-    */
-  private[bam] def decodeTagsSelected(bb: ByteBuffer,
-                                      wanted: IndexedSeq[String]): Map[String, String] = {
-    if (wanted.isEmpty) return Map.empty
-    val out = new Array[String](wanted.length)
-    decodeSelectedTags(bb, wanted, out)
-    val m = Map.newBuilder[String, String]
-    var i = 0
-    while (i < wanted.length) {
-      if (out(i) != null) m += wanted(i) -> out(i)
-      i += 1
-    }
-    m.result()
-  }
-
-  /** Selective tag decode: walk the self-describing tag region, rendering
-    * ONLY the `wanted` tags (same "T:value" text form as [[decodeTags]])
-    * into the aligned `out` slots; every other tag's value bytes are
-    * SKIPPED by length arithmetic — Z/H strings scan to NUL without
-    * building a string, B arrays jump n×elemSize — and the walk RETURNS as
-    * soon as every wanted tag has been found, so garbage beyond the last
+  /** Key-masked map decode: walk the self-describing tag region, rendering
+    * ONLY the `wanted` tags into the `tag -> "T:value"` Map shape
+    * [[decodeTags]] produces; every other tag's value bytes are SKIPPED by
+    * length arithmetic — Z/H strings scan to NUL without building a
+    * string, B arrays jump n×elemSize — and the walk RETURNS as soon as
+    * every distinct wanted tag has been found, so garbage beyond the last
     * requested tag is never read. A skip that would overrun the record
     * fails loudly (the region is desynced), never silently mis-frames the
     * next tag.
     */
-  private[bam] def decodeSelectedTags(bb: ByteBuffer, wanted: IndexedSeq[String],
-                                      out: Array[String]): Unit = {
+  private[bam] def decodeTagsSelected(bb: ByteBuffer,
+                                      wanted: IndexedSeq[String]): Map[String, String] = {
+    val out = new Array[String](wanted.length)
     var found = 0
     while (bb.remaining() >= 3 && found < wanted.length) {
       val c0 = (bb.get & 0xff).toChar
@@ -323,48 +299,11 @@ object BamCodec {
         i += 1
       }
       if (slot >= 0) {
-        val v: String = t match {
-          case 'A' => "A:" + (bb.get & 0xff).toChar
-          case 'c' => "c:" + bb.get.toInt
-          case 'C' => "C:" + (bb.get & 0xff)
-          case 's' => "s:" + bb.getShort.toInt
-          case 'S' => "S:" + (bb.getShort & 0xffff)
-          case 'i' => "i:" + bb.getInt
-          case 'I' => "I:" + (bb.getInt.toLong & 0xffffffffL)
-          case 'f' => "f:" + bb.getFloat
-          case 'Z' => "Z:" + readNulString(bb)
-          case 'H' => "H:" + readNulString(bb)
-          case 'B' =>
-            val sub = (bb.get & 0xff).toChar
-            val n = bb.getInt
-            // same corrupt-count guard as the skip branch: fail with the
-            // promised IOException instead of BufferUnderflowException (and
-            // never allocate up to n strings first)
-            val elemSize = sub match {
-              case 'c' | 'C' => 1
-              case 's' | 'S' => 2
-              case 'i' | 'I' | 'f' => 4
-              case x => throw new IOException(s"bad B subtype $x")
-            }
-            if (n < 0 || n.toLong * elemSize > bb.remaining())
-              throw new IOException(s"B array overruns record (n=$n elem=$elemSize)")
-            val vals = (0 until n).map { _ =>
-              sub match {
-                case 'c' => bb.get.toInt.toString
-                case 'C' => (bb.get & 0xff).toString
-                case 's' => bb.getShort.toInt.toString
-                case 'S' => (bb.getShort & 0xffff).toString
-                case 'i' => bb.getInt.toString
-                case 'I' => (bb.getInt.toLong & 0xffffffffL).toString
-                case 'f' => bb.getFloat.toString
-                case x => throw new IOException(s"bad B subtype $x")
-              }
-            }
-            "B:" + sub + (if (vals.isEmpty) "" else "," + vals.mkString(","))
-          case x => throw new IOException(s"bad tag type $x")
-        }
+        val v = tagValue(bb, t)
+        // a repeated wanted tag counts once: its later value wins, and the
+        // walk still reaches every other wanted tag
+        if (out(slot) == null) found += 1
         out(slot) = v
-        found += 1
       } else {
         val skip = t match {
           case 'A' | 'c' | 'C' => 1
@@ -393,6 +332,20 @@ object BamCodec {
         bb.position(bb.position() + skip)
       }
     }
+    slotsToMap(wanted, out)
+  }
+
+  /** The found slots of a key-masked walk as a map, in `wanted` order (the
+    * entry order the `attributes` column emits).
+    */
+  private[graft] def slotsToMap(wanted: IndexedSeq[String], out: Array[String]): Map[String, String] = {
+    val m = Map.newBuilder[String, String]
+    var i = 0
+    while (i < wanted.length) {
+      if (out(i) != null) m += wanted(i) -> out(i)
+      i += 1
+    }
+    m.result()
   }
 
 
@@ -400,39 +353,50 @@ object BamCodec {
     val m = Map.newBuilder[String, String]
     while (bb.remaining() >= 3) {
       val tag = new String(Array(bb.get, bb.get).map(b => (b & 0xff).toChar))
-      val t = (bb.get & 0xff).toChar
-      val v: String = t match {
-        case 'A' => "A:" + (bb.get & 0xff).toChar
-        case 'c' => "c:" + bb.get.toInt
-        case 'C' => "C:" + (bb.get & 0xff)
-        case 's' => "s:" + bb.getShort.toInt
-        case 'S' => "S:" + (bb.getShort & 0xffff)
-        case 'i' => "i:" + bb.getInt
-        case 'I' => "I:" + (bb.getInt.toLong & 0xffffffffL)
-        case 'f' => "f:" + bb.getFloat
-        case 'Z' => "Z:" + readNulString(bb)
-        case 'H' => "H:" + readNulString(bb)
-        case 'B' =>
-          val sub = (bb.get & 0xff).toChar
-          val n = bb.getInt
-          val vals = (0 until n).map { _ =>
-            sub match {
-              case 'c' => bb.get.toInt.toString
-              case 'C' => (bb.get & 0xff).toString
-              case 's' => bb.getShort.toInt.toString
-              case 'S' => (bb.getShort & 0xffff).toString
-              case 'i' => bb.getInt.toString
-              case 'I' => (bb.getInt.toLong & 0xffffffffL).toString
-              case 'f' => bb.getFloat.toString
-              case x => throw new IOException(s"bad B subtype $x")
-            }
-          }
-          "B:" + sub + (if (vals.isEmpty) "" else "," + vals.mkString(","))
-        case x => throw new IOException(s"bad tag type $x")
-      }
-      m += tag -> v
+      m += tag -> tagValue(bb, (bb.get & 0xff).toChar)
     }
     m.result()
+  }
+
+  /** One tag value of wire type `t`, rendered "T:value". */
+  private def tagValue(bb: ByteBuffer, t: Char): String = t match {
+    case 'A' => "A:" + (bb.get & 0xff).toChar
+    case 'c' => "c:" + bb.get.toInt
+    case 'C' => "C:" + (bb.get & 0xff)
+    case 's' => "s:" + bb.getShort.toInt
+    case 'S' => "S:" + (bb.getShort & 0xffff)
+    case 'i' => "i:" + bb.getInt
+    case 'I' => "I:" + (bb.getInt.toLong & 0xffffffffL)
+    case 'f' => "f:" + bb.getFloat
+    case 'Z' => "Z:" + readNulString(bb)
+    case 'H' => "H:" + readNulString(bb)
+    case 'B' =>
+      val sub = (bb.get & 0xff).toChar
+      val n = bb.getInt
+      // same corrupt-count guard as the selective walk's skip: fail with an
+      // IOException instead of BufferUnderflowException (and never
+      // allocate up to n strings first)
+      val elemSize = sub match {
+        case 'c' | 'C' => 1
+        case 's' | 'S' => 2
+        case 'i' | 'I' | 'f' => 4
+        case x => throw new IOException(s"bad B subtype $x")
+      }
+      if (n < 0 || n.toLong * elemSize > bb.remaining())
+        throw new IOException(s"B array overruns record (n=$n elem=$elemSize)")
+      val vals = (0 until n).map { _ =>
+        sub match {
+          case 'c' => bb.get.toInt.toString
+          case 'C' => (bb.get & 0xff).toString
+          case 's' => bb.getShort.toInt.toString
+          case 'S' => (bb.getShort & 0xffff).toString
+          case 'i' => bb.getInt.toString
+          case 'I' => (bb.getInt.toLong & 0xffffffffL).toString
+          case _ => bb.getFloat.toString
+        }
+      }
+      "B:" + sub + (if (vals.isEmpty) "" else "," + vals.mkString(","))
+    case x => throw new IOException(s"bad tag type $x")
   }
 
   private def readNulString(bb: ByteBuffer): String = {

@@ -101,6 +101,21 @@ object SamHeader {
     }.toIndexedSeq
 }
 
+/** The tag text every binary writer checks before it writes a byte of a
+  * tag (SAMv1 §1.5): the key is two ASCII characters and an `A` value one
+  * ASCII character, so no character is ever cut to its low byte. Also
+  * checks the "T:value" shape the writers parse.
+  */
+object TagText {
+  def check(tag: String, typed: String): Unit = {
+    require(tag.length == 2 && tag.charAt(0) < 0x80 && tag.charAt(1) < 0x80, s"bad tag name $tag")
+    require(typed.length >= 2 && typed.charAt(1) == ':', s"bad typed value '$typed' (want T:value)")
+    if (typed.charAt(0) == 'A')
+      require(typed.length == 3 && typed.charAt(2) < 0x80,
+        s"bad A value in tag $tag: '${typed.substring(2)}' (want one ASCII character)")
+  }
+}
+
 /** [[AlignmentRecord]] → `InternalRow` projection in a required-schema's
   * column order — shared by every record-producing SAM-family reader (BAM,
   * CRAM records mode), so the column semantics can't drift between formats.
@@ -111,17 +126,19 @@ object RecordToRow {
   import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
   import org.apache.spark.unsafe.types.UTF8String
 
-  /** Typed-tag column getter: the wire rendering is "T:value" in
-    * `tagHolder(idx)` (the reader-owned slot the codec fills per record);
-    * the DECLARED column type (tagColumns option) coerces it — integer wire
-    * types → long, any numeric → double, everything → its value text. A
-    * wire type the declared type can't hold yields null (a `Z` tag read as
-    * int), as does an absent tag — never a wrong number.
+  /** Typed-tag column getter: the typed view of `attributes['XX']`, whose
+    * wire rendering is "T:value"; the DECLARED column type (tagColumns
+    * option) coerces it — integer wire types → long, any numeric → double,
+    * everything → its value text. A wire type the declared type can't hold
+    * yields null (a `Z` tag read as int), as does an absent tag — never a
+    * wrong number.
     */
-  private def tagGetter(idx: Int, holder: Array[String], dt: DataType): AlignmentRecord => Any =
+  private def tagGetter(tag: String, dt: DataType): AlignmentRecord => Any = {
+    def wire(r: AlignmentRecord): String =
+      if (r.attributes == null) null else r.attributes.getOrElse(tag, null)
     dt match {
-      case LongType => _ => {
-        val v = holder(idx)
+      case LongType => r => {
+        val v = wire(r)
         if (v == null || v.length < 2) null
         else v.charAt(0) match {
           case 'c' | 'C' | 's' | 'S' | 'i' | 'I' =>
@@ -129,8 +146,8 @@ object RecordToRow {
           case _ => null
         }
       }
-      case DoubleType => _ => {
-        val v = holder(idx)
+      case DoubleType => r => {
+        val v = wire(r)
         if (v == null || v.length < 2) null
         else v.charAt(0) match {
           case 'c' | 'C' | 's' | 'S' | 'i' | 'I' | 'f' =>
@@ -138,31 +155,23 @@ object RecordToRow {
           case _ => null
         }
       }
-      case StringType => _ => {
-        val v = holder(idx)
+      case StringType => r => {
+        val v = wire(r)
         if (v == null || v.length < 2) null else UTF8String.fromString(v.substring(2))
       }
       case other => throw new IllegalArgumentException(s"unsupported tag column type $other")
     }
+  }
 
-  def getters(required: StructType): Array[AlignmentRecord => Any] =
-    getters(required, Vector.empty, Array.empty)
-
-  /** `tagCols`/`tagHolder`: the reader's requested-tag names (sorted, as in
-    * BamFieldMask) and the per-record value slots the codec fills.
-    * `attrKeys`: key-masked `attributes` projection — the record's decoded
+  /** `attrKeys`: key-masked `attributes` projection — the record's decoded
     * map may carry a SUPERSET (typed-tag columns pick from it too); the
     * emitted map column is filtered back down to exactly these keys.
     */
-  def getters(required: StructType, tagCols: IndexedSeq[String], tagHolder: Array[String],
-              attrKeys: Option[Set[String]] = None)
+  def getters(required: StructType, attrKeys: Option[Set[String]] = None)
   : Array[AlignmentRecord => Any] =
     required.fields.map[AlignmentRecord => Any] { f =>
-      if (f.name.startsWith("tag_")) {
-        val idx = tagCols.indexOf(f.name.substring(4))
-        require(idx >= 0, s"tag column ${f.name} missing from the decode mask")
-        tagGetter(idx, tagHolder, f.dataType)
-      } else if (f.name == "attributes" && attrKeys.isDefined) {
+      if (f.name.startsWith("tag_")) tagGetter(f.name.substring(4), f.dataType)
+      else if (f.name == "attributes" && attrKeys.isDefined) {
         val ks = attrKeys.get
         r => if (r.attributes == null) null
              else attrsToMapData(r.attributes, ks)

@@ -318,13 +318,11 @@ final class BamRowEncoder(schema: StructType, header: SamHeader) extends RowByte
   }
 
   /** Any tag, with the object-model writer's `String` semantics and
-    * exceptions (`require`, `toInt`/`toLong`/`toFloat`, `charAt`, the
+    * exceptions ([[TagText.check]], `toInt`/`toLong`/`toFloat`, the
     * `IOException` for an unknown type or B subtype).
     */
   private def putTextTag(tag: String, typed: String): Unit = {
-    if (tag.length != 2) throw new IllegalArgumentException(s"requirement failed: bad tag name $tag")
-    if (typed.length < 2 || typed.charAt(1) != ':')
-      throw new IllegalArgumentException(s"requirement failed: bad typed value '$typed' (want T:value)")
+    TagText.check(tag, typed)
     putByte(tag.charAt(0)); putByte(tag.charAt(1))
     val t = typed.charAt(0)
     val v = typed.substring(2)

@@ -215,17 +215,19 @@ object CramRecordCodec {
     * block and need nothing from `refs`).
     */
   def decodeContainer(payload: Array[Byte], major: Int, header: SamHeader,
-                      refs: CramRefSource): Iterator[AlignmentRecord] =
+                      refs: CramRefSource): IndexedSeq[AlignmentRecord] =
     decodeContainer(payload, major, header, refs, graft.bam.BamFieldMask.All)
 
   /** `mask` drives record-level field projection: with qualities, sequence,
     * or the attributes map pruned away, their data series are not just left
     * unparsed — blocks exclusively backing them are never DECOMPRESSED
-    * (see decodeSlice's eligibility rule).
+    * (see decodeSlice's eligibility rule). Every slice decodes before this
+    * returns, so a failure anywhere in the container surfaces here, never
+    * while a caller is iterating its records.
     */
   def decodeContainer(payload: Array[Byte], major: Int, header: SamHeader,
                       refs: CramRefSource,
-                      mask: graft.bam.BamFieldMask): Iterator[AlignmentRecord] = {
+                      mask: graft.bam.BamFieldMask): IndexedSeq[AlignmentRecord] = {
     val (chBlock, afterCh) = readBlock(payload, 0, major)
     if (chBlock.ctype != 1)
       throw new IOException(s"expected compression header block, got type ${chBlock.ctype}")
@@ -251,7 +253,7 @@ object CramRecordCodec {
       slices += ((sh, core, ext.result()))
       p = q
     }
-    slices.result().iterator.flatMap { case (sh, core, ext) =>
+    slices.result().flatMap { case (sh, core, ext) =>
       decodeSlice(ch, sh, core, ext, header, refs, mask)
     }
   }
@@ -350,17 +352,11 @@ object CramRecordCodec {
         case _ => true
       }) => c
     }
-    // typed-tag projection (tagColumns): a requested tag decodes even when
-    // the attributes map is pruned — its value lands in the (restricted)
-    // attrs list the reader's tag getters pick from. With a key-masked map
-    // (attrKeys option / auto-projection), the wanted set is attrKeys plus
-    // any typed-tag columns; the row layer filters the map down to attrKeys.
-    val wantTagNames: Set[String] = mask.tagCols.toSet
-    // None = every tag is wanted (full map); Some(s) = only these decode
+    // None = every tag is wanted (full map); Some(s) = only these decode:
+    // the key-masked map of `attrKeys` plus any typed-tag columns, which
+    // the row layer reads tag_XX from and filters down to attrKeys
     val tagWantedSet: Option[Set[String]] =
-      if (wantAttrs && mask.attrKeys.isEmpty) None
-      else if (wantAttrs) Some(mask.attrKeys.get.toSet ++ wantTagNames)
-      else Some(wantTagNames)
+      if (wantAttrs && !mask.attrsMasked) None else Some(mask.maskedWanted.toSet)
     def tagWanted(tag: String): Boolean = tagWantedSet.forall(_.contains(tag))
     val activeTagCodecs: Iterable[CCodec] = tagWantedSet match {
       case None => ch.tagCodecs.values
@@ -421,7 +417,7 @@ object CramRecordCodec {
     // RR=1 slices reconstruct sequence FROM the reference — decoding one
     // without bases would silently emit N-seqs; fail with the remedy instead
     if (wantSeq && ch.refRequired && sh.refSeqId >= 0 && sh.span > 0 && refWindow == null)
-      throw new IOException(
+      throw new ReferenceRequiredException(
         s"slice at ref ${sh.refSeqId}:${sh.start} requires reference bases (RR=1) — " +
           "pass the fasta option (indexed FASTA with a .fai sidecar)")
     val refBase1 = sh.start // refWindow(0) is reference position sh.start (1-based)
@@ -811,6 +807,11 @@ object CramRecordCodec {
       line.split('\t').collectFirst { case f if f.startsWith("ID:") => f.substring(3) }
     }.toIndexedSeq
 }
+
+/** A reference-based slice met without reference bases: a missing `fasta`
+  * option, not a malformed container, so no stringency drops it.
+  */
+final class ReferenceRequiredException(msg: String) extends IOException(msg)
 
 /** CRAM tag values are the BAM binary value bytes (Z/H include the NUL);
   * conversion mirrors the BAM codec's `tag -> "T:value"` attribute strings

@@ -130,7 +130,7 @@ object CramRecordWriter {
       val attrs = if (r.attributes == null) Map.empty[String, String] else r.attributes
       attrs.iterator
         .filterNot { case (k, v) => k == "RG" && v.startsWith("Z:") && rgIndex.contains(v.substring(2)) }
-        .map { case (k, v) => (k, v.charAt(0)) }
+        .map { case (k, v) => graft.bam.TagText.check(k, v); (k, v.charAt(0)) }
         .toIndexedSeq.sortBy(_._1)
     }
     val dict = tagLines.distinct

@@ -9,25 +9,24 @@ import graft.bam.{AlignmentRecord, BamCodec, SamHeader}
 object SamCodec {
 
   def fromLine(line: String, header: SamHeader): AlignmentRecord =
-    fromLine(line, header, graft.bam.BamFieldMask.All, null)
+    fromLine(line, header, graft.bam.BamFieldMask.All)
 
-  /** Masked decode — the text face of the BAM typed-tag projection. With
-    * `mask.attrs = false` the optional-column region is never split into
-    * per-tag strings: the line splits to the 11 mandatory fields plus ONE
-    * raw tail, and requested `mask.tagCols` are found by a boundary scan of
+  /** Masked decode — the text face of the BAM key-masked walk. Unless the
+    * full `attributes` map is wanted, the optional-column region is never
+    * split into per-tag strings: the line splits to the 11 mandatory fields
+    * plus ONE raw tail, and the masked map's tags (`mask.maskedWanted`:
+    * `attrKeys` plus any typed-tag columns) are found by a boundary scan of
     * that tail (tab arithmetic; unrequested tag values are never
-    * materialized). `tagOut` (reader-owned, aligned with `mask.tagCols`)
-    * receives the same "T:value" rendering the BAM walk produces; a
-    * repeated tag keeps its LAST value (full-decode Map parity). With
-    * `strictTail = true` (the reader passes it under stringency=strict) the
-    * raw tail is shape-checked to the SAME failure surface the full
-    * attributes decode has, so strict validation does not depend on which
-    * columns a query selects; otherwise a malformed chunk yields null for
-    * that tag rather than failing the line.
+    * materialized), rendered "T:value" as the BAM walk does; a repeated tag
+    * keeps its LAST value (full-decode Map parity). With `strictTail = true`
+    * (the reader passes it under stringency=strict) the raw tail is
+    * shape-checked to the SAME failure surface the full attributes decode
+    * has, so strict validation does not depend on which columns a query
+    * selects; otherwise a malformed chunk is left out of the map rather than
+    * failing the line.
     */
   def fromLine(line: String, header: SamHeader, mask: graft.bam.BamFieldMask,
-               tagOut: Array[String], strictTail: Boolean = false): AlignmentRecord = {
-    if (tagOut != null) java.util.Arrays.fill(tagOut.asInstanceOf[Array[AnyRef]], null)
+               strictTail: Boolean = false): AlignmentRecord = {
     val fullAttrs = mask.attrs && !mask.attrsMasked
     val f =
       if (fullAttrs) line.split('\t')
@@ -51,38 +50,18 @@ object SamCodec {
     }
     val refLen = if (cigar == "*") 0 else BamCodec.cigarRefLength(BamCodec.parseCigar(cigar))
     val attrs: Map[String, String] =
-      if (!mask.attrs) null
+      if (!mask.decodesMap) null
       else if (mask.attrsMasked) {
         // key-masked map: boundary-scan the raw tail for exactly the wanted
-        // tags (attrKeys plus any typed-tag columns — the row layer filters
-        // the map back down to attrKeys); nothing else is materialized
-        val wanted = mask.maskedWanted
-        if (f.length <= 11 || wanted.isEmpty) Map.empty
-        else {
-          val tmp = new Array[String](wanted.length)
-          scanSelectedTags(f(11), wanted, tmp)
-          val b = Map.newBuilder[String, String]
-          var i = 0
-          while (i < wanted.length) {
-            if (tmp(i) != null) b += wanted(i) -> tmp(i)
-            i += 1
-          }
-          b.result()
-        }
+        // tags (the row layer filters the map back down to attrKeys);
+        // nothing else is materialized
+        if (f.length <= 11) Map.empty else scanSelectedTags(f(11), mask.maskedWanted)
       }
       else f.iterator.drop(11).map { t =>
         // XO:i:5 → "XO" -> "i:5"
         val tag = t.substring(0, 2)
         tag -> t.substring(3)
       }.toMap
-    if (tagOut != null && mask.tagCols.nonEmpty) {
-      if (attrs != null) {
-        var i = 0
-        while (i < mask.tagCols.length) {
-          tagOut(i) = attrs.getOrElse(mask.tagCols(i), null); i += 1
-        }
-      } else if (f.length > 11) scanSelectedTags(f(11), mask.tagCols, tagOut)
-    }
     AlignmentRecord(
       readName = if (f(0) == "*") null else f(0),
       flags = flags,
@@ -119,13 +98,13 @@ object SamCodec {
   }
 
   /** Boundary-scan the raw tag tail (`NM:i:5\tRG:Z:rgA\t…`): requested tags
-    * render as "T:value" into the aligned `out` slots, everything else is
+    * render as "T:value" into a map in `wanted` order, everything else is
     * skipped by `indexOf('\t')` arithmetic without materializing a value.
     * Scans the WHOLE tail (no early stop) so a duplicated tag resolves to
     * its last occurrence, as the full decode's Map does.
     */
-  private[sam] def scanSelectedTags(tail: String, wanted: IndexedSeq[String],
-                                    out: Array[String]): Unit = {
+  private[sam] def scanSelectedTags(tail: String, wanted: IndexedSeq[String]): Map[String, String] = {
+    val out = new Array[String](wanted.length)
     val n = tail.length
     var off = 0
     while (off < n) {
@@ -144,5 +123,6 @@ object SamCodec {
       }
       off = end + 1
     }
+    BamCodec.slotsToMap(wanted, out)
   }
 }

@@ -85,10 +85,11 @@ object BamFormat extends RecordFormat {
 /** Typed-tag projection (`.option("tagColumns", "NM:int,RG:string")`):
   * each entry adds a `tag_XX` column of the declared type (int → long,
   * float → double, string; bare `XX` defaults to string) to the scan
-  * schema. Requesting a typed tag decodes ONLY that tag in the record's
-  * self-describing tag walk — the full attributes map is neither built nor
-  * parsed — so tag-driven analytics (read-group rollups, NM error rates)
-  * skip the per-record map allocation entirely. The reference exposes tags
+  * schema: the typed view of `attributes['XX']`. Unless the full
+  * `attributes` column is read, the record's map is key-masked to the
+  * requested tags — the walk decodes ONLY those and byte-skips the rest —
+  * so tag-driven analytics (read-group rollups, NM error rates) never
+  * parse the whole tag region. The reference exposes tags
   * only through htsjdk's eager SAMRecord attribute list; this projection
   * is a Spark-side extension in the spirit of its lazy record decode.
   */
@@ -369,14 +370,11 @@ class BamPartitionReader(p: BamInputPartition, ctx: ReadContext, required: Struc
 
   private val needFilter = p.traversal.intervals.isDefined
   private val mask = {
-    val cols = required.fieldNames.toSet
-    val m0 = BamFieldMask.fromColumns(cols)
-    val m1 = if (needFilter) m0.copy(cigarAndEnd = true) else m0 // interval test needs end
+    val m = BamFieldMask.fromColumns(required.fieldNames.toSet, attrKeys)
+    val m1 = if (needFilter) m.copy(cigarAndEnd = true) else m // interval test needs end
     // pairAware run-tracking compares consecutive readNames, so the name
     // must decode even when the column is pruned from the projection
-    val m = if (p.pairAware) m1.copy(name = true) else m1
-    // key-masked attributes map: only meaningful when the map is wanted
-    if (m.attrs && attrKeys.isDefined) m.copy(attrKeys = attrKeys) else m
+    if (p.pairAware) m1.copy(name = true) else m1
   }
   private val stream = new graft.bgzf.BgzfInputStream(input)
   private var exhausted = false
@@ -439,11 +437,8 @@ class BamPartitionReader(p: BamInputPartition, ctx: ReadContext, required: Struc
     name
   }
 
-  // typed-tag projection: one reusable slot per requested tag, filled by
-  // the codec on each decode and read by the tag_ column getters
-  private val tagHolder = new Array[String](mask.tagCols.length)
   private val fieldGetters: Array[AlignmentRecord => Any] =
-    RecordToRow.getters(required, mask.tagCols, tagHolder, mask.attrKeys.map(_.toSet))
+    RecordToRow.getters(required, mask.attrKeys.map(_.toSet))
 
   override protected def advance(): InternalRow = {
     if (exhausted) return null
@@ -476,7 +471,7 @@ class BamPartitionReader(p: BamInputPartition, ctx: ReadContext, required: Struc
 
   private def readOne(): AlignmentRecord = {
     while (frame.next(stream)) {
-      try return BamCodec.decodeRecord(frame.bytes, frame.size, p.header, mask, tagHolder)
+      try return BamCodec.decodeRecord(frame.bytes, frame.size, p.header, mask)
       catch {
         case e: Exception =>
           // framing was sane, so the next record follows. Lenient: a failure
@@ -492,7 +487,7 @@ class BamPartitionReader(p: BamInputPartition, ctx: ReadContext, required: Struc
           val salvaged =
             if (!mask.attrs) null
             else slog.salvage(s"tag region of $at: ${e.getMessage}", BamCodec.decodeRecord(
-              frame.bytes, frame.size, p.header, mask.copy(attrs = false, tagCols = Vector.empty), tagHolder))
+              frame.bytes, frame.size, p.header, mask.copy(attrs = false, tagCols = Vector.empty)))
           if (salvaged != null) return salvaged
           slog.reject(s"undecodable $at", e, StringencyLog.hex(frame.bytes, 0, frame.size))
       }

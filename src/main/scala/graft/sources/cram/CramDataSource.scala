@@ -228,14 +228,6 @@ private[cram] sealed trait ContainerPredicate extends Serializable {
   def keep(c: CramContainer): Boolean
 }
 
-/** Genomic `intervals` option: alignment-span OVERLAP semantics, multi-ref
-  * (−2) containers kept conservatively (members unjudgeable without decode).
-  */
-private[cram] final case class IntervalContainerPred(ivs: Seq[RefInterval]) extends ContainerPredicate {
-  def keep(c: CramContainer): Boolean =
-    c.refSeqId == -2 || ivs.exists(r => c.overlaps(r.refId, r.start1, r.end1))
-}
-
 /** Filter-derived pushdown: exact point test on the header fields the
   * pushed predicate constrains — `ref_seq_id == refId` (negative ids
   * included) and `start_pos` within the optional bounds. No span, no −2
@@ -248,13 +240,15 @@ private[cram] final case class PushedContainerPred(refId: Int, lo: Option[Int], 
     c.refSeqId == refId && lo.forall(c.startPos >= _) && hi.forall(c.startPos <= _)
 }
 
-/** Records-mode container pruning for genomic `intervals`: alignment-span
-  * overlap like [[IntervalContainerPred]] (the record-level residual filter
-  * restores exactness), with unmapped (−1) containers additionally kept when
-  * the traversal asks for `unplacedUnmapped`. The refSeqIds come from the
-  * FILE's own header dictionary (resolved at planning), not a `refs` option.
+/** Container pruning for genomic `intervals`: alignment-span OVERLAP
+  * semantics, multi-ref (−2) containers kept conservatively (members
+  * unjudgeable without decode). Records mode adds unmapped (−1) containers
+  * when the traversal asks for `unplacedUnmapped` (the record-level residual
+  * filter restores exactness) and resolves refSeqIds from the FILE's own
+  * header dictionary at planning; container mode never keeps −1 and
+  * resolves them from the `refs` option.
   */
-private[cram] final case class RecordsContainerPred(ivs: Seq[RefInterval], keepUnmapped: Boolean)
+private[cram] final case class OverlapContainerPred(ivs: Seq[RefInterval], keepUnmapped: Boolean)
     extends ContainerPredicate {
   def keep(c: CramContainer): Boolean =
     c.refSeqId == -2 || (keepUnmapped && c.refSeqId == -1) ||
@@ -285,11 +279,11 @@ class CramScan(options: Map[String, String], required: StructType,
     val names: Map[String, Int] = options.get("refs")
       .map(r => SamHeader.parseRefsOption(r).zipWithIndex.map { case (ref, i) => ref.name -> i }.toMap)
       .getOrElse(Map.empty)
-    IntervalContainerPred(
+    OverlapContainerPred(
       GenomicInterval.optimize(GenomicInterval.parseList(s)).flatMap { iv =>
         names.get(iv.contig).orElse(iv.contig.toIntOption)
           .map(id => RefInterval(id, iv.start, iv.end))
-      })
+      }, keepUnmapped = false)
   }.orElse(CramPushedRegion.toPredicate(pushed)) // filter-derived pushdown
 
   override protected def planFile(f: PlanInput): FilePlan = {
@@ -304,7 +298,7 @@ class CramScan(options: Map[String, String], required: StructType,
       case Some(ReadsTraversal(None, _)) => None
       case Some(ReadsTraversal(Some(ivs), keepUnmapped)) =>
         val hdr = CramRecordCodec.readSamHeader(f.in)
-        Some(RecordsContainerPred(
+        Some(OverlapContainerPred(
           ivs.flatMap { iv =>
             val id = hdr.refId(iv.contig)
             if (id >= 0) Some(RefInterval(id, iv.start, iv.end)) else None
@@ -326,9 +320,7 @@ class CramScan(options: Map[String, String], required: StructType,
         val all = crai.entries.map(_.containerOffset).distinct.sorted
         val want: Set[Long] = pred match {
           case None => all.toSet
-          case Some(IntervalContainerPred(rs)) =>
-            rs.flatMap(r => crai.containerOffsets(r.refId, r.start1, r.end1)).toSet
-          case Some(RecordsContainerPred(rs, keepUnmapped)) =>
+          case Some(OverlapContainerPred(rs, keepUnmapped)) =>
             // same slice-overlap selection; unmapped (−1) entries added
             // when the traversal wants the unplaced tail (−2 is already
             // kept by containerOffsets' multi-ref conservatism)
@@ -564,18 +556,12 @@ class CramRecordsPartitionReader(
   // not just left unparsed — blocks exclusively backing them are never
   // decompressed, and with seq pruned no reference window is fetched at all
   // (cigar/end always decode: the features that carry them are never gated).
-  // tag_XX columns (tagColumns option) decode ONLY those tags — a
-  // requested tag's block inflates, every other tag block stays compressed.
-  // key-masked attributes map (attrKeys): wanted tags decode (their blocks
-  // inflate), everything else is skipped/gated exactly like the tagColumns
-  // path; the row layer filters the decoded superset back down to attrKeys
-  private val fieldMask = {
-    val m = graft.bam.BamFieldMask.fromColumns(required.fieldNames.toSet)
-    if (m.attrs && attrKeys.isDefined) m.copy(attrKeys = attrKeys) else m
-  }
-  private val tagHolder = new Array[String](fieldMask.tagCols.length)
-  private val getters =
-    RecordToRow.getters(required, fieldMask.tagCols, tagHolder, fieldMask.attrKeys.map(_.toSet))
+  // tag_XX columns (tagColumns option) and a key-masked attributes map
+  // (attrKeys) decode ONLY those tags — a wanted tag's block inflates,
+  // every other tag block stays compressed; the row layer filters the
+  // decoded superset back down to attrKeys
+  private val fieldMask = graft.bam.BamFieldMask.fromColumns(required.fieldNames.toSet, attrKeys)
+  private val getters = RecordToRow.getters(required, fieldMask.attrKeys.map(_.toSet))
   private val walk = new ContainerWalk(input, p, major, headerEnd, slog)
 
   private var recIt: Iterator[AlignmentRecord] = Iterator.empty
@@ -588,9 +574,10 @@ class CramRecordsPartitionReader(
     var payload = Array.emptyByteArray
     try {
       payload = CramRecordCodec.containerPayload(input, c)
-      recIt = CramRecordCodec.decodeContainer(payload, major, header, refSource, fieldMask)
+      recIt = CramRecordCodec.decodeContainer(payload, major, header, refSource, fieldMask).iterator
       true
     } catch {
+      case e: graft.cram.ReferenceRequiredException => throw e
       case e: Exception =>
         slog.reject(s"undecodable CRAM container payload at ${c.offset} in $file", e,
           StringencyLog.hex(payload, 0, payload.length))
@@ -609,18 +596,7 @@ class CramRecordsPartitionReader(
     while (true) {
       while (recIt.hasNext) {
         val r = recIt.next()
-        if (traversal.keep(r)) {
-          if (tagHolder.length > 0) {
-            var i = 0
-            while (i < tagHolder.length) {
-              tagHolder(i) =
-                if (r.attributes == null) null
-                else r.attributes.getOrElse(fieldMask.tagCols(i), null)
-              i += 1
-            }
-          }
-          return RecordToRow.toRow(r, getters)
-        }
+        if (traversal.keep(r)) return RecordToRow.toRow(r, getters)
       }
       if (!nextContainer()) return null
     }

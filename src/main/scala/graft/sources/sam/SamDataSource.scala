@@ -84,15 +84,11 @@ class SamPartitionReader(p: SamInputPartition, ctx: ReadContext, required: Struc
                          attrKeys: Option[IndexedSeq[String]] = None)
     extends GraftReader(p.file, ctx, s"${p.file} [${p.splitStart}, ${p.splitEnd})") {
   private val lines = SplitTextReader.cursor(input, p.splitStart, p.splitEnd, bgzf = false)
-  // column-pruned decode mask: tag_XX columns drive the selective tail
-  // scan, a projection without `attributes` skips the per-tag split, and a
-  // key-masked map (attrKeys) boundary-scans the tail for just those tags
-  private val mask = {
-    val m = BamFieldMask.fromColumns(required.fieldNames.toSet)
-    if (m.attrs && attrKeys.isDefined) m.copy(attrKeys = attrKeys) else m
-  }
-  private val tagHolder = new Array[String](mask.tagCols.length)
-  private val getters = RecordToRow.getters(required, mask.tagCols, tagHolder, mask.attrKeys.map(_.toSet))
+  // column-pruned decode mask: a projection without the full `attributes`
+  // map skips the per-tag split, and a key-masked map (attrKeys and tag_XX
+  // columns) boundary-scans the tail for just those tags
+  private val mask = BamFieldMask.fromColumns(required.fieldNames.toSet, attrKeys)
+  private val getters = RecordToRow.getters(required, mask.attrKeys.map(_.toSet))
 
   override protected def advance(): InternalRow = {
     while (lines.next()) {
@@ -101,12 +97,12 @@ class SamPartitionReader(p: SamInputPartition, ctx: ReadContext, required: Struc
         // lenient salvages a line whose failure is confined to the optional
         // columns past the 11 mandatory SAM fields; only strict checks them
         val rec =
-          try SamCodec.fromLine(line, p.header, mask, tagHolder, slog.strict)
+          try SamCodec.fromLine(line, p.header, mask, slog.strict)
           catch {
             case e: Exception =>
               val salvaged = slog.salvage(
                 s"optional columns of SAM line in ${p.file} at ${lines.where}: ${e.getMessage}",
-                SamCodec.fromLine(line.split('\t').take(11).mkString("\t"), p.header, mask, tagHolder))
+                SamCodec.fromLine(line.split('\t').take(11).mkString("\t"), p.header, mask))
               if (salvaged == null) slog.reject(s"bad SAM line in ${p.file} at ${lines.where}", e, lines.preview)
               salvaged
           }

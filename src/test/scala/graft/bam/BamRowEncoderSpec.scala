@@ -127,6 +127,22 @@ class BamRowEncoderSpec extends AnyFunSuite {
     assert(eFast.getMessage == eSpec.getMessage)
   }
 
+  test("a tag key or A value outside one byte per character is refused, naming the tag") {
+    // each would otherwise reach the wire cut to its low bytes: a key of two
+    // UTF-16 units that is one supplementary character, a non-ASCII key or
+    // A value, and an A value longer or shorter than one character
+    val bad = Seq("😀" -> "i:1", "éA" -> "Z:x", "XA" -> "A:é", "XA" -> "A:xy", "XA" -> "A:")
+    for ((k, v) <- bad) {
+      val r = row("r", 0, "chr1", 10, 12, 60, "3M", null, 0, 0, "ACG", "III", Seq("NM" -> "i:0", k -> v))
+      val eFast = intercept[IllegalArgumentException](new BamRowEncoder(schema, header).encode(r))
+      val eSpec = intercept[IllegalArgumentException](specBytes(r))
+      val eCram = intercept[IllegalArgumentException](graft.cram.CramRecordWriter.encodeContainer(
+        IndexedSeq(RowToRecord.convert(r, idx)), header, 0L))
+      assert(eFast.getMessage == eSpec.getMessage && eCram.getMessage == eSpec.getMessage, s"$k -> $v")
+      assert(eSpec.getMessage.contains(k), eSpec.getMessage)
+    }
+  }
+
   test("writer-facing coordinates match the converted record") {
     val r = row("r", 16, "chr2", 123, 456, 60, "334M", "chr1", 99, -5, "A" * 334, "I" * 334, Nil)
     val enc = new BamRowEncoder(schema, header)

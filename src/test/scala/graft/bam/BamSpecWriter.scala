@@ -114,8 +114,7 @@ object BamSpecWriter {
       .order(ByteOrder.LITTLE_ENDIAN)
     // sorted for deterministic bytes (Map iteration order is not stable)
     attrs.toSeq.sortBy(_._1).foreach { case (tag, typed) =>
-      require(tag.length == 2, s"bad tag name $tag")
-      require(typed.length >= 2 && typed.charAt(1) == ':', s"bad typed value '$typed' (want T:value)")
+      TagText.check(tag, typed)
       bb.put(tag.charAt(0).toByte); bb.put(tag.charAt(1).toByte)
       val t = typed.charAt(0)
       val v = typed.substring(2)

@@ -111,7 +111,7 @@ class CramCostSpec extends AnyFunSuite {
     var n = 0
     var aCount = 0L
     payloads.foreach { p =>
-      val it = CramRecordCodec.decodeContainer(p, major, header, timedRef)
+      val it = CramRecordCodec.decodeContainer(p, major, header, timedRef).iterator
       while (it.hasNext) {
         val r = it.next()
         n += 1

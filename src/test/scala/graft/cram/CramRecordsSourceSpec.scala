@@ -265,14 +265,17 @@ class CramRecordsSourceSpec extends AnyFunSuite with SparkFixture {
     assert(back.length == want.length)
     back.zip(want).foreach { case (g, w) => assert(g == w) }
 
-    // RR=1 without a fasta is a clear error, not silent N-sequences
-    val ex = intercept[org.apache.spark.SparkException] {
-      spark.read.format("cram").option("records", "true")
-        .load(refOut.toString).collect()
-    }
+    // RR=1 without a fasta is a clear error, not silent N-sequences — in
+    // every stringency: a missing reference is not a malformed container
     def rootMsg(t: Throwable): String =
       if (t.getCause == null) String.valueOf(t.getMessage) else rootMsg(t.getCause)
-    assert(rootMsg(ex).contains("requires reference bases"))
+    for (mode <- Seq("strict", "lenient")) {
+      val ex = intercept[org.apache.spark.SparkException] {
+        spark.read.format("cram").option("records", "true").option("mode", mode)
+          .load(refOut.toString).collect()
+      }
+      assert(rootMsg(ex).contains("requires reference bases"), mode)
+    }
   }
 
   test("reads the htsjdk-written reference fixture through the DataFrame API") {

@@ -125,9 +125,9 @@ class AttrKeysSpec extends AnyFunSuite with SparkFixture {
     // map is full or key-masked (the masked path validates the raw tail)
     val bad = "r1\t0\tchr20\t100\t60\t4M\t*\t0\t0\tACGT\tIIII\tZZ"
     val fullMask = BamFieldMask(cigarAndEnd = true, seq = true, qual = true, attrs = true)
-    intercept[Exception](graft.sam.SamCodec.fromLine(bad, header, fullMask, null))
+    intercept[Exception](graft.sam.SamCodec.fromLine(bad, header, fullMask))
     intercept[Exception](graft.sam.SamCodec.fromLine(bad, header,
-      fullMask.copy(attrKeys = Some(Vector("NM"))), null, strictTail = true))
+      fullMask.copy(attrKeys = Some(Vector("NM"))), strictTail = true))
   }
 
   test("cram: masked map decodes only wanted tag blocks; values exact") {

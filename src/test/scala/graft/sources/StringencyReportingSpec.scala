@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
 import graft.bam.{BamCodec, BamSpecWriter, TestReads}
 import graft.bgzf.BgzfOutputStream
-import graft.cram.CramContainers
+import graft.cram.{CramContainers, CramRecordCodec}
 
 /** What a scan reports about the records it could not read as they are:
   * lenient and permissive reads count them as the `recordsSkipped` /
@@ -238,19 +238,47 @@ class StringencyReportingSpec extends AnyFunSuite with SparkFixture with Adaptiv
       90, 1L, s"undecodable CRAM container payload at $victim in $path")
   }
 
-  test("every reader: strict names the file and offset, lenient warns and counts, permissive counts silently") {
-    val cases = Seq(malformedBam(), malformedSam(), malformedVcf(), malformedFastq(), malformedCramContainers(),
-      malformedCramRecords())
-    for (c <- cases) {
-      val ex = intercept[org.apache.spark.SparkException](c.read("strict").collect())
-      assert(messages(ex).exists(_.contains(c.names)), s"${c.reader}: ${messages(ex).mkString(" | ")}")
-      for (mode <- Seq("lenient", "permissive"); limit <- Seq(None, Some(100000))) {
-        val df = limit.fold(c.read(mode))(c.read(mode).limit)
-        val (got, warned) = warningsDuring(counts(df))
-        val clue = s"${c.reader} $mode limit=$limit"
-        assert(got == ((c.rows, c.skipped, 0L)), clue)
-        if (mode == "lenient") assert(warned.nonEmpty, clue) else assert(warned.isEmpty, s"$clue: $warned")
-      }
+  /** The same 100 reads; the first external block of the third data
+    * container names a compression method that does not exist, so the
+    * container's compression header decodes and its slice does not.
+    */
+  private def malformedCramSlice(): Malformed = {
+    val s = spark
+    import s.implicits._
+    val path = tmpDir().resolve("bad-slice.cram")
+    spark.createDataset(TestReads.pairs(50)).toDF().coalesce(1).write.format("cram").mode("overwrite")
+      .option("records", "true").option("refs", "chr20:1000000,chr21:2000135")
+      .option("recordsPerContainer", "10").save(path.toString)
+    val (victim, headerLen) = containerOffsets(path)(3)
+    val in = graft.bgzf.SeekableInput.ofFile(path)
+    val (major, payload) =
+      try (CramContainers.readFileDefinition(in)._1, CramRecordCodec.containerPayload(in, CramContainers.containers(in)(3)))
+      finally in.close()
+    val blockStarts = Iterator.iterate(0)(p => CramRecordCodec.readBlockLazy(payload, p, major)._2)
+    val ext = blockStarts.find(p => CramRecordCodec.readBlockLazy(payload, p, major)._1.ctype == 4).get
+    corrupt(path, victim + headerLen + ext, 0xe0)
+    Malformed("CRAM records slice", load("cram", path.toString, _, "records" -> "true"),
+      90, 1L, s"undecodable CRAM container payload at $victim in $path")
+  }
+
+  private def check(c: Malformed): Unit = {
+    val ex = intercept[org.apache.spark.SparkException](c.read("strict").collect())
+    assert(messages(ex).exists(_.contains(c.names)), s"${c.reader}: ${messages(ex).mkString(" | ")}")
+    for (mode <- Seq("lenient", "permissive"); limit <- Seq(None, Some(100000))) {
+      val df = limit.fold(c.read(mode))(c.read(mode).limit)
+      val (got, warned) = warningsDuring(counts(df))
+      val clue = s"${c.reader} $mode limit=$limit"
+      assert(got == ((c.rows, c.skipped, 0L)), clue)
+      if (mode == "lenient") assert(warned.nonEmpty, clue) else assert(warned.isEmpty, s"$clue: $warned")
     }
+  }
+
+  test("every reader: strict names the file and offset, lenient warns and counts, permissive counts silently") {
+    Seq(malformedBam(), malformedSam(), malformedVcf(), malformedFastq(), malformedCramContainers(),
+      malformedCramRecords()).foreach(check)
+  }
+
+  test("CRAM records: a slice block that fails to decode drops its container under the same policy") {
+    check(malformedCramSlice())
   }
 }

@@ -2,6 +2,7 @@ package graft.sources.bam
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -107,15 +108,107 @@ class TagProjectionSpec extends AnyFunSuite with SparkFixture {
     // selective decode (only tag_NM requested) -> succeeds, value intact
     val sel = BamFieldMask(cigarAndEnd = false, seq = false, qual = false, attrs = false,
       tagCols = Vector("NM"))
-    val holder = new Array[String](1)
-    val got = BamCodec.decodeRecord(body, blockSize, header, sel, holder)
-    assert(holder.toSeq == Seq("i:5"))
-    assert(got.attributes == null)
+    val got = BamCodec.decodeRecord(body, blockSize, header, sel)
+    assert(got.attributes == Map("NM" -> "i:5"))
     // but a wanted tag BEYOND the corruption still fails loudly (the walk
     // cannot skip a tag whose type it cannot size)
     val selBeyond = sel.copy(tagCols = Vector("ZZ"))
     assertThrows[java.io.IOException](
-      BamCodec.decodeRecord(body, blockSize, header, selBeyond, new Array[String](1)))
+      BamCodec.decodeRecord(body, blockSize, header, selBeyond))
+  }
+
+  test("a repeated wanted tag does not hide a later wanted tag") {
+    // NM:i:1 NM:i:2 RG:Z:grp. No sink writes a repeated key, so the record
+    // is patched: its NN tag becomes a second NM
+    val enc = BamSpecWriter.encodeRecord(rec("r1", Map("NM" -> "i:1", "NN" -> "i:2", "RG" -> "Z:grp")), header)
+    val nn = enc.indices.find(i => enc(i) == 'N' && enc(i + 1) == 'N' && enc(i + 2) == 'i').get
+    enc(nn + 1) = 'M'
+    val body = java.util.Arrays.copyOfRange(enc, 4, enc.length)
+    val want = Map("NM" -> "i:2", "RG" -> "Z:grp")
+    assert(BamCodec.decodeRecord(body, body.length, header).attributes == want)
+    val keyMasked = BamFieldMask.All.copy(attrKeys = Some(Vector("NM", "RG")))
+    assert(BamCodec.decodeRecord(body, body.length, header, keyMasked).attributes == want)
+    val tagOnly = BamFieldMask(cigarAndEnd = false, seq = false, qual = false, attrs = false,
+      tagCols = Vector("NM", "RG"))
+    assert(BamCodec.decodeRecord(body, body.length, header, tagOnly).attributes == want)
+    // through the reader: tag columns plus the AutoProjection key mask
+    val path = java.nio.file.Paths.get(s"${tmp()}/dup.bam")
+    val out = new graft.bgzf.BgzfOutputStream(Files.newOutputStream(path))
+    BamCodec.writeHeader(out, header)
+    out.write(enc)
+    out.close()
+    val got = spark.read.format("bam").option("tagColumns", "NM:int,RG:string").load(path.toString)
+      .select(col("tag_NM"), col("tag_RG"), element_at(col("attributes"), "RG")).head
+    assert((got.getLong(0), got.getString(1), got.getString(2)) == ((2L, "grp", "Z:grp")))
+  }
+
+  test("tag_XX is the typed attributes['XX'] of the full-row read: BAM, SAM, CRAM, four projections") {
+    import spark.implicits._
+    // r6's 70,000-op cigar rides BAM's internal CG:B,I tag behind the kSmN
+    // sentinel; SAM and CRAM carry it as the cigar. r3 has a user CG tag.
+    val spilled = (0 until 70000).map(i => if (i % 2 == 0) "1M" else "1I").mkString
+    val recs = Seq(
+      rec("r1", Map("NM" -> "i:3", "RG" -> "Z:rgA", "XO" -> "i:7", "XF" -> "f:1.5")),
+      rec("r2", Map("NM" -> "c:-2", "RG" -> "Z:rgB", "XF" -> "i:4")),
+      rec("r3", Map("RG" -> "Z:rgA", "CG" -> "Z:user")),
+      rec("r4", Map("NM" -> "Z:oops", "XO" -> "A:x")),
+      rec("r5", Map.empty[String, String]),
+      AlignmentRecord("r6", 0, "chr20", 100, 0, 60, spilled, null, 0, 0, "A" * 70000, "I" * 70000,
+        Map("NM" -> "i:0", "XO" -> "i:9")))
+    val tags = Seq("NM" -> "int", "RG" -> "string", "CG" -> "string", "XO" -> "int", "XF" -> "float")
+    val tagOpt = tags.map { case (k, t) => s"$k:$t" }.mkString(",")
+    val tagCols = tags.map { case (k, _) => col(s"tag_$k") }
+    // the tagColumns coercion of a "T:value" wire rendering
+    def typed(wire: Option[String], t: String): Any = wire.flatMap { v =>
+      val body = v.substring(2)
+      t match {
+        case "int" if "cCsSiI".contains(v.charAt(0)) => Some(body.toLong)
+        case "float" if "cCsSiIf".contains(v.charAt(0)) => Some(body.toDouble)
+        case "string" => Some(body)
+        case _ => None
+      }
+    }.orNull
+    val dir = tmp()
+    for (fmt <- Seq("bam", "sam", "cram")) {
+      val path = s"$dir/inv.$fmt"
+      val mode = if (fmt == "cram") Map("records" -> "true") else Map.empty[String, String]
+      spark.createDataset(recs).toDF().write.format(fmt).mode("overwrite").options(mode)
+        .option("refs", refsOpt).save(path)
+      def read(opts: (String, String)*): DataFrame =
+        spark.read.format(fmt).options(mode ++ opts).option("tagColumns", tagOpt).load(path)
+      val full = read().select($"readName", $"attributes").collect()
+        .map(r => r.getString(0) -> r.getMap[String, String](1).toMap).toMap
+      assert(full.keySet == recs.map(_.readName).toSet, fmt)
+      assert(!full("r6").contains("CG") && full("r3")("CG") == "Z:user", fmt)
+      // projection, and the value its extra column must hold for a read's full map
+      val cases = Seq[(String, DataFrame, Map[String, String] => Any)](
+        ("tag only", read().select($"readName" +: tagCols: _*), null),
+        ("tag + attributes", read().select(($"readName" +: tagCols) :+ $"attributes": _*), m => m),
+        ("tag + attrKeys", read("attrKeys" -> "NM,XO").select(($"readName" +: tagCols) :+ $"attributes": _*),
+          m => m.view.filterKeys(Set("NM", "XO")).toMap),
+        ("tag + element_at", read().select(($"readName" +: tagCols) :+ element_at($"attributes", "XO"): _*),
+          m => m.get("XO").orNull))
+      for ((name, df, extra) <- cases) {
+        val clue = s"$fmt $name"
+        if (name == "tag + element_at") {
+          val desc = df.queryExecution.optimizedPlan.collect {
+            case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => s.scan.description()
+          }.mkString
+          assert(desc.contains("attrKeys=[XO]"), s"$clue: $desc")
+        }
+        val got = df.collect().map { r =>
+          val last = if (extra == null) Nil else Seq(r.get(tags.length + 1) match {
+            case m: scala.collection.Map[_, _] => m.toMap
+            case v => v
+          })
+          r.getString(0) -> ((1 to tags.length).map(r.get) ++ last)
+        }.toMap
+        val want = full.map { case (n, m) =>
+          n -> (tags.map { case (k, t) => typed(m.get(k), t) } ++ (if (extra == null) Nil else Seq(extra(m))))
+        }
+        assert(got == want, clue)
+      }
+    }
   }
 
   test("corrupt B-array count in a WANTED tag fails with IOException") {
@@ -132,7 +225,7 @@ class TagProjectionSpec extends AnyFunSuite with SparkFixture {
     val sel = BamFieldMask(cigarAndEnd = false, seq = false, qual = false, attrs = false,
       tagCols = Vector("XB"))
     assertThrows[java.io.IOException](
-      BamCodec.decodeRecord(body, enc.length - 4, header, sel, new Array[String](1)))
+      BamCodec.decodeRecord(body, enc.length - 4, header, sel))
   }
 
   test("skip arithmetic walks every wire type without parsing") {
@@ -146,10 +239,9 @@ class TagProjectionSpec extends AnyFunSuite with SparkFixture {
     val enc = BamSpecWriter.encodeRecord(r, header)
     val sel = BamFieldMask(cigarAndEnd = false, seq = false, qual = false, attrs = false,
       tagCols = Vector("NM"))
-    val holder = new Array[String](1)
-    BamCodec.decodeRecord(
-      java.util.Arrays.copyOfRange(enc, 4, enc.length), enc.length - 4, header, sel, holder)
-    assert(holder.toSeq == Seq("i:9"))
+    val got = BamCodec.decodeRecord(
+      java.util.Arrays.copyOfRange(enc, 4, enc.length), enc.length - 4, header, sel)
+    assert(got.attributes == Map("NM" -> "i:9"))
   }
 
   test("typed tags dispatch through the htsjdk facade") {

@@ -66,33 +66,28 @@ class SamTagProjectionSpec extends AnyFunSuite with SparkFixture {
     assertThrows[Exception](SamCodec.fromLine(line, header))
     val mask = BamFieldMask(cigarAndEnd = true, seq = false, qual = false, attrs = false,
       tagCols = Vector("NM", "RG"))
-    val out = new Array[String](2)
-    val r = SamCodec.fromLine(line, header, mask, out)
-    assert(out.toSeq == Seq("i:5", "Z:rgA"))
-    assert(r.attributes == null)
+    val r = SamCodec.fromLine(line, header, mask)
+    assert(r.attributes == Map("NM" -> "i:5", "RG" -> "Z:rgA"))
   }
 
   test("strictTail: strict validation is projection-independent") {
     val bad = "r1\t0\tchr20\t100\t60\t4M\t*\t0\t0\tACGT\tIIII\tNM:i:5\tQ\tRG:Z:rgA"
     val mask = BamFieldMask(cigarAndEnd = true, seq = false, qual = false, attrs = false,
       tagCols = Vector("NM"))
-    val out = new Array[String](1)
     // default (lenient/permissive surface): tolerated on the masked path
-    SamCodec.fromLine(bad, header, mask, out)
-    assert(out(0) == "i:5")
+    assert(SamCodec.fromLine(bad, header, mask).attributes("NM") == "i:5")
     // strict: the masked path now fails EXACTLY where the full decode does
-    assertThrows[Exception](SamCodec.fromLine(bad, header, mask, out, strictTail = true))
+    assertThrows[Exception](SamCodec.fromLine(bad, header, mask, strictTail = true))
     assertThrows[Exception](SamCodec.fromLine(bad, header))
     // trailing tabs are invisible to the full decode (split drops trailing
     // empties) — strictTail must not invent a failure there
     val trailing = "r1\t0\tchr20\t100\t60\t4M\t*\t0\t0\tACGT\tIIII\tNM:i:5\t\t"
-    SamCodec.fromLine(trailing, header, mask, out, strictTail = true)
-    assert(out(0) == "i:5")
+    assert(SamCodec.fromLine(trailing, header, mask, strictTail = true).attributes("NM") == "i:5")
     val fullTrailing = SamCodec.fromLine(trailing, header)
     assert(fullTrailing.attributes == Map("NM" -> "i:5"))
     // an EMPTY chunk between real tags fails both paths under strict
     val midEmpty = "r1\t0\tchr20\t100\t60\t4M\t*\t0\t0\tACGT\tIIII\tNM:i:5\t\tRG:Z:rgA"
-    assertThrows[Exception](SamCodec.fromLine(midEmpty, header, mask, out, strictTail = true))
+    assertThrows[Exception](SamCodec.fromLine(midEmpty, header, mask, strictTail = true))
     assertThrows[Exception](SamCodec.fromLine(midEmpty, header))
   }
 
@@ -102,9 +97,7 @@ class SamTagProjectionSpec extends AnyFunSuite with SparkFixture {
     assert(full.attributes("NM") == "i:9")
     val mask = BamFieldMask(cigarAndEnd = true, seq = false, qual = false, attrs = false,
       tagCols = Vector("NM"))
-    val out = new Array[String](1)
-    SamCodec.fromLine(line, header, mask, out)
-    assert(out.toSeq == Seq("i:9"))
+    assert(SamCodec.fromLine(line, header, mask).attributes == Map("NM" -> "i:9"))
   }
 
   test("values identical across split sizes") {
