@@ -6,7 +6,7 @@ plus `<out_dir>/oracle_sql.json` (query name -> DuckDB SQL). This script
 registers each `<sf_dir>/<table>.parquet` as a DuckDB view, runs every
 oracle, reads the matching `<out_dir>/<name>/*.parquet`, and compares the
 two as stringified tables: columns sorted by name, every value rendered as
-text (floats with `--digits` significant digits), rows sorted.
+text (floats exactly, as Python's shortest round-trip repr), rows sorted.
 
     python3 scripts/oracle_check.py <out_dir> <sf_dir> [q_a,q_b,...]
 
@@ -27,19 +27,19 @@ TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
 
-def cell(v, digits):
+def cell(v):
     if v is None:
         return "None"
     if isinstance(v, float):
         if math.isnan(v):
             return "None"
-        return format(v, f".{digits}g")
+        return repr(v)
     if hasattr(v, "tolist"):  # numpy arrays and scalars
-        return cell(v.tolist(), digits)
+        return cell(v.tolist())
     if isinstance(v, (list, tuple)):
-        return "[" + ",".join(cell(x, digits) for x in v) + "]"
+        return "[" + ",".join(cell(x) for x in v) + "]"
     if isinstance(v, dict):
-        return "{" + ",".join(f"{k}:{cell(v[k], digits)}" for k in sorted(v)) + "}"
+        return "{" + ",".join(f"{k}:{cell(v[k])}" for k in sorted(v)) + "}"
     try:
         if pd.isna(v):
             return "None"
@@ -48,9 +48,9 @@ def cell(v, digits):
     return str(v)
 
 
-def table(df, digits):
+def table(df):
     cols = sorted(df.columns)
-    rows = [tuple(cell(v, digits) for v in r)
+    rows = [tuple(cell(v) for v in r)
             for r in df[cols].itertuples(index=False, name=None)]
     return cols, sorted(rows)
 
@@ -61,8 +61,6 @@ def main():
     ap.add_argument("sf_dir")
     ap.add_argument("only", nargs="?", default="",
                     help="comma-separated query names (default: every oracle)")
-    ap.add_argument("--digits", type=int, default=9,
-                    help="significant digits a float is compared at")
     a = ap.parse_args()
 
     with open(os.path.join(a.out_dir, "oracle_sql.json")) as f:
@@ -88,8 +86,8 @@ def main():
                 status = f"ORACLEERR {e}"
             else:
                 got = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
-                gc, gr = table(got, a.digits)
-                wc, wr = table(want, a.digits)
+                gc, gr = table(got)
+                wc, wr = table(want)
                 if gc != wc:
                     status = f"COLMISMATCH got={gc} want={wc}"
                 elif len(gr) != len(wr):

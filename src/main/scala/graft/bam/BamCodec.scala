@@ -56,22 +56,18 @@ final case class BamFieldMask(cigarAndEnd: Boolean, seq: Boolean, qual: Boolean,
 object BamFieldMask {
   val All = BamFieldMask(cigarAndEnd = true, seq = true, qual = true, attrs = true)
 
-  /** Derive from the pruned column set Catalyst hands the scan. */
-  def fromColumns(cols: Set[String]): BamFieldMask = BamFieldMask(
+  /** Derive from the pruned column set Catalyst hands the scan, with the
+    * `attributes` column key-masked to `attrKeys` when that column is read.
+    */
+  def fromColumns(cols: Set[String],
+                  attrKeys: Option[IndexedSeq[String]] = None): BamFieldMask = BamFieldMask(
     cigarAndEnd = cols.contains("cigar") || cols.contains("end"),
     seq = cols.contains("seq"),
     qual = cols.contains("qual"),
     attrs = cols.contains("attributes"),
     tagCols = cols.filter(_.startsWith("tag_")).map(_.substring(4)).toVector.sorted,
-    name = cols.contains("readName"))
-
-  /** A SAM-family reader's mask: [[fromColumns]], with the `attributes`
-    * column key-masked to `attrKeys` when that column is read.
-    */
-  def fromColumns(cols: Set[String], attrKeys: Option[IndexedSeq[String]]): BamFieldMask = {
-    val m = fromColumns(cols)
-    if (m.attrs) m.copy(attrKeys = attrKeys) else m
-  }
+    name = cols.contains("readName"),
+    attrKeys = if (cols.contains("attributes")) attrKeys else None)
 }
 
 object BamCodec {

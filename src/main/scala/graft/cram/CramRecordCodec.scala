@@ -808,10 +808,12 @@ object CramRecordCodec {
     }.toIndexedSeq
 }
 
-/** A reference-based slice met without reference bases: a missing `fasta`
-  * option, not a malformed container, so no stringency drops it.
+/** A reference-based slice met without usable reference bases: a missing
+  * `fasta` option or an unreadable FASTA, not a malformed container, so no
+  * stringency drops it.
   */
-final class ReferenceRequiredException(msg: String) extends IOException(msg)
+final class ReferenceRequiredException(msg: String, cause: Throwable = null)
+  extends IOException(msg, cause)
 
 /** CRAM tag values are the BAM binary value bytes (Z/H include the NUL);
   * conversion mirrors the BAM codec's `tag -> "T:value"` attribute strings

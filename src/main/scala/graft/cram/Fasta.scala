@@ -76,6 +76,14 @@ final class FastaRefSource(in: SeekableInput, fai: IndexedSeq[FaiEntry],
   override def region(rid: Int, start1: Int, span: Int): Array[Byte] = {
     val name = names(rid)
     if (name == null) return null
-    byName.get(name).map(e => Fasta.region(in, e, start1, span)).orNull
+    byName.get(name).map { e =>
+      // a short or failed read is a broken fasta input, not a malformed
+      // CRAM: no stringency may drop the slice for it
+      try Fasta.region(in, e, start1, span)
+      catch {
+        case ex: Exception => throw new ReferenceRequiredException(
+          s"reading reference bases $name:$start1+$span from the fasta failed: ${ex.getMessage}", ex)
+      }
+    }.orNull
   }
 }

@@ -276,6 +276,24 @@ class CramRecordsSourceSpec extends AnyFunSuite with SparkFixture {
       }
       assert(rootMsg(ex).contains("requires reference bases"), mode)
     }
+
+    // a truncated fasta fails the read in every stringency too: a broken
+    // reference is a bad input, not a malformed container to drop
+    val cut = tmpDir()
+    val cutFasta = cut.resolve("ref.fasta")
+    val full = Files.readAllBytes(java.nio.file.Paths.get(fasta))
+    Files.write(cutFasta, java.util.Arrays.copyOf(full, full.length / 4))
+    Files.copy(java.nio.file.Paths.get(fasta + ".fai"), cut.resolve("ref.fasta.fai"))
+    def msgs(t: Throwable): List[String] =
+      if (t == null) Nil else String.valueOf(t.getMessage) :: msgs(t.getCause)
+    for (mode <- Seq("strict", "lenient")) {
+      val ex = intercept[org.apache.spark.SparkException] {
+        spark.read.format("cram").option("records", "true").option("mode", mode)
+          .option("fasta", cutFasta.toString).load(refOut.toString).collect()
+      }
+      assert(msgs(ex).exists(_.contains("from the fasta failed")), mode)
+      assert(!msgs(ex).exists(_.contains("undecodable CRAM container")), mode)
+    }
   }
 
   test("reads the htsjdk-written reference fixture through the DataFrame API") {
