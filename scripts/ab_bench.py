@@ -1,7 +1,10 @@
 #!/usr/bin/env python3
-"""Interleaved A/B of the format-layer benchmark: a base ref against this checkout.
+"""Interleaved A/B of a benchmark: a base ref against this checkout.
 
     python3 scripts/ab_bench.py --base main --workload region_lookup --seeds 201-210
+    python3 scripts/ab_bench.py --base main --graft-bench --only format --cores 4 --pairs 10
+
+perfbench mode (--workload):
 
 Checks out the base ref as a detached `git worktree` in a temporary directory
 (or uses --base-tree DIR, an existing checkout of it), then runs
@@ -15,9 +18,28 @@ failed operations, it prints each side's median and quartiles, the base's
 IQR / median (its run-to-run spread), the change/base ratio of the medians and
 the change's win fraction (pairs where the change is strictly better, in the
 metric's direction), followed by every pair's values.
+
+graft.Bench mode (--graft-bench): compiles each tree once with `sbt compile`
+(skip with --no-build), then runs `graft.Bench` from each tree's classes for
+--pairs alternating pairs, the side that runs first swapping every pair, with
+
+    SPARK_GRAFT_BENCH_ONLY=<--only>  SPARK_GRAFT_CPUS=<--cores>
+    SPARK_GRAFT_SF_DIR=<--sf>        SPARK_GRAFT_BENCH_RUNS=<--runs>
+
+`--only format` names the format family: every q_bam*/q_sam*/q_vcf*/q_cram*/
+q_fastq*/q_gvcf*/q_reads* query in the change tree's src/main, q_bam2fq and
+q_cram2bam included. Every run must exit 0 (graft.Bench exits 1 when a query
+throws). For each query run on both sides, and for the sum of those queries'
+seconds, it prints each side's median over the pairs and IQR / median,
+the change/base ratio of the medians and the change's wins (pairs where the
+change is strictly faster). Each run's per-query seconds also go to stderr
+as one JSON object, so an interrupted A/B can still be read. --change-tree DIR
+replaces this checkout as the change side, so two other trees can be compared.
 """
 import argparse
 import json
+import os
+import re
 import shutil
 import statistics
 import subprocess
@@ -26,6 +48,8 @@ import tempfile
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT / "perfbench"))
+from build import spark_jars  # noqa: E402  (the jars perfbench compiles against)
 
 
 def seeds_of(spec: str):
@@ -56,15 +80,112 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
+    "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net", "java.nio", "java.util",
+    "java.util.concurrent", "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
+    "sun.security.action", "sun.util.calendar")]
+FORMAT_FAMILY = re.compile(r'"(q_(?:bam|sam|vcf|cram|fastq|gvcf|reads)[a-z0-9_]*)"')
+
+
+def format_family(tree: Path):
+    names = set()
+    for f in (tree / "src/main/scala").rglob("*.scala"):
+        names.update(FORMAT_FAMILY.findall(f.read_text()))
+    return sorted(names)
+
+
+def build(tree: Path):
+    p = subprocess.run(["sbt", "--batch", "-Dsbt.log.noformat=true", "compile"], cwd=tree,
+                       capture_output=True, text=True)
+    if p.returncode != 0:
+        sys.exit(f"{tree}: sbt compile exited {p.returncode}\n{p.stdout[-2000:]}")
+
+
+def run_graft_bench(tree: Path, a, only: str) -> dict:
+    out = Path(tempfile.mkstemp(prefix="ab-bench-", suffix=".json")[1])
+    env = os.environ | {"SPARK_GRAFT_BENCH_ONLY": only, "SPARK_GRAFT_CPUS": str(a.cores),
+                        "SPARK_GRAFT_BENCH_RUNS": str(a.runs), "BENCH_OUT": str(out)}
+    if a.sf:
+        env["SPARK_GRAFT_SF_DIR"] = a.sf
+    cmd = ["java", *ADD_OPENS, f"-Xmx{os.environ.get('SPARK_DRIVER_MEM', '4g')}",
+           "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+           "-cp", f"{tree}/target/scala-2.13/classes:{tree}/src/main/resources:{spark_jars()}/*",
+           "graft.Bench"]
+    try:
+        p = subprocess.run(cmd, cwd=tree, env=env, capture_output=True, text=True)
+        if p.returncode != 0:
+            sys.exit(f"{tree}: graft.Bench exited {p.returncode}\n{p.stderr[-2000:]}")
+        return json.loads(out.read_text())["queries"]
+    finally:
+        out.unlink(missing_ok=True)
+
+
+def graft_bench(a, base: Path):
+    change = Path(a.change_tree).resolve() if a.change_tree else ROOT
+    only = ",".join(format_family(change)) if a.only == "format" else a.only
+    if not a.no_build:
+        for tree in (base, change):
+            build(tree)
+    pairs = []
+    for i in range(a.pairs):
+        order = [("base", base), ("change", change)]
+        if i % 2:
+            order.reverse()
+        pair = {"first": order[0][0]}
+        for side, tree in order:
+            pair[side] = run_graft_bench(tree, a, only)
+            print(f"[ab] pair {i + 1} {side}: {sum(pair[side].values()):.2f} s over {len(pair[side])} queries "
+                  f"{json.dumps(pair[side], sort_keys=True)}", file=sys.stderr, flush=True)
+        pairs.append(pair)
+
+    common = sorted(set(pairs[0]["base"]) & set(pairs[0]["change"]))
+    for p in pairs:
+        for side in ("base", "change"):
+            p[side]["(sum)"] = sum(p[side][q] for q in common)
+    n = len(pairs)
+    print(f"graft.Bench: {n} pairs, {a.cores} cores, {a.runs} runs per JVM, sf {a.sf or 'default'}, "
+          f"{len(common)} queries on both sides")
+    only_one = sorted(set(pairs[0]["base"]) ^ set(pairs[0]["change"]))
+    if only_one:
+        print("run on one side only: " + ", ".join(only_one))
+    print(f"{'query (seconds)':34s} {'base med':>9s} {'chg med':>9s} {'base IQR/med':>12s} {'chg IQR/med':>11s} "
+          f"{'chg/base':>9s} {'wins':>6s}")
+    for q in common + ["(sum)"]:
+        b = [p["base"][q] for p in pairs]
+        c = [p["change"][q] for p in pairs]
+        bq, cq = quartiles(b), quartiles(c)
+        wins = sum(cv < bv for bv, cv in zip(b, c))
+        spread = (bq[2] - bq[0]) / bq[1] if bq[1] else 0.0
+        cspread = (cq[2] - cq[0]) / cq[1] if cq[1] else 0.0
+        ratio = cq[1] / bq[1] if bq[1] else float("nan")
+        print(f"{q:34s} {bq[1]:9.3f} {cq[1]:9.3f} {spread:12.3f} {cspread:11.3f} {ratio:9.3f} {wins:>3d}/{n}")
+    print("\nper pair (base -> change), sum of seconds:")
+    for i, p in enumerate(pairs):
+        print(f"  pair {i + 1} ({p['first']} first): {p['base']['(sum)']:.2f} -> {p['change']['(sum)']:.2f}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--base", help="git ref of the base side")
     ap.add_argument("--base-tree", help="existing checkout of the base side (instead of --base)")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", required=True, help="e.g. 201-210 or 1,5,9")
+    ap.add_argument("--workload", help="perfbench workload (perfbench mode)")
+    ap.add_argument("--seeds", help="perfbench seeds, e.g. 201-210 or 1,5,9")
+    ap.add_argument("--graft-bench", action="store_true", help="A/B graft.Bench instead of perfbench")
+    ap.add_argument("--only", help="graft.Bench query subset: comma-separated names, or `format`")
+    ap.add_argument("--cores", type=int, default=4, help="graft.Bench SPARK_GRAFT_CPUS")
+    ap.add_argument("--pairs", type=int, default=10, help="graft.Bench alternating pairs")
+    ap.add_argument("--runs", type=int, default=3, help="graft.Bench runs per JVM (SPARK_GRAFT_BENCH_RUNS)")
+    ap.add_argument("--sf", help="graft.Bench SPARK_GRAFT_SF_DIR (default: graft.Bench's own)")
+    ap.add_argument("--change-tree", help="checkout of the change side (default: this checkout)")
+    ap.add_argument("--no-build", action="store_true", help="graft.Bench: use the trees' compiled classes as they are")
     a = ap.parse_args()
     if bool(a.base) == bool(a.base_tree):
         ap.error("give exactly one of --base and --base-tree")
+    if a.graft_bench:
+        if not a.only:
+            ap.error("--graft-bench needs --only")
+    elif not (a.workload and a.seeds):
+        ap.error("perfbench mode needs --workload and --seeds")
 
     worktree = None
     if a.base_tree:
@@ -74,6 +195,14 @@ def main():
         subprocess.run(["git", "worktree", "add", "--detach", str(worktree), a.base], cwd=ROOT, check=True,
                        stdout=sys.stderr)
         base = worktree
+    if a.graft_bench:
+        try:
+            graft_bench(a, base)
+        finally:
+            if worktree is not None:
+                subprocess.run(["git", "worktree", "remove", "--force", str(worktree)], cwd=ROOT, stdout=sys.stderr)
+                shutil.rmtree(worktree.parent, ignore_errors=True)
+        return
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     better = {m["name"]: m["better"] for m in spec["end_to_end"]} | {"failed_frac": "lower"}
     pairs = []

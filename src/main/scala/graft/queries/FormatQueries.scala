@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, MapType, StringType}
 
 import graft.queries.Fixtures.FixtureWriterOps
 
@@ -112,31 +113,128 @@ object FormatQueries {
     } finally pool.shutdown()
   }
 
-  // Construction writes below pass compressionLevel=1: the file is a
-  // pipeline-intermediate (written, read back, analyzed, discarded), and
-  // BGZF content is identical at every deflate level — only bytes differ.
-  // The explicit round-trip queries (q_{bam,sam,vcf,cram}_roundtrip*,
-  // q_bam_sort) keep the default level: there the writer itself is the
-  // measured operator.
+  /** How a query writes a file through a graft sink. Every write replaces
+    * the target; the alignment sinks (bam, sam, cram) get the three-contig
+    * dictionary [[Refs]]; an option the call passes wins over both defaults.
+    *
+    * @param spread  repartition the input over every core first ([[spread]]).
+    *                Off where the caller placed the rows itself: a range
+    *                partition + sort for an indexed write, a fixed shard
+    *                count, an input a shuffle already spread, or a read-back
+    *                whose partition order is the output order.
+    * @param level1  deflate at level 1: a fixture is an intermediate (written,
+    *                read back, analyzed, discarded) and BGZF content is the
+    *                same at every level, only the bytes differ. Off where the
+    *                writer itself is the measured operator
+    *                (`q_{bam,sam,vcf,cram}_roundtrip*`, `q_bam_sort`), and for
+    *                the `q_cram_containers`, `q_cram_v31` and
+    *                `q_sam_rg_error_rate` fixtures, written at the sink's
+    *                default level.
+    * @param reuse   save through [[Fixtures.ensure]], so later bench runs of
+    *                the query reuse the file. Off where the write is part of
+    *                the operator under test.
+    */
+  private final case class Write(spread: Boolean = true, level1: Boolean = true, reuse: Boolean = true) {
+    def apply(df: DataFrame, format: String, path: String, options: (String, String)*): Unit = {
+      val refs = if (Seq("bam", "sam", "cram").contains(format)) Seq("refs" -> Refs) else Nil
+      val level = if (level1) Seq("compressionLevel" -> "1") else Nil
+      val w = (if (spread) FormatQueries.spread(df) else df).write.format(format).mode("overwrite")
+        .options((refs ++ level ++ options).toMap)
+      if (reuse) w.saveFixture(path) else w.save(path)
+    }
+  }
+
+  /** A scaffold: spread, level 1, reused across bench runs. */
+  private val fixture = Write()
+  /** A scaffold whose rows the caller has placed: range-partitioned and
+    * sorted for an indexed write, or already shuffled. */
+  private val placedFixture = Write(spread = false)
+  /** A write that is a stage of the operator (a transcode, a merge's inputs). */
+  private val stage = Write(reuse = false)
+  /** A write whose writer is the measured operator: default level. */
+  private val roundTrip = Write(level1 = false, reuse = false)
+
+  /** Synthetic reads, one per `base` row, with [[graft.bam.AlignmentRecord.schema]]'s
+    * column names and order. A query passes the columns it varies (always
+    * `contig` and `start`); the rest default to an unpaired, unclipped
+    * `151M` read named `r<orderkey>-<linenumber>` with MAPQ 60, no `end`
+    * (the BAM writer derives it from the cigar), no sequence or qualities
+    * and one `XO:i:1` tag. The integer columns are cast to `int` here.
+    */
+  private[queries] def readRows(base: DataFrame,
+      readName: Column = concat(lit("r"), col("l_orderkey"), lit("-"), col("l_linenumber")),
+      flags: Column = lit(0),
+      contig: Column,
+      start: Column,
+      end: Column = lit(0),
+      mapq: Column = lit(60),
+      cigar: Column = lit("151M"),
+      mateContig: Column = lit(null).cast("string"),
+      mateStart: Column = lit(0),
+      tlen: Column = lit(0),
+      seq: Column = lit("*"),
+      qual: Column = lit("*"),
+      attributes: Column = map(lit("XO"), lit("i:1"))): DataFrame =
+    base.select(
+      readName.as("readName"),
+      flags.cast("int").as("flags"),
+      contig.as("contig"),
+      start.cast("int").as("start"),
+      end.cast("int").as("end"),
+      mapq.cast("int").as("mapq"),
+      cigar.as("cigar"),
+      mateContig.as("mateContig"),
+      mateStart.cast("int").as("mateStart"),
+      tlen.cast("int").as("tlen"),
+      seq.as("seq"),
+      qual.as("qual"),
+      attributes.as("attributes"))
+
+  /** An empty string-to-string map: no INFO, no FORMAT fields, no tags. */
+  private def noEntries: Column = map().cast(MapType(StringType, StringType, valueContainsNull = false))
+
+  /** One sample's call, with [[graft.vcf.Variant.genotypeType]]'s field names and order. */
+  private def genotype(sample: Column, gt: Column, fields: Column = noEntries): Column =
+    struct(sample.as("sample"), gt.as("gt"), fields.as("fields"))
+
+  /** Synthetic variants, one per `base` row, with [[graft.vcf.Variant.schema]]'s
+    * column names and order. A query passes the columns it varies (always
+    * `contig` and `start`); the rest default to a one-base `A`>`G` SNP
+    * (`end` = `start`) with no ID, QUAL 30, `PASS`, no INFO and no samples.
+    * `start`/`end` are cast to `int` and `qual` to `double` here.
+    */
+  private[queries] def variantRows(base: DataFrame,
+      contig: Column,
+      start: Column,
+      end: Column = null,
+      id: Column = lit(null).cast("string"),
+      ref: Column = lit("A"),
+      alt: Column = array(lit("G")),
+      qual: Column = lit(30.0),
+      filters: Column = array(lit("PASS")),
+      info: Column = noEntries,
+      genotypes: Column = array().cast(ArrayType(graft.vcf.Variant.genotypeType, containsNull = false))
+  ): DataFrame =
+    base.select(
+      contig.as("contig"),
+      start.cast("int").as("start"),
+      Option(end).getOrElse(start).cast("int").as("end"),
+      id.as("id"),
+      ref.as("ref"),
+      alt.as("alt"),
+      qual.cast("double").as("qual"),
+      filters.as("filters"),
+      info.as("info"),
+      genotypes.as("genotypes"))
 
   /** Deterministic reads derived from lineitem (schema = AlignmentRecord). */
-  private def syntheticReads(s: SparkSession, d: String): DataFrame = {
+  private[queries] def syntheticReads(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Tables.lineitem(s, d).select(
-      concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-      lit(0).cast("int").as("flags"),
-      concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-      ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-      ((($"l_partkey" * 37) % 999000) + 151).cast("int").as("end"),
-      lit(60).cast("int").as("mapq"),
-      lit("151M").as("cigar"),
-      lit(null).cast("string").as("mateContig"),
-      lit(0).cast("int").as("mateStart"),
-      lit(0).cast("int").as("tlen"),
-      lit("*").as("seq"),
-      lit("*").as("qual"),
-      map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string")))
-        .as("attributes"))
+    readRows(Tables.lineitem(s, d),
+      contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+      start = (($"l_partkey" * 37) % 999000) + 1,
+      end = (($"l_partkey" * 37) % 999000) + 151,
+      attributes = map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string"))))
   }
 
   private val Refs = "chr0:1000000,chr1:1000000,chr2:1000000"
@@ -148,22 +246,12 @@ object FormatQueries {
     * varies per read (`p0 = l_partkey % 8`), so mismatch CYCLES differ
     * across reads and the BQSR covariate table is non-degenerate.
     */
-  private def rgTagReads(s: SparkSession, d: String): DataFrame = {
+  private[queries] def rgTagReads(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Tables.lineitem(s, d).select(
-      concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-      lit(0).cast("int").as("flags"),
-      concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("contig"),
-      ((($"l_partkey" * 13) % 5000) + 1).cast("int").as("start"),
-      lit(0).cast("int").as("end"),
-      lit(60).cast("int").as("mapq"),
-      lit("151M").as("cigar"),
-      lit(null).cast("string").as("mateContig"),
-      lit(0).cast("int").as("mateStart"),
-      lit(0).cast("int").as("tlen"),
-      lit("*").as("seq"),
-      lit("*").as("qual"),
-      map(
+    readRows(Tables.lineitem(s, d),
+      contig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+      start = (($"l_partkey" * 13) % 5000) + 1,
+      attributes = map(
         lit("RG"), concat(lit("Z:rg"), ($"l_orderkey" % 4).cast("string")),
         lit("NM"), concat(lit("i:"), (($"l_partkey" + $"l_linenumber") % 9).cast("string")),
         lit("XC"), when($"l_suppkey" % 2 === 0, "A:F").otherwise("A:R"),
@@ -172,8 +260,7 @@ object FormatQueries {
         lit("MC"), lit("Z:151M"),
         lit("MD"), concat(lit("Z:"), ($"l_partkey" % 8).cast("string"),
           lit("A21C9T2G33A11C5T17A9G12C8T"), ($"l_partkey" % 50).cast("string")),
-        lit("ms"), concat(lit("i:"), ($"l_orderkey" % 2000 + 4000).cast("string")))
-        .as("attributes"))
+        lit("ms"), concat(lit("i:"), ($"l_orderkey" % 2000 + 4000).cast("string"))))
   }
 
   /** 24-contig dictionary for the window-heavy queries (per-contig RUNNING
@@ -214,20 +301,14 @@ object FormatQueries {
   /** Deterministic variants derived from lineitem (schema = Variant) —
     * shared by the three VCF round-trip/interval queries.
     */
-  private def syntheticVariants(s: SparkSession, d: String): DataFrame = {
+  private[queries] def syntheticVariants(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
-    Tables.lineitem(s, d).select(
-      concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-      ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-      ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-      lit(null).cast("string").as("id"),
-      lit("A").as("ref"),
-      array(substring(lit("CGTA"), ($"l_linenumber" % 4).cast("int") + 1, lit(1))).as("alt"),
-      ($"l_orderkey" % 100).cast("double").as("qual"),
-      array(lit("PASS")).as("filters"),
-      map(lit("DP"), $"l_suppkey".cast("string")).as("info"),
-      array().cast(ArrayType(graft.vcf.Variant.genotypeType, containsNull = false)).as("genotypes"))
+    variantRows(Tables.lineitem(s, d),
+      contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+      start = (($"l_partkey" * 37) % 999000) + 1,
+      alt = array(substring(lit("CGTA"), ($"l_linenumber" % 4).cast("int") + 1, lit(1))),
+      qual = $"l_orderkey" % 100,
+      info = map(lit("DP"), $"l_suppkey".cast("string")))
   }
 
   /** Aggregate whose value pins down count, coordinates, cigar-derived end,
@@ -261,25 +342,17 @@ object FormatQueries {
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** Reads where every first-line item is an unplaced-unmapped fragment. */
-  private def syntheticReadsWithUnmapped(s: SparkSession, d: String): DataFrame = {
+  private[queries] def syntheticReadsWithUnmapped(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val unm = $"l_linenumber" === 1
-    Tables.lineitem(s, d).select(
-      concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-      when(unm, 4).otherwise(0).cast("int").as("flags"),
-      when(unm, lit(null).cast("string"))
-        .otherwise(concat(lit("chr"), ($"l_orderkey" % 3).cast("string"))).as("contig"),
-      when(unm, 0).otherwise((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-      when(unm, 0).otherwise((($"l_partkey" * 37) % 999000) + 151).cast("int").as("end"),
-      lit(60).cast("int").as("mapq"),
-      when(unm, "*").otherwise("151M").as("cigar"),
-      lit(null).cast("string").as("mateContig"),
-      lit(0).cast("int").as("mateStart"),
-      lit(0).cast("int").as("tlen"),
-      lit("*").as("seq"),
-      lit("*").as("qual"),
-      map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string")))
-        .as("attributes"))
+    readRows(Tables.lineitem(s, d),
+      flags = when(unm, 4).otherwise(0),
+      contig = when(unm, lit(null).cast("string"))
+        .otherwise(concat(lit("chr"), ($"l_orderkey" % 3).cast("string"))),
+      start = when(unm, 0).otherwise((($"l_partkey" * 37) % 999000) + 1),
+      end = when(unm, 0).otherwise((($"l_partkey" * 37) % 999000) + 151),
+      cigar = when(unm, "*").otherwise("151M"),
+      attributes = map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string"))))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -288,8 +361,7 @@ object FormatQueries {
     "q_bam_unmapped_traversal" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/unm.bam"
-      spread(syntheticReadsWithUnmapped(s, d)).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeSbi", "true").saveFixture(path)
+      fixture(syntheticReadsWithUnmapped(s, d), "bam", path, "writeSbi" -> "true")
       val back = s.read.format("bam")
         .option("intervals", "chr0:1-5000").option("unplacedUnmapped", "true")
         .load(path)
@@ -304,8 +376,7 @@ object FormatQueries {
     "q_bam_coverage" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/cov.bam"
-      spread(syntheticReads(s, d)).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeSbi", "true").saveFixture(path)
+      fixture(syntheticReads(s, d), "bam", path, "writeSbi" -> "true")
       // pruned scan: only contig/start/end decoded
       val reads = s.read.format("bam")
         .load(path).select($"contig", $"start", $"end")
@@ -334,23 +405,14 @@ object FormatQueries {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/md.bam"
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        when($"l_linenumber" % 2 === 0, 16).otherwise(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 13) % 5000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 13) % 5000) + 151).cast("int").as("end"),
-        (($"l_orderkey" * 7 + $"l_linenumber") % 61).cast("int").as("mapq"),
-        lit("151M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string")))
-          .as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeSbi", "true").saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        flags = when($"l_linenumber" % 2 === 0, 16).otherwise(0),
+        contig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+        start = (($"l_partkey" * 13) % 5000) + 1,
+        end = (($"l_partkey" * 13) % 5000) + 151,
+        mapq = ($"l_orderkey" * 7 + $"l_linenumber") % 61,
+        attributes = map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string"))))
+      fixture(reads, "bam", path, "writeSbi" -> "true")
       val back = s.read.format("bam").load(path)
         .select($"readName", $"contig", $"start", $"mapq",
           ($"flags".bitwiseAND(16) =!= 0).cast("int").as("strand"))
@@ -387,27 +449,18 @@ object FormatQueries {
           + when($"l_orderkey" % 17 === 0, 512).otherwise(0)
           + when($"l_orderkey" % 11 === 0, 1024).otherwise(0)
           + when($"l_partkey" % 23 === 0, 2048).otherwise(0)).cast("int")
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        flags.as("flags"),
-        concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 13) % 5000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 13) % 5000) + 151).cast("int").as("end"),
-        (($"l_orderkey" * 7 + $"l_linenumber") % 61).cast("int").as("mapq"),
-        lit("151M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string")))
-          .as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeSbi", "true").saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        flags = flags,
+        contig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+        start = (($"l_partkey" * 13) % 5000) + 1,
+        end = (($"l_partkey" * 13) % 5000) + 151,
+        mapq = ($"l_orderkey" * 7 + $"l_linenumber") % 61,
+        attributes = map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string"))))
+      fixture(reads, "bam", path, "writeSbi" -> "true")
       val back = s.read.format("bam").load(path)
-      def bit(b: Int): org.apache.spark.sql.Column =
+      def bit(b: Int): Column =
         back("flags").bitwiseAND(b) =!= 0
-      def n(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+      def n(c: Column): Column =
         sum(when(c, 1L).otherwise(0L))
       back.agg(
         count(lit(1)).as("total"),
@@ -432,23 +485,12 @@ object FormatQueries {
     "q_bam_pileup" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/pu.bam"
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 13) % 5000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 13) % 5000) + 151).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        lit("151M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string")))
-          .as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeSbi", "true").saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+        start = (($"l_partkey" * 13) % 5000) + 1,
+        end = (($"l_partkey" * 13) % 5000) + 151,
+        attributes = map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string"))))
+      fixture(reads, "bam", path, "writeSbi" -> "true")
       val back = s.read.format("bam")
         .option("intervals", "chr0:1000-1299")
         .load(path)
@@ -483,23 +525,14 @@ object FormatQueries {
       val tlen = when($"l_suppkey" % 9 === 0, 0)
         .otherwise(when($"l_linenumber" % 2 === 0, mag).otherwise(-mag))
         .cast("int")
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        when($"l_suppkey" % 9 === 0, 0).otherwise(1).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 13) % 5000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 13) % 5000) + 151).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        lit("151M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        tlen.as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string")))
-          .as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeSbi", "true").saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        flags = when($"l_suppkey" % 9 === 0, 0).otherwise(1),
+        contig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+        start = (($"l_partkey" * 13) % 5000) + 1,
+        end = (($"l_partkey" * 13) % 5000) + 151,
+        tlen = tlen,
+        attributes = map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string"))))
+      fixture(reads, "bam", path, "writeSbi" -> "true")
       val back = s.read.format("bam").load(path)
       back
         .filter($"tlen" > 0) // the leftward mate counts each template once
@@ -517,28 +550,24 @@ object FormatQueries {
     // per-contig aggregate.
     "q_vcf_stats" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/vs.vcf.bgz"
       val ref = when($"l_suppkey" % 7 === 0, "AT").otherwise("A")
       val alt = when($"l_suppkey" % 7 === 0, "A")
         .when($"l_suppkey" % 5 === 0, "AG")
         .otherwise(substring(lit("CGT"), ($"l_linenumber" % 3).cast("int") + 1, lit(1)))
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + length(ref)).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        ref.as("ref"),
-        array(alt).as("alt"),
-        ($"l_orderkey" % 100).cast("double").as("qual"),
-        array(lit("PASS")).as("filters"),
-        map(lit("DP"), $"l_suppkey".cast("string")).as("info"),
-        array().cast(ArrayType(graft.vcf.Variant.genotypeType, containsNull = false)).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        end = (($"l_partkey" * 37) % 999000) + length(ref),
+        ref = ref,
+        alt = array(alt),
+        qual = $"l_orderkey" % 100,
+        info = map(lit("DP"), $"l_suppkey".cast("string")))
+      fixture(vars, "vcf", path)
       val back = s.read.format("vcf").load(path)
       val a0 = element_at($"alt", 1)
       val isSnp = length($"ref") === 1 && length(a0) === 1
-      def n(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+      def n(c: Column): Column =
         sum(when(c, 1L).otherwise(0L))
       back.groupBy($"contig")
         .agg(
@@ -557,8 +586,7 @@ object FormatQueries {
     // heuristic boundary scan)
     "q_bam_roundtrip_single" -> { (s, d) =>
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/single.bam"
-      spread(syntheticReads(s, d)).write.format("bam").mode("overwrite")
-        .option("refs", Refs).option("writeSbi", "true").save(path)
+      roundTrip(syntheticReads(s, d), "bam", path, "writeSbi" -> "true")
       val back = s.read.format("bam").load(path)
       readsAggregate(back)
     },
@@ -577,25 +605,15 @@ object FormatQueries {
       val base = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}"
       val bamPath = s"$base/anno.bam"
       val vcfPath = s"$base/anno.vcf.bgz"
-      import org.apache.spark.sql.types._
-      val vars = Tables.orders(s, d).filter($"o_orderkey" % 7 === 0).select(
-        concat(lit("chr"), ($"o_orderkey" % 3).cast("string")).as("contig"),
-        ((($"o_custkey" * 53) % 999000) + 1).cast("int").as("start"),
-        ((($"o_custkey" * 53) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"),
-        array(lit("T")).as("alt"),
-        lit(50.0).as("qual"),
-        array(lit("PASS")).as("filters"),
-        map(lit("DP"), ($"o_orderkey" % 100).cast("string")).as("info"),
-        array().cast(ArrayType(graft.vcf.Variant.genotypeType, containsNull = false))
-          .as("genotypes"))
+      val vars = variantRows(Tables.orders(s, d).filter($"o_orderkey" % 7 === 0),
+        contig = concat(lit("chr"), ($"o_orderkey" % 3).cast("string")),
+        start = (($"o_custkey" * 53) % 999000) + 1,
+        alt = array(lit("T")),
+        qual = lit(50.0),
+        info = map(lit("DP"), ($"o_orderkey" % 100).cast("string")))
       inParallel( // independent fixtures: overlap the writes (guide §2.6)
-        () => spread(syntheticReads(s, d)).write.format("bam").mode("overwrite")
-          .option("compressionLevel", "1").option("refs", Refs)
-          .option("writeSbi", "true").saveFixture(bamPath),
-        () => spread(vars).write.format("vcf").mode("overwrite")
-          .option("compressionLevel", "1").saveFixture(vcfPath))
+        () => fixture(syntheticReads(s, d), "bam", bamPath, "writeSbi" -> "true"),
+        () => fixture(vars, "vcf", vcfPath))
       val reads = s.read.format("bam").load(bamPath)
         .select($"readName", $"contig", $"start".cast("long").as("rstart"),
           $"end".cast("long").as("rend"))
@@ -628,11 +646,10 @@ object FormatQueries {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/sorted.bam"
-      syntheticReads(s, d)
+      val sorted = syntheticReads(s, d)
         .repartitionByRange(16, $"contig", $"start")
         .sortWithinPartitions($"contig", $"start")
-        .write.format("bam").mode("overwrite")
-        .option("refs", Refs).option("writeSbi", "true").save(path)
+      roundTrip.copy(spread = false)(sorted, "bam", path, "writeSbi" -> "true")
       val b = s.read.format("bam").load(path)
         .select($"contig", $"start".cast("long").as("start"))
         .withColumn("mid", monotonically_increasing_id())
@@ -670,8 +687,7 @@ object FormatQueries {
     // sharded sink (complete per-partition files) → multi-file scan
     "q_bam_roundtrip_sharded" -> { (s, d) =>
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/sharded"
-      syntheticReads(s, d).repartition(8).write.format("bam").mode("overwrite")
-        .option("refs", Refs).save(path)
+      roundTrip.copy(spread = false)(syntheticReads(s, d).repartition(8), "bam", path)
       val back = s.read.format("bam").load(path)
       readsAggregate(back)
     },
@@ -679,8 +695,7 @@ object FormatQueries {
     // SAM text sink/scan round-trip (same aggregate, text codec path)
     "q_sam_roundtrip" -> { (s, d) =>
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/single.sam"
-      spread(syntheticReads(s, d)).write.format("sam").mode("overwrite")
-        .option("refs", Refs).save(path)
+      roundTrip(syntheticReads(s, d), "sam", path)
       val back = s.read.format("sam").load(path)
       readsAggregate(back)
     },
@@ -689,7 +704,7 @@ object FormatQueries {
     "q_vcf_roundtrip" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/single.vcf.bgz"
-      spread(syntheticVariants(s, d)).write.format("vcf").mode("overwrite").save(path)
+      roundTrip(syntheticVariants(s, d), "vcf", path)
       val back = s.read.format("vcf").load(path)
       back.groupBy($"contig")
         .agg(
@@ -712,8 +727,7 @@ object FormatQueries {
     "q_bam_liftover" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/lift.bam"
-      spread(syntheticReads(s, d)).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeSbi", "true").saveFixture(path)
+      fixture(syntheticReads(s, d), "bam", path, "writeSbi" -> "true")
       // chain: 20 of the 25 segments per contig lift (nation 23,24 and
       // region keys drop segments deterministically)
       val chain = Tables.nation(s, d)
@@ -750,23 +764,12 @@ object FormatQueries {
         WHEN 0 THEN '151M' WHEN 1 THEN '10S131M10S' WHEN 2 THEN '75M2D74M'
         WHEN 3 THEN '50M1000N101M' WHEN 4 THEN '5H146M' WHEN 5 THEN '70M8I73M'
         WHEN 6 THEN '100=2X49=' ELSE '75M1P76M' END""")
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 990000) + 1).cast("int").as("start"),
-        lit(0).cast("int").as("end"), // writer recomputes from cigar
-        lit(60).cast("int").as("mapq"),
-        cig.as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string")))
-          .as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 990000) + 1,
+        cigar = cig,
+        attributes = map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string"))))
+      fixture(reads, "bam", path)
       s.read.format("bam").load(path)
         .groupBy($"cigar")
         .agg(count(lit(1)).as("n_reads"),
@@ -787,8 +790,7 @@ object FormatQueries {
       val base = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}"
       val path = s"$base/lake_src.bam"
       val lake = s"$base/reads_lake"
-      spread(syntheticReads(s, d)).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      fixture(syntheticReads(s, d), "bam", path)
       s.read.format("bam").load(path)
         .write.partitionBy("contig").mode("overwrite").parquet(lake)
       s.read.parquet(lake)
@@ -810,27 +812,23 @@ object FormatQueries {
     // genotype-concat bug hash-mismatches.
     "q_vcf_merge" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val base = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}"
       def cohort(parity: Int, sample: String): DataFrame = {
         val sites = Tables.orders(s, d).filter($"o_orderkey" % 2 === parity)
           .select(concat(lit("chr"), ($"o_orderkey" % 3).cast("string")).as("contig"),
             ((($"o_custkey" * 53) % 999000) + 1).cast("int").as("start"))
           .groupBy($"contig", $"start").agg(count(lit(1)).cast("int").as("dp"))
-        sites.select($"contig", $"start", $"start".as("end"),
-          lit(null).cast("string").as("id"), lit("A").as("ref"),
-          array(lit("T")).as("alt"), lit(40.0).as("qual"),
-          array(lit("PASS")).as("filters"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-          array(struct(lit(sample).as("sample"), lit("0/1").as("gt"),
-            map(lit("DP"), $"dp".cast("string")).as("fields"))).as("genotypes"))
+        variantRows(sites,
+          contig = $"contig",
+          start = $"start",
+          alt = array(lit("T")),
+          qual = lit(40.0),
+          genotypes = array(genotype(lit(sample), lit("0/1"), map(lit("DP"), $"dp".cast("string")))))
       }
       val pa = s"$base/merge_a.vcf.bgz"; val pb = s"$base/merge_b.vcf.bgz"
       inParallel( // independent cohorts: overlap the writes (guide §2.6)
-        () => spread(cohort(0, "sa")).write.format("vcf").mode("overwrite")
-          .option("compressionLevel", "1").save(pa),
-        () => spread(cohort(1, "sb")).write.format("vcf").mode("overwrite")
-          .option("compressionLevel", "1").save(pb))
+        () => stage(cohort(0, "sa"), "vcf", pa),
+        () => stage(cohort(1, "sb"), "vcf", pb))
       val a = s.read.format("vcf").load(pa)
         .select($"contig", $"start", $"genotypes".as("ga"))
       val b = s.read.format("vcf").load(pb)
@@ -858,27 +856,19 @@ object FormatQueries {
     // genotype-column lazy decode mangles anything.
     "q_vcf_genotypes" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/gt.vcf.bgz"
       def geno(j: Int) = {
         val code = ($"l_orderkey" + lit(j) * $"l_linenumber") % 3
-        struct(
-          lit(s"s$j").as("sample"),
-          when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1").as("gt"),
-          map(lit("DP"), (($"l_suppkey" + lit(j)) % 50).cast("string")).as("fields"))
+        genotype(
+          lit(s"s$j"),
+          when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1"),
+          map(lit("DP"), (($"l_suppkey" + lit(j)) % 50).cast("string")))
       }
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"),
-        array(lit("G")).as("alt"),
-        lit(30.0).as("qual"),
-        array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array(geno(1), geno(2), geno(3)).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        genotypes = array(geno(1), geno(2), geno(3)))
+      fixture(vars, "vcf", path)
       val back = s.read.format("vcf").load(path)
       back.select($"contig", explode($"genotypes").as("g"))
         .groupBy($"contig", $"g.sample".as("sample"))
@@ -900,7 +890,6 @@ object FormatQueries {
     // skipping annotations cannot perturb what IS read.
     "q_vcf_info_projection" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/annotated.vcf.bgz"
       // deterministic ~600-char VEP-ish consequence string, varied per site
       val csq = concat(
@@ -913,23 +902,15 @@ object FormatQueries {
           lit("/20|c."), (($"l_partkey" * 7) % 3000).cast("string"),
           lit("A>G|p.Lys"), (($"l_partkey" * 11) % 900).cast("string"),
           lit("Arg|tol(0."), ($"l_suppkey" % 99).cast("string"), lit(")|")), 8))
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"),
-        array(lit("G")).as("alt"),
-        lit(30.0).as("qual"),
-        array(lit("PASS")).as("filters"),
-        map(
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        info = map(
           lit("DP"), ($"l_suppkey" % 100).cast("string"),
           lit("AF"), concat(lit("0."), ($"l_partkey" % 1000).cast("string")),
-          lit("CSQ"), csq).as("info"),
-        array(struct(lit("s1").as("sample"), lit("0/1").as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+          lit("CSQ"), csq),
+        genotypes = array(genotype(lit("s1"), lit("0/1"))))
+      fixture(vars, "vcf", path)
       // no infoFields option: the AutoProjection rule derives it from the
       // literal element_at key below (option-free since round 14)
       val back = s.read.format("vcf").load(path)
@@ -952,33 +933,25 @@ object FormatQueries {
     // through the full scan + oracle).
     "q_vcf_format_projection" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/wideformat.vcf.bgz"
       def geno(j: Int) = {
         val code = ($"l_orderkey" + lit(j) * $"l_linenumber") % 3
         val dp = ($"l_suppkey" + lit(j)) % 50
-        struct(
-          lit(f"s$j%02d").as("sample"),
-          when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1").as("gt"),
+        genotype(
+          lit(f"s$j%02d"),
+          when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1"),
           map(
             lit("DP"), dp.cast("string"),
             lit("GQ"), (($"l_partkey" + lit(j)) % 99).cast("string"),
             lit("AD"), concat((dp - dp % 3).cast("string"), lit(","), (dp % 3).cast("string")),
             lit("PL"), concat((($"l_partkey" * 3 + lit(j)) % 255).cast("string"),
-              lit(",0,"), (($"l_partkey" * 7 + lit(j)) % 255).cast("string"))).as("fields"))
+              lit(",0,"), (($"l_partkey" * 7 + lit(j)) % 255).cast("string"))))
       }
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"),
-        array(lit("G")).as("alt"),
-        lit(30.0).as("qual"),
-        array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array((1 to 12).map(geno): _*).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        genotypes = array((1 to 12).map(geno): _*))
+      fixture(vars, "vcf", path)
       // no formatFields option: the AutoProjection rule derives DP from
       // the literal element_at key below (GT rides the nested struct pruning)
       val back = s.read.format("vcf").load(path)
@@ -1009,25 +982,16 @@ object FormatQueries {
         ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("rstart"),
         (($"l_suppkey" % 300) + 200).cast("int").as("gap"),
         ($"l_orderkey" % 100).cast("string").as("tag"))
-      val paired = src
-        .select($"readName", $"contig", $"tag",
-          posexplode(array($"rstart", $"rstart" + $"gap")).as(Seq("mate", "start")))
-        .select(
-          $"readName",
-          when($"mate" === 0, 67).otherwise(131).cast("int").as("flags"),
-          $"contig",
-          $"start",
-          ($"start" + 150).as("end"),
-          lit(60).cast("int").as("mapq"),
-          lit("151M").as("cigar"),
-          lit(null).cast("string").as("mateContig"),
-          lit(0).cast("int").as("mateStart"),
-          lit(0).cast("int").as("tlen"),
-          lit("*").as("seq"),
-          lit("*").as("qual"),
-          map(lit("XO"), concat(lit("i:"), $"tag")).as("attributes"))
-      spread(paired).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeSbi", "true").saveFixture(path)
+      val paired = readRows(
+        src.select($"readName", $"contig", $"tag",
+          posexplode(array($"rstart", $"rstart" + $"gap")).as(Seq("mate", "start"))),
+        readName = $"readName",
+        flags = when($"mate" === 0, 67).otherwise(131),
+        contig = $"contig",
+        start = $"start",
+        end = $"start" + 150,
+        attributes = map(lit("XO"), concat(lit("i:"), $"tag")))
+      fixture(paired, "bam", path, "writeSbi" -> "true")
       val back = s.read.format("bam").load(path)
       back.select($"readName", $"contig", $"start".cast("long").as("start"))
         .groupBy($"readName", $"contig")
@@ -1050,8 +1014,7 @@ object FormatQueries {
     "q_bam_subsample" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/sub.bam"
-      spread(syntheticReads(s, d)).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeSbi", "true").saveFixture(path)
+      fixture(syntheticReads(s, d), "bam", path, "writeSbi" -> "true")
       val back = s.read.format("bam").load(path)
         .filter(graft.functions.GraftFunctions.hash60(
           concat(lit("sub|"), $"readName")) % 100 < 25)
@@ -1061,8 +1024,7 @@ object FormatQueries {
     // genomic interval predicate applied inside the scan (traversal params)
     "q_bam_intervals" -> { (s, d) =>
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/iv.bam"
-      spread(syntheticReads(s, d)).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeSbi", "true").saveFixture(path)
+      fixture(syntheticReads(s, d), "bam", path, "writeSbi" -> "true")
       val back = s.read.format("bam")
         .option("intervals", "chr0:1-5000,chr1:2000-7000")
         .load(path)
@@ -1075,10 +1037,10 @@ object FormatQueries {
     "q_vcf_intervals" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/iv.vcf.bgz"
-      syntheticVariants(s, d)
+      val sorted = syntheticVariants(s, d)
         .repartitionByRange(8, $"contig", $"start")
         .sortWithinPartitions($"contig", $"start")
-        .write.format("vcf").mode("overwrite").option("compressionLevel", "1").option("writeTbi", "true").saveFixture(path)
+      placedFixture(sorted, "vcf", path, "writeTbi" -> "true")
       val back = s.read.format("vcf").option("splitSize", 64 * 1024)
         .option("intervals", "chr0:1-5000,chr2:30000-40000")
         .load(path)
@@ -1097,10 +1059,10 @@ object FormatQueries {
     "q_vcf_idx_intervals" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/idxiv.vcf"
-      syntheticVariants(s, d)
+      val sorted = syntheticVariants(s, d)
         .repartitionByRange(8, $"contig", $"start")
         .sortWithinPartitions($"contig", $"start")
-        .write.format("vcf").mode("overwrite").option("compressionLevel", "1").option("writeIdx", "true").saveFixture(path)
+      placedFixture(sorted, "vcf", path, "writeIdx" -> "true")
       val back = s.read.format("vcf").option("splitSize", 64 * 1024)
         .option("intervals", "chr0:1-5000,chr2:30000-40000")
         .load(path)
@@ -1131,8 +1093,7 @@ object FormatQueries {
         (($"s_suppkey" % 50) * 10 + 100).cast("int").as("span"),
         ($"s_suppkey" % 100 + 1).cast("int").as("n_records"),
         (($"s_suppkey" % 7) * 16).cast("int").as("data_length"))
-      spread(containers).write.format("cram").mode("overwrite")
-        .option("writeCrai", "true").saveFixture(path)
+      Write(level1 = false)(containers, "cram", path, "writeCrai" -> "true")
       val back = s.read.format("cram").option("splitSize", 4 * 1024)
         .option("intervals", "0:1-50000,2:60000-99999")
         .load(path)
@@ -1154,9 +1115,7 @@ object FormatQueries {
     // against the SAME DuckDB oracle the BAM/SAM round-trips use.
     "q_cram_roundtrip" -> { (s, d) =>
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/rec.cram"
-      spread(syntheticReads(s, d)).write.format("cram").mode("overwrite")
-        .option("records", "true").option("refs", Refs)
-        .option("writeCrai", "true").save(path)
+      roundTrip(syntheticReads(s, d), "cram", path, "records" -> "true", "writeCrai" -> "true")
       val back = s.read.format("cram").option("records", "true")
         .load(path)
       readsAggregate(back)
@@ -1169,9 +1128,8 @@ object FormatQueries {
     // the Nx16 encode/decode pair hash-mismatches the DuckDB oracle.
     "q_cram_v31" -> { (s, d) =>
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/rec31.cram"
-      spread(syntheticReads(s, d)).write.format("cram").mode("overwrite")
-        .option("records", "true").option("refs", Refs).option("version", "3.1")
-        .option("writeCrai", "true").saveFixture(path)
+      Write(level1 = false)(syntheticReads(s, d), "cram", path,
+        "records" -> "true", "version" -> "3.1", "writeCrai" -> "true")
       val back = s.read.format("cram").option("records", "true")
         .load(path)
       readsAggregate(back)
@@ -1183,13 +1141,11 @@ object FormatQueries {
     "q_cram_intervals" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/iv.cram"
-      syntheticReads(s, d)
+      val sorted = syntheticReads(s, d)
         .repartitionByRange(8, $"contig", $"start")
         .sortWithinPartitions($"contig", $"start")
-        .write.format("cram").mode("overwrite").option("compressionLevel", "1")
-        .option("records", "true").option("refs", Refs)
-        .option("recordsPerContainer", "2000")
-        .option("writeCrai", "true").saveFixture(path)
+      placedFixture(sorted, "cram", path,
+        "records" -> "true", "recordsPerContainer" -> "2000", "writeCrai" -> "true")
       val back = s.read.format("cram").option("records", "true")
         .option("splitSize", 64 * 1024)
         .option("intervals", "chr0:1-5000,chr1:2000-7000")
@@ -1214,15 +1170,12 @@ object FormatQueries {
       val snp = lit("ATGC").substr((($"start" + 1) % 4 + 1).cast("int"), lit(1))
       // qual stays "*" (CF bit): the 90 MB quality stream would just price
       // rANS twice more — the reference-based SEQ machinery is the measure
-      syntheticReads(s, d)
+      val sorted = syntheticReads(s, d)
         .withColumn("seq",
           when($"start" % 10 === 0, concat(snp, substring(base, 2, 150))).otherwise(base))
         .repartitionByRange(8, $"contig", $"start")
         .sortWithinPartitions($"contig", $"start")
-        .write.format("cram").mode("overwrite").option("compressionLevel", "1")
-        .option("records", "true").option("refs", Refs)
-        .option("fasta", fasta)
-        .option("writeCrai", "true").saveFixture(path)
+      placedFixture(sorted, "cram", path, "records" -> "true", "fasta" -> fasta, "writeCrai" -> "true")
       val back = s.read.format("cram").option("records", "true")
         .option("fasta", fasta).load(path)
       back.groupBy($"contig")
@@ -1259,27 +1212,16 @@ object FormatQueries {
       val startCol = ((($"l_partkey" * 37) % 990000) + 1).cast("int")
       val phase2 = pmod(startCol - 1 - when(shape === 1, 10).otherwise(0), lit(4))
         .cast("int") + 1
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        startCol.as("start"),
-        lit(0).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        cig.as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("ATGC" * 40).substr(phase2, rlen).as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string")))
-          .as("attributes"))
-      reads
+      val reads = readRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = startCol,
+        cigar = cig,
+        seq = lit("ATGC" * 40).substr(phase2, rlen),
+        attributes = map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string"))))
+      val sorted = reads
         .repartitionByRange(8, $"contig", $"start")
         .sortWithinPartitions($"contig", $"start")
-        .write.format("cram").mode("overwrite").option("compressionLevel", "1")
-        .option("records", "true").option("refs", Refs)
-        .option("fasta", fasta).saveFixture(path)
+      placedFixture(sorted, "cram", path, "records" -> "true", "fasta" -> fasta)
       s.read.format("cram").option("records", "true")
         .option("fasta", fasta).load(path)
         .groupBy($"cigar")
@@ -1297,11 +1239,10 @@ object FormatQueries {
     "q_bam_bai_intervals" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/bai.bam"
-      syntheticReads(s, d)
+      val sorted = syntheticReads(s, d)
         .repartitionByRange(8, $"contig", $"start")
         .sortWithinPartitions($"contig", $"start")
-        .write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeBai", "true").saveFixture(path)
+      placedFixture(sorted, "bam", path, "writeBai" -> "true")
       val back = s.read.format("bam").option("splitSize", 64 * 1024)
         .option("intervals", "chr0:1-5000,chr1:2000-7000")
         .load(path)
@@ -1321,24 +1262,13 @@ object FormatQueries {
     "q_kmer_spectrum" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/kmer.bam"
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        lit(0).cast("int").as("end"), // writer recomputes from cigar
-        lit(60).cast("int").as("mapq"),
-        lit("32M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit(KmerAlpha).substr((($"l_partkey" * 13) % 33).cast("int") + 1, lit(32))
-          .as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string")))
-          .as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        cigar = lit("32M"),
+        seq = lit(KmerAlpha).substr((($"l_partkey" * 13) % 33).cast("int") + 1, lit(32)),
+        attributes = map(lit("XO"), concat(lit("i:"), ($"l_orderkey" % 100).cast("string"))))
+      fixture(reads, "bam", path)
       s.read.format("bam").load(path)
         .select($"seq", explode(sequence(lit(1), lit(25))).as("p"))
         .select(expr("substring(seq, p, 8)").as("kmer"))
@@ -1354,23 +1284,12 @@ object FormatQueries {
     "q_gc_content" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/gc.bam"
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        lit(0).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        lit("32M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit(KmerAlpha).substr((($"l_partkey" * 13) % 33).cast("int") + 1, lit(32))
-          .as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), lit("i:1")).as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        cigar = lit("32M"),
+        seq = lit(KmerAlpha).substr((($"l_partkey" * 13) % 33).cast("int") + 1, lit(32)))
+      fixture(reads, "bam", path)
       s.read.format("bam").load(path)
         .select($"contig",
           (length($"seq") - length(replace($"seq", lit("G")))
@@ -1392,27 +1311,17 @@ object FormatQueries {
     // holds: per-site narrow classify, pair-keyed bounded rollup.
     "q_vcf_relatedness" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/ibs.vcf.bgz"
-      def geno(name: String, code: org.apache.spark.sql.Column) = struct(
-        lit(name).as("sample"),
-        when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1").as("gt"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false))
-          .as("fields"))
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"), array(lit("G")).as("alt"),
-        lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array(
+      def geno(name: String, code: Column) =
+        genotype(lit(name), when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1"))
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        genotypes = array(
           geno("father", ($"l_orderkey" * 7 + $"l_linenumber") % 3),
           geno("mother", ($"l_orderkey" * 5 + $"l_linenumber" * 2) % 3),
-          geno("child", ($"l_orderkey" * 11 + $"l_linenumber" * 3 + $"l_suppkey") % 3))
-          .as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+          geno("child", ($"l_orderkey" * 11 + $"l_linenumber" * 3 + $"l_suppkey") % 3)))
+      fixture(vars, "vcf", path)
       val back = s.read.format("vcf").load(path)
       def dose(i: Int) = {
         val gt = element_at($"genotypes", i).getField("gt")
@@ -1438,28 +1347,21 @@ object FormatQueries {
     // content, not just presence.
     "q_vcf_allele_balance" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/ab.vcf.bgz"
       def geno(j: Int) = {
         val code = ($"l_orderkey" + lit(j) * $"l_linenumber") % 3
         val refD = ($"l_suppkey" + lit(j * 7)) % 60 + 10
         val altD = ($"l_partkey" + lit(j * 13)) % 60 + 10
-        struct(
-          lit(s"s$j").as("sample"),
-          when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1").as("gt"),
-          map(lit("AD"), concat(refD.cast("string"), lit(","), altD.cast("string")))
-            .as("fields"))
+        genotype(
+          lit(s"s$j"),
+          when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1"),
+          map(lit("AD"), concat(refD.cast("string"), lit(","), altD.cast("string"))))
       }
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"), array(lit("G")).as("alt"),
-        lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array(geno(1), geno(2), geno(3)).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        genotypes = array(geno(1), geno(2), geno(3)))
+      fixture(vars, "vcf", path)
       val back = s.read.format("vcf").load(path)
       back.select(explode($"genotypes").as("g"))
         .filter($"g.gt" === "0/1")
@@ -1487,22 +1389,11 @@ object FormatQueries {
         WHEN 1 THEN CONCAT('50M', CAST(l_suppkey % 5000 + 100 AS STRING), 'N101M')
         ELSE CONCAT('40M', CAST(l_suppkey % 5000 + 100 AS STRING), 'N60M',
           CAST(l_suppkey % 900 + 50 AS STRING), 'N51M') END""")
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 900000) + 1).cast("int").as("start"),
-        lit(0).cast("int").as("end"), // writer recomputes from cigar
-        lit(60).cast("int").as("mapq"),
-        cig.as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), lit("i:1")).as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 900000) + 1,
+        cigar = cig)
+      fixture(reads, "bam", path)
       s.read.format("bam").load(path)
         .select($"contig",
           explode(expr("regexp_extract_all(cigar, '(\\\\d+)N', 1)")).as("ilen_s"))
@@ -1530,38 +1421,16 @@ object FormatQueries {
       val dir = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}"
       val bamPath = s"$dir/closest.bam"
       val vcfPath = s"$dir/closest.vcf.bgz"
-      val reads24 = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_orderkey" % 24).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 151).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        lit("151M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), lit("i:1")).as("attributes"))
-      import org.apache.spark.sql.types._
-      val vars = Tables.orders(s, d).select(
-        concat(lit("chr"), ($"o_custkey" % 24).cast("string")).as("contig"),
-        ((($"o_orderkey" * 53) % 999000) + 1).cast("int").as("start"),
-        ((($"o_orderkey" * 53) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"),
-        array(lit("G")).as("alt"),
-        lit(30.0).as("qual"),
-        array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array().cast(ArrayType(graft.vcf.Variant.genotypeType, containsNull = false))
-          .as("genotypes"))
+      val reads24 = readRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 24).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        end = (($"l_partkey" * 37) % 999000) + 151)
+      val vars = variantRows(Tables.orders(s, d),
+        contig = concat(lit("chr"), ($"o_custkey" % 24).cast("string")),
+        start = (($"o_orderkey" * 53) % 999000) + 1)
       inParallel( // independent fixtures: overlap the writes (guide §2.6)
-        () => spread(reads24).write.format("bam").mode("overwrite")
-          .option("compressionLevel", "1").option("refs", Refs24).saveFixture(bamPath),
-        () => spread(vars).write.format("vcf").mode("overwrite")
-          .option("compressionLevel", "1").saveFixture(vcfPath))
+        () => fixture(reads24, "bam", bamPath, "refs" -> Refs24),
+        () => fixture(vars, "vcf", vcfPath))
       val reads = s.read.format("bam").load(bamPath)
         .select($"contig", $"start".cast("long").as("pos"), lit(1).as("side"))
       val sites = s.read.format("vcf").load(vcfPath)
@@ -1606,27 +1475,18 @@ object FormatQueries {
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/ixs.bam"
       val unp = $"l_suppkey" % 9 === 0                          // unplaced
       val pun = $"l_suppkey" % 9 =!= 0 && $"l_suppkey" % 5 === 0 // placed-unmapped
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        when(unp || pun, 4).otherwise(0).cast("int").as("flags"),
-        when(unp, lit(null).cast("string"))
-          .otherwise(concat(lit("chr"), ($"l_orderkey" % 3).cast("string"))).as("contig"),
-        when(unp, 0).otherwise((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        when(unp || pun, 0)
-          .otherwise((($"l_partkey" * 37) % 999000) + 151).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        when(unp || pun, "*").otherwise("151M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), lit("i:1")).as("attributes"))
-      reads
+      val reads = readRows(Tables.lineitem(s, d),
+        flags = when(unp || pun, 4).otherwise(0),
+        contig = when(unp, lit(null).cast("string"))
+          .otherwise(concat(lit("chr"), ($"l_orderkey" % 3).cast("string"))),
+        start = when(unp, 0).otherwise((($"l_partkey" * 37) % 999000) + 1),
+        end = when(unp || pun, 0)
+          .otherwise((($"l_partkey" * 37) % 999000) + 151),
+        cigar = when(unp || pun, "*").otherwise("151M"))
+      val sorted = reads
         .repartitionByRange(8, $"contig".asc_nulls_last, $"start")
         .sortWithinPartitions($"contig".asc_nulls_last, $"start")
-        .write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeBai", "true").saveFixture(path)
+      placedFixture(sorted, "bam", path, "writeBai" -> "true")
       // O(index) driver-side read: header (names/lengths) + .bai pseudo-bins
       val conf = s.sessionState.newHadoopConf()
       val header = {
@@ -1666,25 +1526,15 @@ object FormatQueries {
         when($"l_suppkey" % 7 === 0, lit(20000) + $"l_suppkey" % 1000)
           .otherwise(($"l_suppkey" % 300) + 200).cast("int").as("gap"),
         when($"l_suppkey" % 13 === 0, 131).otherwise(147).cast("int").as("f2"))
-      val paired = src
-        .select($"readName", $"c1", $"c2", $"f2", $"rstart", $"gap",
-          posexplode(array($"rstart", $"rstart" + $"gap")).as(Seq("mate", "start")))
-        .select(
-          $"readName",
-          when($"mate" === 0, 67).otherwise($"f2").cast("int").as("flags"),
-          concat(lit("chr"), when($"mate" === 0, $"c1").otherwise($"c2")).as("contig"),
-          $"start",
-          ($"start" + 150).as("end"),
-          lit(60).cast("int").as("mapq"),
-          lit("151M").as("cigar"),
-          lit(null).cast("string").as("mateContig"),
-          lit(0).cast("int").as("mateStart"),
-          lit(0).cast("int").as("tlen"),
-          lit("*").as("seq"),
-          lit("*").as("qual"),
-          map(lit("XO"), lit("i:1")).as("attributes"))
-      spread(paired).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      val paired = readRows(
+        src.select($"readName", $"c1", $"c2", $"f2", $"rstart", $"gap",
+          posexplode(array($"rstart", $"rstart" + $"gap")).as(Seq("mate", "start"))),
+        readName = $"readName",
+        flags = when($"mate" === 0, 67).otherwise($"f2"),
+        contig = concat(lit("chr"), when($"mate" === 0, $"c1").otherwise($"c2")),
+        start = $"start",
+        end = $"start" + 150)
+      fixture(paired, "bam", path)
       val back = s.read.format("bam").load(path)
       back
         .select($"readName", $"contig", $"start".cast("long").as("start"),
@@ -1715,23 +1565,12 @@ object FormatQueries {
     "q_kmer_minimizers" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/minz.bam"
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        lit(0).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        lit("32M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit(KmerAlpha).substr((($"l_partkey" * 13) % 33).cast("int") + 1, lit(32))
-          .as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), lit("i:1")).as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        cigar = lit("32M"),
+        seq = lit(KmerAlpha).substr((($"l_partkey" * 13) % 33).cast("int") + 1, lit(32)))
+      fixture(reads, "bam", path)
       graft.functions.KmerMinimizersExpr.register(s)
       s.read.format("bam").load(path)
         // 25 k-mers (k=8, L=32) -> 21 windows of 5; winnowing emits a
@@ -1764,7 +1603,7 @@ object FormatQueries {
       val dir = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}"
       val fasta = writeRefFasta(dir)
       val path = s"$dir/ctx.vcf.bgz"
-      spread(syntheticVariants(s, d)).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      fixture(syntheticVariants(s, d), "vcf", path)
       val back = s.read.format("vcf").load(path)
       val rows = back
         .select($"contig", $"start", element_at($"alt", 1).as("alt"))
@@ -1797,22 +1636,11 @@ object FormatQueries {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/gini.bam"
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 13) % 5000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 13) % 5000) + 151).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        lit("151M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), lit("i:1")).as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+        start = (($"l_partkey" * 13) % 5000) + 1,
+        end = (($"l_partkey" * 13) % 5000) + 151)
+      fixture(reads, "bam", path)
       val back = s.read.format("bam").load(path)
         .filter($"start" <= 1299 && $"end" >= 1000)
       val depth = back
@@ -1851,29 +1679,17 @@ object FormatQueries {
     // whose key space is the handful of distinct (a,b,c) patterns.
     "q_vcf_hwe" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/hwe.vcf.bgz"
       def geno(j: Int) = {
         val code = ($"l_orderkey" + lit(j) * $"l_linenumber" +
           lit(j * j) * $"l_suppkey") % 3
-        struct(
-          lit(f"s$j%02d").as("sample"),
-          when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1").as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))
+        genotype(lit(f"s$j%02d"), when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1"))
       }
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"),
-        array(lit("G")).as("alt"),
-        lit(30.0).as("qual"),
-        array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array((1 to 12).map(geno): _*).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        genotypes = array((1 to 12).map(geno): _*))
+      fixture(vars, "vcf", path)
       // formatFields=GT: the census consumes the whole genotype array, so
       // Catalyst cannot prune the map-typed FORMAT fields — opt in to the
       // selective decode (gt by token scan, no per-sample maps)
@@ -1919,7 +1735,6 @@ object FormatQueries {
     // of cohort width) + a MAC rollup whose key space is ≤ 2·samples+1.
     "q_vcf_cohort64_sfs" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/cohort64.vcf.bgz"
       // the query pins cohort WIDTH, not site count — a 1/16 site sample
       // keeps the 64-wide write comparable to the 12-wide family's cost
@@ -1930,25 +1745,13 @@ object FormatQueries {
           ($"l_orderkey" * 37 + $"l_linenumber" * 101 + $"l_suppkey").cast("long"))
       def geno(j: Int) = {
         val h = ($"site" * lit(17L * j + 1)) % 1000003L % 24L
-        struct(
-          lit(f"s$j%02d").as("sample"),
-          when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1").as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))
+        genotype(lit(f"s$j%02d"), when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1"))
       }
-      val vars = base.select(
-        concat(lit("chr"), ($"l_orderkey" % 24).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"),
-        array(lit("G")).as("alt"),
-        lit(30.0).as("qual"),
-        array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array((1 to 64).map(geno): _*).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite")
-        .option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(base,
+        contig = concat(lit("chr"), ($"l_orderkey" % 24).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        genotypes = array((1 to 64).map(geno): _*))
+      fixture(vars, "vcf", path)
       // formatFields=GT: the census consumes the whole genotype array, so
       // Catalyst cannot prune the map-typed FORMAT fields — opt in to the
       // selective decode (gt by token scan, no per-sample maps)
@@ -1976,7 +1779,6 @@ object FormatQueries {
     // deterministic on both engines.
     "q_vcf_ld_adjacent" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       import org.apache.spark.sql.expressions.Window
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/ld.vcf.bgz"
       val base = Tables.lineitem(s, d)
@@ -1985,25 +1787,14 @@ object FormatQueries {
           ($"l_orderkey" * 37 + $"l_linenumber" * 101 + $"l_suppkey").cast("long"))
       def geno(j: Int) = {
         val h = ($"site" * lit(17L * j + 1)) % 1000003L % 24L
-        struct(
-          lit(f"s$j%02d").as("sample"),
-          when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1").as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))
+        genotype(lit(f"s$j%02d"), when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1"))
       }
-      val vars = base.select(
-        concat(lit("chr"), ($"l_orderkey" % 24).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        concat($"l_orderkey", lit("-"), $"l_linenumber", lit("-"), $"l_suppkey").as("id"),
-        lit("A").as("ref"),
-        array(lit("G")).as("alt"),
-        lit(30.0).as("qual"),
-        array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array((1 to 12).map(geno): _*).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite")
-        .option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(base,
+        contig = concat(lit("chr"), ($"l_orderkey" % 24).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        id = concat($"l_orderkey", lit("-"), $"l_linenumber", lit("-"), $"l_suppkey"),
+        genotypes = array((1 to 12).map(geno): _*))
+      fixture(vars, "vcf", path)
       val back = s.read.format("vcf").load(path)
       val dosed = back.select($"contig", $"start", $"id",
         expr("transform(genotypes, g -> CASE WHEN g.gt = '0/0' THEN 0L" +
@@ -2037,7 +1828,6 @@ object FormatQueries {
     // site×site join.
     "q_vcf_kinship_pairs" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/kin.vcf.bgz"
       val base = Tables.lineitem(s, d)
         .filter($"l_orderkey" % 8 === 5) // pair work scales 66×: sample the sites
@@ -2045,25 +1835,13 @@ object FormatQueries {
           ($"l_orderkey" * 37 + $"l_linenumber" * 101 + $"l_suppkey").cast("long"))
       def geno(j: Int) = {
         val h = ($"site" * lit(17L * j + 1)) % 1000003L % 24L
-        struct(
-          lit(f"s$j%02d").as("sample"),
-          when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1").as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))
+        genotype(lit(f"s$j%02d"), when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1"))
       }
-      val vars = base.select(
-        concat(lit("chr"), ($"l_orderkey" % 24).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"),
-        array(lit("G")).as("alt"),
-        lit(30.0).as("qual"),
-        array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array((1 to 12).map(geno): _*).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite")
-        .option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(base,
+        contig = concat(lit("chr"), ($"l_orderkey" % 24).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        genotypes = array((1 to 12).map(geno): _*))
+      fixture(vars, "vcf", path)
       val back = s.read.format("vcf").load(path)
       val pairLits = for { i <- 1 to 12; j <- (i + 1) to 12 }
         yield struct(lit(i).as("i"), lit(j).as("j"))
@@ -2099,24 +1877,13 @@ object FormatQueries {
       val contig = when(c < 32, concat(lit("chr"), (c % 24).cast("string")))
         .otherwise(when(rgIdx % 2 === 0, lit("chrX"))
           .otherwise(when(c < 36, lit("chrX")).otherwise(lit("chrY"))))
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        contig.as("contig"),
-        ((($"l_partkey" * 13) % 5000) + 1).cast("int").as("start"),
-        lit(0).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        lit("100M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("RG"), concat(lit("Z:rg"), rgIdx.cast("string"))).as("attributes"))
+      val reads = readRows(Tables.lineitem(s, d),
+        contig = contig,
+        start = (($"l_partkey" * 13) % 5000) + 1,
+        cigar = lit("100M"),
+        attributes = map(lit("RG"), concat(lit("Z:rg"), rgIdx.cast("string"))))
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/sex.bam"
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs24 + ",chrX:1000000,chrY:1000000")
-        .option("writeSbi", "true").saveFixture(path)
+      fixture(reads, "bam", path, "refs" -> (Refs24 + ",chrX:1000000,chrY:1000000"), "writeSbi" -> "true")
       val back = s.read.format("bam").load(path)
       back
         .select(substring(element_at($"attributes", "RG"), 3, 10).as("sample_rg"),
@@ -2151,8 +1918,7 @@ object FormatQueries {
           " CAST(20 + l_partkey % 31 AS INT))").as("seq"),
         expr("substring(repeat('IJKLMNOP@+FGH', 5), CAST(l_suppkey % 7 AS INT) + 1," +
           " CAST(20 + l_partkey % 31 AS INT))").as("qual"))
-      spread(reads).write.format("fastq").mode("overwrite")
-        .option("compressionLevel", "1").save(path)
+      stage(reads, "fastq", path)
       val back = s.read.format("fastq").load(path)
       back
         .groupBy(length($"seq").as("len"))
@@ -2177,8 +1943,7 @@ object FormatQueries {
           " CAST(20 + l_partkey % 31 AS INT))").as("seq"),
         expr("substring(repeat('IJKLMNOP@+FGH', 5), CAST(l_suppkey % 7 AS INT) + 1," +
           " CAST(20 + l_partkey % 31 AS INT))").as("qual"))
-      spread(reads).write.format("fastq").mode("overwrite")
-        .option("compressionLevel", "1").saveFixture(path)
+      fixture(reads, "fastq", path)
       val back = s.read.format("fastq").load(path)
       back
         .select((length($"qual") -
@@ -2208,10 +1973,8 @@ object FormatQueries {
           s" CAST(20 + (l_partkey * ${1 + lenSalt}) % 31 AS INT))").as("qual"))
         .dropDuplicates("readName")
       inParallel( // independent mate files: overlap the writes (guide §2.6)
-        () => mates("r1", 0).write.format("fastq").mode("overwrite")
-          .option("compressionLevel", "1").saveFixture(s"$base/r1.fastq.bgz"),
-        () => mates("r2", 6).write.format("fastq").mode("overwrite")
-          .option("compressionLevel", "1").saveFixture(s"$base/r2.fastq.bgz"))
+        () => placedFixture(mates("r1", 0), "fastq", s"$base/r1.fastq.bgz"),
+        () => placedFixture(mates("r2", 6), "fastq", s"$base/r2.fastq.bgz"))
       val r1 = s.read.format("fastq")
         .load(s"$base/r1.fastq.bgz").select($"readName", length($"seq").as("len1"))
       val r2 = s.read.format("fastq")
@@ -2229,27 +1992,17 @@ object FormatQueries {
     // and a gap-keyed rollup whose key space is the splice-size range.
     "q_bam_splice_junctions" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/splice.bam"
       val m1 = lit(20) + $"l_partkey" % 30
       val gap = lit(100) + ($"l_suppkey" % 50) * 20
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("j"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_orderkey" % 24).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 900000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 900000) + m1 + gap + lit(30)).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        concat(m1.cast("string"), lit("M"), gap.cast("string"), lit("N"), lit("30M"))
-          .as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"), lit("*").as("qual"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false))
-          .as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite")
-        .option("compressionLevel", "1").option("refs", Refs24).saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        readName = concat(lit("j"), $"l_orderkey", lit("-"), $"l_linenumber"),
+        contig = concat(lit("chr"), ($"l_orderkey" % 24).cast("string")),
+        start = (($"l_partkey" * 37) % 900000) + 1,
+        end = (($"l_partkey" * 37) % 900000) + m1 + gap + lit(30),
+        cigar = concat(m1.cast("string"), lit("M"), gap.cast("string"), lit("N"), lit("30M")),
+        attributes = noEntries)
+      fixture(reads, "bam", path, "refs" -> Refs24)
       val back = s.read.format("bam").load(path)
       back
         .select($"start",
@@ -2276,8 +2029,7 @@ object FormatQueries {
           " CAST(20 + l_partkey % 31 AS INT))").as("seq"),
         expr("substring(repeat('IJKLMNOP@+FGH', 5), CAST(l_suppkey % 7 AS INT) + 1," +
           " CAST(20 + l_partkey % 31 AS INT))").as("qual"))
-      spread(reads).write.format("fastq").mode("overwrite")
-        .option("compressionLevel", "1").saveFixture(path)
+      fixture(reads, "fastq", path)
       val back = s.read.format("fastq").load(path)
       back
         .select(explode(expr("sequence(1, length(seq))")).as("cycle"), $"seq")
@@ -2297,7 +2049,6 @@ object FormatQueries {
     // unique id; the argmax is a GROUP-BY + join-back (no window).
     "q_vcf_sample_swap" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val base = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}"
       val perm: Map[Int, Int] = Map(5 -> 7, 7 -> 5).withDefault(identity)
       val src = Tables.lineitem(s, d)
@@ -2307,26 +2058,16 @@ object FormatQueries {
         .dropDuplicates("site") // unique site key → the A/B join is exactly 1:1
       def geno(j: Int, hashIdx: Int) = {
         val h = ($"site" * lit(17L * hashIdx + 1)) % 1000003L % 24L
-        struct(
-          lit(f"s$j%02d").as("sample"),
-          when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1").as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))
+        genotype(lit(f"s$j%02d"), when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1"))
       }
-      def callset(hashOf: Int => Int) = src.select(
-        concat(lit("chr"), ($"l_orderkey" % 24).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        $"site".cast("string").as("id"),
-        lit("A").as("ref"), array(lit("G")).as("alt"),
-        lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array((1 to 12).map(j => geno(j, hashOf(j))): _*).as("genotypes"))
+      def callset(hashOf: Int => Int) = variantRows(src,
+        contig = concat(lit("chr"), ($"l_orderkey" % 24).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        id = $"site".cast("string"),
+        genotypes = array((1 to 12).map(j => geno(j, hashOf(j))): _*))
       inParallel( // independent cohorts: overlap the writes (guide §2.6)
-        () => callset(identity).write.format("vcf").mode("overwrite")
-          .option("compressionLevel", "1").saveFixture(s"$base/swapA.vcf.bgz"),
-        () => callset(perm).write.format("vcf").mode("overwrite")
-          .option("compressionLevel", "1").saveFixture(s"$base/swapB.vcf.bgz"))
+        () => placedFixture(callset(identity), "vcf", s"$base/swapA.vcf.bgz"),
+        () => placedFixture(callset(perm), "vcf", s"$base/swapB.vcf.bgz"))
       def codes(p: String, as: String) =
         s.read.format("vcf").load(p)
           .select($"id", expr("transform(genotypes, g -> CASE WHEN g.gt = '0/1' THEN 1" +
@@ -2361,32 +2102,24 @@ object FormatQueries {
     // writes are pipeline-intermediates at level 1.
     "q_bam2fq" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val base = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}"
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("b"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_orderkey" % 24).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 20 + $"l_partkey" % 31).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        concat((lit(20) + $"l_partkey" % 31).cast("string"), lit("M")).as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        expr("substring(repeat('ACGT', 16), CAST((l_orderkey + l_linenumber) % 4 AS INT) + 1," +
-          " CAST(20 + l_partkey % 31 AS INT))").as("seq"),
-        expr("substring(repeat('IJKLMNOP@+FGH', 5), CAST(l_suppkey % 7 AS INT) + 1," +
-          " CAST(20 + l_partkey % 31 AS INT))").as("qual"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false))
-          .as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite")
-        .option("compressionLevel", "1").option("refs", Refs24).save(s"$base/b2f.bam")
+      val reads = readRows(Tables.lineitem(s, d),
+        readName = concat(lit("b"), $"l_orderkey", lit("-"), $"l_linenumber"),
+        contig = concat(lit("chr"), ($"l_orderkey" % 24).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        end = (($"l_partkey" * 37) % 999000) + 20 + $"l_partkey" % 31,
+        cigar = concat((lit(20) + $"l_partkey" % 31).cast("string"), lit("M")),
+        seq = expr("substring(repeat('ACGT', 16), CAST((l_orderkey + l_linenumber) % 4 AS INT) + 1," +
+          " CAST(20 + l_partkey % 31 AS INT))"),
+        qual = expr("substring(repeat('IJKLMNOP@+FGH', 5), CAST(l_suppkey % 7 AS INT) + 1," +
+          " CAST(20 + l_partkey % 31 AS INT))"),
+        attributes = noEntries)
+      stage(reads, "bam", s"$base/b2f.bam", "refs" -> Refs24)
       val aligned = s.read.format("bam")
         .load(s"$base/b2f.bam")
-      aligned.select($"readName", lit(null).cast("string").as("comment"), $"seq", $"qual")
-        .write.format("fastq").mode("overwrite")
-        .option("compressionLevel", "1").save(s"$base/b2f.fastq.bgz")
+      stage.copy(spread = false)(
+        aligned.select($"readName", lit(null).cast("string").as("comment"), $"seq", $"qual"),
+        "fastq", s"$base/b2f.fastq.bgz")
       val raw = s.read.format("fastq")
         .load(s"$base/b2f.fastq.bgz")
       raw
@@ -2404,35 +2137,24 @@ object FormatQueries {
     // BAM nibble/phred arrays); a drift anywhere hash-mismatches.
     "q_cram2bam" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val base = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}"
       // transcode fidelity is per-record, not volume-bound: a 1/4 site
       // sample keeps the double-codec round-trip in the family cost band
-      val reads = Tables.lineitem(s, d)
-        .filter($"l_orderkey" % 4 === 1)
-        .select(
-        concat(lit("c"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_orderkey" % 24).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 20 + $"l_partkey" % 31).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        concat((lit(20) + $"l_partkey" % 31).cast("string"), lit("M")).as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        expr("substring(repeat('ACGT', 16), CAST((l_orderkey + l_linenumber) % 4 AS INT) + 1," +
-          " CAST(20 + l_partkey % 31 AS INT))").as("seq"),
-        expr("substring(repeat('IJKLMNOP@+FGH', 5), CAST(l_suppkey % 7 AS INT) + 1," +
-          " CAST(20 + l_partkey % 31 AS INT))").as("qual"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false))
-          .as("attributes"))
-      spread(reads).write.format("cram").mode("overwrite").option("compressionLevel", "1")
-        .option("records", "true").option("refs", Refs24).save(s"$base/c2b.cram")
+      val reads = readRows(Tables.lineitem(s, d).filter($"l_orderkey" % 4 === 1),
+        readName = concat(lit("c"), $"l_orderkey", lit("-"), $"l_linenumber"),
+        contig = concat(lit("chr"), ($"l_orderkey" % 24).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        end = (($"l_partkey" * 37) % 999000) + 20 + $"l_partkey" % 31,
+        cigar = concat((lit(20) + $"l_partkey" % 31).cast("string"), lit("M")),
+        seq = expr("substring(repeat('ACGT', 16), CAST((l_orderkey + l_linenumber) % 4 AS INT) + 1," +
+          " CAST(20 + l_partkey % 31 AS INT))"),
+        qual = expr("substring(repeat('IJKLMNOP@+FGH', 5), CAST(l_suppkey % 7 AS INT) + 1," +
+          " CAST(20 + l_partkey % 31 AS INT))"),
+        attributes = noEntries)
+      stage(reads, "cram", s"$base/c2b.cram", "records" -> "true", "refs" -> Refs24)
       val archived = s.read.format("cram").option("records", "true")
         .load(s"$base/c2b.cram")
-      archived.write.format("bam").mode("overwrite")
-        .option("compressionLevel", "1").option("refs", Refs24).save(s"$base/c2b.bam")
+      stage.copy(spread = false)(archived, "bam", s"$base/c2b.bam", "refs" -> Refs24)
       val analysis = s.read.format("bam")
         .load(s"$base/c2b.bam")
       analysis
@@ -2450,29 +2172,17 @@ object FormatQueries {
     // genotypes array (element_at, no explode) and a per-contig rollup.
     "q_vcf_mendel" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/trio.vcf.bgz"
-      def geno(name: String, code: org.apache.spark.sql.Column) = struct(
-        lit(name).as("sample"),
-        when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1").as("gt"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false))
-          .as("fields"))
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"),
-        array(lit("G")).as("alt"),
-        lit(30.0).as("qual"),
-        array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array(
+      def geno(name: String, code: Column) =
+        genotype(lit(name), when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1"))
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        genotypes = array(
           geno("father", ($"l_orderkey" * 7 + $"l_linenumber") % 3),
           geno("mother", ($"l_orderkey" * 5 + $"l_linenumber" * 2) % 3),
-          geno("child", ($"l_orderkey" * 11 + $"l_linenumber" * 3 + $"l_suppkey") % 3))
-          .as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+          geno("child", ($"l_orderkey" * 11 + $"l_linenumber" * 3 + $"l_suppkey") % 3)))
+      fixture(vars, "vcf", path)
       val back = s.read.format("vcf").load(path)
       def dose(i: Int) = {
         val gt = element_at($"genotypes", i).getField("gt")
@@ -2506,7 +2216,6 @@ object FormatQueries {
     "q_vcf_concordance" -> { (s, d) =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.types._
       val base = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}"
       val w = Window.partitionBy($"contig")
         .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
@@ -2516,22 +2225,15 @@ object FormatQueries {
         .select($"contig", $"pos",
           (($"l_orderkey" * 3 + $"l_linenumber") % 4).as("ca"),
           (($"l_orderkey" * 5 + $"l_linenumber" * 2 + $"l_suppkey") % 4).as("cb"))
-      def gtOf(c: org.apache.spark.sql.Column) =
+      def gtOf(c: Column) =
         when(c === 0, "0/0").when(c === 1, "0/1").when(c === 2, "1/1").otherwise("./.")
-      def callset(code: org.apache.spark.sql.Column) = sites.select(
-        $"contig", $"pos".cast("int").as("start"), $"pos".cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"), array(lit("G")).as("alt"),
-        lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array(struct(lit("s1").as("sample"), gtOf(code).as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))).as("genotypes"))
+      def callset(code: Column) = variantRows(sites,
+        contig = $"contig",
+        start = $"pos",
+        genotypes = array(genotype(lit("s1"), gtOf(code))))
       inParallel( // independent callsets: overlap the writes (guide §2.6)
-        () => spread(callset($"ca")).write.format("vcf").mode("overwrite")
-          .option("compressionLevel", "1").saveFixture(s"$base/concA.vcf.bgz"),
-        () => spread(callset($"cb")).write.format("vcf").mode("overwrite")
-          .option("compressionLevel", "1").saveFixture(s"$base/concB.vcf.bgz"))
+        () => fixture(callset($"ca"), "vcf", s"$base/concA.vcf.bgz"),
+        () => fixture(callset($"cb"), "vcf", s"$base/concB.vcf.bgz"))
       def back(p: String, col: String) =
         s.read.format("vcf").load(p)
           .select($"contig", $"start",
@@ -2555,9 +2257,7 @@ object FormatQueries {
     "q_vcf_somatic" -> { (s, d) =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.types._
       val base = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}"
-      val emptyMap = map().cast(MapType(StringType, StringType, valueContainsNull = false))
       val w = Window.partitionBy($"contig")
         .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
       val sites = Tables.lineitem(s, d)
@@ -2567,22 +2267,17 @@ object FormatQueries {
           (($"l_orderkey" + $"l_partkey") % 5 =!= 0).as("in_normal"),
           (($"l_orderkey" * 3 + $"l_suppkey") % 7 =!= 0).as("in_tumor"),
           (($"l_partkey" * 13 + $"l_linenumber") % 1000).as("af_pm"))
-      def callset(flag: org.apache.spark.sql.Column, sample: String,
-                  fields: org.apache.spark.sql.Column) = sites.filter(flag).select(
-        $"contig", $"pos".cast("int").as("start"), $"pos".cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"), array(lit("T")).as("alt"),
-        lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-        emptyMap.as("info"),
-        array(struct(lit(sample).as("sample"), lit("0/1").as("gt"),
-          fields.as("fields"))).as("genotypes"))
+      def callset(flag: Column, sample: String,
+                  fields: Column) = variantRows(sites.filter(flag),
+        contig = $"contig",
+        start = $"pos",
+        alt = array(lit("T")),
+        info = noEntries,
+        genotypes = array(genotype(lit(sample), lit("0/1"), fields)))
       inParallel( // independent tumor/normal callsets: overlap (guide §2.6)
-        () => spread(callset($"in_normal", "normal", emptyMap))
-          .write.format("vcf").mode("overwrite").option("compressionLevel", "1")
-          .saveFixture(s"$base/somN.vcf.bgz"),
-        () => spread(callset($"in_tumor", "tumor", map(lit("AF"), $"af_pm".cast("string"))))
-          .write.format("vcf").mode("overwrite").option("compressionLevel", "1")
-          .saveFixture(s"$base/somT.vcf.bgz"))
+        () => fixture(callset($"in_normal", "normal", noEntries), "vcf", s"$base/somN.vcf.bgz"),
+        () => fixture(callset($"in_tumor", "tumor", map(lit("AF"), $"af_pm".cast("string"))),
+          "vcf", s"$base/somT.vcf.bgz"))
       val nb = s.read.format("vcf")
         .load(s"$base/somN.vcf.bgz")
         .select($"contig", $"start", lit(1).as("in_n"))
@@ -2613,25 +2308,16 @@ object FormatQueries {
     // max ALT count — and the rollup is a tiny (n_alts, gt) key space.
     "q_vcf_split_multiallelic" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/multi.vcf.bgz"
       val nalt = ($"l_suppkey" % 3 + 1).cast("int")
       val a1 = ($"l_orderkey" + $"l_linenumber") % ($"l_suppkey" % 3 + 2)
       val a2 = ($"l_orderkey" * 2 + $"l_suppkey") % ($"l_suppkey" % 3 + 2)
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"),
-        slice(array(lit("C"), lit("G"), lit("T")), lit(1), nalt).as("alt"),
-        lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array(struct(lit("s1").as("sample"),
-          concat(a1.cast("string"), lit("/"), a2.cast("string")).as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        alt = slice(array(lit("C"), lit("G"), lit("T")), lit(1), nalt),
+        genotypes = array(genotype(lit("s1"), concat(a1.cast("string"), lit("/"), a2.cast("string")))))
+      fixture(vars, "vcf", path)
       val back = s.read.format("vcf").load(path)
       val g = element_at($"genotypes", 1).getField("gt")
       val exploded = back.select(
@@ -2640,7 +2326,7 @@ object FormatQueries {
         org.apache.spark.sql.functions.split(g, "/").getItem(1).cast("int").as("a2"),
         posexplode($"alt").as(Seq("i0", "alt_allele")))
         .withColumn("ai", $"i0" + 1)
-      def remap(a: org.apache.spark.sql.Column) =
+      def remap(a: Column) =
         when(a === 0, "0").when(a === $"ai", "1").otherwise(".")
       exploded
         .withColumn("gt", concat(remap($"a1"), lit("/"), remap($"a2")))
@@ -2660,7 +2346,6 @@ object FormatQueries {
     "q_vcf_roh" -> { (s, d) =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/roh.vcf.bgz"
       val w = Window.partitionBy($"contig")
         .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
@@ -2669,21 +2354,15 @@ object FormatQueries {
       // windows are per-contig sequential (the bcftools streaming
       // semantic), so contig count IS the parallelism — a 3-way window
       // over 32 cores benchmarks an artifact, 24 approximates a genome
-      val vars = Tables.lineitem(s, d)
-        .withColumn("contig", concat(lit("chr"), ($"l_orderkey" % 24).cast("string")))
-        .withColumn("pos", row_number().over(w))
-        .select(
-          $"contig", $"pos".cast("int").as("start"), $"pos".cast("int").as("end"),
-          lit(null).cast("string").as("id"),
-          lit("A").as("ref"), array(lit("G")).as("alt"),
-          lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-          array(struct(lit("s1").as("sample"),
-            when(code === 0, "0/0").when(code === 1, "0/1")
-              .when(code === 2, "1/1").otherwise("0/1").as("gt"),
-            map().cast(MapType(StringType, StringType, valueContainsNull = false))
-              .as("fields"))).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(
+        Tables.lineitem(s, d)
+          .withColumn("contig", concat(lit("chr"), ($"l_orderkey" % 24).cast("string")))
+          .withColumn("pos", row_number().over(w)),
+        contig = $"contig",
+        start = $"pos",
+        genotypes = array(genotype(lit("s1"),
+          when(code === 0, "0/0").when(code === 1, "0/1").when(code === 2, "1/1").otherwise("0/1"))))
+      fixture(vars, "vcf", path)
       val back = s.read.format("vcf").load(path)
       val isHet = (element_at($"genotypes", 1).getField("gt") === "0/1").cast("long")
       val runW = Window.partitionBy($"contig").orderBy($"start")
@@ -2723,22 +2402,13 @@ object FormatQueries {
           (lit(151) - clip).cast("string"), lit("M")))
         .otherwise(concat((lit(151) - clip).cast("string"), lit("M"),
           clip.cast("string"), lit("S")))
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        when(fwd, 0).otherwise(16).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 13) % 5000) + 8).cast("int").as("start"),
-        lit(0).cast("int").as("end"),
-        (($"l_orderkey" * 7 + $"l_linenumber") % 61).cast("int").as("mapq"),
-        cigar.as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), lit("i:1")).as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeSbi", "true").saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        flags = when(fwd, 0).otherwise(16),
+        contig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+        start = (($"l_partkey" * 13) % 5000) + 8,
+        mapq = ($"l_orderkey" * 7 + $"l_linenumber") % 61,
+        cigar = cigar)
+      fixture(reads, "bam", path, "writeSbi" -> "true")
       val back = s.read.format("bam").load(path)
         .select($"readName", $"contig", $"start", $"end", $"cigar", $"mapq",
           ($"flags".bitwiseAND(16) =!= 0).cast("int").as("strand"))
@@ -2777,22 +2447,12 @@ object FormatQueries {
           (lit(151) - clip).cast("string"), lit("M")))
         .otherwise(concat((lit(151) - clip).cast("string"), lit("M"),
           clip.cast("string"), lit("S")))
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        when(fwd, 0).otherwise(16).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 13) % 5000) + 8).cast("int").as("start"),
-        lit(0).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        cigar.as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), lit("i:1")).as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        flags = when(fwd, 0).otherwise(16),
+        contig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+        start = (($"l_partkey" * 13) % 5000) + 8,
+        cigar = cigar)
+      fixture(reads, "bam", path)
       val back = s.read.format("bam").load(path)
         .select($"contig", $"cigar",
           ($"flags".bitwiseAND(16) =!= 0).cast("int").as("strand"))
@@ -2820,23 +2480,13 @@ object FormatQueries {
     "q_bam_baseq_cycle" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/bq.bam"
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        lit(0).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        lit("36M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit(KmerAlpha).substr((($"l_partkey" * 13) % 29).cast("int") + 1, lit(36))
-          .as("seq"),
-        lit(QLadder).substr(($"l_partkey" % 40).cast("int") + 1, lit(36)).as("qual"),
-        map(lit("XO"), lit("i:1")).as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        cigar = lit("36M"),
+        seq = lit(KmerAlpha).substr((($"l_partkey" * 13) % 29).cast("int") + 1, lit(36)),
+        qual = lit(QLadder).substr(($"l_partkey" % 40).cast("int") + 1, lit(36)))
+      fixture(reads, "bam", path)
       val back = s.read.format("bam").load(path)
         .select($"qual")
       back
@@ -2857,23 +2507,15 @@ object FormatQueries {
     // boolean over the returned ref/alt, and the rollup is three rows.
     "q_vcf_tstv" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/tstv.vcf.bgz"
       val refIdx = ($"l_partkey" % 4).cast("int")
       val altIdx = (refIdx + 1 + ($"l_linenumber" % 3).cast("int")) % 4
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("ACGT").substr(refIdx + 1, lit(1)).as("ref"),
-        array(lit("ACGT").substr(altIdx + 1, lit(1))).as("alt"),
-        lit(30.0).as("qual"),
-        array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array().cast(ArrayType(graft.vcf.Variant.genotypeType, containsNull = false))
-          .as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        ref = lit("ACGT").substr(refIdx + 1, lit(1)),
+        alt = array(lit("ACGT").substr(altIdx + 1, lit(1))))
+      fixture(vars, "vcf", path)
       val back = s.read.format("vcf").load(path)
       back.select($"contig", $"ref", element_at($"alt", 1).as("alt"))
         .withColumn("is_ts",
@@ -2896,29 +2538,19 @@ object FormatQueries {
     // plink uses; the rollup key space is the sample list.
     "q_vcf_missingness" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/miss.vcf.bgz"
       def geno(j: Int) = {
         val code = ($"l_orderkey" + lit(j) * $"l_linenumber" +
           lit(j * j) * $"l_suppkey") % 5
-        struct(
-          lit(f"s$j%02d").as("sample"),
-          when(code === 4, "./.")
-            .when(code % 3 === 0, "0/0")
-            .when(code % 3 === 1, "0/1").otherwise("1/1").as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))
+        genotype(lit(f"s$j%02d"), when(code === 4, "./.")
+          .when(code % 3 === 0, "0/0")
+          .when(code % 3 === 1, "0/1").otherwise("1/1"))
       }
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"), array(lit("G")).as("alt"),
-        lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array((1 to 12).map(geno): _*).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        genotypes = array((1 to 12).map(geno): _*))
+      fixture(vars, "vcf", path)
       val back = s.read.format("vcf").load(path)
       back.select(explode($"genotypes").as("g"))
         .select($"g.sample".as("sample"), $"g.gt".as("gt"))
@@ -2939,27 +2571,17 @@ object FormatQueries {
     // broadcast scalar — no pair space, no second corpus shuffle.
     "q_vcf_inbreeding" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/inb.vcf.bgz"
       def geno(j: Int) = {
         val code = ($"l_orderkey" + lit(j) * $"l_linenumber" +
           lit(j * j) * $"l_suppkey") % 3
-        struct(
-          lit(f"s$j%02d").as("sample"),
-          when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1").as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))
+        genotype(lit(f"s$j%02d"), when(code === 0, "0/0").when(code === 1, "0/1").otherwise("1/1"))
       }
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"), array(lit("G")).as("alt"),
-        lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array((1 to 12).map(geno): _*).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        genotypes = array((1 to 12).map(geno): _*))
+      fixture(vars, "vcf", path)
       // formatFields=GT: the census consumes the whole genotype array, so
       // Catalyst cannot prune the map-typed FORMAT fields — opt in to the
       // selective decode (gt by token scan, no per-sample maps)
@@ -2989,7 +2611,6 @@ object FormatQueries {
     // size) is pinned.
     "q_vcf_af_spectrum" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/sfs.vcf.bgz"
       // NOT the HWE derivation: anything linear in the key residues mod 3
       // collapses to <=27 site types with zero singleton sites, and uniform
@@ -3002,25 +2623,16 @@ object FormatQueries {
       // generated code fall out of JIT range — measured 2.3x slower write
       def geno(j: Int) = {
         val h = ($"gbase" * lit(17 * j + 1)) % 1000003 % 24
-        struct(
-          lit(f"s$j%02d").as("sample"),
-          when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1").as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))
+        genotype(lit(f"s$j%02d"), when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1"))
       }
-      val vars = Tables.lineitem(s, d)
-        .withColumn("gbase", $"l_orderkey" * 131 + $"l_partkey" * 37 +
-          $"l_suppkey" * 11 + $"l_linenumber" * 5)
-        .select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"), array(lit("G")).as("alt"),
-        lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array((1 to 12).map(geno): _*).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(
+        Tables.lineitem(s, d)
+          .withColumn("gbase", $"l_orderkey" * 131 + $"l_partkey" * 37 +
+            $"l_suppkey" * 11 + $"l_linenumber" * 5),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        genotypes = array((1 to 12).map(geno): _*))
+      fixture(vars, "vcf", path)
       // formatFields=GT: the census consumes the whole genotype array, so
       // Catalyst cannot prune the map-typed FORMAT fields — opt in to the
       // selective decode (gt by token scan, no per-sample maps)
@@ -3046,7 +2658,6 @@ object FormatQueries {
     // subset, never the corpus.
     "q_vcf_singletons" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/sing.vcf.bgz"
       // NOT the HWE derivation: anything linear in the key residues mod 3
       // collapses to <=27 site types with zero singleton sites, and uniform
@@ -3059,25 +2670,16 @@ object FormatQueries {
       // generated code fall out of JIT range — measured 2.3x slower write
       def geno(j: Int) = {
         val h = ($"gbase" * lit(17 * j + 1)) % 1000003 % 24
-        struct(
-          lit(f"s$j%02d").as("sample"),
-          when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1").as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))
+        genotype(lit(f"s$j%02d"), when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1"))
       }
-      val vars = Tables.lineitem(s, d)
-        .withColumn("gbase", $"l_orderkey" * 131 + $"l_partkey" * 37 +
-          $"l_suppkey" * 11 + $"l_linenumber" * 5)
-        .select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"), array(lit("G")).as("alt"),
-        lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array((1 to 12).map(geno): _*).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(
+        Tables.lineitem(s, d)
+          .withColumn("gbase", $"l_orderkey" * 131 + $"l_partkey" * 37 +
+            $"l_suppkey" * 11 + $"l_linenumber" * 5),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        genotypes = array((1 to 12).map(geno): _*))
+      fixture(vars, "vcf", path)
       // formatFields=GT: the census consumes the whole genotype array, so
       // Catalyst cannot prune the map-typed FORMAT fields — opt in to the
       // selective decode (gt by token scan, no per-sample maps)
@@ -3110,22 +2712,13 @@ object FormatQueries {
           + when($"l_partkey" % 2 === 0, 16).otherwise(0)
           + when($"l_orderkey" % 2 === 0, 32).otherwise(0)).cast("int")
       val start = ((($"l_partkey" * 13) % 5000) + 400).cast("int")
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        flags.as("flags"),
-        concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("contig"),
-        start.as("start"),
-        lit(0).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        lit("151M").as("cigar"),
-        concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("mateContig"),
-        (start + ($"l_suppkey" % 1200).cast("int") - 300).as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), lit("i:1")).as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeSbi", "true").saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        flags = flags,
+        contig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+        start = start,
+        mateContig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+        mateStart = start + ($"l_suppkey" % 1200).cast("int") - 300)
+      fixture(reads, "bam", path, "writeSbi" -> "true")
       val back = s.read.format("bam").load(path)
         .select($"contig", $"start", $"mateStart",
           ($"flags".bitwiseAND(16) =!= 0).as("selfRev"),
@@ -3154,8 +2747,7 @@ object FormatQueries {
       import s.implicits._
       val reads = rgTagReads(s, d)
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/rg.bam"
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).option("writeSbi", "true").saveFixture(path)
+      fixture(reads, "bam", path, "writeSbi" -> "true")
       // OPTION-FREE tag projection: the literal element_at keys below make
       // the AutoProjection rule derive attrKeys=[NM,RG,XC] — the reader
       // decodes ONLY those three in the self-describing tag walk and
@@ -3189,8 +2781,7 @@ object FormatQueries {
       import s.implicits._
       val reads = rgTagReads(s, d)
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/rg.sam"
-      spread(reads).write.format("sam").mode("overwrite")
-        .option("refs", Refs).saveFixture(path)
+      Write(level1 = false)(reads, "sam", path)
       val back = s.read.format("sam").load(path)
       back
         .select(
@@ -3219,9 +2810,7 @@ object FormatQueries {
     "q_bam_bqsr_covariates" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/bqsr.bam"
-      spread(rgTagReads(s, d)).write.format("bam").mode("overwrite")
-        .option("compressionLevel", "1").option("refs", Refs)
-        .option("writeSbi", "true").saveFixture(path)
+      fixture(rgTagReads(s, d), "bam", path, "writeSbi" -> "true")
       graft.functions.MdCyclesExpr.register(s)
       val back = s.read.format("bam")
         .option("tagColumns", "RG:string,MD:string").load(path)
@@ -3250,23 +2839,12 @@ object FormatQueries {
     "q_bam_basecall_pileup" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/bp.bam"
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 13) % 5000) + 1).cast("int").as("start"),
-        lit(0).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        lit("32M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit(KmerAlpha).substr((($"l_partkey" * 13) % 33).cast("int") + 1, lit(32))
-          .as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), lit("i:1")).as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+        start = (($"l_partkey" * 13) % 5000) + 1,
+        cigar = lit("32M"),
+        seq = lit(KmerAlpha).substr((($"l_partkey" * 13) % 33).cast("int") + 1, lit(32)))
+      fixture(reads, "bam", path)
       val back = s.read.format("bam").load(path)
         .select($"contig", $"start", $"seq")
         .filter($"start" <= 1263 && $"start" + 31 >= 1200)
@@ -3300,31 +2878,25 @@ object FormatQueries {
     "q_vcf_phase_switch" -> { (s, d) =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/phase.vcf.bgz"
       val w = Window.partitionBy($"contig")
         .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
-      def geno(name: String, code: org.apache.spark.sql.Column) = struct(
-        lit(name).as("sample"),
+      def geno(name: String, code: Column) = genotype(
+        lit(name),
         when(code === 0, "0|0").when(code === 1, "0|1")
-          .when(code === 2, "1|0").otherwise("1|1").as("gt"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false))
-          .as("fields"))
-      val vars = Tables.lineitem(s, d)
-        .withColumn("contig", concat(lit("chr"), ($"l_orderkey" % 24).cast("string")))
-        .withColumn("pos", row_number().over(w))
-        .select(
-          $"contig", $"pos".cast("int").as("start"), $"pos".cast("int").as("end"),
-          lit(null).cast("string").as("id"),
-          lit("A").as("ref"), array(lit("G")).as("alt"),
-          lit(30.0).as("qual"),
-          when(($"l_suppkey" + $"l_partkey") % 7 === 0,
-            array(lit("q10"), lit("s50"))).otherwise(array(lit("PASS"))).as("filters"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-          array(
+          .when(code === 2, "1|0").otherwise("1|1"))
+      val vars = variantRows(
+        Tables.lineitem(s, d)
+          .withColumn("contig", concat(lit("chr"), ($"l_orderkey" % 24).cast("string")))
+          .withColumn("pos", row_number().over(w)),
+        contig = $"contig",
+        start = $"pos",
+        filters = when(($"l_suppkey" + $"l_partkey") % 7 === 0,
+          array(lit("q10"), lit("s50"))).otherwise(array(lit("PASS"))),
+        genotypes = array(
             geno("s01", ($"l_orderkey" * 3 + $"l_linenumber" + $"l_partkey") % 4),
-            geno("s02", ($"l_orderkey" * 7 + $"l_suppkey") % 4)).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+            geno("s02", ($"l_orderkey" * 7 + $"l_suppkey") % 4)))
+      fixture(vars, "vcf", path)
       val back = s.read.format("vcf").load(path)
       val g = back
         .select($"contig", $"start", size($"filters").as("nfilt"),
@@ -3351,24 +2923,11 @@ object FormatQueries {
     "q_bam_wgs_metrics" -> { (s, d) =>
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/wgs.bam"
-      val reads = Tables.lineitem(s, d)
-        .filter($"l_partkey" % 5 === 0) // thin to ~120x so thresholds bite
-        .select(
-          concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-          lit(0).cast("int").as("flags"),
-          concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("contig"),
-          ((($"l_partkey" * 13) % 5000) + 1).cast("int").as("start"),
-          lit(0).cast("int").as("end"),
-          lit(60).cast("int").as("mapq"),
-          lit("151M").as("cigar"),
-          lit(null).cast("string").as("mateContig"),
-          lit(0).cast("int").as("mateStart"),
-          lit(0).cast("int").as("tlen"),
-          lit("*").as("seq"),
-          lit("*").as("qual"),
-          map(lit("XO"), lit("i:1")).as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      // thin to ~120x so thresholds bite
+      val reads = readRows(Tables.lineitem(s, d).filter($"l_partkey" % 5 === 0),
+        contig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+        start = (($"l_partkey" * 13) % 5000) + 1)
+      fixture(reads, "bam", path)
       val back = s.read.format("bam").load(path)
         .select($"contig", $"start", $"end")
         .filter($"start" <= 1999 && $"end" >= 1000)
@@ -3406,30 +2965,23 @@ object FormatQueries {
     // the GQ≥20 mask roll up from one bounded explode.
     "q_vcf_setgt_filter" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/setgt.vcf.bgz"
       def geno(j: Int) = {
         val code = ($"l_orderkey" + lit(j) * $"l_linenumber" +
           lit(j * j) * $"l_suppkey") % 4
         val gq = ($"l_partkey" + lit(j * 17)) % 60
-        struct(
-          lit(f"s$j%02d").as("sample"),
-          when(code === 0, "0/0").when(code === 1, "0/1")
-            .when(code === 2, "1/1").otherwise("./.").as("gt"),
-          map(lit("GQ"), gq.cast("string")).as("fields"))
+        genotype(lit(f"s$j%02d"),
+          when(code === 0, "0/0").when(code === 1, "0/1").when(code === 2, "1/1").otherwise("./."),
+          map(lit("GQ"), gq.cast("string")))
       }
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"), array(lit("G")).as("alt"),
-        lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-        when($"l_orderkey" % 5 === 0,
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        info = when($"l_orderkey" % 5 === 0,
           map(lit("DP"), $"l_suppkey".cast("string"), lit("DB"), lit("")))
-          .otherwise(map(lit("DP"), $"l_suppkey".cast("string"))).as("info"),
-        array((1 to 4).map(geno): _*).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+          .otherwise(map(lit("DP"), $"l_suppkey".cast("string"))),
+        genotypes = array((1 to 4).map(geno): _*))
+      fixture(vars, "vcf", path)
       val back = s.read.format("vcf").load(path)
       back
         .select($"info", explode($"genotypes").as("g"))
@@ -3456,8 +3008,7 @@ object FormatQueries {
       import s.implicits._
       import graft.functions.GraftFunctions.hash60
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/ds.bam"
-      spread(syntheticReads(s, d)).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      fixture(syntheticReads(s, d), "bam", path)
       val target = 100L
       val back = s.read.format("bam").load(path)
         .select($"readName", $"contig", $"start".cast("long").as("start"))
@@ -3492,23 +3043,12 @@ object FormatQueries {
         lit("100M,60,"), ($"l_suppkey" % 5).cast("string"), lit(";"))
       val sa = concat(lit("Z:"), seg(1),
         when($"l_orderkey" % 2 === 1, seg(2)).otherwise(lit("")))
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(0).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("contig"),
-        ((($"l_partkey" * 13) % 5000) + 1).cast("int").as("start"),
-        lit(0).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        lit("151M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        lit(0).cast("int").as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        when($"l_orderkey" % 7 === 0, map(lit("SA"), sa, lit("XO"), lit("i:1")))
-          .otherwise(map(lit("XO"), lit("i:1"))).as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+        start = (($"l_partkey" * 13) % 5000) + 1,
+        attributes = when($"l_orderkey" % 7 === 0, map(lit("SA"), sa, lit("XO"), lit("i:1")))
+          .otherwise(map(lit("XO"), lit("i:1"))))
+      fixture(reads, "bam", path)
       val back = s.read.format("bam").load(path)
         .select($"contig", element_at($"attributes", "SA").as("sa"))
         .filter($"sa".isNotNull)
@@ -3536,24 +3076,10 @@ object FormatQueries {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/bedg.bam"
-      val reads = Tables.lineitem(s, d)
-        .filter($"l_partkey" % 5 === 0)
-        .select(
-          concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-          lit(0).cast("int").as("flags"),
-          concat(lit("chr"), ($"l_partkey" % 3).cast("string")).as("contig"),
-          ((($"l_partkey" * 13) % 5000) + 1).cast("int").as("start"),
-          lit(0).cast("int").as("end"),
-          lit(60).cast("int").as("mapq"),
-          lit("151M").as("cigar"),
-          lit(null).cast("string").as("mateContig"),
-          lit(0).cast("int").as("mateStart"),
-          lit(0).cast("int").as("tlen"),
-          lit("*").as("seq"),
-          lit("*").as("qual"),
-          map(lit("XO"), lit("i:1")).as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs).saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d).filter($"l_partkey" % 5 === 0),
+        contig = concat(lit("chr"), ($"l_partkey" % 3).cast("string")),
+        start = (($"l_partkey" * 13) % 5000) + 1)
+      fixture(reads, "bam", path)
       val back = s.read.format("bam").load(path)
         .select($"contig", $"start", $"end")
         .filter($"start" <= 1999 && $"end" >= 1000)
@@ -3592,7 +3118,6 @@ object FormatQueries {
     "q_vcf_consensus" -> { (s, d) =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.types._
       val base = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}"
       val w = Window.partitionBy($"contig")
         .orderBy($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey")
@@ -3603,25 +3128,19 @@ object FormatQueries {
           (($"l_orderkey" * 3 + $"l_linenumber") % 3).as("c1"),
           (($"l_orderkey" * 5 + $"l_suppkey") % 3).as("c2"),
           (($"l_orderkey" * 7 + $"l_linenumber" + $"l_suppkey") % 3).as("c3"))
-      def gtOf(c: org.apache.spark.sql.Column) =
+      def gtOf(c: Column) =
         when(c === 0, "0/0").when(c === 1, "0/1").otherwise("1/1")
-      def callset(code: org.apache.spark.sql.Column) = sites.select(
-        $"contig", $"pos".cast("int").as("start"), $"pos".cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"), array(lit("G")).as("alt"),
-        lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array(struct(lit("s1").as("sample"), gtOf(code).as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))).as("genotypes"))
+      def callset(code: Column) = variantRows(sites,
+        contig = $"contig",
+        start = $"pos",
+        genotypes = array(genotype(lit("s1"), gtOf(code))))
       // OVERLAP the three independent writes (guide §2.6): each write's
       // tail would otherwise leave the cluster idle while the next waits.
       // Deliberately NOT persisting the shared windowed `sites`: caching the
       // wide genotype rows costs more in serialization than the window
       // recompute it saves (measured +10 cpu-s and +0.6 s wall at sf0.1).
       inParallel(Seq($"c1", $"c2", $"c3").zipWithIndex.map { case (c, i) => () =>
-        spread(callset(c)).write.format("vcf").mode("overwrite")
-          .option("compressionLevel", "1").save(s"$base/cons$i.vcf.bgz")
+        stage(callset(c), "vcf", s"$base/cons$i.vcf.bgz")
       }: _*)
       def back(i: Int, col: String) =
         s.read.format("vcf").load(s"$base/cons$i.vcf.bgz")
@@ -3653,19 +3172,11 @@ object FormatQueries {
     // anti-join — no row ever fans out beyond its local gene density.
     "q_vcf_region_annotate" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/regann.vcf.bgz"
-      val vars = Tables.lineitem(s, d).select(
-        concat(lit("chr"), ($"l_orderkey" % 24).cast("string")).as("contig"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-        ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-        lit(null).cast("string").as("id"),
-        lit("A").as("ref"), array(lit("G")).as("alt"),
-        lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-        map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-        array().cast(ArrayType(graft.vcf.Variant.genotypeType, containsNull = false))
-          .as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(Tables.lineitem(s, d),
+        contig = concat(lit("chr"), ($"l_orderkey" % 24).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1)
+      fixture(vars, "vcf", path)
       val v = s.read.format("vcf").load(path)
         .select($"contig", $"start".cast("long").as("pos"))
       val genes = Tables.part(s, d).select(
@@ -3699,31 +3210,21 @@ object FormatQueries {
     // fixed-point chi-square is computed once per pattern.
     "q_vcf_gwas_assoc" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/gwas.vcf.bgz"
       // the ref-skewed multiplicative hash (see q_vcf_af_spectrum): any
       // mod-3-linear derivation collapses the pattern space
       def geno(j: Int) = {
         val h = ($"gbase" * lit(17 * j + 1)) % 1000003 % 24
-        struct(
-          lit(f"s$j%02d").as("sample"),
-          when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1").as("gt"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false))
-            .as("fields"))
+        genotype(lit(f"s$j%02d"), when(h < 21, "0/0").when(h < 23, "0/1").otherwise("1/1"))
       }
-      val vars = Tables.lineitem(s, d)
-        .withColumn("gbase", $"l_orderkey" * 131 + $"l_partkey" * 37 +
-          $"l_suppkey" * 11 + $"l_linenumber" * 5)
-        .select(
-          concat(lit("chr"), ($"l_orderkey" % 3).cast("string")).as("contig"),
-          ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("start"),
-          ((($"l_partkey" * 37) % 999000) + 1).cast("int").as("end"),
-          lit(null).cast("string").as("id"),
-          lit("A").as("ref"), array(lit("G")).as("alt"),
-          lit(30.0).as("qual"), array(lit("PASS")).as("filters"),
-          map().cast(MapType(StringType, StringType, valueContainsNull = false)).as("info"),
-          array((1 to 12).map(geno): _*).as("genotypes"))
-      spread(vars).write.format("vcf").mode("overwrite").option("compressionLevel", "1").saveFixture(path)
+      val vars = variantRows(
+        Tables.lineitem(s, d)
+          .withColumn("gbase", $"l_orderkey" * 131 + $"l_partkey" * 37 +
+            $"l_suppkey" * 11 + $"l_linenumber" * 5),
+        contig = concat(lit("chr"), ($"l_orderkey" % 3).cast("string")),
+        start = (($"l_partkey" * 37) % 999000) + 1,
+        genotypes = array((1 to 12).map(geno): _*))
+      fixture(vars, "vcf", path)
       // formatFields=GT: the census consumes the whole genotype array, so
       // Catalyst cannot prune the map-typed FORMAT fields — opt in to the
       // selective decode (gt by token scan, no per-sample maps)
@@ -3758,22 +3259,12 @@ object FormatQueries {
       import s.implicits._
       val path = s"$tmpBase/graft-fmt/${d.hashCode.toHexString}/tlen.bam"
       val mag = (($"l_partkey" * 7) % 300 + 100).cast("int")
-      val reads = Tables.lineitem(s, d).select(
-        concat(lit("r"), $"l_orderkey", lit("-"), $"l_linenumber").as("readName"),
-        lit(1).cast("int").as("flags"),
-        concat(lit("chr"), ($"l_partkey" % 24).cast("string")).as("contig"),
-        ((($"l_partkey" * 13) % 5000) + 1).cast("int").as("start"),
-        lit(0).cast("int").as("end"),
-        lit(60).cast("int").as("mapq"),
-        lit("151M").as("cigar"),
-        lit(null).cast("string").as("mateContig"),
-        lit(0).cast("int").as("mateStart"),
-        when($"l_linenumber" % 2 === 0, -mag).otherwise(mag).as("tlen"),
-        lit("*").as("seq"),
-        lit("*").as("qual"),
-        map(lit("XO"), lit("i:1")).as("attributes"))
-      spread(reads).write.format("bam").mode("overwrite").option("compressionLevel", "1")
-        .option("refs", Refs24).saveFixture(path)
+      val reads = readRows(Tables.lineitem(s, d),
+        flags = lit(1),
+        contig = concat(lit("chr"), ($"l_partkey" % 24).cast("string")),
+        start = (($"l_partkey" * 13) % 5000) + 1,
+        tlen = when($"l_linenumber" % 2 === 0, -mag).otherwise(mag))
+      fixture(reads, "bam", path, "refs" -> Refs24)
       val back = s.read.format("bam").load(path)
         .select($"contig", $"tlen".cast("long").as("t"))
         .filter($"t" > 0) // samtools convention: count each template once
