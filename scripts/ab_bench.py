@@ -19,27 +19,26 @@ IQR / median (its run-to-run spread), the change/base ratio of the medians and
 the change's win fraction (pairs where the change is strictly better, in the
 metric's direction), followed by every pair's values.
 
-graft.Bench mode (--graft-bench): compiles each tree once with `sbt compile`
-(skip with --no-build), then runs `graft.Bench` from each tree's classes for
---pairs alternating pairs, the side that runs first swapping every pair, with
+graft.Bench mode (--graft-bench): runs
 
-    SPARK_GRAFT_BENCH_ONLY=<--only>  SPARK_GRAFT_CPUS=<--cores>
-    SPARK_GRAFT_SF_DIR=<--sf>        SPARK_GRAFT_BENCH_RUNS=<--runs>
+    SPARK_GRAFT_BENCH_ONLY=<--only> [SPARK_GRAFT_CPUS=<--cores>] sbt --batch "runMain graft.Bench"
 
-`--only format` names the format family: every q_bam*/q_sam*/q_vcf*/q_cram*/
-q_fastq*/q_gvcf*/q_reads* query in the change tree's src/main, q_bam2fq and
-q_cram2bam included. Every run must exit 0 (graft.Bench exits 1 when a query
-throws). For each query run on both sides, and for the sum of those queries'
-seconds, it prints each side's median over the pairs and IQR / median,
-the change/base ratio of the medians and the change's wins (pairs where the
-change is strictly faster). Each run's per-query seconds also go to stderr
-as one JSON object, so an interrupted A/B can still be read. --change-tree DIR
-replaces this checkout as the change side, so two other trees can be compared.
+in each tree for --pairs alternating pairs, the side that runs first swapping
+every pair, so each side runs with the JVM options of its own build.sbt.
+SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_RUNS and SPARK_DRIVER_MEM pass through
+from the caller's environment to both sides. `--only format` is the format
+family of the change tree (scripts/format_family.py). Every run must exit 0
+(graft.Bench exits 1 when a query throws). For each query run on both sides,
+and for the sum of those queries' seconds, it prints each side's median over
+the pairs and IQR / median, the change/base ratio of the medians and the
+change's wins (pairs where the change is strictly faster). Each run's
+per-query seconds also go to stderr as one JSON object, so an interrupted A/B
+can still be read. --change-tree DIR replaces this checkout as the change
+side, so two other trees can be compared.
 """
 import argparse
 import json
 import os
-import re
 import shutil
 import statistics
 import subprocess
@@ -47,9 +46,9 @@ import sys
 import tempfile
 from pathlib import Path
 
+from format_family import format_family
+
 ROOT = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(ROOT / "perfbench"))
-from build import spark_jars  # noqa: E402  (the jars perfbench compiles against)
 
 
 def seeds_of(spec: str):
@@ -80,41 +79,16 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
-    "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net", "java.nio", "java.util",
-    "java.util.concurrent", "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-    "sun.security.action", "sun.util.calendar")]
-FORMAT_FAMILY = re.compile(r'"(q_(?:bam|sam|vcf|cram|fastq|gvcf|reads)[a-z0-9_]*)"')
-
-
-def format_family(tree: Path):
-    names = set()
-    for f in (tree / "src/main/scala").rglob("*.scala"):
-        names.update(FORMAT_FAMILY.findall(f.read_text()))
-    return sorted(names)
-
-
-def build(tree: Path):
-    p = subprocess.run(["sbt", "--batch", "-Dsbt.log.noformat=true", "compile"], cwd=tree,
-                       capture_output=True, text=True)
-    if p.returncode != 0:
-        sys.exit(f"{tree}: sbt compile exited {p.returncode}\n{p.stdout[-2000:]}")
-
-
 def run_graft_bench(tree: Path, a, only: str) -> dict:
     out = Path(tempfile.mkstemp(prefix="ab-bench-", suffix=".json")[1])
-    env = os.environ | {"SPARK_GRAFT_BENCH_ONLY": only, "SPARK_GRAFT_CPUS": str(a.cores),
-                        "SPARK_GRAFT_BENCH_RUNS": str(a.runs), "BENCH_OUT": str(out)}
-    if a.sf:
-        env["SPARK_GRAFT_SF_DIR"] = a.sf
-    cmd = ["java", *ADD_OPENS, f"-Xmx{os.environ.get('SPARK_DRIVER_MEM', '4g')}",
-           "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-           "-cp", f"{tree}/target/scala-2.13/classes:{tree}/src/main/resources:{spark_jars()}/*",
-           "graft.Bench"]
+    env = os.environ | {"SPARK_GRAFT_BENCH_ONLY": only, "BENCH_OUT": str(out)}
+    if a.cores:
+        env["SPARK_GRAFT_CPUS"] = str(a.cores)
     try:
-        p = subprocess.run(cmd, cwd=tree, env=env, capture_output=True, text=True)
+        p = subprocess.run(["sbt", "--batch", "-Dsbt.log.noformat=true", "runMain graft.Bench"], cwd=tree,
+                           env=env, capture_output=True, text=True)
         if p.returncode != 0:
-            sys.exit(f"{tree}: graft.Bench exited {p.returncode}\n{p.stderr[-2000:]}")
+            sys.exit(f"{tree}: graft.Bench exited {p.returncode}\n{p.stdout[-2000:]}\n{p.stderr[-2000:]}")
         return json.loads(out.read_text())["queries"]
     finally:
         out.unlink(missing_ok=True)
@@ -123,9 +97,6 @@ def run_graft_bench(tree: Path, a, only: str) -> dict:
 def graft_bench(a, base: Path):
     change = Path(a.change_tree).resolve() if a.change_tree else ROOT
     only = ",".join(format_family(change)) if a.only == "format" else a.only
-    if not a.no_build:
-        for tree in (base, change):
-            build(tree)
     pairs = []
     for i in range(a.pairs):
         order = [("base", base), ("change", change)]
@@ -143,8 +114,12 @@ def graft_bench(a, base: Path):
         for side in ("base", "change"):
             p[side]["(sum)"] = sum(p[side][q] for q in common)
     n = len(pairs)
-    print(f"graft.Bench: {n} pairs, {a.cores} cores, {a.runs} runs per JVM, sf {a.sf or 'default'}, "
-          f"{len(common)} queries on both sides")
+    settings = {k: os.environ.get(k, "default") for k in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_BENCH_RUNS",
+                                                          "SPARK_GRAFT_SF_DIR")}
+    if a.cores:
+        settings["SPARK_GRAFT_CPUS"] = a.cores
+    print(f"graft.Bench: {n} pairs, " + " ".join(f"{k}={v}" for k, v in settings.items()) +
+          f", {len(common)} queries on both sides")
     only_one = sorted(set(pairs[0]["base"]) ^ set(pairs[0]["change"]))
     if only_one:
         print("run on one side only: " + ", ".join(only_one))
@@ -164,63 +139,20 @@ def graft_bench(a, base: Path):
         print(f"  pair {i + 1} ({p['first']} first): {p['base']['(sum)']:.2f} -> {p['change']['(sum)']:.2f}")
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
-    ap.add_argument("--base", help="git ref of the base side")
-    ap.add_argument("--base-tree", help="existing checkout of the base side (instead of --base)")
-    ap.add_argument("--workload", help="perfbench workload (perfbench mode)")
-    ap.add_argument("--seeds", help="perfbench seeds, e.g. 201-210 or 1,5,9")
-    ap.add_argument("--graft-bench", action="store_true", help="A/B graft.Bench instead of perfbench")
-    ap.add_argument("--only", help="graft.Bench query subset: comma-separated names, or `format`")
-    ap.add_argument("--cores", type=int, default=4, help="graft.Bench SPARK_GRAFT_CPUS")
-    ap.add_argument("--pairs", type=int, default=10, help="graft.Bench alternating pairs")
-    ap.add_argument("--runs", type=int, default=3, help="graft.Bench runs per JVM (SPARK_GRAFT_BENCH_RUNS)")
-    ap.add_argument("--sf", help="graft.Bench SPARK_GRAFT_SF_DIR (default: graft.Bench's own)")
-    ap.add_argument("--change-tree", help="checkout of the change side (default: this checkout)")
-    ap.add_argument("--no-build", action="store_true", help="graft.Bench: use the trees' compiled classes as they are")
-    a = ap.parse_args()
-    if bool(a.base) == bool(a.base_tree):
-        ap.error("give exactly one of --base and --base-tree")
-    if a.graft_bench:
-        if not a.only:
-            ap.error("--graft-bench needs --only")
-    elif not (a.workload and a.seeds):
-        ap.error("perfbench mode needs --workload and --seeds")
-
-    worktree = None
-    if a.base_tree:
-        base = Path(a.base_tree).resolve()
-    else:
-        worktree = Path(tempfile.mkdtemp(prefix="ab-base-")) / "tree"
-        subprocess.run(["git", "worktree", "add", "--detach", str(worktree), a.base], cwd=ROOT, check=True,
-                       stdout=sys.stderr)
-        base = worktree
-    if a.graft_bench:
-        try:
-            graft_bench(a, base)
-        finally:
-            if worktree is not None:
-                subprocess.run(["git", "worktree", "remove", "--force", str(worktree)], cwd=ROOT, stdout=sys.stderr)
-                shutil.rmtree(worktree.parent, ignore_errors=True)
-        return
+def perfbench(a, base: Path):
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     better = {m["name"]: m["better"] for m in spec["end_to_end"]} | {"failed_frac": "lower"}
     pairs = []
-    try:
-        for i, seed in enumerate(seeds_of(a.seeds)):
-            order = [("base", base), ("change", ROOT)]
-            if i % 2:
-                order.reverse()
-            pair = {"seed": seed, "first": order[0][0]}
-            for side, tree in order:
-                pair[side] = run(tree, a.workload, seed, spec["run_seconds"])
-                print(f"[ab] seed {seed} {side}: " +
-                      " ".join(f"{k}={pair[side][k]:.4g}" for k in better), file=sys.stderr, flush=True)
-            pairs.append(pair)
-    finally:
-        if worktree is not None:
-            subprocess.run(["git", "worktree", "remove", "--force", str(worktree)], cwd=ROOT, stdout=sys.stderr)
-            shutil.rmtree(worktree.parent, ignore_errors=True)
+    for i, seed in enumerate(seeds_of(a.seeds)):
+        order = [("base", base), ("change", ROOT)]
+        if i % 2:
+            order.reverse()
+        pair = {"seed": seed, "first": order[0][0]}
+        for side, tree in order:
+            pair[side] = run(tree, a.workload, seed, spec["run_seconds"])
+            print(f"[ab] seed {seed} {side}: " +
+                  " ".join(f"{k}={pair[side][k]:.4g}" for k in better), file=sys.stderr, flush=True)
+        pairs.append(pair)
 
     n = len(pairs)
     print(f"{a.workload}: {n} pairs, seeds {a.seeds}")
@@ -240,6 +172,42 @@ def main():
     for p in pairs:
         print(f"  seed {p['seed']} ({p['first']} first): " +
               "  ".join(f"{m} {p['base'][m]:.4g}->{p['change'][m]:.4g}" for m in better))
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("--base", help="git ref of the base side")
+    ap.add_argument("--base-tree", help="existing checkout of the base side (instead of --base)")
+    ap.add_argument("--workload", help="perfbench workload (perfbench mode)")
+    ap.add_argument("--seeds", help="perfbench seeds, e.g. 201-210 or 1,5,9")
+    ap.add_argument("--graft-bench", action="store_true", help="A/B graft.Bench instead of perfbench")
+    ap.add_argument("--only", help="graft.Bench query subset: comma-separated names, or `format`")
+    ap.add_argument("--cores", type=int, help="graft.Bench: sets SPARK_GRAFT_CPUS")
+    ap.add_argument("--pairs", type=int, default=10, help="graft.Bench alternating pairs")
+    ap.add_argument("--change-tree", help="checkout of the change side (default: this checkout)")
+    a = ap.parse_args()
+    if bool(a.base) == bool(a.base_tree):
+        ap.error("give exactly one of --base and --base-tree")
+    if a.graft_bench:
+        if not a.only:
+            ap.error("--graft-bench needs --only")
+    elif not (a.workload and a.seeds):
+        ap.error("perfbench mode needs --workload and --seeds")
+
+    worktree = None
+    if a.base_tree:
+        base = Path(a.base_tree).resolve()
+    else:
+        worktree = Path(tempfile.mkdtemp(prefix="ab-base-")) / "tree"
+        subprocess.run(["git", "worktree", "add", "--detach", str(worktree), a.base], cwd=ROOT, check=True,
+                       stdout=sys.stderr)
+        base = worktree
+    try:
+        (graft_bench if a.graft_bench else perfbench)(a, base)
+    finally:
+        if worktree is not None:
+            subprocess.run(["git", "worktree", "remove", "--force", str(worktree)], cwd=ROOT, stdout=sys.stderr)
+            shutil.rmtree(worktree.parent, ignore_errors=True)
 
 
 if __name__ == "__main__":

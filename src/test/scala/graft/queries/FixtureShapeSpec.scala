@@ -1,6 +1,7 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -24,9 +25,16 @@ import graft.vcf.Variant
   */
 class FixtureShapeSpec extends AnyFunSuite with SparkFixture {
 
+  private val dir = Files.createTempDirectory("fixture-shape")
+
+  override def afterAll(): Unit =
+    try {
+      val tree = Files.walk(dir)
+      try tree.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+      finally tree.close()
+    } finally super.afterAll()
+
   private lazy val sf: String = {
-    val dir = Files.createTempDirectory("fixture-shape").toFile
-    dir.deleteOnExit()
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType),
       StructField("l_suppkey", LongType), StructField("l_linenumber", IntegerType)))
@@ -34,8 +42,8 @@ class FixtureShapeSpec extends AnyFunSuite with SparkFixture {
       Row(i / 4L + 1, (i * 7919L) % 200 + 1, i % 10L + 1, i % 7 + 1)
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .write.parquet(s"${dir.getPath}/lineitem.parquet")
-    dir.getPath
+      .write.parquet(s"$dir/lineitem.parquet")
+    dir.toString
   }
 
   private def lineitem: DataFrame = Tables.lineitem(spark, sf)
